@@ -25,9 +25,10 @@ package graft
   *   - min-of-k + instability retries (`SPARK_GRAFT_BENCH_ITERS`,
   *     `SPARK_GRAFT_BENCH_MAX_EXTRA`, `SPARK_GRAFT_BENCH_STABLE_K`).
   *   - Per-query `"cpu"` map: executor task CPU seconds of the
-  *     min-wall iteration, from a task-end listener (bus drained per
-  *     run). A storm/steal reading is distinguishable from a real
-  *     regression without a re-run: host CPU steal shows wall >> cpu;
+  *     min-wall iteration, from the `graft.obs.StageMetrics` listener
+  *     (bus drained per run). A storm/steal reading is distinguishable
+  *     from a real regression without a re-run: host CPU steal shows
+  *     wall >> cpu;
   *     a genuine plan regression moves cpu with wall.
   *   - `SPARK_GRAFT_BENCH_DUMP_ITERS=<path>` — write every per-query
   *     iteration (discarded one included) as JSON for offline spike
@@ -42,17 +43,9 @@ object Bench {
     val spark = graft.tools.Sessions.build(s"local[$cpus]", cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
 
-    // executor task CPU accumulator — attributed per run by draining the
-    // (async) listener bus before each read
-    val cpuNanos = new java.util.concurrent.atomic.AtomicLong(0L)
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          val m = te.taskMetrics
-          if (m != null) { cpuNanos.addAndGet(m.executorCpuTime); () }
-        }
-      })
+    // executor task CPU, attributed per run by draining the (async)
+    // listener bus before each read
+    val obs = graft.obs.StageMetrics.install(spark.sparkContext)
 
     val loadStart = java.lang.management.ManagementFactory
       .getOperatingSystemMXBean.getSystemLoadAverage
@@ -80,8 +73,8 @@ object Bench {
       var err: Option[String] = None
       // returns (wall seconds, executor task CPU seconds)
       def runOnce(): (Double, Double) = {
-        org.apache.spark.GraftSparkBridge.drainListenerBus(spark.sparkContext)
-        val c0 = cpuNanos.get()
+        graft.obs.StageMetrics.drain(spark.sparkContext)
+        obs.clear()
         val t0 = System.nanoTime()
         // toRdd.count(), NOT Dataset.count(): count() re-optimizes the
         // plan under Aggregate[count(1)], and Catalyst then ELIMINATES
@@ -97,8 +90,8 @@ object Bench {
               Option(e.getMessage).getOrElse("").take(120))
         }
         val wall = (System.nanoTime() - t0) / 1e9
-        org.apache.spark.GraftSparkBridge.drainListenerBus(spark.sparkContext)
-        (wall, (cpuNanos.get() - c0) / 1e9)
+        graft.obs.StageMetrics.drain(spark.sparkContext)
+        (wall, obs.total.cpuNs / 1e9)
       }
       // priming iteration: pays the first-touch JIT/classload cost OFF
       // the record, so every recorded run executes compiled code

@@ -1,25 +1,42 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the DuckDB compare (`tools/crosscheck.py`).
+  *
+  * Usage: Verify <sfDir> <outDir> [query...] — with query names, only
+  * those are dumped and oracle_sql.json names only them (re-crosscheck
+  * specific queries at sf1+ with `tools/crosscheck.py <sfDir> <outDir>`).
+  * A query that fails is reported on stderr AND in `<outDir>/errors.json`
+  * (name → message; `{}` when every query ran), so a failure never shows
+  * up only as a missing dump.
+  */
 object Verify {
   def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir) = args
+    require(args.length >= 2, "usage: Verify <sfDir> <outDir> [query...]")
+    val sfDir = args(0); val outDir = args(1)
+    val only = args.drop(2).toSet
+    val unknown = only -- SparkEntry.queries.keySet
+    require(unknown.isEmpty, s"unknown queries: ${unknown.toSeq.sorted.mkString(", ")}")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = graft.tools.Sessions.build(s"local[$cpus]", cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
+    def wanted(name: String) = only.isEmpty || only(name)
     // name order, like Bench: deterministic, and build-style queries
     // (q94_build_ivf) land before the serving queries that reuse their
     // on-disk artifacts
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+    val errors = SparkEntry.queries.toSeq.sortBy(_._1)
+      .filter(q => wanted(q._1)).flatMap { case (name, fn) =>
+        try {
+          fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+            .parquet(s"$outDir/$name")
+          None
+        } catch { case e: Throwable =>
+          System.err.println(s"[verify] $name failed: ${e.getMessage}")
+          Some(name -> (e.getClass.getSimpleName + ": " +
+            Option(e.getMessage).getOrElse("")))
+        }
       }
-    }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -32,9 +49,12 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
+    val json = SparkEntry.oracleSql.filter(kv => wanted(kv._1))
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/errors.json"),
+      errors.map { case (k, v) => s"${q(k)}: ${q(v)}" }
+        .mkString("{", ",\n", "}\n"))
     spark.stop()
   }
 }

@@ -590,15 +590,6 @@ object Dedup {
     df.join(removed, Seq(idCol), "left_anti")
   }
 
-  /** Embedding-cosine near-dup pairs above `minCosine`, via the ANN
-    * machinery (sign-sketch banding) in graft.sim.Similarity.
-    */
-  def embeddingPairs(df: DataFrame, vecCol: String, idCol: String,
-                     minCosine: Double, planes: Int = 0,
-                     seed: Long = 42): DataFrame =
-    graft.sim.Similarity.cosinePairs(df, vecCol, idCol, minCosine, planes,
-      seed)
-
   /** Incremental exact dedup: keep the `incoming` rows whose `textCol`
     * does not appear in `existing` — the dedup-new-crawl-against-prior-
     * snapshots stage of an incremental ingestion pipeline (each crawl

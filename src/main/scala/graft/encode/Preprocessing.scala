@@ -1,11 +1,8 @@
 package graft.encode
 
-import org.apache.spark.ml.feature.StringIndexer
-import org.apache.spark.ml.functions.{array_to_vector, vector_to_array}
+import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-
-import graft.agg.Voting
 
 /** Pipeline-safe column transformers — the reference's
   * `preprocessing.py` inventory, each reduced to its Spark-native
@@ -15,39 +12,10 @@ import graft.agg.Voting
   */
 object Preprocessing {
 
-  /** `SelectField` (`preprocessing.py:53-94`): projection. */
-  def selectField(df: DataFrame, cols: Seq[String]): DataFrame =
-    df.select(cols.map(col): _*)
-
-  /** `FeatureCast` (`preprocessing.py:127-154`): type cast. */
-  def featureCast(df: DataFrame, c: String, to: String): DataFrame =
-    df.withColumn(c, col(c).cast(to))
-
-  /** `ImputeNull` (`preprocessing.py:157-186`): constant fill. */
-  def imputeNull(df: DataFrame, c: String, value: Any): DataFrame =
-    df.withColumn(c, coalesce(col(c), lit(value)))
-
-  /** `LabelEncoderPipe` (`preprocessing.py:189-203`): label → ordinal. */
-  def labelEncode(df: DataFrame, c: String, outCol: String): DataFrame =
-    new StringIndexer().setInputCol(c).setOutputCol(outCol)
-      .setStringOrderType("frequencyDesc")
-      .fit(df).transform(df)
-
   /** `DenseTransformer` / `SparseTransformer` (`preprocessing.py:97-124`):
-    * representation swap. Spark Vectors pick dense/sparse per value; these
-    * force a representation when an estimator cares.
+    * array → Spark Vector, which picks dense/sparse per value.
     */
-  def toDenseArray(c: Column): Column = vector_to_array(c)
   def toVector(c: Column): Column = array_to_vector(c)
-
-  /** `HashingVectorizerChunked` (`preprocessing.py:264-310`): hashed text
-    * n-grams. Chunking is obsolete — Spark streams partitions.
-    */
-  def hashingVectorize(df: DataFrame, textCol: String, outCol: String,
-                       nGramRange: (Int, Int) = (1, 1),
-                       numFeatures: Int = 1 << 20): DataFrame =
-    Encoderizer.TextHashStage(textCol, nGramRange, numFeatures)
-      .transform(df, outCol)
 
   /** `MultihotEncoder` (`preprocessing.py:313-339`). */
   def multihot(df: DataFrame, arrayCol: String, outCol: String,
@@ -173,13 +141,4 @@ object Preprocessing {
       .orderBy(col("f_score").desc, col("feature_idx").asc)
       .limit(k)
       .collect().map(_.getInt(0)).toSeq.sorted
-
-  /** `SimpleVoter` as DataFrame columns (reference `postprocessing.py`):
-    * hard vote over per-model prediction columns / soft vote over
-    * per-model probability-array columns.
-    */
-  def hardVoteCol(preds: Seq[Column]): Column = Voting.hardVote(array(preds: _*))
-  def softVoteCol(probs: Seq[Column], weights: Seq[Double]): Column =
-    Voting.argmax(Voting.softVoteScores(array(probs: _*),
-      typedlit(weights)))
 }

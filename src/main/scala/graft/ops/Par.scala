@@ -7,27 +7,6 @@ import org.apache.spark.sql.execution.columnar.InMemoryRelation
 /** Parallelism plumbing for compute-heavy per-row derivations. */
 object Par {
 
-  /** Fan a narrow input out to all cores before an expensive per-row
-    * derivation (shingling, hashing, signature building).
-    *
-    * Locally a small parquet table arrives as ONE split, so everything up
-    * to the first shuffle — including the tokenize/shingle/explode work
-    * that dominates dedup — serializes on one core. Repartitioning the raw
-    * rows first costs one cheap shuffle of the undeived input and unblocks
-    * every core. Gated on the current partition count so it is a no-op on
-    * a real cluster where the scan already has >= defaultParallelism
-    * splits — there the extra shuffle would be pure waste.
-    *
-    * Plans whose lineage would PLAN AN EXCHANGE are not probed: the probe
-    * reads the physical partition count via `df.rdd`, and under AQE that
-    * call on a plan containing exchanges synchronously materializes every
-    * upstream shuffle stage — work that then re-runs on the real action.
-    * Such frames have also already been spread across cores by their
-    * shuffle. Exchange-free derived plans (map/explode/union/local limit
-    * over a scan) are still probed — they inherit the scan's partition
-    * count and need the fan-out just as much as a bare scan. Streaming
-    * frames cannot be probed at all and pass through untouched.
-    */
   /** Run `f` over `items` on a bounded driver-side thread pool,
     * preserving input order in the result. For CONCURRENT SPARK JOB
     * SUBMISSION: a sequence of independent distributed fits submitted
@@ -173,10 +152,7 @@ object Par {
     * bounded by its row count, and on a real cluster files past
     * maxPartitionBytes get their splits from the scan, not from us.
     */
-  private[graft] val FanOutMinRows: Long =
-    // env override is an A/B hook (QueryProbe floor sweeps), not a
-    // production knob: the default IS the calibrated value.
-    sys.env.get("SPARK_GRAFT_FANOUT_MIN_ROWS").map(_.toLong).getOrElse(16384L)
+  private[graft] val FanOutMinRows: Long = 16384L
 
   /** Max leaf files before the footer probe declines: a many-file
     * layout already has its splits (fanOut's partition gate won't
@@ -308,6 +284,27 @@ object Par {
         df.queryExecution.optimizedPlan.stats.sizeInBytes >= BigInt(minBytes)
     }
 
+  /** Fan a narrow input out to all cores before an expensive per-row
+    * derivation (shingling, hashing, signature building).
+    *
+    * Locally a small parquet table arrives as ONE split, so everything up
+    * to the first shuffle — including the tokenize/shingle/explode work
+    * that dominates dedup — serializes on one core. Repartitioning the raw
+    * rows first costs one cheap shuffle of the underived input and unblocks
+    * every core. Gated on the current partition count so it is a no-op on
+    * a real cluster where the scan already has >= defaultParallelism
+    * splits — there the extra shuffle would be pure waste.
+    *
+    * Plans whose lineage would PLAN AN EXCHANGE are not probed: the probe
+    * reads the physical partition count via `df.rdd`, and under AQE that
+    * call on a plan containing exchanges synchronously materializes every
+    * upstream shuffle stage — work that then re-runs on the real action.
+    * Such frames have also already been spread across cores by their
+    * shuffle. Exchange-free derived plans (map/explode/union/local limit
+    * over a scan) are still probed — they inherit the scan's partition
+    * count and need the fan-out just as much as a bare scan. Streaming
+    * frames cannot be probed at all and pass through untouched.
+    */
   def fanOut(df: DataFrame, minBytes: Long = FanOutMinBytes,
              minRows: Long = FanOutMinRows): DataFrame = {
     // Pinned/cached frames return UNTOUCHED, before any plan probe: cache
@@ -357,13 +354,11 @@ object Par {
     * regex-heavy rows, the winnow family keeps 16384), so one task owns
     * at least a floor's worth of rows and width grows linearly with the
     * corpus until the cluster width caps it — sf10+ plans keep the full
-    * fan exactly as before. `SPARK_GRAFT_FAN_GRAIN_DIV` is an A/B hook
-    * (divides the grain, widening the fan) for probe sweeps only.
+    * fan exactly as before.
     */
   private[graft] def fanPartitions(df: DataFrame, minRows: Long): Int = {
     val p = df.sparkSession.sparkContext.defaultParallelism
-    val grain = math.max(1L, minRows /
-      sys.env.get("SPARK_GRAFT_FAN_GRAIN_DIV").map(_.toLong).getOrElse(1L))
+    val grain = math.max(1L, minRows)
     estimatedRows(df) match {
       case Some(n) =>
         math.max(2, math.min(p.toLong, (n + grain - 1) / grain).toInt)

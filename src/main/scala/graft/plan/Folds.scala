@@ -48,14 +48,11 @@ object Folds {
     * is a pure function of the GROUP key, so every row of a group lands in
     * one fold by construction — leakage-free CV for grouped samples
     * (sessions, users) with no global coordination, at any scale.
-    * Portable variant (`pmod(group, k)`) for oracle-checked plans; seeded
-    * xxhash64 variant for real CV where folds should look random w.r.t.
-    * the key order.
+    * Portable `pmod(group, k)` for oracle-checked plans; `byHash` over
+    * the group key for real CV where folds should look random w.r.t. the
+    * key order.
     */
   def byGroup(group: Column, k: Int): Column = byKey(group, k)
-
-  def byGroupHash(group: Column, k: Int, seed: Long): Column =
-    byHash(group, k, seed)
 
   def assignByGroup(df: DataFrame, groupCol: String, k: Int,
                     foldCol: String = "fold_id"): DataFrame =

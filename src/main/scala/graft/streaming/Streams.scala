@@ -207,8 +207,8 @@ object Streams {
     * ON-HEAP — measured to OOM executors at 100× session-key cardinality
     * (the decade-3 probe's lesson). Past ~10^7 concurrent open sessions
     * per executor, switch the session to RocksDB BEFORE starting the
-    * query: `Streams.withStateStore(spark, "rocksdb")` (or
-    * `SPARK_GRAFT_STATE_STORE=rocksdb` with `tools.Sessions.build`) —
+    * query: `Streams.withStateStore(spark, "rocksdb")` (or the provider
+    * key in `SPARK_GRAFT_EXTRA_CONF` with `tools.Sessions.build`) —
     * state is then bounded by local disk with changelog checkpointing,
     * not heap, at a probed ~0.3 s/query floor cost (NOTES r12 item 8:
     * q66 1.47 → 1.79 s at sf0.01). The provider is fixed

@@ -15,8 +15,9 @@ object Sessions {
     */
   def builder(master: String, shufflePartitions: Int): SparkSession.Builder = {
     // SPARK_GRAFT_EXTRA_CONF="k=v;k2=v2" — experimentation hook for
-    // isolated config A/Bs (same spirit as SPARK_GRAFT_AQE); unset in
-    // every production/driver invocation, so defaults never shift.
+    // isolated config A/Bs (e.g. spark.sql.adaptive.enabled=false to
+    // measure AQE's per-query planning cost); unset in every production
+    // and benchmark invocation, so defaults never shift.
     val extra = sys.env.getOrElse("SPARK_GRAFT_EXTRA_CONF", "")
       .split(';').toSeq.map(_.trim).filter(_.contains("="))
       .map { kv => val i = kv.indexOf('='); (kv.take(i), kv.drop(i + 1)) }
@@ -24,12 +25,9 @@ object Sessions {
       .master(master)
       .withExtensions(new graft.plans.GraftExtensions)
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
-      // AQE on by default (the scale-correct choice: runtime coalescing,
-      // skew splitting, plan re-optimization). SPARK_GRAFT_AQE=false is an
-      // experimentation hook for measuring its per-query planning cost.
-      .config("spark.sql.adaptive.enabled",
-        (!Set("false", "0", "off").contains(
-          sys.env.getOrElse("SPARK_GRAFT_AQE", "true").toLowerCase)).toString)
+      // AQE on (the scale-correct choice: runtime coalescing, skew
+      // splitting, plan re-optimization)
+      .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       // Cached plans take AQE-OPTIMIZED output partitioning (r15):
@@ -50,17 +48,13 @@ object Sessions {
       // A/Bs with SPARK_GRAFT_EXTRA_CONF.
       .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
         "true")
-      // SPARK_GRAFT_STATE_STORE=rocksdb switches streaming state to the
-      // RocksDB provider (disk-bounded state — the 100x-cardinality
-      // deployment shape; see Streams.withStateStore). Default stays the
-      // in-memory HDFS-backed provider: at bench cardinality it is faster
-      // and the bench floor should not silently shift between rounds.
+      // Streaming state: the in-memory HDFS-backed provider (the Spark
+      // default, spelled out; the class is private[state]). At bench
+      // cardinality it beats RocksDB; 100x-cardinality state switches to
+      // RocksDB via Streams.withStateStore or this key in
+      // SPARK_GRAFT_EXTRA_CONF.
       .config("spark.sql.streaming.stateStore.providerClass",
-        if (sys.env.getOrElse("SPARK_GRAFT_STATE_STORE", "")
-            .equalsIgnoreCase("rocksdb"))
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-        else // the Spark default, spelled out (the class is private[state])
-          "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider")
+        "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider")
       // shuffle compression stays ON even in local mode: the CPU saving
       // measured at bench scale was noise, while a pair-heavy shuffle
       // (LSH candidate joins at probe scale) ran local disk out of space

@@ -4,12 +4,33 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 
 /** Access bridge for the private[sql] surfaces a library defining its
   * own Catalyst expressions needs: Column <-> Expression conversion,
-  * plus the compiled-method-size probe the JIT-cliff budget spec uses.
-  * Kept to exactly these calls.
+  * plus the codegen-span count PlanDump prints and the compiled-method-
+  * size probe the JIT-cliff budget spec uses. Kept to exactly these calls.
   */
 object GraftSqlBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
+
+  /** Every WholeStageCodegen span in `df`'s executed plan. AQE hides
+    * the materialized plan inside AdaptiveSparkPlanExec (a leaf to
+    * collect()) — unwrap it, and the per-stage reuse wrappers inside it.
+    */
+  private def codegenStages(df: DataFrame) = {
+    import org.apache.spark.sql.execution.{SparkPlan, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    def stagesOf(p: SparkPlan): Seq[WholeStageCodegenExec] = p.collect {
+      case w: WholeStageCodegenExec => Seq(w)
+      case a: AdaptiveSparkPlanExec => stagesOf(a.executedPlan)
+      case q: QueryStageExec => stagesOf(q.plan)
+    }.flatten
+    stagesOf(df.queryExecution.executedPlan)
+  }
+
+  /** Number of WholeStageCodegen spans in `df`'s executed plan — the
+    * plan-audit "how much of this plan runs fused" counter PlanDump
+    * prints.
+    */
+  def codegenStageCount(df: DataFrame): Int = codegenStages(df).length
 
   /** Max compiled bytecode size (bytes) over the generated methods of
     * every WholeStageCodegen stage in `df`'s executed plan. The JVM
@@ -19,38 +40,8 @@ object GraftSqlBridge {
     * 103.8 s -> 4.9 s from exactly this). Returns 0 when the plan has
     * no codegen stage.
     */
-  /** Number of WholeStageCodegen spans in `df`'s executed plan (AQE
-    * stages unwrapped) — the plan-audit "how much of this plan runs
-    * fused" counter ExplainProbe prints.
-    */
-  def codegenStageCount(df: DataFrame): Int = {
-    import org.apache.spark.sql.execution.WholeStageCodegenExec
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-    def stagesOf(p: org.apache.spark.sql.execution.SparkPlan)
-        : Seq[WholeStageCodegenExec] = p.collect {
-      case w: WholeStageCodegenExec => Seq(w)
-      case a: AdaptiveSparkPlanExec => stagesOf(a.executedPlan)
-      case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-        stagesOf(q.plan)
-    }.flatten
-    stagesOf(df.queryExecution.executedPlan).length
-  }
-
   def maxCodegenMethodSize(df: DataFrame): Int = {
-    import org.apache.spark.sql.execution.WholeStageCodegenExec
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-    // AQE hides the materialized plan inside AdaptiveSparkPlanExec (a
-    // leaf to collect()) — unwrap it, and unwrap the per-stage reuse
-    // wrappers inside it the same way
-    def stagesOf(p: org.apache.spark.sql.execution.SparkPlan)
-        : Seq[WholeStageCodegenExec] = p.collect {
-      case w: WholeStageCodegenExec => Seq(w)
-      case a: AdaptiveSparkPlanExec => stagesOf(a.executedPlan)
-      case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-        stagesOf(q.plan)
-    }.flatten
-    val stages = stagesOf(df.queryExecution.executedPlan)
-    val sizes = stages.map { w =>
+    val sizes = codegenStages(df).map { w =>
       val (_, source) = w.doCodeGen()
       val (_, stats) =
         org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator

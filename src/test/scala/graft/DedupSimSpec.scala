@@ -805,7 +805,7 @@ class DedupSimSpec extends AnyFunSuite {
     def probeBytes(nProbe: Int): (Long, Long) = {
       val p = Similarity.probeIvfIndex(spark, dir, q, k = 5, nProbe = nProbe)
       p.collect() // collect, not count: count plans its own execution
-      graft.tools.IvfScaleProbe.scanReadMetrics(p)
+      graft.obs.StageMetrics.scanReadMetrics(p)
     }
     val (f1, b1) = probeBytes(1)
     val (f4, b4) = probeBytes(4)
@@ -875,11 +875,11 @@ class DedupSimSpec extends AnyFunSuite {
       val one = Similarity.probeIvfIndexBatch(queries.limit(1), "embedding",
         "vec_id", dir, k = 5, nProbe = 1)
       one.collect()
-      val (files1, _) = graft.tools.IvfScaleProbe.scanReadMetrics(one)
+      val (files1, _) = graft.obs.StageMetrics.scanReadMetrics(one)
       val all = Similarity.probeIvfIndexBatch(queries, "embedding",
         "vec_id", dir, k = 5, nProbe = 4)
       all.collect()
-      val (files4, _) = graft.tools.IvfScaleProbe.scanReadMetrics(all)
+      val (files4, _) = graft.obs.StageMetrics.scanReadMetrics(all)
       assert(files1 < files4,
         s"1-query/1-probe batch read $files1 files vs $files4 at full probe" +
           " — cell files are not being pruned")
@@ -948,13 +948,13 @@ class DedupSimSpec extends AnyFunSuite {
       val q = vecs.filter(col("vec_id") === 3L).head().getSeq[Double](1)
       val probed = Similarity.probeIvfIndex(spark, dir, q, k = 5)
       probed.collect()
-      val (files, _) = graft.tools.IvfScaleProbe.scanReadMetrics(probed)
+      val (files, _) = graft.obs.StageMetrics.scanReadMetrics(probed)
       assert(files == 64,
         s"512-row index is under the probe budget — auto must read all " +
           s"64 cells (exhaustive), read $files")
       val pruned = Similarity.probeIvfIndex(spark, dir, q, k = 5, nProbe = 4)
       pruned.collect()
-      val (files4, _) = graft.tools.IvfScaleProbe.scanReadMetrics(pruned)
+      val (files4, _) = graft.obs.StageMetrics.scanReadMetrics(pruned)
       assert(files4 == 4, s"explicit nProbe=4 must read 4 cells, read $files4")
     } finally {
       import scala.reflect.io.Directory

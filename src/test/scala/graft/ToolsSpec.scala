@@ -39,4 +39,71 @@ class ToolsSpec extends AnyFunSuite {
       ()
     }
   }
+
+  test("obs.StageMetrics: per-group stage rows; stage sums equal the totals") {
+    import org.apache.spark.sql.functions._
+    val sc = spark.sparkContext
+    val obs = graft.obs.StageMetrics.install(sc)
+    try {
+      graft.obs.StageMetrics.drain(sc)
+      obs.clear()
+      // two small jobs, each with a shuffle, on 2 partitions
+      Seq("obs-a", "obs-b").foreach { g =>
+        sc.setJobGroup(g, g)
+        spark.range(0, 200000, 1, 2)
+          .groupBy((col("id") % 7).as("k"))
+          .agg(sum(xxhash64(col("id")) % 1000).as("h"))
+          .collect()
+        sc.clearJobGroup()
+      }
+      graft.obs.StageMetrics.drain(sc)
+      val stages = obs.stages
+      Seq("obs-a", "obs-b").foreach { g =>
+        val rows = stages.filter(_.group == g)
+        assert(rows.nonEmpty, s"no stage rows for $g")
+        rows.foreach { r =>
+          assert(r.tasks > 0 && r.cpuNs > 0, r.toString)
+        }
+        assert(rows.exists(_.shuffleWriteBytes > 0), rows.toString)
+      }
+      // the total Bench reads covers exactly the two groups' stages, and
+      // at least each job's 2-partition map stage
+      val t = obs.total
+      val tagged = stages.filter(r => r.group == "obs-a" || r.group == "obs-b")
+      assert(t.tasks >= 4, t.toString)
+      assert(t.tasks == tagged.map(_.tasks).sum, stages.toString)
+      assert(t.cpuNs == tagged.map(_.cpuNs).sum, stages.toString)
+      assert(t.shuffleWriteBytes == tagged.map(_.shuffleWriteBytes).sum)
+    } finally sc.removeSparkListener(obs)
+  }
+
+  test("every main and SPARK_GRAFT_* knob is listed in tools/README.md") {
+    import scala.jdk.CollectionConverters._
+    val sources = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
+      .iterator().asScala.filter(_.toString.endsWith(".scala"))
+      .map(p => new String(java.nio.file.Files.readAllBytes(p), "UTF-8"))
+      .toSeq
+    val build = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get("build.sbt")), "UTF-8")
+    val knobs = (sources :+ build)
+      .flatMap("SPARK_GRAFT_[A-Z_]+".r.findAllIn(_)).toSet
+    val mains = sources.flatMap { src =>
+      val pkg = "(?m)^package ([\\w.]+)".r.findFirstMatchIn(src).get.group(1)
+      "def main\\(".r.findAllMatchIn(src).map { m =>
+        val obj = "(?m)^object (\\w+)".r.findAllMatchIn(src.take(m.start))
+          .toSeq.last.group(1)
+        s"$pkg.$obj"
+      }
+    }.toSet
+    // the first backticked name of each table row in a README section
+    val readme = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get("tools/README.md")), "UTF-8")
+    def listed(section: String): Set[String] =
+      readme.split("\n## ").find(_.startsWith(section)).get
+        .split("\n").toSeq
+        .flatMap("^\\| `([^`]+)`".r.findFirstMatchIn(_)).map(_.group(1)).toSet
+    assert(knobs == listed("Environment knobs"))
+    assert(mains == listed("Mains"))
+    assert(mains.size <= 10)
+  }
 }
