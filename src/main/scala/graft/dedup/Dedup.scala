@@ -3,7 +3,10 @@ package graft.dedup
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import org.json4s.JInt
+
 import graft.ops.Par
+import graft.store.IndexStore
 import graft.text.TextFunctions
 
 /** Deduplication operators for web-scale corpora: exact (hash-groupBy),
@@ -689,21 +692,25 @@ object Dedup {
     }
   }
 
+  /** The MinHash index's parts in the shared [[graft.store.IndexStore]]. */
+  private[graft] val MinhashIndex =
+    IndexStore.Kind("minhash", "writeMinhashIndex", Seq("sets", "bands"))
+
   /** On-disk MinHash near-dup index over a corpus snapshot — the
     * NEAR-dup member of the incremental family ([[dedupAgainstCorpus]]
     * is the exact member; the substring span index is the fragment
     * member). The snapshot pays its shingling + signature build ONCE:
     *
-    *   - `bands/` — one row per (table, min-hash signature, doc id),
+    *   - `bands` — one row per (table, min-hash signature, doc id),
     *     the LSH candidate-generation side. Probes equi-join on (t, h).
-    *   - `sets/` — each doc's SORTED 64-bit shingle hashes
+    *   - `sets` — each doc's SORTED 64-bit shingle hashes
     *     ([[graft.functions.ShingleHashes]]), the exact-rerank side.
     *     Storing them is what lets a probe rerank candidates without
     *     re-shingling (or even re-reading the text of) the snapshot.
-    *   - `_minhash_meta.json` — rows + the (n, numHashTables, seed)
-    *     the signatures were built with; probes MUST hash with the
-    *     same parameters, so they read them from here rather than
-    *     trusting the caller to repeat them.
+    *   - the index meta ([[graft.store.IndexStore]], which also gives
+    *     the layout and crash contract) — rows + the (n, numHashTables,
+    *     seed) the signatures were built with; probes MUST hash with the
+    *     same parameters, so they read them from there.
     *
     * Signature scheme is bit-identical to [[minhashPairs]] (same
     * MinHashSig expression, same xxhash64 shingle keys), so the recall
@@ -714,8 +721,8 @@ object Dedup {
     */
   def writeMinhashIndex(snapshot: DataFrame, textCol: String, idCol: String,
                         dir: String, n: Int = 3, numHashTables: Int = 8,
-                        seed: Long = 42): Unit = {
-    val spark = snapshot.sparkSession
+                        seed: Long = 42): Unit =
+      IndexStore.create(snapshot.sparkSession, dir, MinhashIndex) {
     // consumed twice (bands + sets) with divergent plans — persist for
     // the duration of the build, released before returning
     val sh = Par.fanOut(snapshot.select(col(idCol).as("id"),
@@ -726,42 +733,16 @@ object Dedup {
       .persist()
     sh.select(col("id"),
         graft.functions.ShingleHashes(col("shingles")).as("_h"))
-      .write.mode("overwrite").parquet(s"$dir/sets")
+      .write.mode("overwrite").parquet(IndexStore.dataPath(dir, "sets", "base"))
     sh.select(col("id"), posexplode_outer(graft.functions.MinHashSig(
         col("shingles"), numHashTables, seed)))
       .select(col("pos").as("t"), col("col").as("h"), col("id"))
       .filter(col("h").isNotNull)
-      .write.mode("overwrite").parquet(s"$dir/bands")
+      .write.mode("overwrite").parquet(IndexStore.dataPath(dir, "bands", "base"))
     val rows = sh.count() // rides the cache
     sh.unpersist(blocking = false)
-    val metaPath = new org.apache.hadoop.fs.Path(s"$dir/_minhash_meta.json")
-    val fs = metaPath.getFileSystem(spark.sessionState.newHadoopConf())
-    val out = fs.create(metaPath, true)
-    out.write((s"""{"rows":$rows,"n":$n,"numHashTables":$numHashTables,""" +
-      s""""seed":$seed}""").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    out.close()
-  }
-
-  /** Build parameters of a [[writeMinhashIndex]] snapshot:
-    * (rows, n, numHashTables, seed). `private[graft]`: the
-    * q101_build_index gate reads the stamped meta back so the oracle
-    * can assert the on-disk index carries the closed-form properties
-    * (the q94_build_ivf discipline). */
-  private[graft] def loadMinhashMeta(spark: org.apache.spark.sql.SparkSession,
-                              dir: String): (Long, Int, Int, Long) = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/_minhash_meta.json")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    require(fs.exists(p), s"no minhash index under $dir — build with " +
-      "writeMinhashIndex first")
-    val in = fs.open(p)
-    val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-    finally in.close()
-    val j = org.json4s.jackson.JsonMethods.parse(txt)
-    def num(f: String): Long = (j \ f) match {
-      case org.json4s.JInt(v) => v.toLong
-      case other => sys.error(s"bad _minhash_meta.json field $f: $other")
-    }
-    (num("rows"), num("n").toInt, num("numHashTables").toInt, num("seed"))
+    List("rows" -> JInt(rows), "n" -> JInt(n),
+      "numHashTables" -> JInt(numHashTables), "seed" -> JInt(seed))
   }
 
   /** Near-dup hits of `incoming` against a [[writeMinhashIndex]]
@@ -792,7 +773,8 @@ object Dedup {
                                 minJaccard: Double = 0.2,
                                 maxBroadcastRows: Long = 4L << 20): DataFrame = {
     val spark = incoming.sparkSession
-    val (_, n, k, seed) = loadMinhashMeta(spark, dir)
+    val m = IndexStore.meta(spark, dir, MinhashIndex)
+    val (n, k, seed) = (m.int("n"), m.int("numHashTables"), m.long("seed"))
     // batch shingles: consumed by the signature build AND the rerank —
     // pin, as minhashPairs pins its shingle frame
     val bsh = Par.pinLatest("minhash.against.batch",
@@ -805,7 +787,7 @@ object Dedup {
         graft.functions.MinHashSig(col("shingles"), k, seed)))
       .select(col("pos").as("t"), col("col").as("h"), col("_bid"))
       .filter(col("h").isNotNull)
-    val bands = spark.read.parquet(s"$dir/bands")
+    val bands = IndexStore.read(spark, dir, MinhashIndex, "bands")
     // batch-signature budget: |batch| x k rows of 20 bytes — the count
     // rides the pinned cache
     val batchSigRows = bsh.count() * k
@@ -817,7 +799,7 @@ object Dedup {
     val cand = Par.pinLatest("minhash.against.cand",
       candRaw.select(col("id").as("_sid"), col("_bid")).distinct())
     val nCand = cand.count()
-    val sets = spark.read.parquet(s"$dir/sets")
+    val sets = IndexStore.read(spark, dir, MinhashIndex, "sets")
     val snapSets =
       if (nCand <= maxBroadcastRows) {
         // candidate snapshot ids (<= nCand, dedup'd) broadcast-semi into

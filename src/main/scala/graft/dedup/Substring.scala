@@ -4,8 +4,12 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import org.apache.hadoop.fs.Path
+import org.json4s.JInt
+
 import graft.functions.WinnowAnchors
 import graft.ops.Par
+import graft.store.IndexStore
 
 /** A maximal exact duplicated span between two documents: 0-based start
   * offsets in each text (code points) and the span's length in code
@@ -322,6 +326,10 @@ object SubstringDedup {
       broadcastTextsB = true)
   }
 
+  /** The span index's parts in the shared [[graft.store.IndexStore]]. */
+  private[graft] val SpanIndex =
+    IndexStore.Kind("span", "writeSpanIndex", Seq("anchors", "texts"))
+
   /** Materialize a corpus's winnowing anchors + texts as an ON-DISK SPAN
     * INDEX — the INCREMENTAL-dedup shape at 100 TB: each incoming crawl
     * batch probes the index (`spansAgainstIndex`) without re-winnowing
@@ -333,70 +341,49 @@ object SubstringDedup {
     * probe, with only COLLIDING docs surviving the join into the
     * extension stage.
     *
-    * Layout: `dir/params` (JSON sidecar — minLen/k are REUSED by probe
-    * and append, so mixed-parameter indexes cannot happen) and
-    * `dir/batches/<batchId>/{anchors,texts,_COMMIT}`. Each batch commits
-    * ATOMICALLY: data files first, the `_COMMIT` marker last, and
-    * readers union only committed batches — a crash mid-append leaves an
-    * invisible partial batch, and retrying the same batchId overwrites
-    * it (at-least-once orchestration is safe; ids must be unique across
-    * batches, which the probe's self-pair guard also relies on).
+    * Layout and crash contract: [[graft.store.IndexStore]]. The meta's
+    * minLen/k/maxPosPerHash are REUSED by probe and append, so
+    * mixed-parameter indexes cannot happen. Batch ids must be unique
+    * (the probe's self-pair guard also relies on it).
     */
   def writeSpanIndex(df: DataFrame, textCol: String, idCol: String,
                      dir: String, minLen: Int = 50, k: Int = 16,
                      maxPosPerHash: Int = DefaultMaxPosPerHash): Unit = {
     require(minLen > k, s"minLen ($minLen) must exceed gram size k ($k)")
-    val spark = df.sparkSession
-    import spark.implicits._
-    // a REBUILD must reset the whole index, not just params + base: an
-    // in-place rebuild with different params would otherwise leave the
-    // old appended batches visible under the NEW sidecar — anchors
-    // winnowed with the old window probed with the new one silently miss
-    // spans (exactly the mixed-parameter index the sidecar exists to
-    // prevent)
-    val batches = new org.apache.hadoop.fs.Path(s"$dir/batches")
-    val fs = batches.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(batches)) fs.delete(batches, true)
-    Seq((minLen, k, maxPosPerHash)).toDF("minLen", "k", "maxPosPerHash")
-      .coalesce(1).write.mode("overwrite").json(s"$dir/params")
-    writeBatch(df, textCol, idCol, dir, "base", minLen, k, maxPosPerHash)
+    IndexStore.create(df.sparkSession, dir, SpanIndex) {
+      writeBatch(df, textCol, idCol, dir, "base", minLen, k, maxPosPerHash)
+      List("minLen" -> JInt(minLen), "k" -> JInt(k),
+        "maxPosPerHash" -> JInt(maxPosPerHash))
+    }
   }
 
   /** Add a crawl batch to an existing span index. `batchId` names the
-    * batch directory — reuse the SAME id when retrying a failed append
+    * batch — reuse the SAME id when retrying a failed append
     * (overwrite-idempotent); a new id for each new batch.
     *
     * `compactEveryBatches` (opt-in, 0 = off): once the index holds more
-    * than that many live committed batches after this append,
+    * than that many live batches after this append,
     * [[compactSpanIndex]] runs automatically inside this call under the
     * derived fresh id `auto_compact_<batchId>` — probe scan cost stays
     * bounded by index BYTES at crawl cadence without an operator
-    * remembering the maintenance call. The compaction's marker/manifest
-    * discipline is unchanged; like the manual call it is exclusive with
-    * concurrent probes, which an append already should be. Note that a
-    * successful append-plus-compaction CONSUMES `batchId` (it lands in
-    * the compacted batch's `_REPLACES` manifest) — retrying it after
+    * remembering the maintenance call. Like the manual call it is
+    * exclusive with concurrent probes, which an append already should
+    * be. Note that a successful append-plus-compaction CONSUMES
+    * `batchId` (the compacted batch replaces it) — retrying it after
     * success fails loudly, as any reused consumed id does. Returns true
     * iff a compaction ran.
     */
   def appendToSpanIndex(df: DataFrame, textCol: String, idCol: String,
                         dir: String, batchId: String,
                         compactEveryBatches: Int = 0): Boolean = {
-    require(batchId.matches("[A-Za-z0-9._-]+") && batchId != "base",
-      s"batchId '$batchId' must be a filesystem-safe name (not 'base')")
-    // a name listed in a live _REPLACES manifest is permanently excluded
-    // by readers — re-appending under it would write data no probe ever
-    // sees (silently passing contamination checks on contaminated docs)
-    val root = new org.apache.hadoop.fs.Path(s"$dir/batches")
-    val fs = root.getFileSystem(df.sparkSession.sessionState.newHadoopConf())
-    require(!replacedNames(fs, root).contains(batchId),
-      s"batchId '$batchId' was consumed by a prior compaction and is " +
-        "reader-invisible forever — use a fresh id")
-    val (minLen, k, cap) = readIndexParams(df.sparkSession, dir)
-    writeBatch(df, textCol, idCol, dir, batchId, minLen, k, cap)
+    val spark = df.sparkSession
+    val (minLen, k, cap) = indexParams(spark, dir)
+    IndexStore.append(spark, dir, SpanIndex, batchId) {
+      writeBatch(df, textCol, idCol, dir, batchId, minLen, k, cap)
+    }
     if (compactEveryBatches > 0 &&
-        committedBatches(df.sparkSession, dir).size > compactEveryBatches) {
-      compactSpanIndex(df.sparkSession, dir, s"auto_compact_$batchId")
+        IndexStore.live(spark, dir).size > compactEveryBatches) {
+      compactSpanIndex(spark, dir, s"auto_compact_$batchId")
       true
     } else false
   }
@@ -405,163 +392,53 @@ object SubstringDedup {
                          dir: String, batchId: String,
                          minLen: Int, k: Int, maxPosPerHash: Int): Unit = {
     val w = minLen - k + 1
-    val sub = s"$dir/batches/$batchId"
     val texts = df.select(col(idCol).cast("long").as("doc"),
         col(textCol).as("text"))
       .filter(length(col("text")) >= minLen)
     Par.fanOut(texts).select(col("doc"),
         explode(WinnowAnchors(col("text"), k, w, maxPosPerHash)).as("a"))
       .select(col("doc"), col("a.pos").as("pos"), col("a.hash").as("h"))
-      .write.mode("overwrite").parquet(s"$sub/anchors")
-    texts.write.mode("overwrite").parquet(s"$sub/texts")
-    // commit marker LAST: readers ignore batches without it, so the two
-    // writes above become atomic from a reader's point of view
-    val fs = new org.apache.hadoop.fs.Path(sub)
-      .getFileSystem(df.sparkSession.sessionState.newHadoopConf())
-    fs.create(new org.apache.hadoop.fs.Path(s"$sub/_COMMIT"), true).close()
+      .write.mode("overwrite").parquet(IndexStore.dataPath(dir, "anchors", batchId))
+    texts.write.mode("overwrite").parquet(IndexStore.dataPath(dir, "texts", batchId))
   }
 
-  private def committedBatches(spark: org.apache.spark.sql.SparkSession,
-                               dir: String): Seq[String] = {
-    val root = new org.apache.hadoop.fs.Path(s"$dir/batches")
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(root)) Seq.empty
-    else {
-      val committed = fs.listStatus(root).filter(_.isDirectory).map(_.getPath)
-        .filter(p => fs.exists(new org.apache.hadoop.fs.Path(p, "_COMMIT")))
-        .toSeq
-      // a committed COMPACTED batch names the batches it merged in its
-      // _REPLACES manifest; excluding them here is what makes the
-      // compaction commit atomic — after a crash between the compacted
-      // batch's _COMMIT and the source deletes, both generations sit on
-      // disk but readers see exactly one
-      val replaced = committed.flatMap(p => readReplaces(fs, p)).toSet
-      committed.filterNot(p => replaced.contains(p.getName))
-        .map(_.toString).sorted
-    }
-  }
-
-  /** Every batch name consumed by a live compaction manifest. */
-  private def replacedNames(fs: org.apache.hadoop.fs.FileSystem,
-                            root: org.apache.hadoop.fs.Path): Set[String] =
-    if (!fs.exists(root)) Set.empty
-    else fs.listStatus(root).filter(_.isDirectory).map(_.getPath)
-      .filter(p => fs.exists(new org.apache.hadoop.fs.Path(p, "_COMMIT")))
-      .flatMap(p => readReplaces(fs, p)).toSet
-
-  private def readReplaces(fs: org.apache.hadoop.fs.FileSystem,
-                           batchDir: org.apache.hadoop.fs.Path): Seq[String] = {
-    val p = new org.apache.hadoop.fs.Path(batchDir, "_REPLACES")
-    if (!fs.exists(p)) Seq.empty
-    else {
-      val in = fs.open(p)
-      try {
-        val bytes = org.apache.hadoop.io.IOUtils.readFullyToByteArray(in)
-        new String(bytes, java.nio.charset.StandardCharsets.UTF_8)
-          .split("\n").map(_.trim).filter(_.nonEmpty).toSeq
-      } finally in.close()
-    }
-  }
-
-  /** Compact all committed batches of a span index into ONE batch named
+  /** Compact all live batches of a span index into ONE batch named
     * `newBatchId`. Pure maintenance — the probe-visible index content is
-    * unchanged (spec-pinned) — but each append adds a batch subdirectory,
-    * and at crawl cadence the probe's per-batch parquet scans accumulate
-    * into a many-small-files problem (1000 appends = 1000 file listings
-    * and tiny row groups per probe). Compaction rewrites the union into
+    * unchanged (spec-pinned) — but each append adds a batch, and at
+    * crawl cadence the probe's per-batch parquet scans accumulate into a
+    * many-small-files problem (1000 appends = 1000 file listings and
+    * tiny row groups per probe). Compaction rewrites the union into
     * size-targeted files (~128 MB via `coalesce` — a split merge, no
     * shuffle) so probe scan cost tracks index BYTES again, not append
     * COUNT.
     *
-    * Crash-safe with the same marker discipline as append: merged data
-    * files first, then a `_REPLACES` manifest naming the source batches,
-    * then `_COMMIT`, then source deletes. Readers exclude `_REPLACES`d
-    * batches, so the `_COMMIT` write is the atomic switch; a crash at any
-    * point leaves a readable index equal to pre- or post-compaction.
-    * Re-running with the same `newBatchId` is idempotent: a committed
-    * prior attempt only finishes the source deletes; an uncommitted one
-    * is overwritten. Run in a maintenance window, exclusive with appends
-    * AND probes: the crash guarantee covers a compaction that DIES (the
-    * index reads as exactly one generation afterwards), not a probe
-    * racing the source deletes — a probe that listed batches pre-commit
-    * holds lazy scans over paths the deletes then remove.
-    * `newBatchId` must be fresh — never reuse it for a later append.
+    * Crash contract: [[graft.store.IndexStore]]; retry with the same
+    * `newBatchId`, which must be fresh (never reused for an append).
     */
   def compactSpanIndex(spark: org.apache.spark.sql.SparkSession,
                        dir: String, newBatchId: String): Unit =
-    compactImpl(spark, dir, newBatchId, deleteSources = true)
+    IndexStore.compact(spark, dir, SpanIndex, newBatchId)(
+      rewriteSpans(spark, dir, newBatchId))
 
-  /** `deleteSources = false` stops after `_COMMIT` — the crash window the
-    * spec pins (both generations on disk, readers must see one). */
-  private[graft] def compactImpl(spark: org.apache.spark.sql.SparkSession,
-                                 dir: String, newBatchId: String,
-                                 deleteSources: Boolean): Unit = {
-    require(newBatchId.matches("[A-Za-z0-9._-]+"),
-      s"newBatchId '$newBatchId' must be a filesystem-safe name")
-    val root = new org.apache.hadoop.fs.Path(s"$dir/batches")
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    val newSub = new org.apache.hadoop.fs.Path(root, newBatchId)
-    if (fs.exists(new org.apache.hadoop.fs.Path(newSub, "_COMMIT"))) {
-      // a committed batch of this name is only a PRIOR COMPACTION ATTEMPT
-      // if it carries a _REPLACES manifest — then finish its deletes. A
-      // plain committed batch of the same name is an id collision: a
-      // silent early return would leave the operator believing the index
-      // was compacted.
-      val replaces = readReplaces(fs, newSub)
-      require(replaces.nonEmpty,
-        s"newBatchId '$newBatchId' collides with a live append batch — " +
-          "pick a fresh id")
-      replaces.foreach { name =>
-        val p = new org.apache.hadoop.fs.Path(root, name)
-        if (fs.exists(p)) fs.delete(p, true)
-      }
-      return
+  /** The span compaction's rewrite: each part of the live batches
+    * coalesced into ~128 MB files of batch `newId`. */
+  private[graft] def rewriteSpans(spark: org.apache.spark.sql.SparkSession,
+                                  dir: String, newId: String)
+                                 (live: Seq[String]): Unit = {
+    val fs = new Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
+    SpanIndex.parts.foreach { part =>
+      val bytes = live.map(id =>
+        fs.getContentSummary(new Path(IndexStore.dataPath(dir, part, id))).getLength).sum
+      IndexStore.read(spark, dir, SpanIndex, part, live)
+        .coalesce(math.max(1, math.ceil(bytes / (128.0 * (1 << 20))).toInt))
+        .write.mode("overwrite").parquet(IndexStore.dataPath(dir, part, newId))
     }
-    // finish any PRIOR compaction's pending source deletes FIRST: a c1
-    // that crashed after its _COMMIT leaves its sources on disk hidden
-    // only by c1's live _REPLACES manifest. Compacting [c1] into a fresh
-    // c2 and then deleting c1 would delete that manifest and RESURRECT
-    // the stale sources next to c2's copy of their data — every affected
-    // doc then appears twice in the probe-visible index.
-    replacedNames(fs, root).foreach { name =>
-      val p = new org.apache.hadoop.fs.Path(root, name)
-      if (fs.exists(p)) fs.delete(p, true)
-    }
-    val subs = committedBatches(spark, dir)
-    require(subs.nonEmpty, s"no committed batches under $dir/batches — " +
-      "nothing to compact")
-    val names = subs.map(new org.apache.hadoop.fs.Path(_).getName)
-    def targetParts(part: String): Int = {
-      val bytes = subs.map(s => fs.getContentSummary(
-        new org.apache.hadoop.fs.Path(s"$s/$part")).getLength).sum
-      math.max(1, math.ceil(bytes / (128.0 * (1 << 20))).toInt)
-    }
-    spark.read.parquet(subs.map(_ + "/anchors"): _*)
-      .coalesce(targetParts("anchors"))
-      .write.mode("overwrite").parquet(s"$dir/batches/$newBatchId/anchors")
-    spark.read.parquet(subs.map(_ + "/texts"): _*)
-      .coalesce(targetParts("texts"))
-      .write.mode("overwrite").parquet(s"$dir/batches/$newBatchId/texts")
-    val rep = fs.create(
-      new org.apache.hadoop.fs.Path(newSub, "_REPLACES"), true)
-    try rep.write(names.mkString("\n")
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally rep.close()
-    fs.create(new org.apache.hadoop.fs.Path(newSub, "_COMMIT"), true).close()
-    if (deleteSources)
-      subs.foreach(s => fs.delete(new org.apache.hadoop.fs.Path(s), true))
   }
 
-  private def readIndexParams(spark: org.apache.spark.sql.SparkSession,
-                              dir: String): (Int, Int, Int) = {
-    val df = spark.read.json(s"$dir/params")
-    // pre-cap indexes have no maxPosPerHash field — treat as uncapped so
-    // probes against them stay bit-identical to what was written
-    val hasCap = df.columns.contains("maxPosPerHash")
-    val r = df.select("minLen", "k").head()
-    val cap = if (hasCap) df.select("maxPosPerHash").head().getLong(0).toInt
-      else Int.MaxValue
-    (r.getLong(0).toInt, r.getLong(1).toInt, cap)
+  private def indexParams(spark: org.apache.spark.sql.SparkSession,
+                          dir: String): (Int, Int, Int) = {
+    val m = IndexStore.meta(spark, dir, SpanIndex)
+    (m.int("minLen"), m.int("k"), m.int("maxPosPerHash"))
   }
 
   /** All maximal spans >= the INDEX's minLen between an incoming batch
@@ -578,11 +455,9 @@ object SubstringDedup {
                         dir: String,
                         maxBatchBytes: Long = 1L << 30): DataFrame = {
     val spark = batch.sparkSession
-    val (minLen, k, cap) = readIndexParams(spark, dir)
+    val (minLen, k, cap) = indexParams(spark, dir)
     val w = minLen - k + 1
-    val subs = committedBatches(spark, dir)
-    require(subs.nonEmpty, s"no committed batches under $dir/batches — " +
-      "writeSpanIndex first")
+    val live = IndexStore.live(spark, dir)
     val bTexts = batch
       .select(col(idCol).cast("long").as("batch_id"), col(textCol).as("text"))
       .filter(length(col("text")) >= minLen)
@@ -603,8 +478,7 @@ object SubstringDedup {
     val bAnchors = bTexts.select(col("batch_id"),
         explode(WinnowAnchors(col("text"), k, w, cap)).as("a"))
       .select(col("batch_id"), col("a.pos").as("bpos"), col("a.hash").as("h"))
-    val cand = spark.read
-      .parquet(subs.map(_ + "/anchors"): _*)
+    val cand = IndexStore.read(spark, dir, SpanIndex, "anchors", live)
       .join(broadcast(bAnchors), "h")
       // ids share ONE space across index and batches (append merges
       // them): without the self-pair guard, re-probing an already-
@@ -616,7 +490,7 @@ object SubstringDedup {
       .groupBy("corpus_id", "batch_id")
       .agg(collect_list(col("seed")).as("seeds"))
     seedsToSpans(cand,
-      spark.read.parquet(subs.map(_ + "/texts"): _*)
+      IndexStore.read(spark, dir, SpanIndex, "texts", live)
         .select(col("doc").as("corpus_id"), col("text").as("ta")),
       bTexts.withColumnRenamed("text", "tb"),
       "corpus_id", "batch_id", "start_corpus", "start_batch", k, minLen,

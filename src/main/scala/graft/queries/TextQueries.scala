@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.dedup.Dedup
 import graft.sim.Similarity
+import graft.store.IndexStore
 import graft.text.{Corpus, TextFunctions}
 
 /** Text-analysis / dedup / similarity queries over the documents and
@@ -508,9 +509,10 @@ object TextQueries {
         .select("doc_id", "text")
       Dedup.writeMinhashIndex(snap, "text", "doc_id", dir)
       q101Built.add(dir)
-      val (rows, _, numTables, _) = Dedup.loadMinhashMeta(s, dir)
+      val meta = IndexStore.meta(s, dir, Dedup.MinhashIndex)
       import s.implicits._
-      Seq((rows, numTables)).toDF("n_docs", "n_tables")
+      Seq((meta.long("rows"), meta.int("numHashTables")))
+        .toDF("n_docs", "n_tables")
     }),
 
     // Deterministic source-weighted mix sampling: 60/30/10 % rates by
@@ -783,12 +785,11 @@ object TextQueries {
       Similarity.writeIvfIndex(Tables.embeddings(s, d),
         "embedding", "vec_id", dir, maxIter = 5)
       q94Built.add(dir)
-      // read back through the probe-side sidecar loaders (spark.read
-      // skips _-prefixed files): rows from the stamped meta, cells from
+      // read back through the probe-side loaders: rows from the index
+      // meta, cells from
       // the centroid sidecar actually written — the gate asserts the
       // on-disk index carries exactly the closed-form properties
-      val nVectors = Similarity.loadBuildMeta(s, dir)._1.getOrElse(
-        sys.error(s"q94_build_ivf: no rows stamped in $dir"))
+      val nVectors = IndexStore.meta(s, dir, Similarity.IvfIndex).long("rows")
       val nCells = Similarity.loadCentroids(s, dir).length
       import s.implicits._
       Seq((nVectors, nCells)).toDF("n_vectors", "n_cells")

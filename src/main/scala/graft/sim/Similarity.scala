@@ -7,6 +7,8 @@ import org.apache.spark.sql.functions._
 import scala.jdk.CollectionConverters._
 import scala.util.Random
 
+import graft.store.IndexStore
+
 /** Similarity search over embedding columns (`array<float>`).
   *
   * Baseline: exact brute-force cosine top-k — a broadcast join of the
@@ -336,19 +338,26 @@ object Similarity {
     math.min(ceiling, math.max(16L, math.max(bySqrt, byBudget))).toInt
   }
 
+  /** The IVF index's parts in the shared [[graft.store.IndexStore]]. */
+  private[graft] val IvfIndex = IndexStore.Kind(
+    "ivf", "writeIvfIndex", Seq("cells"), sidecars = Seq("centroids"))
+
   /** Materialize the IVF scale path ivfTopK's doc promises: the corpus
-    * written HIVE-PARTITIONED BY QUANTIZER CELL (`dir/cells/_cell=N/…`)
-    * with the centroids as a tiny JSON sidecar. A probe then reads ONLY
-    * its nProbe cells' directories — partition pruning turns cell
-    * selection into skipped IO, which is what makes IVF serving work
-    * against a 100 TB corpus (cost ~ nProbe/nClusters of the data,
-    * before any row is read).
+    * written HIVE-PARTITIONED BY QUANTIZER CELL (`_cell=N/…` inside each
+    * batch of the `cells` part) with the centroids as a tiny JSON
+    * sidecar. A probe then reads ONLY its nProbe cells' directories —
+    * partition pruning turns cell selection into skipped IO, which is
+    * what makes IVF serving work against a 100 TB corpus (cost ~
+    * nProbe/nClusters of the data, before any row is read). Layout and
+    * crash contract: [[graft.store.IndexStore]].
     */
   def writeIvfIndex(corpus: DataFrame, vecCol: String, idCol: String,
                     dir: String, nClusters: Int = 0,
                     seed: Long = 42, maxIter: Int = 20,
-                    recallCurveSamples: Int = RecallCurveAuto): Unit = {
+                    recallCurveSamples: Int = RecallCurveAuto): Unit =
+      IndexStore.create(corpus.sparkSession, dir, IvfIndex) {
     val spark = corpus.sparkSession
+    val base = IndexStore.dataPath(dir, "cells", "base")
     // vectors keep their ORIGINAL element type on disk (array<float>
     // corpora would double in size as array<double>; the probe's cosine
     // casts at read time) — only the quantizer input is cast
@@ -393,7 +402,7 @@ object Similarity {
       // with it each cell is one writer's contiguous file(s). Cells are
       // balanced by the quantizer, so per-task skew is bounded.
       .repartition(col("_cell"))
-      .write.mode("overwrite").partitionBy("_cell").parquet(s"$dir/cells")
+      .write.mode("overwrite").partitionBy("_cell").parquet(base)
     // measured recall-vs-nProbe curve (explicit n = always measure n
     // samples; 0 = never; default RecallCurveAuto = measure 256 only
     // when the corpus is big enough for an operating point to matter):
@@ -401,7 +410,7 @@ object Similarity {
     // geometry and each sample's TRUE top-1 cosine neighbor (self
     // excluded) yields the RANK of that neighbor's cell in the sample's
     // centroid ordering — the whole recall(nProbe) curve is then the
-    // rank CDF, stored as the rank list in the build sidecar. One extra
+    // rank CDF, stored as the rank list in the index meta. One extra
     // corpus pass at build time; probes pick nProbe(target) from it
     // (nProbeForRecall) instead of guessing a fraction.
     //
@@ -429,39 +438,32 @@ object Similarity {
     val ranks: Array[Int] =
       if (!wantCurve || nRows < 2) Array.empty
       else measureRecallRanks(
-        spark.read.parquet(s"$dir/cells").select("id", "vec", "_cell"),
+        spark.read.parquet(base).select("id", "vec", "_cell"),
         quant, curveSamples)
     rawVec.unpersist(blocking = false)
-    // sidecar: flat indexes keep the historical (_cell, centroid)
-    // schema verbatim; two-level writes its two sub-codebooks with a
-    // `level` marker (1 = first dim-half, 2 = second) — loadQuantizer
-    // routes on the marker's presence
+    // sidecar: flat indexes keep the (_cell, centroid) schema; two-level
+    // writes its two sub-codebooks with a `level` marker (1 = first
+    // dim-half, 2 = second) — loadQuantizer routes on the marker's
+    // presence
+    val centroids = IndexStore.sidecar(dir, "centroids")
     quant match {
       case FlatQuantizer(cents) =>
         spark.createDataFrame(cents).toDF("_cell", "centroid")
-          .coalesce(1).write.mode("overwrite").json(s"$dir/centroids")
+          .coalesce(1).write.mode("overwrite").json(centroids)
       case tl: TwoLevelQuantizer =>
         val rows =
           tl.c1.zipWithIndex.map { case (r, i) => (i, r.toSeq, 1) } ++
           tl.c2.zipWithIndex.map { case (r, i) => (i, r.toSeq, 2) }
         spark.createDataFrame(rows.toSeq).toDF("_cell", "centroid", "level")
-          .coalesce(1).write.mode("overwrite").json(s"$dir/centroids")
+          .coalesce(1).write.mode("overwrite").json(centroids)
     }
-    // build-time meta so appendToIvfIndex can measure growth SINCE BUILD
-    // (cells were sized for nRows — whether by the sqrt rule or an
-    // explicit nClusters, drift is relative to that corpus, not to an
-    // assumed sizing law)
-    val metaPath = new org.apache.hadoop.fs.Path(s"$dir/_build_meta.json")
-    val fs = metaPath.getFileSystem(spark.sessionState.newHadoopConf())
-    val out = fs.create(metaPath, true)
-    val ranksJson =
-      if (ranks.isEmpty) ""
-      else s""","recallRanks":[${ranks.mkString(",")}]"""
-    out.write(s"""{"rows":$nRows,"cells":${quant.numCells}$ranksJson}"""
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    out.close()
-    centroidCache.remove(dir) // a rebuild invalidates any cached sidecar
-    buildMetaCache.remove(dir)
+    // build rows let appendToIvfIndex measure growth SINCE BUILD (cells
+    // were sized for nRows — whether by the sqrt rule or an explicit
+    // nClusters, drift is relative to that corpus, not to an assumed
+    // sizing law)
+    import org.json4s.{JArray, JInt}
+    List("rows" -> JInt(nRows), "cells" -> JInt(quant.numCells),
+      "recallRanks" -> JArray(ranks.map(r => JInt(r)).toList))
   }
 
   /** One rank per sampled query: the position (1-based) of the sample's
@@ -589,87 +591,64 @@ object Similarity {
                                   compacted: Option[IvfCompactStats] = None)
 
   /** Files-before/after of [[compactIvfIndex]]; rows is the (unchanged)
-    * vector count, re-verified before the swap. */
+    * vector count, re-verified before the commit. */
   final case class IvfCompactStats(rows: Long, filesBefore: Long,
                                    filesAfter: Long)
 
-  /** Rewrite an appended-to index's cell files into one contiguous file
-    * per cell. Pure maintenance — probe-visible content is unchanged
-    * (spec-pinned) — but every [[appendToIvfIndex]] call adds its own
-    * file(s) to each touched cell dir, and at crawl cadence probe cost
-    * starts tracking APPEND COUNT instead of index bytes (1000 appends =
-    * 1000 tiny row groups per probed cell). The quantizer is untouched:
-    * compaction moves no vector across cells and rewrites no centroid,
-    * so it composes with (does not replace) the occupancy-drift rebuild
-    * recommendation.
+  /** Rewrite an appended-to index's batches into one batch with one
+    * contiguous file per cell. Pure maintenance — probe-visible content
+    * is unchanged (spec-pinned) — but every [[appendToIvfIndex]] call
+    * adds its own batch with a file per touched cell, and at crawl
+    * cadence probe cost starts tracking APPEND COUNT instead of index
+    * bytes (1000 appends = 1000 tiny row groups per probed cell). The
+    * quantizer is untouched: compaction moves no vector across cells and
+    * rewrites no centroid, so it composes with (does not replace) the
+    * occupancy-drift rebuild recommendation.
     *
-    * Crash discipline: the compacted tree is fully written to a temp dir
-    * first, its row count verified against the live tree, then swapped
-    * in by two renames (live → `cells_precompact`, temp → live) and the
-    * old tree deleted. A crash before the first rename leaves the index
-    * untouched; between the renames the index has NO cells dir and every
-    * probe fails LOUDLY (never silently wrong) until `cells_precompact`
-    * is renamed back by the next compaction attempt — which finds and
-    * finishes the interrupted swap. Run in a maintenance window,
-    * exclusive with appends and probes (a probe holding lazy scans over
-    * pre-swap paths races the delete), same operational contract as the
-    * span-index compaction.
+    * Crash contract: [[graft.store.IndexStore]] (the row count is
+    * verified before the commit).
     */
   def compactIvfIndex(spark: org.apache.spark.sql.SparkSession,
                       dir: String): IvfCompactStats = {
-    val cells = new org.apache.hadoop.fs.Path(s"$dir/cells")
-    val tmp = new org.apache.hadoop.fs.Path(s"$dir/cells_compacting")
-    val old = new org.apache.hadoop.fs.Path(s"$dir/cells_precompact")
-    val fs = cells.getFileSystem(spark.sessionState.newHadoopConf())
-    // finish an interrupted swap: the old tree is the authoritative one
-    // iff the live dir is missing (crash landed between the two renames)
-    if (fs.exists(old)) {
-      require(!fs.exists(cells),
-        s"$dir has both cells and cells_precompact — a previous " +
-          "compaction died after its swap but before its cleanup; " +
-          "delete cells_precompact manually after verifying the index")
-      require(fs.rename(old, cells), s"could not restore $old")
-    }
-    if (fs.exists(tmp)) fs.delete(tmp, true) // dead earlier attempt
-    require(fs.exists(cells), s"no cells directory under $dir — build " +
-      "with writeIvfIndex first")
-    def dataFiles(p: org.apache.hadoop.fs.Path): Long = {
-      val it = fs.listFiles(p, true)
-      var n = 0L
-      while (it.hasNext) {
-        val f = it.next()
-        if (f.getPath.getName.endsWith(".parquet")) n += 1
-      }
-      n
-    }
-    val before = dataFiles(cells)
-    val live = spark.read.parquet(cells.toString)
-    val rows = live.count()
-    // one writer per cell = one contiguous file per cell, exactly
-    // writeIvfIndex's layout promise
-    live.repartition(col("_cell"))
-      .write.mode("overwrite").partitionBy("_cell").parquet(tmp.toString)
-    val rewritten = spark.read.parquet(tmp.toString).count()
+    def files() = IndexStore.read(spark, dir, IvfIndex, "cells").inputFiles.length
+    val before = files()
+    val id = freshBatchId("c")
+    val rows = IndexStore.compact(spark, dir, IvfIndex, id)(
+      rewriteCells(spark, dir, id)).get
+    IvfCompactStats(rows, before, files())
+  }
+
+  /** The IVF compaction's rewrite: the live batches' cells, one writer
+    * per cell (one contiguous file per cell, writeIvfIndex's layout), as
+    * batch `newId`; returns the row count, verified against the source. */
+  private[graft] def rewriteCells(spark: org.apache.spark.sql.SparkSession,
+                                  dir: String, newId: String)
+                                 (live: Seq[String]): Long = {
+    val src = IndexStore.read(spark, dir, IvfIndex, "cells", live)
+    val rows = src.count()
+    val target = IndexStore.dataPath(dir, "cells", newId)
+    src.repartition(col("_cell"))
+      .write.mode("overwrite").partitionBy("_cell").parquet(target)
+    val rewritten = spark.read.parquet(target).count()
     require(rewritten == rows,
       s"compaction rewrote $rewritten of $rows rows — aborting before " +
-        "the swap; the live index is untouched")
-    require(fs.rename(cells, old), s"could not stage $cells aside")
-    require(fs.rename(tmp, cells), s"could not activate $tmp — the live " +
-      s"tree is at $old; rerun compactIvfIndex to restore it")
-    fs.delete(old, true)
-    // no cache to invalidate: every probe path reads the cells tree via
-    // a fresh spark.read.parquet, and the centroid sidecar is untouched
-    IvfCompactStats(rows, before, dataFiles(cells))
+        "the commit; the live index is untouched")
+    rows
   }
+
+  /** A fresh, time-ordered batch id for the IVF index's own batches. */
+  private def freshBatchId(prefix: String): String =
+    f"$prefix${System.currentTimeMillis()}%013d-" +
+      java.util.UUID.randomUUID().toString.take(8)
 
   /** Append new vectors to an existing on-disk IVF index WITHOUT
     * re-quantizing: each vector is assigned to its nearest EXISTING
     * centroid (the same normalized-Euclidean metric that built the
-    * index) and its cell partition gains append-mode files — a growing
-    * corpus no longer forces a full rebuild per batch (the substring
-    * span index got incremental batches in r6; this is the IVF
-    * equivalent). The centroids sidecar is untouched, so probes stay
-    * valid with no cache invalidation.
+    * index) and the vectors land in a new committed batch of the
+    * [[graft.store.IndexStore]] (an empty append writes none) — a
+    * growing corpus no longer forces a full rebuild per batch. The
+    * centroids sidecar is untouched, so probes stay valid with no cache
+    * invalidation.
     *
     * The trade is recorded, not hidden: appended vectors land in cells
     * sized for the ORIGINAL corpus, so occupancy drifts as appends
@@ -678,17 +657,21 @@ object Similarity {
     * gracefully until then, never silently off a cliff, because the
     * assignment metric and the probe metric remain the same.
     *
-    * `compactFilesPerCell` (opt-in, 0 = off): when the cells tree
-    * exceeds that many data files per cell on average after the append,
-    * [[compactIvfIndex]] runs automatically inside this call — probe
-    * cost stays bounded by index BYTES without an operator remembering
-    * the maintenance call. Returned in `stats.compacted`.
+    * `compactFilesPerCell` (opt-in, 0 = off): each batch holds at most
+    * one file per cell, so once the index holds more than that many live
+    * batches after the append, [[compactIvfIndex]] runs automatically
+    * inside this call — probe cost stays bounded by index BYTES without
+    * an operator remembering the maintenance call. Returned in
+    * `stats.compacted`.
     */
   def appendToIvfIndex(newVecs: DataFrame, vecCol: String, idCol: String,
                        dir: String,
                        rebuildRecommendRatio: Double = 2.0,
                        compactFilesPerCell: Int = 0): IvfAppendStats = {
     val spark = newVecs.sparkSession
+    // a corrupt or missing meta fails here, naming the dir — never a
+    // silently skipped growth check
+    val builtRows = IndexStore.meta(spark, dir, IvfIndex).long("rows")
     val quant = loadQuantizer(spark, dir)
     val dim = quant.dim
     val toAdd = newVecs.select(col(idCol).as("id"), col(vecCol).as("vec"))
@@ -716,13 +699,19 @@ object Similarity {
     // (up to 4096× the batch bytes at auto-sized cell counts) on the
     // corpus-growth path. Duplicate ids in a batch each keep their own
     // row, matching writeIvfIndex (the window plan collapsed them).
-    assignCells(toAdd, quant)
-      .repartition(col("_cell")) // one writer per cell, as writeIvfIndex
-      .write.mode("append").partitionBy("_cell").parquet(s"$dir/cells")
+    if (appended > 0) {
+      val id = freshBatchId("a")
+      IndexStore.append(spark, dir, IvfIndex, id) {
+        assignCells(toAdd, quant)
+          .repartition(col("_cell")) // one writer per cell, as writeIvfIndex
+          .write.mode("overwrite").partitionBy("_cell")
+          .parquet(IndexStore.dataPath(dir, "cells", id))
+      }
+    }
     // occupancy after the append, from the index itself (ids-only scan);
     // SINGLE-ROW aggregate, never a per-cell collect — a two-level index
     // can hold millions of cells (r15)
-    val occRow = spark.read.parquet(s"$dir/cells")
+    val occRow = IndexStore.read(spark, dir, IvfIndex, "cells")
       .groupBy("_cell").agg(count(lit(1)).as("_n"))
       .agg(coalesce(sum("_n"), lit(0L)), coalesce(max("_n"), lit(0L)))
       .head()
@@ -730,46 +719,27 @@ object Similarity {
     val maxCell = occRow.getLong(1)
     val mean = if (total == 0) 0.0 else total.toDouble / quant.numCells
     // growth since build: cells should scale ~sqrt(rows), so at
-    // total > ratio² × buildRows the built cell count is a factor
+    // total > ratio² × builtRows the built cell count is a factor
     // `ratio` under the sqrt law FOR THIS INDEX (explicit or auto —
     // drift is relative to the corpus the quantizer saw, not to an
-    // assumed sizing rule). Pre-meta indexes fall back to skew-only.
-    val builtRows: Option[Long] =
-      try loadBuildMeta(spark, dir)._1 catch { case _: Exception => None }
-    val outgrown = builtRows.exists(r =>
-      total > rebuildRecommendRatio * rebuildRecommendRatio * r)
+    // assumed sizing rule)
+    val outgrown =
+      total > rebuildRecommendRatio * rebuildRecommendRatio * builtRows
     val skewed = maxCell > rebuildRecommendRatio * math.max(1.0, mean)
     if (outgrown || skewed)
       System.err.println(s"[graft.ivf] REBUILD RECOMMENDED for $dir: " +
-        s"total=$total over ${quant.numCells} cells" +
-        builtRows.fold("")(r => s" (built for $r rows)") +
-        f", max cell $maxCell vs mean $mean%.1f — appended vectors are " +
-        s"riding a quantizer sized for a smaller corpus; run " +
+        s"total=$total over ${quant.numCells} cells (built for " +
+        f"$builtRows rows), max cell $maxCell vs mean $mean%.1f — appended " +
+        s"vectors are riding a quantizer sized for a smaller corpus; run " +
         s"writeIvfIndex to re-quantize")
-    // opt-in auto-compaction (compactFilesPerCell > 0): once the cells
-    // tree holds more than `threshold` data files per cell on average —
-    // i.e. probe cost has started tracking APPEND COUNT instead of index
-    // bytes — run the standard compaction right here, inside the append
-    // call's exclusivity window (appends are already exclusive with
-    // probes by the compaction contract, so the hook adds no new
-    // operational requirement). The swap discipline is compactIvfIndex's
-    // own, unchanged.
+    // opt-in auto-compaction, inside the append call's exclusivity window
+    // (appends are already exclusive with probes by the compaction
+    // contract, so the hook adds no new operational requirement)
     val compacted: Option[IvfCompactStats] =
-      if (compactFilesPerCell <= 0) None
-      else {
-        val cellsPath = new org.apache.hadoop.fs.Path(s"$dir/cells")
-        val fs = cellsPath.getFileSystem(spark.sessionState.newHadoopConf())
-        val it = fs.listFiles(cellsPath, true)
-        var files = 0L
-        while (it.hasNext) {
-          if (it.next().getPath.getName.endsWith(".parquet")) files += 1
-        }
-        val cellDirs = fs.listStatus(cellsPath)
-          .count(s => s.isDirectory && s.getPath.getName.startsWith("_cell="))
-        if (cellDirs > 0 && files > compactFilesPerCell.toLong * cellDirs)
-          Some(compactIvfIndex(spark, dir))
-        else None
-      }
+      if (compactFilesPerCell > 0 &&
+          IndexStore.live(spark, dir).size > compactFilesPerCell)
+        Some(compactIvfIndex(spark, dir))
+      else None
     IvfAppendStats(appended, total, quant.numCells, maxCell, mean,
       outgrown || skewed, compacted)
   }
@@ -1024,96 +994,24 @@ object Similarity {
     }
   }
 
-  // dir -> (sidecar fingerprint, quantizer), loaded once per index
-  // VERSION: the per-query serving path must not pay a Spark JSON job per
-  // probe, but an index rebuilt by ANOTHER process would otherwise leave
-  // this JVM probing with stale centroids against new cell files forever.
-  // The fingerprint (name, length, mtime of every sidecar file) is one
-  // cheap listStatus RPC per probe; same-JVM rebuilds also remove their
-  // entry directly.
-  private val centroidCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, CoarseQuantizer)]()
-
-  // dir -> (meta-file stamp, (rows, recallRanks)) — the same
-  // stale-rebuild discipline as centroidCache, for the build sidecar
-  private val buildMetaCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, (Option[Long], Array[Int]))]()
-
-  /** Build sidecar (rows + measured recall ranks), stamped-cached. */
-  private[graft] def loadBuildMeta(spark: org.apache.spark.sql.SparkSession,
-                            dir: String): (Option[Long], Array[Int]) = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/_build_meta.json")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) return (None, Array.empty)
-    val st = fs.getFileStatus(p)
-    val stamp = s"${st.getLen}:${st.getModificationTime}"
-    buildMetaCache.compute(dir, (_, cached) =>
-      if (cached != null && cached._1 == stamp) cached
-      else {
-        val in = fs.open(p)
-        val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-        val j = org.json4s.jackson.JsonMethods.parse(txt)
-        val rows = (j \ "rows") match {
-          case org.json4s.JInt(v) => Some(v.toLong)
-          case _ => None
-        }
-        val ranks = (j \ "recallRanks") match {
-          case org.json4s.JArray(vs) => vs.collect {
-            case org.json4s.JInt(v) => v.toInt }.toArray
-          case _ => Array.empty[Int]
-        }
-        (stamp, (rows, ranks))
-      })._2
-  }
-
-  // dirs already warned about a missing build sidecar (once per JVM per
-  // index, not once per probe)
-  private val preMetaWarned =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  /** Index row count for auto-probe sizing: the build sidecar's `rows`
-    * when present, else cells² — `writeIvfIndex`'s sqrt-n cell sizing
-    * inverted, so a pre-meta index still gets a budget-consistent
-    * default rather than a full scan. (Appends drift the true count
-    * upward; under-estimating rows only OVER-probes, which errs toward
-    * recall, and the append path's rebuild recommendation is the
-    * freshness signal.)
-    *
-    * The inversion is only right when the index WAS sqrt-n auto-sized:
-    * an explicitly-over-celled pre-meta index (say 4096 cells over 100k
-    * rows) over-estimates rows ~170×, and autoNProbe then probes the
-    * 3-cell floor instead of a near-exhaustive budget-sized probe — a
-    * SILENT recall cut, the opposite failure direction from the comment
-    * above. No local signal distinguishes the two without scanning cell
-    * files, so fall back LOUDLY (once per index per JVM, matching
-    * nProbeForRecall's no-curve warning): rebuilding with the current
-    * writeIvfIndex stamps `rows` and retires the guess entirely.
-    */
+  /** Build-time row count for auto-probe sizing. Appends drift the true
+    * count upward; under-estimating rows only OVER-probes (errs toward
+    * recall), and the append's rebuild recommendation is the freshness
+    * signal. */
   private def indexRows(spark: org.apache.spark.sql.SparkSession,
-                        dir: String, cells: Int): Long =
-    loadBuildMeta(spark, dir)._1.getOrElse {
-      if (preMetaWarned.add(dir))
-        System.err.println(s"[graft.ivf] $dir carries no _build_meta.json " +
-          s"(pre-meta build) — auto-probe sizing ASSUMES sqrt-n cells " +
-          s"(rows ≈ cells² = ${cells.toLong * cells}); if the index was " +
-          "built with explicit nClusters well above sqrt(rows) this " +
-          "over-estimate silently under-probes — rebuild with " +
-          "writeIvfIndex to stamp the true row count, or pass nProbe " +
-          "explicitly")
-      cells.toLong * cells
-    }
+                        dir: String): Long =
+    IndexStore.meta(spark, dir, IvfIndex).long("rows")
 
   /** The index's measured recall(nProbe) curve — cumulative fraction of
     * build-time sampled queries whose true top-1 neighbor lies within
     * the first `p` probed cells, for p = 1..cells. Monotone
     * non-decreasing, reaching 1.0 at the full cell count by
     * construction. None when the index was built with
-    * `recallCurveSamples = 0` (or predates the curve).
+    * `recallCurveSamples = 0` (or auto-skipped the curve).
     */
   def recallCurve(spark: org.apache.spark.sql.SparkSession,
                   dir: String): Option[Array[Double]] = {
-    val (_, ranks) = loadBuildMeta(spark, dir)
+    val ranks = IndexStore.meta(spark, dir, IvfIndex).ints("recallRanks")
     if (ranks.isEmpty) None
     else {
       val cells = loadQuantizer(spark, dir).numCells
@@ -1135,14 +1033,14 @@ object Similarity {
                       dir: String, target: Double): Int = {
     require(target > 0 && target <= 1,
       s"recall target must be in (0, 1], got $target")
-    val (_, ranks) = loadBuildMeta(spark, dir)
+    val ranks = IndexStore.meta(spark, dir, IvfIndex).ints("recallRanks")
     val cells = loadQuantizer(spark, dir).numCells
     if (ranks.isEmpty) {
       System.err.println(s"[graft.ivf] $dir carries no recall curve " +
-        "(built with recallCurveSamples = 0 or by an older build) — " +
+        "(built with recallCurveSamples = 0 or below the auto size) — " +
         "falling back to the autoNProbe candidate budget; rebuild with " +
         "writeIvfIndex to calibrate")
-      autoNProbe(cells, indexRows(spark, dir, cells))
+      autoNProbe(cells, indexRows(spark, dir))
     } else nProbeFromRanks(ranks, cells, target)
   }
 
@@ -1174,54 +1072,37 @@ object Similarity {
   private[graft] val lastMemoryRecallRanks =
     new java.util.concurrent.atomic.AtomicReference[Array[Int]](Array.empty)
 
-  private def sidecarStamp(spark: org.apache.spark.sql.SparkSession,
-                           dir: String): String = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/centroids")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    fs.listStatus(p).filter(_.isFile).sortBy(_.getPath.getName)
-      .map(s => s"${s.getPath.getName}:${s.getLen}:${s.getModificationTime}")
-      .mkString(",")
-  }
-
-  /** Quantizer sidecar via the stamped cache — one listStatus RPC per
-    * call, a JSON read only when the sidecar changed (see centroidCache
-    * comment). Shared by every on-disk-index entry point. Routes on the
-    * `level` column: present = two-level sub-codebooks, absent = the
-    * historical flat (_cell, centroid) schema — old indexes keep
-    * loading unchanged.
+  /** Quantizer sidecar, cached with the index meta (one JSON read per
+    * index version — see [[graft.store.IndexStore]]). Shared by every
+    * on-disk-index entry point. Routes on the `level` column: present =
+    * two-level sub-codebooks, absent = the flat (_cell, centroid) schema.
     */
   private[graft] def loadQuantizer(spark: org.apache.spark.sql.SparkSession,
-                                   dir: String): CoarseQuantizer = {
-    val stamp = sidecarStamp(spark, dir)
-    centroidCache.compute(dir, (d, cached) =>
-      if (cached != null && cached._1 == stamp) cached
-      else {
-        val df = spark.read.json(s"$d/centroids")
-        val quant: CoarseQuantizer =
-          if (df.columns.contains("level")) {
-            val rows = df.select(col("_cell").cast("int"),
-                col("centroid").cast("array<double>"),
-                col("level").cast("int"))
-              .collect()
-              .map(r => (r.getInt(0), r.getSeq[Double](1).toArray,
-                r.getInt(2)))
-            def book(lv: Int): Array[Array[Double]] =
-              rows.filter(_._3 == lv).sortBy(_._1).map(_._2)
-            val (b1, b2) = (book(1), book(2))
-            require(b1.nonEmpty && b2.nonEmpty,
-              s"malformed two-level sidecar under $d")
-            TwoLevelQuantizer(b1, b2)
-          } else {
-            val cents = df.select(col("_cell").cast("int"),
-                col("centroid").cast("array<double>"))
-              .collect().map(r => (r.getInt(0), r.getSeq[Double](1)))
-            require(cents.nonEmpty, s"no centroids sidecar under $d — " +
-              "build with writeIvfIndex first")
-            FlatQuantizer(cents.toSeq)
-          }
-        (stamp, quant)
-      })._2
-  }
+                                   dir: String): CoarseQuantizer =
+    IndexStore.derived(spark, dir, IvfIndex) {
+      val df = spark.read.json(IndexStore.sidecar(dir, "centroids"))
+      if (df.columns.contains("level")) {
+        val rows = df.select(col("_cell").cast("int"),
+            col("centroid").cast("array<double>"),
+            col("level").cast("int"))
+          .collect()
+          .map(r => (r.getInt(0), r.getSeq[Double](1).toArray,
+            r.getInt(2)))
+        def book(lv: Int): Array[Array[Double]] =
+          rows.filter(_._3 == lv).sortBy(_._1).map(_._2)
+        val (b1, b2) = (book(1), book(2))
+        require(b1.nonEmpty && b2.nonEmpty,
+          s"malformed two-level sidecar under $dir")
+        TwoLevelQuantizer(b1, b2)
+      } else {
+        val cents = df.select(col("_cell").cast("int"),
+            col("centroid").cast("array<double>"))
+          .collect().map(r => (r.getInt(0), r.getSeq[Double](1)))
+        require(cents.nonEmpty, s"no centroids sidecar under $dir — " +
+          "build with writeIvfIndex first")
+        FlatQuantizer(cents.toSeq)
+      }: CoarseQuantizer
+    }
 
   /** Flat centroid list — kept for flat-index callers (the q94 gate
     * reads its cell count here). A two-level index fails LOUDLY: its
@@ -1244,9 +1125,8 @@ object Similarity {
     *
     * `nProbe = 0` (default) = auto: the same per-query candidate-budget
     * rule as `ivfTopK` ([[autoNProbe]] — ~[[AutoProbeBudget]] rows per
-    * query, exhaustive on small indexes), sized from the build sidecar's
-    * row count (cells² assumed for pre-meta indexes, the sqrt-n build
-    * sizing inverted). Pass `recallTarget` to pick the measured
+    * query, exhaustive on small indexes), sized from the build row count
+    * in the index meta. Pass `recallTarget` to pick the measured
     * operating point from the stored recall curve instead.
     */
   def probeIvfIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
@@ -1270,9 +1150,9 @@ object Similarity {
     val probeCells =
       if (nProbe > 0) nProbe
       else if (recallTarget > 0) nProbeForRecall(spark, dir, recallTarget)
-      else autoNProbe(quant.numCells, indexRows(spark, dir, quant.numCells))
+      else autoNProbe(quant.numCells, indexRows(spark, dir))
     val cells = quant.topCells(qn, math.max(1, probeCells))
-    spark.read.parquet(s"$dir/cells")
+    IndexStore.read(spark, dir, IvfIndex, "cells")
       .filter(col("_cell").isin(cells.map(Int.box): _*))
       .select(col("id").as("neighbor_id"),
         round(cosine(col("vec"), typedlit(query)), 6).as("cos"))
@@ -1303,7 +1183,7 @@ object Similarity {
     * corpus), the irreducible rerank shuffle.
     *
     * `nProbe = 0` (default) = auto, the shared [[autoNProbe]]
-    * candidate-budget rule (sidecar-sized, like `probeIvfIndex`).
+    * candidate-budget rule (meta-sized, like `probeIvfIndex`).
     */
   def probeIvfIndexBatch(queries: DataFrame, vecCol: String, idCol: String,
                          dir: String, k: Int, nProbe: Int = 0,
@@ -1329,7 +1209,7 @@ object Similarity {
     val probeCells =
       if (nProbe > 0) nProbe
       else if (recallTarget > 0) nProbeForRecall(spark, dir, recallTarget)
-      else autoNProbe(quant.numCells, indexRows(spark, dir, quant.numCells))
+      else autoNProbe(quant.numCells, indexRows(spark, dir))
     // explode_OUTER: a row whose probe list is empty (every distance NaN)
     // must stay visible to the guard pass below, not vanish pre-guard;
     // its null _cell then drops naturally in the inner candidate join
@@ -1359,7 +1239,7 @@ object Similarity {
     val probedCells =
       if (guardRow.isNullAt(3)) Array.empty[Int]
       else guardRow.getSeq[Int](3).toArray
-    val cellScan0 = spark.read.parquet(s"$dir/cells")
+    val cellScan0 = IndexStore.read(spark, dir, IvfIndex, "cells")
     val cellScan =
       if (probedCells.length < quant.numCells)
         cellScan0.filter(col("_cell").isin(probedCells.map(Int.box).toSeq: _*))

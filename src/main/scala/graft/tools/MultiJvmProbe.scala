@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   * under `local[32]`. Flushes single-JVM assumptions that local mode
   * can't catch: executor classpath for the custom Expressions,
   * broadcast serialization (models, sidecars, centroid tables),
-  * driver-held registries (Par.pinned, centroidCache) being accidentally
+  * driver-held registries (Par.pinned, the index meta cache) being accidentally
   * touched on executors, and state-store/file paths that silently
   * assume one process.
   *

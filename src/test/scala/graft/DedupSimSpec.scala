@@ -8,6 +8,7 @@ import scala.util.Random
 
 import graft.dedup.Dedup
 import graft.sim.Similarity
+import graft.store.IndexStore
 import graft.text.TextFunctions
 
 class DedupSimSpec extends AnyFunSuite {
@@ -17,6 +18,10 @@ class DedupSimSpec extends AnyFunSuite {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
   import spark.implicits._
+
+  /** The live rows of an IVF index's cells. */
+  private def cells(dir: String) =
+    IndexStore.read(spark, dir, Similarity.IvfIndex, "cells")
 
   private def corpus = {
     val rng = new Random(3)
@@ -787,8 +792,9 @@ class DedupSimSpec extends AnyFunSuite {
     Similarity.writeIvfIndex(vecs, "embedding", "vec_id", dir,
       nClusters = 4, seed = 11)
     // layout: hive directories per cell
-    val cellDirs = new java.io.File(s"$dir/cells").listFiles()
-      .filter(_.getName.startsWith("_cell=")).map(_.getName).sorted
+    val cellDirs = cells(dir).inputFiles
+      .map(new org.apache.hadoop.fs.Path(_).getParent.getName)
+      .filter(_.startsWith("_cell=")).distinct
     assert(cellDirs.length == 4, cellDirs.toSeq.toString)
 
     val q = vecs.filter(col("vec_id") === 7L)
@@ -943,7 +949,8 @@ class DedupSimSpec extends AnyFunSuite {
     try {
       Similarity.writeIvfIndex(vecs, "embedding", "vec_id", dir,
         nClusters = 64, seed = 7)
-      val nCells = spark.read.json(s"$dir/centroids").count().toInt
+      val nCells = spark.read.json(IndexStore.sidecar(dir, "centroids"))
+        .count().toInt
       assert(nCells == 64)
       val q = vecs.filter(col("vec_id") === 3L).head().getSeq[Double](1)
       val probed = Similarity.probeIvfIndex(spark, dir, q, k = 5)
@@ -996,9 +1003,7 @@ class DedupSimSpec extends AnyFunSuite {
       }
       // appended rows land in APPEND files — the original cell files
       // are untouched (no rewrite of the existing index)
-      val cellFiles = new java.io.File(s"$dirA/cells").listFiles()
-        .filter(_.getName.startsWith("_cell=")).flatMap(_.listFiles())
-        .count(_.getName.endsWith(".parquet"))
+      val cellFiles = cells(dirA).inputFiles.length
       assert(cellFiles >= 8, s"want per-cell base+append files, got $cellFiles")
       // a skewed append (everything into one cell) trips the LOUD
       // rebuild recommendation via the occupancy ratio
@@ -1022,13 +1027,13 @@ class DedupSimSpec extends AnyFunSuite {
       // duplicate ids in one batch each keep their own written row
       // (writeIvfIndex keeps duplicates; the append path must match —
       // the old window-argmin collapsed them to one)
-      val before = spark.read.parquet(s"$dirA/cells").count()
+      val before = cells(dirA).count()
       val dupRow = cluster(1, 7000 until 7001)
       val s3 = Similarity.appendToIvfIndex(
         (dupRow ++ dupRow).toDF("vec_id", "embedding"),
         "embedding", "vec_id", dirA)
       assert(s3.appended == 2 &&
-        spark.read.parquet(s"$dirA/cells").count() == before + 2,
+        cells(dirA).count() == before + 2,
         s"duplicate-id rows must both be written: $s3")
       // COMPACTION: after three appends each cell dir holds several
       // files; compaction rewrites to one contiguous file per cell with
@@ -1050,19 +1055,6 @@ class DedupSimSpec extends AnyFunSuite {
       }
       assert(postCompact == preCompact,
         "probe results must be identical across compaction")
-      // interrupted-swap restore: simulate a crash BETWEEN the two
-      // renames (live tree staged aside, new tree never activated) —
-      // the next compaction finds cells_precompact without cells,
-      // restores it, and completes normally
-      val fsDir = new java.io.File(s"$dirA/cells")
-      assert(fsDir.renameTo(new java.io.File(s"$dirA/cells_precompact")))
-      val cstats2 = Similarity.compactIvfIndex(spark, dirA)
-      assert(cstats2.rows == cstats.rows,
-        s"restored compaction lost rows: $cstats2")
-      assert(Similarity.probeIvfIndex(spark, dirA,
-          (base ++ extra).find(_._1 == 5L).get._2, k = 5)
-        .collect().map(_.getLong(0)).toSeq == preCompact.head.map(_._1),
-        "index must probe identically after the interrupted-swap restore")
     } finally {
       import scala.reflect.io.Directory
       new Directory(new java.io.File(dirA)).deleteRecursively()
@@ -1074,8 +1066,7 @@ class DedupSimSpec extends AnyFunSuite {
     // N small appends WITH the hook: once files/cell pass the threshold
     // the append itself compacts — one contiguous file per cell again,
     // probe-visible content unchanged, quantizer untouched, and the
-    // interrupted-swap discipline is compactIvfIndex's own (pinned in
-    // the sibling test)
+    // crash discipline is the store's own (pinned in IndexStoreSpec)
     val rng = new Random(45)
     def cluster(c: Int, ids: Range) = ids.map { i =>
       (i.toLong, Seq.tabulate(16)(d => (if (d == c * 4) 6.0 else 0.0) +
@@ -1086,9 +1077,7 @@ class DedupSimSpec extends AnyFunSuite {
     try {
       Similarity.writeIvfIndex(base.toDF("vec_id", "embedding"),
         "embedding", "vec_id", dir, nClusters = 4, seed = 11)
-      def files() = new java.io.File(s"$dir/cells").listFiles()
-        .filter(_.getName.startsWith("_cell=")).flatMap(_.listFiles())
-        .count(_.getName.endsWith(".parquet"))
+      def files() = cells(dir).inputFiles.length
       var compactions = 0
       var appended = Seq.empty[(Long, Seq[Double])]
       for (b <- 0 until 5) {
@@ -1113,7 +1102,7 @@ class DedupSimSpec extends AnyFunSuite {
       assert(lastStats.compacted.isDefined, s"threshold 1 must compact: $lastStats")
       assert(files() <= 4, s"post-hook tree must be ~one file per cell: ${files()}")
       // every appended row is probe-visible after the auto-compactions
-      val total = spark.read.parquet(s"$dir/cells").count()
+      val total = cells(dir).count()
       assert(total == base.size + appended.size,
         s"rows lost across auto-compaction: $total")
       val q = base.head._2
@@ -1331,14 +1320,14 @@ class DedupSimSpec extends AnyFunSuite {
     assert(one.getLong(0) == 90L && one.getDouble(1) == 1.0)
     // append assigns with the build's exact numerics: a re-appended
     // vector lands in its original cell
-    val cellsDf = spark.read.parquet(s"$dir/cells")
+    val cellsDf = cells(dir)
     val before = cellsDf.filter(col("id") === 7L)
       .select(col("_cell").cast("int")).head().getInt(0)
     Similarity.appendToIvfIndex(
       vecs.filter(col("vec_id") === 7L)
         .withColumn("vec_id", col("vec_id") + 555555),
       "embedding", "vec_id", dir)
-    val after = spark.read.parquet(s"$dir/cells")
+    val after = cells(dir)
       .filter(col("id") === 555562L)
       .select(col("_cell").cast("int")).head().getInt(0)
     assert(after == before, "appended twin must share its source's cell")
@@ -1358,9 +1347,9 @@ class DedupSimSpec extends AnyFunSuite {
   }
 
   test("IVF probe picks up an index rebuilt by another process") {
-    // the centroid cache is keyed by dir; an EXTERNAL rebuild (another
+    // the quantizer cache is keyed by dir; an EXTERNAL rebuild (another
     // JVM) never calls this JVM's invalidation, so freshness must come
-    // from the sidecar fingerprint. Simulate: build dim-8 index, warm the
+    // from the index meta's stamp. Simulate: build dim-8 index, warm the
     // cache, then file-copy a dim-4 index over it (bypassing
     // writeIvfIndex's same-JVM invalidation). A stale cache would reject
     // the dim-4 query against the remembered dim-8 centroids.

@@ -6,6 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import scala.util.Random
 
 import graft.dedup.SubstringDedup
+import graft.store.IndexStore
 
 /** Substring-level dedup (winnowing anchors -> candidate pairs ->
   * char-level extension) against a brute-force diagonal-islands truth —
@@ -334,11 +335,15 @@ class SubstringDedupSpec extends AnyFunSuite {
         batch1.toDF("doc_id", "text"), "text", "doc_id", dir)
       .as[(Long, Long, Int, Int, Int)].collect()
     assert(!reprobe.exists(r => r._1 == r._2), "self-pairs filtered")
-    // an uncommitted partial batch is invisible to readers
+    // an uncommitted partial batch is invisible to readers: a copy of
+    // the base batch's data with no commit marker would double every
+    // span it contributes if a reader opened it
     val sneaky = Seq(300L -> corpus(0)._2).toDF("doc_id", "text")
     SubstringDedup.duplicateSpans(sneaky, "text", "doc_id") // no-op warm
-    val partialDir = new java.io.File(s"$dir/batches/partial")
-    partialDir.mkdirs() // dir exists, no _COMMIT
+    SubstringDedup.SpanIndex.parts.foreach { part =>
+      spark.read.parquet(IndexStore.dataPath(dir, part, "base"))
+        .write.parquet(IndexStore.dataPath(dir, part, "partial"))
+    }
     val afterPartial = SubstringDedup.spansAgainstIndex(
         batch2.toDF("doc_id", "text"), "text", "doc_id", dir)
       .as[(Long, Long, Int, Int, Int)].collect()
@@ -367,12 +372,12 @@ class SubstringDedupSpec extends AnyFunSuite {
     val before = spans()
     assert(before.exists(_._1 == 3L) && before.exists(_._1 == 111L),
       "probe hits base AND appended docs pre-compaction")
-    def batchNames() = new java.io.File(s"$dir/batches").listFiles()
-      .filter(_.isDirectory).map(_.getName).toSet
+    def batchNames() = IndexStore.onDisk(spark, dir, SubstringDedup.SpanIndex)
     // CRASH WINDOW: compacted batch committed, sources NOT yet deleted —
     // both generations on disk; readers must see exactly one (no double
     // counting: duplicated texts would double every probe span row)
-    SubstringDedup.compactImpl(spark, dir, "c1", deleteSources = false)
+    IndexStore.compact(spark, dir, SubstringDedup.SpanIndex, "c1",
+      IndexStore.Stop.AfterCommit)(SubstringDedup.rewriteSpans(spark, dir, "c1"))
     assert(batchNames() == Set("base", "b1", "b2", "c1"))
     assert(spans() == before, "mid-crash index reads as one generation")
     // retrying the SAME compaction finishes the interrupted deletes
@@ -417,8 +422,7 @@ class SubstringDedupSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("spanidxa").toString + "/idx"
     SubstringDedup.writeSpanIndex(corpus.toDF("doc_id", "text"),
       "text", "doc_id", dir, minLen = 24, k = 8)
-    def batchNames() = new java.io.File(s"$dir/batches").listFiles()
-      .filter(_.isDirectory).map(_.getName).toSet
+    def batchNames() = IndexStore.onDisk(spark, dir, SubstringDedup.SpanIndex)
     // one batch carries a copy of corpus doc 2 so probe-equality has
     // batch-resident truth to find after the compactions
     val probe = Seq(200L -> (rand(15) + corpus(2)._2.substring(5, 85)))
@@ -458,12 +462,12 @@ class SubstringDedupSpec extends AnyFunSuite {
       .toDF("doc_id", "text")
     def spans() = SubstringDedup.spansAgainstIndex(probe, "text", "doc_id", dir)
       .as[(Long, Long, Int, Int, Int)].collect().toSet
-    def batchNames() = new java.io.File(s"$dir/batches").listFiles()
-      .filter(_.isDirectory).map(_.getName).toSet
+    def batchNames() = IndexStore.onDisk(spark, dir, SubstringDedup.SpanIndex)
     val before = spans()
     // c1 crashes AFTER its _COMMIT, before deleting sources: base and b1
     // sit on disk hidden only by c1's live _REPLACES manifest
-    SubstringDedup.compactImpl(spark, dir, "c1", deleteSources = false)
+    IndexStore.compact(spark, dir, SubstringDedup.SpanIndex, "c1",
+      IndexStore.Stop.AfterCommit)(SubstringDedup.rewriteSpans(spark, dir, "c1"))
     assert(batchNames() == Set("base", "b1", "c1"))
     // the NEXT scheduled compaction uses a FRESH id (the API mandates
     // fresh ids). It must finish c1's pending deletes first: otherwise
@@ -491,8 +495,7 @@ class SubstringDedupSpec extends AnyFunSuite {
     // sidecar is the mixed-parameter index the sidecar exists to prevent
     SubstringDedup.writeSpanIndex(corpus.toDF("doc_id", "text"),
       "text", "doc_id", dir, minLen = 24, k = 8)
-    val names = new java.io.File(s"$dir/batches").listFiles()
-      .filter(_.isDirectory).map(_.getName).toSet
+    val names = IndexStore.onDisk(spark, dir, SubstringDedup.SpanIndex)
     assert(names == Set("base"), s"rebuild must drop stale batches: $names")
   }
 

@@ -106,4 +106,20 @@ class ToolsSpec extends AnyFunSuite {
     assert(mains == listed("Mains"))
     assert(mains.size <= 10)
   }
+
+  test("only graft.store implements the index commit protocol") {
+    // one commit protocol: markers, the index meta and renames live in
+    // graft/store/ alone, so a fourth protocol cannot creep back
+    import scala.jdk.CollectionConverters._
+    val store = java.nio.file.Paths.get("src/main/scala/graft/store")
+    val tokens = Seq("_COMMIT", "_REPLACES", "_meta.json", ".rename(")
+    val offenders = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
+      .iterator().asScala
+      .filter(p => p.toString.endsWith(".scala") && !p.startsWith(store))
+      .flatMap { p =>
+        val src = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
+        tokens.filter(src.contains).map(t => s"$p: $t")
+      }.toSeq
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
 }
