@@ -135,8 +135,7 @@ object Dedup {
       // defeat reuse of planner-inserted ENSURE_REQUIREMENTS exchanges
       // over a pinned input), and the pair-exploding shuffle keeps its
       // parallelism instead of being byte-coalesced to one task.
-      // Rows-derived pin count — see minhashPairs / Par.pinPartitions.
-      val p = Par.pinPartitions(df)
+      val p = Par.width(df, Par.PinRowsPerTask)
       val idxP = idx.repartition(p, col("s"))
       val cand = idxP.as("a").hint("shuffle_hash")
         .join(idxP.as("b"),
@@ -181,14 +180,12 @@ object Dedup {
           explode_outer(col("_arr")).as("s"))
         .filter(col("s").isNotNull)
         .select(col("doc"), col("n_sh"), xxhash64(col("s")).as("s"))
-      // pair intersection counts materialized under a conf scoped to the
-      // rows-derived width (see Par.pinMaterializedAt): the self-join's
-      // ENSURE_REQUIREMENTS exchanges otherwise run `cores`-wide at any
-      // corpus size; the jaccard arithmetic + threshold stay unpinned
-      Par.pinMaterializedAt("jaccard.pairagg", selfJoinOnShingle(sh)
+      // pair intersection counts pinned at the rows-derived width; the
+      // jaccard arithmetic + threshold stay unpinned
+      Par.pinAtWidth("jaccard.pairagg", selfJoinOnShingle(sh)
         .groupBy(col("a.doc").as("id_a"), col("b.doc").as("id_b"),
           col("a.n_sh").as("n_a"), col("b.n_sh").as("n_b"))
-        .agg(count(lit(1)).as("n_inter")), Par.pinPartitions(df))
+        .agg(count(lit(1)).as("n_inter")), Par.width(df, Par.PinRowsPerTask))
         .withColumn("jaccard",
           round(col("n_inter") / (col("n_a") + col("n_b") - col("n_inter")), 6))
         .filter(col("jaccard") >= minJaccard)
@@ -212,10 +209,10 @@ object Dedup {
         .filter(col("_df") > maxShingleDf).select("s")
       val filtered = exploded.join(broadcast(hot), Seq("s"), "left_anti")
       val sizes = filtered.groupBy("doc").agg(count(lit(1)).as("n_sh"))
-      // scoped-conf pair-agg materialization, as in the no-cap branch
-      Par.pinMaterializedAt("jaccard.pairagg", selfJoinOnShingle(filtered)
+      // pair-agg pin, as in the no-cap branch
+      Par.pinAtWidth("jaccard.pairagg", selfJoinOnShingle(filtered)
         .groupBy(col("a.doc").as("id_a"), col("b.doc").as("id_b"))
-        .agg(count(lit(1)).as("n_inter")), Par.pinPartitions(df))
+        .agg(count(lit(1)).as("n_inter")), Par.width(df, Par.PinRowsPerTask))
         .join(sizes.select(col("doc").as("id_a"), col("n_sh").as("n_a")), "id_a")
         .join(sizes.select(col("doc").as("id_b"), col("n_sh").as("n_b")), "id_b")
         .withColumn("jaccard",
@@ -341,21 +338,14 @@ object Dedup {
     // pins the join key's partition count — AQE would otherwise coalesce
     // this small-bytes/pair-exploding shuffle to one task — and the pair
     // groupBy dedups collisions across tables. The count is derived from
-    // the corpus row estimate (Par.pinPartitions, r15) — note it binds on
-    // the rerank pin below, not here: EnsureRequirements rewrites any
-    // join-feeding user shuffle's count to the session conf (see
-    // Par.pinPartitions scaladoc).
-    val p = Par.pinPartitions(df)
+    // the corpus row estimate (Par.width).
+    val p = Par.width(df, Par.PinRowsPerTask)
     val sigsP = sigs.repartition(p, col("t"), col("h"))
-    // Candidate join+dedup MATERIALIZED under a conf scoped to p (r16):
-    // EnsureRequirements rewrites the sub-conf repartition count to the
-    // session conf on join inputs (Par.pinPartitions scaladoc), so the
-    // SHJ + pair-agg stages ran `cores` tasks at any corpus size —
-    // measured 3.0 executor-CPU-s at 32 tasks vs 0.13 at 3 for this
-    // exact shape (Par.pinMaterializedAt). At-scale (p >= conf) the
-    // frame passes through lazy and unpinned, exactly the r15 plan.
-    // The rerank below stays unpinned and recomputes per run.
-    val cand = Par.pinMaterializedAt("minhash.cand",
+    // Candidate join+dedup pinned at p (Par.pinAtWidth), so the SHJ +
+    // pair-agg stages run p tasks, not `cores`. At-scale (p >= conf) the
+    // frame passes through lazy and unpinned. The rerank below stays
+    // unpinned and recomputes per run.
+    val cand = Par.pinAtWidth("minhash.cand",
       sigsP.as("a").hint("shuffle_hash")
         .join(sigsP.as("b"),
           col("a.t") === col("b.t") && col("a.h") === col("b.h") &&
@@ -414,13 +404,12 @@ object Dedup {
     // so the hamming filter runs BEFORE the dedup groupBy, shrinking that
     // shuffle to true near-dups; grouping then includes hamming, which is
     // functionally dependent on the pair and adds nothing to the key.
-    // Rows-derived pin count — see minhashPairs / Par.pinPartitions.
-    val p = Par.pinPartitions(df)
+    // Rows-derived pin count, as in minhashPairs.
+    val p = Par.width(df, Par.PinRowsPerTask)
     val bandedP = banded.repartition(p, col("band"), col("key"))
-    // band join + hamming filter materialized under a conf scoped to p
-    // (see minhashPairs' cand / Par.pinMaterializedAt); the cross-band
-    // dedup groupBy stays unpinned and runs per call
-    Par.pinMaterializedAt("simhash.cand",
+    // band join + hamming filter pinned at p (see minhashPairs' cand);
+    // the cross-band dedup groupBy stays unpinned and runs per call
+    Par.pinAtWidth("simhash.cand",
       bandedP.as("a").hint("shuffle_hash")
         .join(bandedP.as("b"),
           col("a.band") === col("b.band") && col("a.key") === col("b.key") &&

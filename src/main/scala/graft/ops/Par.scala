@@ -43,7 +43,7 @@ object Par {
     }
   }
 
-  private val pinned = new java.util.concurrent.ConcurrentHashMap[
+  private[graft] val pinned = new java.util.concurrent.ConcurrentHashMap[
     (org.apache.spark.sql.SparkSession, String), DataFrame]()
 
   /** Persist `df` as the ONE live pinned intermediate for (session, key):
@@ -60,12 +60,14 @@ object Par {
     * correct, slower — the same trade `Similarity.lastIvfResult`
     * documents. Entries of stopped sessions are swept lazily.
     */
-  def pinLatest(key: String, df: DataFrame): DataFrame = {
+  def pinLatest(key: String, df: DataFrame): DataFrame = register(key, df.persist())
+
+  /** Enter the persisted `p` as the live pin for (its session, key). */
+  private def register(key: String, p: DataFrame): DataFrame = {
     import scala.jdk.CollectionConverters._
     pinned.keySet.asScala.filter(_._1.sparkContext.isStopped)
       .foreach(pinned.remove)
-    val p = df.persist()
-    val prev = pinned.put((df.sparkSession, key), p)
+    val prev = pinned.put((p.sparkSession, key), p)
     // The eviction guard must compare LOGICAL PLANS, not references:
     // `Dataset.persist`/`unpersist` both resolve against the shared cache
     // by plan `sameResult`, so re-pinning a logically-identical frame (a
@@ -214,7 +216,7 @@ object Par {
   }
 
   /** Rows of operator input each task of a pair-exploding self-join pin
-    * should own — the [[pinPartitions]] divisor. Calibrated r15 on the
+    * should own — the [[width]] grain of their pins. Calibrated r15 on the
     * q38 shape (PinCountProbe, sf0.1, 5k docs, min-of-3 warmed): p=32
     * (the old `defaultParallelism` constant) burns ~8 executor-CPU-s
     * where p∈{2,4} burns 3.5–5.5 for identical output — the delta is
@@ -224,52 +226,6 @@ object Par {
     * 3 partitions, sf1 ~25, sf10+ the full cluster width.
     */
   private[graft] val PinRowsPerTask: Long = 2048L
-
-  /** Partition count for the EXPLICIT repartition pins of the pair
-    * operators (minhash signatures + rerank, simhash/SRP bands,
-    * semantic-dedup cells, jaccard prefix index): derived from the
-    * operator INPUT's estimated row count, clamped to
-    * [2, defaultParallelism].
-    *
-    * Those pins exist because AQE would byte-coalesce a small-bytes/
-    * pair-EXPLODING shuffle to one task (each operator documents this);
-    * but pinning the CLUSTER CONSTANT makes every stage over the pin pay
-    * `defaultParallelism` × the per-task fixed cost at any corpus size —
-    * the same "constant tuned for one deployment" failure the r15
-    * rows-based fanOut rework removed from the scan side (guide §2.2:
-    * shuffle blocks grow as tasks × partitions while bytes/block shrink).
-    * Deriving from rows keeps the guard (floor 2 preserves the exploding
-    * shuffle's parallelism signal) and restores full width exactly when
-    * the data can use it. No estimate ⇒ the old constant (errs toward
-    * parallelism, never toward a serialized stage).
-    *
-    * ==Where the count actually binds (measured r15, PinDebug)==
-    * A user repartition whose output feeds a node with a required
-    * distribution (the self-JOINs) is REWRITTEN by EnsureRequirements to
-    * `spark.sql.shuffle.partitions` — the REPARTITION_BY_NUM origin
-    * survives (so AQE still never byte-coalesces it) but the count does
-    * not. The derived count therefore binds on the pins whose consumer
-    * has no distribution requirement at this size — e.g. minhashPairs'
-    * candidate/rerank pin while the rerank joins broadcast — and is a
-    * documented no-op on the self-join exchanges (count = session conf
-    * there, exactly the pre-r15 value). Sizing the session conf itself
-    * is out of scope: it is the driver bench contract (cores), and AQE
-    * coalescing already right-sizes every ENSURE_REQUIREMENTS read.
-    *
-    * Partition COUNT never changes these operators' results: everything
-    * downstream of the pins is per-row arithmetic on exact values or
-    * keyed aggregation over them (no order-sensitive float sums).
-    */
-  private[graft] def pinPartitions(input: DataFrame,
-                                   rowsPerTask: Long = PinRowsPerTask): Int = {
-    val p = input.sparkSession.sparkContext.defaultParallelism
-    estimatedRows(input) match {
-      case Some(n) =>
-        math.max(2, math.min(p.toLong,
-          (n + rowsPerTask - 1) / rowsPerTask).toInt)
-      case None => p
-    }
-  }
 
   /** The shared size decision of [[fanOut]] and Similarity.spreadNarrow:
     * rows when estimable (primary), bytes otherwise (fallback) — see
@@ -324,99 +280,75 @@ object Par {
         plansExchange(df)) df
     else if (!bigEnoughToSpread(df, minBytes, minRows)) df
     else {
-      val width = fanPartitions(df, minRows)
-      if (df.rdd.getNumPartitions < width) df.repartition(width) else df
+      val w = width(df, minRows)
+      if (df.rdd.getNumPartitions < w) df.repartition(w) else df
     }
   }
 
-  /** Rows-derived fan-out WIDTH (r16): `ceil(rows / minRows)` clamped to
-    * [2, defaultParallelism]; no row estimate keeps the full width.
+  /** Rows-derived shuffle WIDTH: `ceil(rows / grain)` clamped to
+    * [2, defaultParallelism]; no row estimate keeps the full width. The
+    * one width rule of graft's narrow plans: [[fanOut]] passes its
+    * site's `minRows` floor as the grain, the pair operators pass
+    * [[PinRowsPerTask]] for the pins ahead of their self-joins.
     *
-    * The r15 fan always repartitioned to `defaultParallelism`, charging
-    * every fanned stage `cores × per-task fixed cost` however small the
-    * input — the same constant-tuned-for-one-deployment failure the
-    * rows-derived pin counts removed from the pair operators
-    * (guide §2.2: shuffle blocks grow as map tasks × reduce partitions
-    * while bytes per block shrink; plus ~0.2 s/task of measured stage
-    * overhead on 32-slot local sessions). Measured r16 (CpuProbe,
-    * sf0.1, 32 cores, min-of-2 after priming):
+    * A cluster-constant width charges every stage `cores × per-task
+    * fixed cost` however small the input (guide §2.2: shuffle blocks
+    * grow as map tasks × reduce partitions while bytes per block
+    * shrink; plus ~0.2 s/task of measured stage overhead on 32-slot
+    * local sessions). Measured r16 on the fan (CpuProbe, sf0.1, 32
+    * cores, min-of-2 after priming):
     *   - q15 (100k events):  width 32 → 7: cpu 3.8 → 1.1 s, wall flat;
     *   - q32 (5k docs):      width 32 → 3: cpu 7.3 → 0.5 s, wall
     *     0.85 → 0.54 s;
     *   - q33 (5k docs):      width 32 → 3: cpu ~5.5 → ~1.1 s.
     * Width swept {2,3,4,7,8,16,32}: cpu rises ~linearly with width
     * while wall is flat-to-worse past ~8 — narrow is strictly better
-    * until tasks own less than ~the floor's rows.
+    * until tasks own less than ~the grain's rows.
     *
-    * The site's `minRows` floor doubles as the per-task grain: the floor
-    * IS the caller's calibrated "this many rows ≈ exchange break-even ≈
-    * a fraction of a second of work" signal (q32/q33 declare 2048 for
-    * regex-heavy rows, the winnow family keeps 16384), so one task owns
-    * at least a floor's worth of rows and width grows linearly with the
-    * corpus until the cluster width caps it — sf10+ plans keep the full
-    * fan exactly as before.
+    * The grain is the caller's calibrated "this many rows ≈ a fraction
+    * of a second of work" signal (q32/q33 declare 2048 for regex-heavy
+    * rows, the winnow family keeps 16384), so one task owns at least a
+    * grain of rows and width grows linearly with the corpus until the
+    * cluster width caps it — sf10+ plans keep the full width. The floor
+    * of 2 keeps a pair-exploding shuffle's parallelism signal. Width
+    * never changes results: everything downstream of the pair pins is
+    * per-row arithmetic on exact values or keyed aggregation over them
+    * (no order-sensitive float sums).
     */
-  private[graft] def fanPartitions(df: DataFrame, minRows: Long): Int = {
+  private[graft] def width(df: DataFrame, grain: Long): Int = {
     val p = df.sparkSession.sparkContext.defaultParallelism
-    val grain = math.max(1L, minRows)
+    val g = math.max(1L, grain)
     estimatedRows(df) match {
-      case Some(n) =>
-        math.max(2, math.min(p.toLong, (n + grain - 1) / grain).toInt)
+      case Some(n) => math.max(2, math.min(p.toLong, (n + g - 1) / g).toInt)
       case None => p
     }
   }
 
-  /** Pin `df` and MATERIALIZE it with the session shuffle-partition conf
-    * scoped to `partitions` — the only way a rows-derived width can bind
-    * on exchanges feeding a node with a required distribution (r16,
-    * verdict item 6). Background: EnsureRequirements refuses to let a
-    * user repartition BELOW the session conf dictate a join's width
-    * (HashShuffleSpec's skew guard) and rewrites the exchange to
-    * `spark.sql.shuffle.partitions` in place, while AQE never
-    * byte-coalesces REPARTITION_BY_NUM — so the pair operators'
-    * self-join stages ran `cores` tasks at ANY corpus size. Measured
-    * r16 on the q38 candidate shape (LineageTruncProbe, sf0.1, 32
-    * cores): the 32-task SHJ stage burns 3.0 executor-CPU-s where the
-    * same plan at conf=3 burns 0.13 for identical output.
+  /** [[pinLatest]] of `df` with every exchange of its cached plan planned
+    * at `partitions`, for the candidate/pair intermediates of the pair
+    * operators. EnsureRequirements rewrites a user repartition BELOW the
+    * session conf that feeds a join to `spark.sql.shuffle.partitions`
+    * (HashShuffleSpec's skew guard), while AQE never byte-coalesces
+    * REPARTITION_BY_NUM — so without this the self-join stages ran
+    * `cores` tasks at ANY corpus size. Measured r16 on the q38 candidate
+    * shape (LineageTruncProbe, sf0.1, 32 cores): the 32-task SHJ stage
+    * burns 3.0 executor-CPU-s where the same plan at width 3 burns 0.13
+    * for identical output.
     *
-    * Scoped-conf planning needs an EAGER action (a lazily returned
-    * frame plans after the conf is restored), so the pin is
-    * materialized here with count(). Only the SMALL-CORPUS regime is
-    * touched: when `partitions` >= the session conf (the rows-derived
-    * count clamps at defaultParallelism, so this is every at-scale
-    * corpus) the frame returns UNCHANGED — lazy, unpinned, plan
-    * bit-identical to r15. In the touched regime the materialized frame
-    * is bounded by construction (width < cores ⇒ operator input under
-    * ~[[PinRowsPerTask]] rows/core), so the eager pin cannot blow
-    * executor storage. Pinning candidate/verdict-class INTERMEDIATES is
-    * the established steady-state protocol (minhash shingles, substring
-    * verdicts); the per-pair scoring/dedup stages downstream stay
-    * unpinned and recompute per run.
+    * The frame is persisted through a [[Scoped]] clone set to
+    * `partitions`, so the cache entry's plan carries that width while
+    * the caller's conf is never written; the pin stays lazy (the first
+    * consumer builds it) and comes back as a frame of the caller's
+    * session, so what is built on it plans at the caller's width. When
+    * `partitions` >= the session conf (the width clamps at
+    * defaultParallelism, so every at-scale corpus) `df` returns as it
+    * came: lazy, unpinned, its plan unchanged.
     */
-  def pinMaterializedAt(key: String, df: DataFrame,
-                        partitions: Int): DataFrame = {
+  def pinAtWidth(key: String, df: DataFrame, partitions: Int): DataFrame = {
     val spark = df.sparkSession
-    val confKey = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(confKey)
-    if (partitions >= prev.toInt) df
-    else {
-      // a live registry pin with the same logical plan was already
-      // materialized under the scoped conf by a previous call (a repeat
-      // bench/serving iteration) — reuse it without paying another
-      // count() job (~0.1–0.3 s of pure job latency per call otherwise)
-      val live = pinned.get((spark, key))
-      if (live != null &&
-          live.queryExecution.analyzed.sameResult(df.queryExecution.analyzed))
-        live
-      else {
-        spark.conf.set(confKey, partitions.toString)
-        try {
-          val p = pinLatest(key, df)
-          p.count() // builds the cache under the scoped width
-          p
-        } finally spark.conf.set(confKey, prev)
-      }
-    }
+    if (partitions >= spark.conf.get(Scoped.ShufflePartitions).toInt) df
+    else register(key, Scoped.atWidth(spark, partitions)(narrow =>
+      org.apache.spark.sql.GraftSqlBridge.ofRows(narrow, df).persist()))
   }
 
   /** [[pinLatest]] ONLY when `df`'s upstream is a DERIVED plan (contains

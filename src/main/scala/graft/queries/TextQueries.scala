@@ -66,18 +66,18 @@ object TextQueries {
       ()
     }
 
-  /** q66's pre-sink streaming construction under the sized
-    * state-partition conf: the raw-events stream + a far-future sentinel
-    * SECOND file source (after the first microbatch the watermark passes
-    * every real session's end and the no-data batch flushes them —
-    * emission driven purely by event time) + session windows, handed to
-    * `run` for the sink choice. Partitions conf is restored and the
-    * sentinel dir deleted on the way out. Shared by the registered query
-    * (memory sink + ordered post-processing) and Decade3Probe (NOOP sink
-    * — at decade-3 volume the memory sink's driver-side result table,
-    * ~1e8 session rows, OOMs the harness while the OPERATOR's state
-    * stays watermark-bounded; the noop sink measures the operator, not
-    * result collection).
+  /** q66's pre-sink streaming construction on a clone of `s` at the
+    * sized state-partition width (graft.ops.Scoped): the raw-events
+    * stream + a far-future sentinel SECOND file source (after the first
+    * microbatch the watermark passes every real session's end and the
+    * no-data batch flushes them — emission driven purely by event time)
+    * + session windows, handed to `run` with that width for the sink
+    * choice. The sentinel dir is deleted on the way out. Shared by the
+    * registered query (memory sink + ordered post-processing) and
+    * ScaleLadder (NOOP sink on RocksDB state — at decade-3 volume the
+    * memory sink's driver-side result table, ~1e8 session rows, OOMs
+    * the harness while the OPERATOR's state stays watermark-bounded;
+    * the noop sink measures the operator, not result collection).
     *
     * Session-window state store cost scales with partitions per
     * microbatch (measured sf0.1 floor: 2 — 16 -> 5.5s, 4 -> 4.3s,
@@ -91,37 +91,35 @@ object TextQueries {
     * ts is floored to seconds in the stream projection.
     */
   private[graft] def withQ66Sessions[T](s: SparkSession, d: String)(
-      run: DataFrame => T): T = {
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions",
-      graft.streaming.Streams.sizedStatePartitions(s, d, "events.parquet")
-        .toString)
+      run: (DataFrame, Int) => T): T = {
+    val width = graft.streaming.Streams.sizedStatePartitions(s, d, "events.parquet")
+    val c = graft.ops.Scoped.session(s, graft.ops.Scoped.ShufflePartitions,
+      width.toString)
     // declared outside the try so the finally can reclaim it: the sink
     // consumes the stream synchronously inside `run`, so the sentinel
     // parquet is dead the moment `run` returns
     var sentinelDir: String = null
     try {
-      val ev = graft.streaming.Streams.readEventsRaw(s, d,
+      val ev = graft.streaming.Streams.readEventsRaw(c, d,
           glob = "events.parquet")
         .select(col("event_id"),
           col("ts").cast("long").cast("timestamp").as("ts"),
           col("user_id"), col("event_type"), col("value"))
       sentinelDir =
         java.nio.file.Files.createTempDirectory("q66_sentinel").toString
-      s.range(0, 1, 1, numPartitions = 1) // 1 row: don't plan `cores` slices
+      c.range(0, 1, 1, numPartitions = 1) // 1 row: don't plan `cores` slices
         .select(lit(-1L).as("event_id"),
           lit("2100-01-01 00:00:00").cast("timestamp").as("ts"),
           lit(-1L).as("user_id"), lit("sentinel").as("event_type"),
           lit(0.0).as("value"))
         .write.mode("overwrite").parquet(sentinelDir)
-      val sentinel = s.readStream
+      val sentinel = c.readStream
         .schema("event_id long, ts timestamp, user_id long, event_type string, value double")
         .parquet(sentinelDir)
       run(graft.streaming.Streams.sessionWindows(
         ev.unionByName(sentinel), gap = "1800 seconds",
-        watermark = "0 seconds"))
+        watermark = "0 seconds"), width)
     } finally {
-      s.conf.set("spark.sql.shuffle.partitions", prev)
       if (sentinelDir != null) {
         import scala.jdk.CollectionConverters._
         val root = java.nio.file.Paths.get(sentinelDir)
@@ -327,25 +325,22 @@ object TextQueries {
     // state store, no watermark — so append mode emits every verdict;
     // oracled against the batch gram-join truth.
     "q87_stream_decontaminate" -> ((s, d) => {
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions",
-        graft.streaming.Streams.sizedStatePartitions(s, d, "documents.parquet").toString)
-      try {
-        val stream = graft.streaming.Streams.readDocuments(s, d)
+      val sp = graft.streaming.Streams.sizedStatePartitions(s, d, "documents.parquet")
+      val bench = Tables.documents(s, d).filter(col("doc_id") < 50)
+      graft.ops.Scoped.atWidth(s, sp) { c =>
+        val stream = graft.streaming.Streams.readDocuments(c, d)
           .filter(col("doc_id") >= 50)
-        val bench = Tables.documents(s, d).filter(col("doc_id") < 50)
         val out = graft.streaming.Streams.contaminationFilter(
           stream, bench, "text", "doc_id", minLen = 50, k = 16)
         graft.streaming.Streams.runToMemory(
           out, s"q87_decon_${System.nanoTime}", "append")
-          // post-stream coalesce — see q65 (memory table scans wide)
-          .coalesce(graft.streaming.Streams.sizedStatePartitions(
-            s, d, "documents.parquet"))
-          .select(col("doc_id"),
-            col("contaminated").cast("int").as("contaminated"),
-            col("n_bench_docs"), col("max_span"))
-          .orderBy("doc_id")
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+      }
+        // post-stream coalesce — see q65 (memory table scans wide)
+        .coalesce(sp)
+        .select(col("doc_id"),
+          col("contaminated").cast("int").as("contaminated"),
+          col("n_bench_docs"), col("max_span"))
+        .orderBy("doc_id")
     }),
 
     // Span REMOVAL — the curation step consuming q83's spans: cut every
@@ -661,27 +656,23 @@ object TextQueries {
     "q65_stream_rollup" -> ((s, d) => {
       // Streaming state stores cost per shuffle partition per microbatch;
       // a single-file batch-equivalent run doesn't need 32 of them. The
-      // conf applies at stream START and is restored after the (fully
-      // synchronous) run, so surrounding batch queries are unaffected.
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
+      // stream starts on a clone at the sized width (graft.ops.Scoped),
+      // so surrounding batch queries are unaffected.
       val sp = graft.streaming.Streams.sizedStatePartitions(s, d, "events.parquet")
-      s.conf.set("spark.sql.shuffle.partitions", sp.toString)
-      try {
-        val stream = graft.streaming.Streams.windowedRollup(
-          graft.streaming.Streams.readEventsRaw(s, d, glob = "events.parquet"))
+      graft.ops.Scoped.atWidth(s, sp)(c => graft.streaming.Streams.runToMemory(
+        graft.streaming.Streams.windowedRollup(
+          graft.streaming.Streams.readEventsRaw(c, d, glob = "events.parquet")),
+        s"q65_rollup_${System.nanoTime}", "complete"))
         // post-stream coalesce (r16): the memory-sink table scans as
         // defaultParallelism partitions however few rows it holds
         // (LocalTableScan parallelism), so the final sort's map side ran
         // `cores` tasks × ~0.2 s/task of fixed stage cost on an
         // aggregated, driver-local result. Width follows the same
         // input-bytes sizing as the stream's state partitions.
-        graft.streaming.Streams.runToMemory(
-          stream, s"q65_rollup_${System.nanoTime}", "complete")
-          .coalesce(sp)
-          .select(col("window_start"), col("event_type"), col("n_events"),
-            round(col("sum_value"), 2).as("sum_value"))
-          .orderBy("window_start", "event_type")
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+        .coalesce(sp)
+        .select(col("window_start"), col("event_type"), col("n_events"),
+          round(col("sum_value"), 2).as("sum_value"))
+        .orderBy("window_start", "event_type")
     }),
 
     // Event-time streaming sessionization (batch twin: q49). A REAL
@@ -691,12 +682,13 @@ object TextQueries {
     // no-data microbatch flushes them all — emission driven purely by
     // event time, identical on live run and replay.
     "q66_stream_sessionize" -> ((s, d) => {
-      withQ66Sessions(s, d) { sessions =>
-        // post-stream coalesce — see q65 (memory table scans `cores`-wide)
-        val out = graft.streaming.Streams.runToMemory(
-            sessions, s"q66_sessions_${System.nanoTime}", "append")
-          .coalesce(graft.streaming.Streams.sizedStatePartitions(
-            s, d, "events.parquet"))
+      withQ66Sessions(s, d) { (sessions, width) =>
+        // back on s, then the post-stream coalesce — see q65 (memory
+        // table scans `cores`-wide)
+        val out = org.apache.spark.sql.GraftSqlBridge.ofRows(s,
+            graft.streaming.Streams.runToMemory(
+              sessions, s"q66_sessions_${System.nanoTime}", "append"))
+          .coalesce(width)
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy("user_id").orderBy("session_start")
         out.filter(col("user_id") >= 0)
@@ -714,11 +706,9 @@ object TextQueries {
     // events parquet, inner-joined on (user, time range) — the join
     // state is watermark-bounded; matches emit eagerly in append mode.
     "q81_stream_attribution" -> ((s, d) => {
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions",
-        graft.streaming.Streams.sizedStatePartitions(s, d, "events.parquet").toString)
-      try {
-        def evs = graft.streaming.Streams.readEventsRaw(s, d, glob = "events.parquet")
+      val sp = graft.streaming.Streams.sizedStatePartitions(s, d, "events.parquet")
+      graft.ops.Scoped.atWidth(s, sp) { c =>
+        def evs = graft.streaming.Streams.readEventsRaw(c, d, glob = "events.parquet")
           .select(col("event_id"),
             col("ts").cast("long").cast("timestamp").as("ts"),
             col("user_id"), col("event_type"))
@@ -731,15 +721,14 @@ object TextQueries {
         val joined = graft.streaming.Streams.streamIntervalJoin(
           clicks, purchases, "user_id", "_p_user", "c_ts", "p_ts",
           maxGap = "30 minutes", watermark = "1 hour")
+        graft.streaming.Streams.runToMemory(
+          joined, s"q81_attr_${System.nanoTime}", "append")
+      }
         // post-stream coalesce — see q65 (memory table scans `cores`-wide)
-        val out = graft.streaming.Streams.runToMemory(
-            joined, s"q81_attr_${System.nanoTime}", "append")
-          .coalesce(graft.streaming.Streams.sizedStatePartitions(
-            s, d, "events.parquet"))
-        out.select(col("user_id"), col("click_id"), col("purchase_id"),
+        .coalesce(sp)
+        .select(col("user_id"), col("click_id"), col("purchase_id"),
           (col("p_ts").cast("long") - col("c_ts").cast("long")).as("gap_sec"))
-          .orderBy("click_id", "purchase_id")
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+        .orderBy("click_id", "purchase_id")
     }),
 
     // End-to-end near-dup dedup: Jaccard pairs -> connected components ->

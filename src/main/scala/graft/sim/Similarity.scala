@@ -1397,16 +1397,14 @@ object Similarity {
     // dedup shuffle, so the groupBy only ever shuffles surviving pairs —
     // a pair colliding in several bands is scored that many times (≤
     // bands, ~13% extra compute measured) but never shuffled with its
-    // vectors attached. Rows-derived pin count (Par.pinPartitions, r15):
-    // the old defaultParallelism constant charged 32× per-task fixed
-    // cost to kB-scale corpora.
-    val p = graft.ops.Par.pinPartitions(df)
+    // vectors attached. Rows-derived pin count (Par.width, r15): the
+    // old defaultParallelism constant charged 32× per-task fixed cost
+    // to kB-scale corpora.
+    val p = graft.ops.Par.width(df, graft.ops.Par.PinRowsPerTask)
     val bandedP = banded.repartition(p, col("band"), col("key"))
-    // band join + inline cosine + threshold materialized under a conf
-    // scoped to p (see Par.pinMaterializedAt — EnsureRequirements
-    // otherwise rewrites the sub-conf width to `cores` on the join);
+    // band join + inline cosine + threshold pinned at p (Par.pinAtWidth);
     // the cross-band dedup groupBy stays unpinned and runs per call
-    graft.ops.Par.pinMaterializedAt("srp.cand",
+    graft.ops.Par.pinAtWidth("srp.cand",
       bandedP.as("a").hint("shuffle_hash")
         .join(bandedP.as("b"),
           col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
@@ -1505,13 +1503,12 @@ object Similarity {
           sdModel.clusterCenters.zipWithIndex
             .map { case (c, i) => (i, c.toArray.toSeq) }.toSeq))
       .select(col("id"), col("_v"), col("_cell"))
-    // Rows-derived pin count — see srpPairs / Par.pinPartitions.
-    val p = graft.ops.Par.pinPartitions(df)
+    // Rows-derived pin count, as in srpPairs.
+    val p = graft.ops.Par.width(df, graft.ops.Par.PinRowsPerTask)
     val cellP = assigned.repartition(p, col("_cell"))
-    // within-cell join + cosine threshold materialized under a conf
-    // scoped to p (see Par.pinMaterializedAt); survivors/components
-    // below stay unpinned and run per call
-    val pairs = graft.ops.Par.pinMaterializedAt("semdedup.pairs",
+    // within-cell join + cosine threshold pinned at p (Par.pinAtWidth);
+    // survivors/components below stay unpinned and run per call
+    val pairs = graft.ops.Par.pinAtWidth("semdedup.pairs",
       cellP.as("a").hint("shuffle_hash")
         .join(cellP.as("b"),
           col("a._cell") === col("b._cell") && col("a.id") < col("b.id"))

@@ -206,9 +206,9 @@ object Streams {
     * The default HDFS-backed provider keeps every open session's state
     * ON-HEAP — measured to OOM executors at 100× session-key cardinality
     * (the decade-3 probe's lesson). Past ~10^7 concurrent open sessions
-    * per executor, switch the session to RocksDB BEFORE starting the
-    * query: `Streams.withStateStore(spark, "rocksdb")` (or the provider
-    * key in `SPARK_GRAFT_EXTRA_CONF` with `tools.Sessions.build`) —
+    * per executor, start the query on RocksDB:
+    * `Streams.withStateStore(spark, "rocksdb") { s => … }` (or the
+    * provider key in `SPARK_GRAFT_EXTRA_CONF` with `tools.Sessions.build`) —
     * state is then bounded by local disk with changelog checkpointing,
     * not heap, at a probed ~0.3 s/query floor cost (NOTES r12 item 8:
     * q66 1.47 → 1.79 s at sf0.01). The provider is fixed
@@ -446,35 +446,27 @@ object Streams {
           col(rightTs) >= col(leftTs) &&
           col(rightTs) <= col(leftTs) + expr(s"interval $maxGap"))
 
-  /** Streaming state-store selector. The default HDFS-backed provider
-    * keeps every key's state ON-HEAP — fine at test cardinality, an
-    * executor OOM at 100× session/join-key cardinality. "rocksdb"
-    * switches NEW queries (the conf is read at query start; a checkpoint
-    * keeps the provider it started with) to RocksDB: state lives
-    * off-heap/on-disk with changelog checkpointing, so state size is
-    * bounded by local disk, not heap. Returns the previous provider
-    * setting so callers can restore it.
+  /** Run `f` on a clone of `spark` whose streaming state-store provider
+    * is `provider`: "rocksdb", or "hdfs"/"default" for Spark's heap-backed
+    * default. The default provider keeps every key's state ON-HEAP —
+    * fine at test cardinality, an executor OOM at 100× session/join-key
+    * cardinality; RocksDB keeps state off-heap/on-disk with changelog
+    * checkpointing, so state size is bounded by local disk, not heap.
+    * Streams `f` starts on the session it is given take the provider
+    * (read at query start; a checkpoint keeps the provider it started
+    * with); `spark`'s own conf is never written (graft.ops.Scoped).
     */
-  def withStateStore(spark: SparkSession, provider: String): Option[String] = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    provider.toLowerCase match {
-      case "rocksdb" => spark.conf.set(key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      case "hdfs" | "default" => spark.conf.unset(key)
+  def withStateStore[T](spark: SparkSession, provider: String)(
+      f: SparkSession => T): T = {
+    val cls = provider.toLowerCase match {
+      case "rocksdb" =>
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+      case "hdfs" | "default" =>
+        "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"
       case other => throw new IllegalArgumentException(
         s"state store must be rocksdb|hdfs|default, got $other")
     }
-    prev
-  }
-
-  /** Restore a provider setting captured by [[withStateStore]]. */
-  def restoreStateStore(spark: SparkSession, prev: Option[String]): Unit = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
-    }
+    f(graft.ops.Scoped.session(spark, graft.ops.Scoped.StateStoreProvider, cls))
   }
 
   /** Run a streaming frame to completion against static files via the

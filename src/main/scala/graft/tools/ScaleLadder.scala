@@ -55,10 +55,9 @@ object ScaleLadder {
         // single-batch replay holds every session open at once, which
         // OOMs the heap-backed state store: the ladder runs the same
         // stream through the NOOP sink on RocksDB state.
-        val prev = Streams.withStateStore(spark, "rocksdb")
-        try graft.queries.TextQueries.withQ66Sessions(spark, dir)(
-          Streams.runToNoop(_))
-        finally Streams.restoreStateStore(spark, prev)
+        Streams.withStateStore(spark, "rocksdb")(rocks =>
+          graft.queries.TextQueries.withQ66Sessions(rocks, dir)(
+            (sessions, _) => Streams.runToNoop(sessions)))
       } else {
         // toRdd, not count(): count() lets Catalyst eliminate the very
         // work under measurement (see Bench.runOnce)

@@ -50,9 +50,9 @@ object Sessions {
         "true")
       // Streaming state: the in-memory HDFS-backed provider (the Spark
       // default, spelled out; the class is private[state]). At bench
-      // cardinality it beats RocksDB; 100x-cardinality state switches to
-      // RocksDB via Streams.withStateStore or this key in
-      // SPARK_GRAFT_EXTRA_CONF.
+      // cardinality it beats RocksDB; 100x-cardinality state runs on
+      // RocksDB (Streams.withStateStore, or this key in
+      // SPARK_GRAFT_EXTRA_CONF).
       .config("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider")
       // shuffle compression stays ON even in local mode: the CPU saving

@@ -4,12 +4,27 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 
 /** Access bridge for the private[sql] surfaces a library defining its
   * own Catalyst expressions needs: Column <-> Expression conversion,
-  * plus the codegen-span count PlanDump prints and the compiled-method-
-  * size probe the JIT-cliff budget spec uses. Kept to exactly these calls.
+  * session cloning and moving a frame's plan between sessions (the
+  * scoped-session helper, `graft.ops.Scoped`), plus the codegen-span
+  * count PlanDump prints and the compiled-method-size probe the
+  * JIT-cliff budget spec uses. Kept to exactly these calls.
   */
 object GraftSqlBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
+
+  /** A new session sharing `spark`'s context, cache and catalog state,
+    * with a COPY of its conf, temp views and functions.
+    */
+  def cloneSession(spark: SparkSession): SparkSession =
+    spark.asInstanceOf[classic.SparkSession].cloneSession()
+
+  /** `df`'s analyzed plan as a frame of `spark`: later planning of it,
+    * and of everything built on it, reads `spark`'s conf.
+    */
+  def ofRows(spark: SparkSession, df: DataFrame): DataFrame =
+    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession],
+      df.asInstanceOf[classic.Dataset[_]].logicalPlan)
 
   /** Every WholeStageCodegen span in `df`'s executed plan. AQE hides
     * the materialized plan inside AdaptiveSparkPlanExec (a leaf to

@@ -282,56 +282,123 @@ class PlansSpec extends AnyFunSuite {
     finally { cached.unpersist(blocking = false); () }
   }
 
-  // ---- r16 fan WIDTH + scoped-conf pin materialization -----------------
+  // ---- rows-derived width + pins planned on a scoped clone ------------
 
-  test("fanPartitions derives the fan width from rows/minRows, clamped " +
-       "to [2, defaultParallelism]; no estimate keeps full width") {
+  /** Every hashpartitioning width in a plan's tree string. */
+  private def hashWidths(plan: String): Seq[Int] =
+    """hashpartitioning\([^)]*?(\d+)\)""".r.findAllMatchIn(plan)
+      .map(_.group(1).toInt).toSeq
+
+  /** The cached plans `df` reads. */
+  private def cachedPlans(df: org.apache.spark.sql.DataFrame) =
+    df.queryExecution.withCachedData.collect {
+      case m: org.apache.spark.sql.execution.columnar.InMemoryRelation =>
+        m.cacheBuilder.cachedPlan
+    }
+
+  test("width derives from rows/grain, clamped to [2, defaultParallelism]") {
     val p = spark.sparkContext.defaultParallelism
     val rows30k = spark.range(30000).toDF("id") // range carries rowCount
-    assert(graft.ops.Par.fanPartitions(rows30k, minRows = 16384L) == 2,
+    assert(graft.ops.Par.width(rows30k, grain = 16384L) == 2,
       "30k rows at a 16384 grain = ceil(1.8) = 2")
-    assert(graft.ops.Par.fanPartitions(rows30k, minRows = 2048L) ==
+    assert(graft.ops.Par.width(rows30k, grain = 2048L) ==
       math.min(p, 15), "30k rows at a 2048 grain = 15, cluster-clamped")
-    assert(graft.ops.Par.fanPartitions(rows30k, minRows = 1L) == p,
+    assert(graft.ops.Par.width(rows30k, grain = 1L) == p,
       "grain 1 clamps at defaultParallelism")
-    assert(graft.ops.Par.fanPartitions(spark.range(1).toDF("id"),
-      minRows = 16384L) == 2, "floor of 2 keeps a parallelism signal")
+    assert(graft.ops.Par.width(spark.range(1).toDF("id"),
+      grain = 16384L) == 2, "floor of 2 keeps a parallelism signal")
   }
 
-  test("pinMaterializedAt binds sub-conf join width and restores the " +
-       "conf; at-scale widths pass through lazy and unpinned") {
+  test("pinAtWidth plans the cached join narrow, lazily, conf untouched") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val confKey = "spark.sql.shuffle.partitions"
     val before = spark.conf.get(confKey)
     val df = spark.range(0, 1000, 1, 2).toDF("id")
       .withColumn("k", pmod(col("id"), lit(7)))
-    val joined = df.as("a").join(df.as("b"), Seq("k"))
-      .groupBy("k").count()
+    // a fresh, logically identical frame per use
+    def joined = df.as("a").join(df.as("b"), Seq("k")).groupBy("k").count()
+    val j = joined
     // at-scale regime: partitions >= conf -> identical frame, no pin
-    assert(graft.ops.Par.pinMaterializedAt("spec.pmat.pass", joined,
-      before.toInt) eq joined, "width >= conf must pass through")
-    assert(graft.ops.Par.pinMaterializedAt("spec.pmat.pass", joined,
-      before.toInt + 5) eq joined, "width > conf must pass through")
-    // scoped regime: the materialized plan's exchanges carry the scoped
-    // width, the session conf is restored, results are unchanged
-    val pinned = graft.ops.Par.pinMaterializedAt("spec.pmat.pin", joined, 2)
+    assert(graft.ops.Par.pinAtWidth("spec.pin.pass", j, before.toInt) eq j,
+      "width >= conf must pass through")
+    assert(graft.ops.Par.pinAtWidth("spec.pin.pass", j, before.toInt + 5) eq j,
+      "width > conf must pass through")
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    sc.addSparkListener(listener)
+    val pinned =
+      try {
+        org.apache.spark.GraftSparkBridge.drainListenerBus(sc)
+        jobs.set(0)
+        val p = graft.ops.Par.pinAtWidth("spec.pin", j, 2)
+        org.apache.spark.GraftSparkBridge.drainListenerBus(sc)
+        assert(jobs.get == 0, "the pin must start no Spark job")
+        p
+      } finally sc.removeSparkListener(listener)
     try {
-      assert(spark.conf.get(confKey) == before, "conf must be restored")
+      assert(spark.conf.get(confKey) == before, "conf must be unchanged")
+      assert(pinned.sparkSession eq spark, "the pin comes back on the caller")
       assert(pinned.storageLevel !=
         org.apache.spark.storage.StorageLevel.NONE, "scoped frame is pinned")
-      val widths = pinned.queryExecution.executedPlan.toString
-        .linesIterator.filter(_.contains("hashpartitioning"))
-        .flatMap("""hashpartitioning\([^)]*?(\d+)\)""".r
-          .findAllMatchIn(_).map(_.group(1).toInt)).toSeq
+      val widths = cachedPlans(pinned).flatMap(p => hashWidths(p.toString))
       assert(widths.nonEmpty && widths.forall(_ == 2),
-        s"scoped exchanges must plan at width 2, got $widths")
+        s"the cached plan's exchanges must plan at width 2, got $widths")
       assert(pinned.collect().sortBy(_.getLong(0)).toSeq ==
         joined.collect().sortBy(_.getLong(0)).toSeq,
-        "scoped materialization must not change results")
-      // warm-path shortcut: a logically identical frame reuses the live
-      // pin without re-materializing
-      val again = graft.ops.Par.pinMaterializedAt("spec.pmat.pin",
-        df.as("a").join(df.as("b"), Seq("k")).groupBy("k").count(), 2)
-      assert(again eq pinned, "same-result re-pin must reuse the live pin")
-    } finally graft.ops.Par.unpin("spec.pmat.pin", pinned)
+        "the narrow pin must not change results")
+      // a repeat call re-pins the same cache entry under the caller's
+      // session: one registry entry, still pinned
+      import scala.jdk.CollectionConverters._
+      val again = graft.ops.Par.pinAtWidth("spec.pin", joined, 2)
+      try {
+        val entries = graft.ops.Par.pinned.keySet.asScala.toSeq
+          .filter(_._2 == "spec.pin")
+        assert(entries.size == 1 && (entries.head._1 eq spark),
+          s"a repeat pin must leave one caller-keyed entry, got $entries")
+        assert(pinned.storageLevel !=
+          org.apache.spark.storage.StorageLevel.NONE,
+          "a repeat pin must not evict the shared cache entry")
+      } finally graft.ops.Par.unpin("spec.pin", again)
+    } finally graft.ops.Par.unpin("spec.pin", pinned)
+  }
+
+  test("a pair pin and a concurrent unrelated join keep their own widths") {
+    val docs = Tables.documents(spark, "/root/testdata/sf0.001")
+    val conf = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val derived = graft.ops.Par.width(docs, graft.ops.Par.PinRowsPerTask)
+    assert(derived < conf, s"derived width $derived must be below $conf")
+    val left = spark.range(0, 5000).toDF("id")
+    val right = spark.range(0, 5000).select(col("id"), (col("id") * 2).as("v"))
+    val done = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val bWidths = new java.util.concurrent.ConcurrentLinkedQueue[Seq[Int]]()
+    val b = new Thread(() => {
+      while (!done.get) {
+        val plan = left.join(right.hint("merge"), "id")
+          .queryExecution.executedPlan.toString
+        bWidths.add(hashWidths(plan))
+      }
+    })
+    b.start()
+    val aWidths =
+      try (0 until 6).map { i =>
+        // a different plan each round, so every call pins afresh
+        val pairs = graft.dedup.Dedup.simhashPairs(
+          docs.filter(col("doc_id") =!= i), "text", "doc_id")
+        val widths = cachedPlans(pairs).flatMap(p => hashWidths(p.toString))
+        pairs.collect()
+        widths
+      } finally { done.set(true); b.join() }
+    assert(aWidths.forall(w => w.nonEmpty && w.forall(_ == derived)),
+      s"every pair pin must plan at $derived, got $aWidths")
+    import scala.jdk.CollectionConverters._
+    val bs = bWidths.asScala.toSeq
+    assert(bs.nonEmpty && bs.forall(w => w.nonEmpty && w.forall(_ == conf)),
+      s"every unrelated join must plan at $conf, got " +
+        bs.filterNot(_.forall(_ == conf)).take(5))
   }
 }

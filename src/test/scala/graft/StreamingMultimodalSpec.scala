@@ -123,10 +123,11 @@ class StreamingMultimodalSpec extends AnyFunSuite {
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
           r.getLong(3), r.getDouble(4), r.getLong(5))).toSet
     }
-    def streamed(dir: String): Set[(Long, Long, Long, Long, Double, Long)] =
+    def streamed(s: SparkSession,
+                 dir: String): Set[(Long, Long, Long, Long, Double, Long)] =
       Streams.runToMemory(
         Streams.sessionStats(
-          spark.readStream
+          s.readStream
             .schema("event_id long, ts timestamp, user_id long, " +
               "event_type string, value double").parquet(dir),
           gap = "600 seconds", watermark = "0 seconds",
@@ -142,16 +143,10 @@ class StreamingMultimodalSpec extends AnyFunSuite {
     val truth = batchTruth(dir)
     assert(truth.nonEmpty && truth.exists(_._3 == 2L),
       s"fixture must produce a 2-session bucket, got $truth")
-    assert(streamed(dir) == truth, "heap provider must match batch truth")
-    val prevProvider = Streams.withStateStore(spark, "rocksdb")
-    try assert(streamed(dir) == truth,
-      "RocksDB provider must match batch truth")
-    finally {
-      prevProvider.foreach(p =>
-        spark.conf.set("spark.sql.streaming.stateStore.providerClass", p))
-      if (prevProvider.isEmpty)
-        spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    }
+    assert(streamed(spark, dir) == truth, "heap provider must match batch truth")
+    Streams.withStateStore(spark, "rocksdb")(rocks =>
+      assert(streamed(rocks, dir) == truth,
+        "RocksDB provider must match batch truth"))
   }
 
   test("stream-stream interval join pairs clicks with in-window purchases") {
@@ -312,8 +307,7 @@ class StreamingMultimodalSpec extends AnyFunSuite {
     // same kill + restart contracts as the two HDFS-provider tests above,
     // under the RocksDB provider (the 100×-cardinality deployment shape:
     // state bounded by local disk, not executor heap)
-    val prev = Streams.withStateStore(spark, "rocksdb")
-    try {
+    Streams.withStateStore(spark, "rocksdb") { rocks =>
       val t0 = 1700000000000L
       // --- session merge across the stop ---
       val src = java.nio.file.Files.createTempDirectory("rdb_sw_src").toString
@@ -325,7 +319,7 @@ class StreamingMultimodalSpec extends AnyFunSuite {
           .toDF("event_id", "ts", "user_id", "event_type", "value")
           .write.mode("append").parquet(src)
       def run(): Unit = {
-        val stream = spark.readStream
+        val stream = rocks.readStream
           .schema("event_id long, ts timestamp, user_id long, event_type string, value double")
           .parquet(src)
         val q = Streams.sessionWindows(stream, gap = "600 seconds",
@@ -344,6 +338,11 @@ class StreamingMultimodalSpec extends AnyFunSuite {
         .collect().map(r => (r.getLong(0), r.getLong(2), r.getDouble(3), r.getLong(4)))
       assert(sessions.toSeq == Seq((1L, 3L, 7.0, 360L)),
         s"RocksDB-recovered state must merge one session, got ${sessions.toSeq}")
+      // the stream started on the clone ran on the clone's provider
+      // (the offset log records the provider the query started with)
+      assert(new String(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(chk, "offsets", "0")), "UTF-8")
+        .contains("RocksDBStateStoreProvider"), "the stream must run on RocksDB")
 
       // --- buffered interval-join state across the stop ---
       val jsrc = java.nio.file.Files.createTempDirectory("rdb_ij_src").toString
@@ -355,7 +354,7 @@ class StreamingMultimodalSpec extends AnyFunSuite {
           .toDF("event_id", "ts", "user_id", "event_type")
           .write.mode("append").parquet(jsrc)
       def jrun(): Unit = {
-        def s = spark.readStream
+        def s = rocks.readStream
           .schema("event_id long, ts timestamp, user_id long, event_type string")
           .parquet(jsrc)
         val clicks = s.filter(col("event_type") === "click")
@@ -380,7 +379,7 @@ class StreamingMultimodalSpec extends AnyFunSuite {
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(pairs == Set((1L, 2L)),
         s"RocksDB-buffered click must pair across the restart, got $pairs")
-    } finally Streams.restoreStateStore(spark, prev)
+    }
   }
 
   test("multimodal feature extraction is deterministic with fixed width") {

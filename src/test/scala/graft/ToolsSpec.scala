@@ -122,4 +122,33 @@ class ToolsSpec extends AnyFunSuite {
       }.toSeq
     assert(offenders.isEmpty, offenders.mkString("\n"))
   }
+
+  test("only graft.ops.Scoped writes the shuffle width or state-store conf") {
+    // a per-call clone carries these settings: a write to a caller's
+    // conf would leak into every thread planning on that session. The
+    // key may be spelled as a literal, a val bound to the literal, or
+    // Spark's own conf entry.
+    import scala.jdk.CollectionConverters._
+    val helper = java.nio.file.Paths.get("src/main/scala/graft/ops/Scoped.scala")
+    val keys = Set("spark.sql.shuffle.partitions",
+      "spark.sql.streaming.stateStore.providerClass")
+    val sources = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
+      .iterator().asScala.filter(_.toString.endsWith(".scala"))
+      .map(p => p -> new String(java.nio.file.Files.readAllBytes(p), "UTF-8"))
+      .toSeq
+    val bound = sources.flatMap { case (_, src) =>
+      """val\s+(\w+)\s*(?::\s*String\s*)?=\s*"([^"]+)"""".r
+        .findAllMatchIn(src).filter(m => keys(m.group(2))).map(_.group(1))
+    }.toSet
+    val write = """conf\.(?:set|unset)\(\s*(?:"([^"]+)"|([\w.]+))""".r
+    val offenders = sources.filter(_._1 != helper).flatMap { case (p, src) =>
+      write.findAllMatchIn(src).filter { m =>
+        if (m.group(1) != null) keys(m.group(1))
+        else bound(m.group(2).split('.').last) ||
+          Seq("SHUFFLE_PARTITIONS", "STATE_STORE_PROVIDER")
+            .exists(m.group(2).contains)
+      }.map(m => s"$p: ${m.matched}")
+    }
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
 }
