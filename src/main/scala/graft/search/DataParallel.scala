@@ -1,72 +1,24 @@
 package graft.search
 
 import org.apache.spark.ml.classification.LogisticRegression
-import org.apache.spark.ml.functions.array_to_vector
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 import graft.agg.CvResults
-import graft.exec.CART
-import graft.plan.{Folds, ParamGrid}
+import graft.exec.{CART, FitSideData, GBT, Learner, Model}
+import graft.plan.Folds
 
-/** Data-parallel grid search — the 100 TB-safe generalization the
-  * broadcast path can't reach (SURVEY.md §7.4): when X exceeds executor
-  * memory, the DATA stays a distributed DataFrame with a fold COLUMN and
-  * each (candidate, fold) task is itself a distributed Spark ML fit. The
-  * task axis is driver-sequenced (each fit already uses the whole
-  * cluster); the relational skeleton — fold predicate, score frame,
-  * CvResults mean/std/rank, best-candidate refit — is byte-identical to
-  * the broadcast path, which is the point: switching regimes changes the
-  * executor, not the semantics.
-  *
-  * Param names map to Spark ML LogisticRegression: `reg_param`,
-  * `elastic_net`, `max_iter`.
+/** The one fold frame of every data-parallel CV route (grid search,
+  * multi-model race, eliminator, DataFrame OOF): the fold-hash column,
+  * the cache, and the row/fold-size bookkeeping — ONE pass, no
+  * per-(candidate, fold) count jobs. Folds are hashed row position, NOT
+  * the label (fold-label correlation would skew CV); stable while the
+  * cache holds, which is all CV needs. One definition so a fix to the
+  * fold ids lands everywhere.
   */
-/** Data-parallel forest — the same broadcast-overflow fallback for the
-  * tree-ensemble family: when X outgrows executor memory, train ONE
-  * distributed Spark ML forest (data-parallel tree induction over the
-  * full DataFrame) instead of `DistForest`'s per-seed task fan-out over
-  * broadcast data. Same trade the reference documents
-  * (`examples/search/spark_ml.py:31-40`): task-parallel wins while data
-  * fits — each tree sees all rows with zero coordination — and this path
-  * takes over when it doesn't.
-  */
-class DataParallelForest(nEstimators: Int = 100,
-                         maxDepth: Int = 5,
-                         seed: Long = 42) extends Serializable {
-  def fit(spark: SparkSession, df: DataFrame,
-          featuresCol: String, labelCol: String):
-      org.apache.spark.ml.classification.RandomForestClassificationModel = {
-    val prepared = df.select(
-      array_to_vector(col(featuresCol).cast("array<double>")).as("_features"),
-      col(labelCol).cast("double").as("_label"))
-    new org.apache.spark.ml.classification.RandomForestClassifier()
-      .setFeaturesCol("_features").setLabelCol("_label")
-      .setNumTrees(nEstimators).setMaxDepth(maxDepth).setSeed(seed)
-      .fit(prepared)
-  }
-
-  /** Predictions joined back as a column (probability as array<double>). */
-  def transform(model: org.apache.spark.ml.classification.RandomForestClassificationModel,
-                df: DataFrame, featuresCol: String): DataFrame = {
-    import org.apache.spark.ml.functions.vector_to_array
-    val prepared = df.withColumn("_features",
-      array_to_vector(col(featuresCol).cast("array<double>")))
-    model.transform(prepared)
-      .withColumn("probs", vector_to_array(col("probability")))
-      .withColumn("preds", col("prediction").cast("int"))
-      .drop("_features", "rawPrediction", "probability", "prediction")
-  }
-}
-
-/** Shared scaffold of every data-parallel CV route (grid search, tree
-  * search, multi-model race): the fold-hash column, the cache, and the
-  * row/fold-size bookkeeping — ONE pass, no per-(candidate, fold) count
-  * jobs. Folds are hashed row position, NOT the label (fold-label
-  * correlation would skew CV); stable within a job, which is all CV
-  * needs. One definition so a fix to the fold skeleton lands everywhere.
-  */
-private[search] final case class DpCvFrame(prepared: DataFrame, nTotal: Long,
+private[search] final case class DpCvFrame(prepared: DataFrame, cv: Int,
+                                           nTotal: Long,
                                            foldSizes: Map[Int, Long]) {
   def train(fold: Int): DataFrame = prepared.filter(col("_fold") =!= fold)
   def test(fold: Int): DataFrame = prepared.filter(col("_fold") === fold)
@@ -77,119 +29,91 @@ private[search] final case class DpCvFrame(prepared: DataFrame, nTotal: Long,
 
 private[search] object DpCvFrame {
   /** `selected` must already project the fit columns; the fold column is
-    * added here so every route hashes identically.
+    * added here so every route hashes identically. The fold-size pass
+    * materializes the cache.
     */
   def apply(selected: DataFrame, cv: Int, seed: Long): DpCvFrame = {
     val prepared = selected
       .withColumn("_fold", Folds.byHash(monotonically_increasing_id(), cv, seed))
       .cache() // scanned once per (candidate, fold) fit — keep it hot
-    val nTotal = prepared.count()
-    val foldSizes = prepared.groupBy("_fold").count()
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    DpCvFrame(prepared, nTotal, foldSizes)
+    try {
+      val foldSizes = prepared.groupBy("_fold").count()
+        .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+      DpCvFrame(prepared, cv, foldSizes.values.sum, foldSizes)
+    } catch { case e: Throwable => prepared.unpersist(); throw e }
+  }
+
+  /** `f` over a fold frame of `df`'s features and label as `_x`/`_y`,
+    * whose cache is released afterwards — also when a fit throws, so a
+    * failed fit leaves nothing cached in the caller's session.
+    */
+  def using[T](df: DataFrame, featuresCol: String, labelCol: String,
+               cv: Int, seed: Long)(f: DpCvFrame => T): T = {
+    val cvf = apply(df.select(
+      col(featuresCol).cast("array<double>").as("_x"),
+      col(labelCol).cast("double").as("_y")), cv, seed)
+    try f(cvf) finally cvf.unpersist()
   }
 }
 
-class DataParallelGridSearch(grid: Map[String, Seq[Double]],
-                             cv: Int = 3,
-                             scoring: String = "accuracy",
-                             seed: Long = 42) extends Serializable {
+/** The over-budget CV loop of the grid search and the multi-model race:
+  * each (candidate, fold) is a [[DataParallelFit]] on the fold frame's
+  * `_x`/`_y`, submitted `jobParallelism` at a time (`Par.concurrently`,
+  * order-preserving, so the keying equals the sequential loop's) and
+  * scored by [[DistributedScore.scoreMany]] — one fit, every metric;
+  * then `CvResults.aggregate`/`aggregateMulti`, the best candidate and
+  * its refit on all rows. Callers keep their own cv_results key columns,
+  * per-fit seeds and param-column join.
+  */
+private[search] object DpSearch {
+  /** `key`: the candidate's cv_results key values, in `keyFields` order. */
+  final case class Candidate(key: Seq[Any], learner: Learner,
+                             params: Map[String, Double])
 
-  final case class DpResult(cvResults: DataFrame,
-                            bestParams: Map[String, Double],
-                            bestScore: Double,
-                            bestModel: org.apache.spark.ml.classification.LogisticRegressionModel,
-                            bestCandidateId: Int)
+  /** `agg`: cached, one row per candidate; `best` indexes the candidates. */
+  final case class Outcome(agg: DataFrame, best: Int, bestScore: Double,
+                           bestModel: Model)
 
-  private def mkEstimator(params: Map[String, Double], nTrain: Long): LogisticRegression = {
-    // The engine's `c` is INVERSE L2 strength over the objective
-    // meanNLL + ||w||^2 / (2*c*n) (LogisticRegressionLBFGS.scala:23);
-    // Spark ML minimizes meanLoss + regParam/2 * ||w||^2, so the lossless
-    // translation is regParam = 1/(c*nTrain) — per fit, because n differs
-    // between a fold fit and the full-data refit. A bare 1/c would
-    // regularize n times stronger than the broadcast regime.
-    val reg = params.get("c") match {
-      case Some(c) => if (c > 0) 1.0 / (c * math.max(1L, nTrain)) else 0.0
-      case None    => params.getOrElse("reg_param", 0.0)
-    }
-    new LogisticRegression()
-      .setFeaturesCol("_features").setLabelCol("_label")
-      // multinomial even for 2 classes: k coefficient rows, so the fitted
-      // model converts losslessly to the engine's k x (d+1) LogRegModel
-      .setFamily("multinomial")
-      .setRegParam(reg)
-      .setElasticNetParam(params.getOrElse("elastic_net", 0.0))
-      .setMaxIter(params.getOrElse("max_iter", 100.0).toInt)
-  }
-
-  def fit(spark: SparkSession, df: DataFrame,
-          featuresCol: String, labelCol: String): DpResult = {
-    val cands = ParamGrid.expand(
-      grid.map { case (k, v) => k -> v.map(_.asInstanceOf[Any]) })
-      .map(_.map { case (k, v) => k -> v.asInstanceOf[Double] })
-    fitCandidates(spark, df, featuresCol, labelCol, cands)
-  }
-
-  /** Same search over an EXPLICIT candidate list (engine param names —
-    * `c` / `max_iter` — or raw Spark ML `reg_param` / `elastic_net`) —
-    * the entry point the broadcast-path searches auto-route through, so
-    * candidate_id stays aligned with the caller's own candidate ordering.
-    *
-    * Scoring goes through [[DistributedScore]] against the losslessly
-    * bridged engine model, NOT a Spark ML evaluator: the metric NAMES and
-    * MATH ("accuracy", "f1_weighted", "neg_log_loss", …) are then
-    * identical across the two fit regimes, and `iid`/`extraScorings`
-    * produce the same cv_results schema the broadcast route emits.
-    */
-  def fitCandidates(spark: SparkSession, df: DataFrame,
-                    featuresCol: String, labelCol: String,
-                    cands: Seq[Map[String, Double]],
-                    iid: Boolean = false,
-                    extraScorings: Seq[String] = Nil,
-                    jobParallelism: Int = 8): DpResult = {
-    require(cands.nonEmpty, "empty candidate list")
-    val cvf = DpCvFrame(df.select(
-      // keep the array form alongside the vector: Spark ML fits on the
-      // vector, DistributedScore's engine-model UDFs read the array
-      col(featuresCol).cast("array<double>").as("_xs"),
-      array_to_vector(col(featuresCol).cast("array<double>")).as("_features"),
-      col(labelCol).cast("double").as("_label")), cv, seed)
-    val prepared = cvf.prepared
-    val nTotal = cvf.nTotal
+  def run(cvf: DpCvFrame, keyFields: Seq[StructField],
+          cands: Seq[Candidate], scoring: String, extraScorings: Seq[String],
+          iid: Boolean, jobParallelism: Int, side: FitSideData,
+          fitSeed: (Int, Int) => Long, refitSeed: Long): Outcome = {
+    // every fit over the frame shares ONE class count (a train fold that
+    // misses the top class still fits the frame's width), resolved only
+    // if some candidate needs it
+    lazy val k = cvf.prepared.agg(max(col("_y"))).head().getDouble(0).toInt + 1
+    def fit(c: Candidate, data: DataFrame, seed: Long, nRows: Long): Model =
+      DataParallelFit.fit(c.learner, data, "_x", "_y", c.params, seed, nRows,
+        if (DataParallelFit.needsClassCount(c.learner)) Some(k) else None,
+        // no eval history: concurrent fits appending to ONE driver buffer
+        // would interleave (and race) — the visibility the broadcast
+        // regime's executor-side fits give it
+        side.copy(history = null))
 
     val allMetrics = scoring +: extraScorings
-    val tasks = for {
-      (params, ci) <- cands.zipWithIndex
-      fold <- 0 until cv
-    } yield (params, ci, fold)
-    // the (candidate, fold) fits are independent distributed jobs —
-    // submit them concurrently (see `JobParallel`); order-preserving, so
-    // candidate_id/fold_id keying is identical to the sequential loop
+    val tasks = for (ci <- cands.indices; fold <- 0 until cvf.cv) yield (ci, fold)
     val scoreRows = graft.ops.Par.concurrently(tasks, jobParallelism) {
-      case (params, ci, fold) =>
-        val model = SparkMLBridge.toLogRegModel(
-          mkEstimator(params, cvf.nTrain(fold)).fit(cvf.train(fold)))
+      case (ci, fold) =>
+        val model = fit(cands(ci), cvf.train(fold), fitSeed(ci, fold),
+          cvf.nTrain(fold))
         val ms = DistributedScore.scoreMany(allMetrics, model, cvf.test(fold),
-          "_xs", "_label")
-        (ci, fold, ms(scoring), cvf.nTest(fold), ms)
+          "_x", "_y")
+        Row.fromSeq(cands(ci).key ++ Seq(fold, ms(scoring), cvf.nTest(fold), ms))
     }
-    import spark.implicits._
-    val agg = (if (extraScorings.isEmpty) {
-      val scores = scoreRows.map { case (ci, f, s, n, _) => (ci, f, s, n) }
-        .toDF("candidate_id", "fold_id", "score", "n_test")
-      CvResults.aggregate(scores, Seq("candidate_id"), iid = iid)
-    } else {
-      val scores = scoreRows
-        .toDF("candidate_id", "fold_id", "score", "n_test", "scores")
-      CvResults.aggregateMulti(scores, Seq("candidate_id"), allMetrics,
-        iid = iid)
-    }).cache()
-    val bestRow = CvResults.best(agg, Seq("candidate_id")).head()
-    val bestId = bestRow.getAs[Int]("candidate_id")
-    val best = mkEstimator(cands(bestId), nTotal).fit(prepared)
-    cvf.unpersist()
-    DpResult(agg.orderBy("candidate_id"), cands(bestId),
-      bestRow.getAs[Double]("mean_test_score"), best, bestId)
+    val schema = StructType(keyFields ++ Seq(
+      StructField("fold_id", IntegerType, nullable = false),
+      StructField("score", DoubleType, nullable = false),
+      StructField("n_test", LongType, nullable = false),
+      StructField("scores", MapType(StringType, DoubleType, valueContainsNull = false))))
+    import scala.jdk.CollectionConverters._
+    val scores = cvf.prepared.sparkSession.createDataFrame(scoreRows.asJava, schema)
+    val keyCols = keyFields.map(_.name)
+    val agg = (if (extraScorings.isEmpty) CvResults.aggregate(scores, keyCols, iid = iid)
+      else CvResults.aggregateMulti(scores, keyCols, allMetrics, iid = iid)).cache()
+    val bestRow = CvResults.best(agg, keyCols).head()
+    val best = cands.indexWhere(_.key == keyCols.map(bestRow.getAs[Any]))
+    Outcome(agg, best, bestRow.getAs[Double]("mean_test_score"),
+      fit(cands(best), cvf.prepared, refitSeed, cvf.nTotal))
   }
 }
 
@@ -200,8 +124,6 @@ class DataParallelGridSearch(grid: Map[String, Seq[Double]],
   * the metric math is `Metrics`' exactly.
   */
 object DistributedScore {
-  import graft.exec.Model
-
   def apply(scoring: String, model: Model, test: DataFrame,
             featuresCol: String, labelCol: String): Double = scoring match {
     case "accuracy" | "f1_weighted" =>
@@ -329,21 +251,58 @@ object DistributedScore {
 }
 
 /** ONE data-parallel fit of a routable engine learner over a DataFrame —
-  * the shared kernel behind the eliminator's over-budget route and the
-  * DataFrame OOF: logistic via Spark ML (losslessly bridged), trees via
-  * DataParallelCART. Returns the same engine `Model` types the broadcast
-  * regime produces; unsupported learners fail loudly.
+  * the only learner dispatch of the broadcast-overflow regime, behind
+  * every over-budget route: the grid search and multi-model race
+  * (`DpSearch`), OvR, OvO and multilabel OvR, the eliminator and the
+  * DataFrame OOF. Logistic via Spark ML (losslessly bridged), CART via
+  * DataParallelCART, GBT via DataParallelGBT. Returns the same engine
+  * `Model` types the broadcast regime produces; unsupported learners
+  * fail loudly (`requireSupported`).
   */
 object DataParallelFit {
-  /** `nRows`: the training row count when the caller already knows it
-    * (fold-size bookkeeping in the search loops) — skips the count job
-    * the logistic regularization translation otherwise pays per fit.
+  /** The one supported-learner check: routes call it before any job, so
+    * an unsupported learner fails before anything is cached. `entrant`
+    * names the multi-model race's entry in the message.
     */
-  def fit(learner: graft.exec.Learner, data: DataFrame,
+  private[search] def requireSupported(learner: Learner,
+                                       entrant: String = ""): Unit =
+    learner match {
+      case graft.exec.LogisticRegressionGD | graft.exec.LogisticRegressionLBFGS |
+           _: CART.Classifier | CART.Regressor | GBT.Classifier | GBT.Regressor => ()
+      case other => throw new IllegalArgumentException(
+        (if (entrant.isEmpty) "" else s"model '$entrant': ") +
+          s"the data-parallel regime supports the logistic, CART, and GBT " +
+          s"learners, not $other; for bagged tree ensembles over " +
+          "broadcast-overflow data use DistForest, else shrink the data or " +
+          "raise withBroadcastBudget")
+    }
+
+  /** Whether `fit` derives `learner`'s class count from the data unless
+    * given one — callers fitting many times over one frame resolve it once.
+    */
+  private[search] def needsClassCount(learner: Learner): Boolean =
+    learner match {
+      case c: CART.Classifier => c.nClassesHint <= 0
+      case GBT.Classifier     => true
+      case _                  => false
+    }
+
+  /** `nRows`: the training row count when the caller already knows it
+    * (fold-size bookkeeping) — skips the count job the logistic
+    * regularization translation otherwise pays per fit. `nClasses`: a
+    * class count resolved once over the caller's whole frame, for the
+    * learners `needsClassCount` names (else the fit scans its own
+    * labels). `side`: fit_params side data — GBT early-stops on its eval
+    * slice; the Spark ML logistic solver has no eval hook and CART does
+    * not iterate.
+    */
+  def fit(learner: Learner, data: DataFrame,
           featuresCol: String, labelCol: String,
           params: Map[String, Double], seed: Long,
-          nRows: Long = -1L): graft.exec.Model = {
+          nRows: Long = -1L, nClasses: Option[Int] = None,
+          side: FitSideData = FitSideData.empty): Model = {
     import org.apache.spark.ml.functions.array_to_vector
+    requireSupported(learner)
     learner match {
       case graft.exec.LogisticRegressionGD | graft.exec.LogisticRegressionLBFGS =>
         val p = data.select(
@@ -351,11 +310,17 @@ object DataParallelFit {
           col(labelCol).cast("double").as("_label"))
         val est = new LogisticRegression()
           .setFeaturesCol("_features").setLabelCol("_label")
+          // multinomial even for 2 classes: k coefficient rows, so the
+          // fitted model converts losslessly to the engine's k x (d+1)
+          // LogRegModel
           .setFamily("multinomial")
           .setMaxIter(params.getOrElse("max_iter", 100.0).toInt)
-        // engine c -> regParam = 1/(c*n) (lossless translation; see
-        // DataParallelGridSearch.mkEstimator). A MISSING c means the
-        // engine DEFAULT c=1 (broadcast learners regularize at
+        // The engine's `c` is INVERSE L2 strength over the objective
+        // meanNLL + ||w||^2 / (2*c*n) (LogisticRegressionLBFGS.scala:23);
+        // Spark ML minimizes meanLoss + regParam/2 * ||w||^2, so the
+        // lossless translation is regParam = 1/(c*n) — per fit, because n
+        // differs between a fold fit and the full-data refit. A MISSING c
+        // means the engine DEFAULT c=1 (broadcast learners regularize at
         // lambda = 1/n when params omit 'c') — NOT Spark ML's regParam=0,
         // which would silently fit unregularized and diverge from the
         // broadcast regime on separable data. An explicit c <= 0 opts out.
@@ -366,21 +331,20 @@ object DataParallelFit {
         }
         SparkMLBridge.toLogRegModel(est.fit(p))
       case c: CART.Classifier =>
-        DataParallelCART.fitClassifier(data, featuresCol, labelCol, params,
-          seed, nClasses = math.max(0, c.nClassesHint))
+        DataParallelCART.fitClassifier(data, featuresCol, labelCol, params, seed,
+          nClasses = if (c.nClassesHint > 0) c.nClassesHint else nClasses.getOrElse(0))
       case CART.Regressor =>
         DataParallelCART.fitRegressor(data, featuresCol, labelCol, params, seed)
-      case graft.exec.GBT.Classifier =>
-        // class inventory from the data, like the broadcast fit's
-        // y.max + 1 (one tiny agg job per fit)
-        val k = math.max(2, data.agg(max(col(labelCol).cast("double")))
+      case GBT.Classifier =>
+        // class inventory from the data unless resolved by the caller,
+        // like the broadcast fit's y.max + 1; max(2, k): a single-class
+        // slice fits a constant-ish binary like the broadcast y.max clamp
+        val k = nClasses.getOrElse(data.agg(max(col(labelCol).cast("double")))
           .head().getDouble(0).toInt + 1)
-        DataParallelGBT.fit(data, featuresCol, labelCol, params, seed, k)
-      case graft.exec.GBT.Regressor =>
-        DataParallelGBT.fit(data, featuresCol, labelCol, params, seed, 0)
-      case other => throw new IllegalArgumentException(
-        s"the data-parallel regime supports the logistic, CART, and GBT " +
-          s"learners, not $other")
+        DataParallelGBT.fit(data, featuresCol, labelCol, params, seed,
+          math.max(2, k), side)
+      case GBT.Regressor => // requireSupported above leaves no other learner
+        DataParallelGBT.fit(data, featuresCol, labelCol, params, seed, 0, side)
     }
   }
 }

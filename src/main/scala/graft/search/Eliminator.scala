@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.agg.CvResults
 import graft.exec.{CART, Learner, LogRegModel, Metrics, Model, ModelParallel}
 import graft.exec.ModelParallel.{FitTask, TrainMatrix}
-import graft.plan.{Folds, RemovalLadder}
+import graft.plan.RemovalLadder
 
 /** Distributed feature elimination (reference `eliminate.py`):
   * 1. initial full fit ranks features by importance (the cost-estimation
@@ -78,66 +78,56 @@ class DistFeatureEliminator(learner: Learner,
 
   /** Broadcast-overflow route. Same skeleton as `fitMatrix` — pre-pass
     * importance ranking, removal ladder, rungs x folds, CvResults — but
-    * every fit is a DATA-PARALLEL fit of the routable learner family
-    * (logistic via Spark ML with the lossless c translation, CART/forest
-    * via DataParallelCART) and every score flows through
-    * DistributedScore's sufficient-statistics path. The feature mask is a
-    * column projection on the array column; rows never reach the driver.
+    * every fit is a `DataParallelFit` over the `DpCvFrame` folds and every
+    * score flows through DistributedScore's sufficient-statistics path.
+    * The feature mask is a column projection on the array column; rows
+    * never reach the driver.
     */
   private def fitDataParallel(spark: SparkSession, df: DataFrame,
                               featuresCol: String,
                               labelCol: String): EliminatorResult = {
-    val prepared = df.select(
-      col(featuresCol).cast("array<double>").as("_x"),
-      col(labelCol).cast("double").as("_label"))
-      .withColumn("_fold", Folds.byHash(monotonically_increasing_id(), cv, seed))
-      .cache()
-    val nTotal = prepared.count()
-    require(nTotal > 0, "empty training set")
-    val d = prepared.select(size(col("_x"))).head().getInt(0)
-
-    // one data-parallel fit of `learner` on a masked projection (default
-    // params throughout, matching the broadcast route's Map.empty fits)
-    def fitOne(data: DataFrame, keep: Array[Int], fitSeed: Long): Model =
-      DataParallelFit.fit(learner,
+    DataParallelFit.requireSupported(learner)
+    DpCvFrame.using(df, featuresCol, labelCol, cv, seed) { cvf =>
+      require(cvf.nTotal > 0, "empty training set")
+      val d = cvf.prepared.select(size(col("_x"))).head().getInt(0)
+      def masked(data: DataFrame, keep: Array[Int]): DataFrame =
         data.select(array(keep.map(j => col("_x").getItem(j)): _*).as("_xm"),
-          col("_label")),
-        "_xm", "_label", Map.empty, fitSeed)
+          col("_y"))
+      // one data-parallel fit of `learner` on a masked projection (default
+      // params throughout, matching the broadcast route's Map.empty fits)
+      def fitOne(data: DataFrame, keep: Array[Int], fitSeed: Long): Model =
+        DataParallelFit.fit(learner, masked(data, keep), "_xm", "_y",
+          Map.empty, fitSeed)
 
-    // 1. pre-pass on ALL rows ranks features worst-first
-    val full = fitOne(prepared, (0 until d).toArray, seed)
-    val worstFirst = {
-      val imp = importances(full, d)
-      (0 until d).sortBy(j => (imp(j), j)).toArray
+      // 1. pre-pass on ALL rows ranks features worst-first
+      val full = fitOne(cvf.prepared, (0 until d).toArray, seed)
+      val worstFirst = {
+        val imp = importances(full, d)
+        (0 until d).sortBy(j => (imp(j), j)).toArray
+      }
+      // 2. ladder, 3. rungs x folds — sequential loop of distributed fits
+      val rungKeeps: Seq[Array[Int]] = RemovalLadder
+        .rungs(worstFirst.toSeq, step, minFeaturesToSelect)
+        .map(drop => (0 until d).filterNot(drop.toSet).toArray)
+      val scoreRows = for {
+        (keep, ri) <- rungKeeps.zipWithIndex
+        fold <- 0 until cv
+      } yield {
+        val model = fitOne(cvf.train(fold), keep, seed + ri * 100 + fold)
+        val s = DistributedScore(scoring, model, masked(cvf.test(fold), keep),
+          "_xm", "_y")
+        (ri, fold, s, cvf.nTest(fold))
+      }
+      import spark.implicits._
+      val scores = scoreRows.toDF("candidate_id", "fold_id", "score", "n_test")
+      // 4. aggregate, best rung, refit on all rows with the winning mask
+      val agg = CvResults.aggregate(scores, Seq("candidate_id")).cache()
+      val bestRow = CvResults.best(agg, Seq("candidate_id")).head()
+      val keep = rungKeeps(bestRow.getAs[Int]("candidate_id"))
+      val refit = fitOne(cvf.prepared, keep, seed)
+      EliminatorResult(agg.orderBy("candidate_id"), keep,
+        bestRow.getAs[Double]("mean_test_score"), MaskedModel(refit, keep))
     }
-    // 2. ladder, 3. rungs x folds — sequential loop of distributed fits
-    val rungKeeps: Seq[Array[Int]] = RemovalLadder
-      .rungs(worstFirst.toSeq, step, minFeaturesToSelect)
-      .map(drop => (0 until d).filterNot(drop.toSet).toArray)
-    val foldSizes: Map[Int, Long] = prepared.groupBy("_fold").count()
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val scoreRows = for {
-      (keep, ri) <- rungKeeps.zipWithIndex
-      fold <- 0 until cv
-    } yield {
-      val nTest = foldSizes.getOrElse(fold, 0L)
-      val model = fitOne(prepared.filter(col("_fold") =!= fold), keep,
-        seed + ri * 100 + fold)
-      val test = prepared.filter(col("_fold") === fold).select(
-        array(keep.map(j => col("_x").getItem(j)): _*).as("_xm"), col("_label"))
-      val s = DistributedScore(scoring, model, test, "_xm", "_label")
-      (ri, fold, s, nTest)
-    }
-    import spark.implicits._
-    val scores = scoreRows.toDF("candidate_id", "fold_id", "score", "n_test")
-    // 4. aggregate, best rung, refit on all rows with the winning mask
-    val agg = CvResults.aggregate(scores, Seq("candidate_id")).cache()
-    val bestRow = CvResults.best(agg, Seq("candidate_id")).head()
-    val keep = rungKeeps(bestRow.getAs[Int]("candidate_id"))
-    val refit = fitOne(prepared, keep, seed)
-    prepared.unpersist(blocking = false)
-    EliminatorResult(agg.orderBy("candidate_id"), keep,
-      bestRow.getAs[Double]("mean_test_score"), MaskedModel(refit, keep))
   }
 
   def fitMatrix(spark: SparkSession, matrix: TrainMatrix): EliminatorResult = {

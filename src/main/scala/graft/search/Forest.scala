@@ -300,11 +300,12 @@ object OutOfFold {
 
   /** DataFrame-native out-of-fold probabilities — the 100 TB shape of
     * `get_oof`: OOF predictions stay a COLUMN, never a driver-sized
-    * array. Folds are a hash column, each fold's model fits DATA-PARALLEL
-    * on the complement (`DataParallelFit` — same auto-route family as
-    * search/forest/eliminator), and its fold's rows get probabilities via
-    * the broadcast-model UDF. The union covers every input row exactly
-    * once, so the result stacks directly as a meta-learner feature.
+    * array. Folds come from `DpCvFrame` (the search and eliminator
+    * routes' fold frame), each fold's model fits DATA-PARALLEL on the
+    * complement (`DataParallelFit`), and its fold's rows get
+    * probabilities via the broadcast-model UDF. The union covers every
+    * input row exactly once, so the result stacks directly as a
+    * meta-learner feature.
     */
   def oofProbaDF(df: org.apache.spark.sql.DataFrame,
                  featuresCol: String, labelCol: String,
@@ -312,27 +313,23 @@ object OutOfFold {
                  params: Map[String, Double] = Map.empty,
                  outCol: String = "oof_proba",
                  jobParallelism: Int = 8): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions._
     require(cv >= 2, s"cv must be >= 2, got $cv")
+    DataParallelFit.requireSupported(learner)
     val spark = df.sparkSession
-    // cache BEFORE the fold hash: monotonically_increasing_id is stable
-    // only while the partitioning is — freezing the frame freezes the ids
-    // across the per-fold fit and predict scans
-    val prepared = df
-      .withColumn("_fold", graft.plan.Folds.byHash(
-        monotonically_increasing_id(), cv, seed))
-      .cache()
-    prepared.count()
-    // the per-fold fits are independent distributed jobs — submit them
-    // concurrently (see `JobParallel`); the lazy predict frames cost
-    // nothing here, the fits inside DataParallelFit are the jobs
-    val parts = graft.ops.Par.concurrently(0 until cv, jobParallelism) { fold =>
-      val model = DataParallelFit.fit(learner,
-        prepared.filter(col("_fold") =!= fold), featuresCol, labelCol,
-        params, seed + fold)
-      graft.predict.Predict.withProbabilities(spark,
-        prepared.filter(col("_fold") === fold), model, featuresCol, outCol)
-    }
-    parts.reduce(_ unionByName _).drop("_fold")
+    // the fold frame's cache stays alive behind the returned lazy frame:
+    // it freezes the fold ids across the per-fold fit and predict scans
+    val cvf = DpCvFrame(df, cv, seed)
+    try {
+      // the per-fold fits are independent distributed jobs — submit them
+      // concurrently (see `JobParallel`); the lazy predict frames cost
+      // nothing here, the fits inside DataParallelFit are the jobs
+      val parts = graft.ops.Par.concurrently(0 until cv, jobParallelism) { fold =>
+        val model = DataParallelFit.fit(learner, cvf.train(fold), featuresCol,
+          labelCol, params, seed + fold, nRows = cvf.nTrain(fold))
+        graft.predict.Predict.withProbabilities(spark, cvf.test(fold), model,
+          featuresCol, outCol)
+      }
+      parts.reduce(_ unionByName _).drop("_fold")
+    } catch { case e: Throwable => cvf.unpersist(); throw e }
   }
 }

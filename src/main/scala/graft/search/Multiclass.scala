@@ -77,24 +77,15 @@ class DistOneVsRest(learner: Learner,
     } else fitDataParallel(spark, df, featuresCol, labelCol)
   }
 
-  /** Broadcast-overflow route: one DISTRIBUTED fit per class (the task
-    * axis is driver-sequenced — each fit already uses the whole cluster):
-    * Spark ML logistic (converted losslessly) for the logistic learners,
-    * histogram CART (`DataParallelCART`) for tree learners. Negatives are
-    * capped by the same `_negatives_mask` plan as the broadcast path, so
-    * the returned OvRModel is indistinguishable from the broadcast
-    * route's.
+  /** Broadcast-overflow route: one DISTRIBUTED `DataParallelFit` per
+    * class (each fit already uses the whole cluster; classes are
+    * submitted `jobParallelism` at a time). Negatives are capped by the
+    * same `_negatives_mask` plan as the broadcast path, so the returned
+    * OvRModel is indistinguishable from the broadcast route's.
     */
   private def fitDataParallel(spark: SparkSession, df: DataFrame,
                               featuresCol: String, labelCol: String): OvRModel = {
-    learner match {
-      case graft.exec.LogisticRegressionGD | graft.exec.LogisticRegressionLBFGS |
-           _: graft.exec.CART.Classifier | graft.exec.GBT.Classifier => ()
-      case other => throw new IllegalArgumentException(
-        s"data-parallel auto-route supports the logistic, CART, and GBT " +
-          s"learners, not $other; for bagged tree ensembles over " +
-          "broadcast-overflow data use DataParallelForest")
-    }
+    DataParallelFit.requireSupported(learner)
     import org.apache.spark.sql.functions.{col, lit, when, min, max}
     // cached, like the sibling OvO/multilabel routes: every per-class
     // job (inventory, negativesMask counts, degenerate agg, the fit's
@@ -261,6 +252,7 @@ class DistMultilabelOvR(learner: Learner,
                               featuresCol: String,
                               labelCol: String): MultilabelOvRModel = {
     import org.apache.spark.sql.functions._
+    DataParallelFit.requireSupported(learner)
     val labeled = df.select(
       col(featuresCol).cast("array<double>").as("_x"),
       col(labelCol).cast("array<string>").as("_ls")).cache()
@@ -453,6 +445,7 @@ class DistOneVsOne(learner: Learner, seed: Long = 42)
   private def fitDataParallel(spark: SparkSession, df: DataFrame,
                               featuresCol: String, labelCol: String): OvOModel = {
     import org.apache.spark.sql.functions.{col, lit, when}
+    DataParallelFit.requireSupported(learner)
     val labeled = df.select(col(featuresCol).as("_x"),
       col(labelCol).cast("double").as("_y")).cache()
     try {

@@ -2,21 +2,13 @@ package graft.search
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, StringType, StructField}
 
 import graft.agg.CvResults
-import graft.exec.{Learner, Metrics, Model, ModelParallel}
+import graft.exec.{Learner, Model, ModelParallel}
 import graft.exec.ModelParallel.{FitTask, TrainMatrix}
-import graft.plan.{Folds, ParamGrid, ParamSampler}
+import graft.plan.{ParamGrid, ParamSampler}
 
-/** Search meta-estimators: distributed hyperparameter search over
-  * candidates × CV folds (reference `search.py` DistBaseSearchCV /
-  * DistGridSearchCV / DistRandomizedSearchCV / DistMultiModelSearch).
-  *
-  * Pipeline (SURVEY.md §3.1): driver enumerates the candidate lattice →
-  * task fan-out against the broadcast matrix (ModelParallel.run) →
-  * `CvResults.aggregate` (groupBy + window rank, fully distributed) →
-  * best candidate → driver refit on the full matrix.
-  */
 /** The broadcast-vs-data-parallel regime threshold shared by every
   * auto-routed fit surface (SURVEY §7.4): above this estimated matrix
   * size, `fit` switches from driver-collect + broadcast to a distributed
@@ -32,14 +24,6 @@ trait BroadcastBudgeted {
   }
 }
 
-/** fit_params side-data configuration shared by the broadcast-regime fit
-  * surfaces (search, OvR, OvO): the eval slice + patience flow into
-  * every fan-out fit and the refit. The data-parallel routes ignore
-  * eval-based early stopping (Spark ML solvers expose no eval hook) —
-  * `max_iter` still caps their iterations. The multilabel surface is
-  * deliberately NOT covered: its eval truth is a label SET per row,
-  * which `FitSideData`'s double-typed labels cannot represent.
-  */
 /** Concurrent Spark-job submission width for the data-parallel regime's
   * INDEPENDENT-fit axes (candidates x folds, classes, class pairs, OOF
   * folds). Each fit is already distributed; submitting them from
@@ -59,6 +43,16 @@ trait JobParallel {
   }
 }
 
+/** fit_params side-data configuration shared by the broadcast-regime fit
+  * surfaces (search, OvR, OvO): the eval slice + patience flow into
+  * every fan-out fit and the refit. Over budget only the grid search's
+  * GBT fits early-stop on it (the eval slice is driver-resident, so they
+  * stop exactly like the broadcast regime); the Spark ML logistic solver
+  * exposes no eval hook — `max_iter` still caps its iterations. The
+  * multilabel surface is deliberately NOT covered: its eval truth is a
+  * label SET per row, which `FitSideData`'s double-typed labels cannot
+  * represent.
+  */
 trait FitSideConfigured {
   protected var fitSide: graft.exec.FitSideData = graft.exec.FitSideData.empty
   def withFitSideData(side: graft.exec.FitSideData): this.type = {
@@ -73,6 +67,15 @@ final case class SearchResult(cvResults: DataFrame,
                               bestModel: Model,
                               oofPreds: Option[Array[Array[Double]]] = None)
 
+/** Search meta-estimators: distributed hyperparameter search over
+  * candidates × CV folds (reference `search.py` DistBaseSearchCV /
+  * DistGridSearchCV / DistRandomizedSearchCV / DistMultiModelSearch).
+  *
+  * Pipeline (SURVEY.md §3.1): driver enumerates the candidate lattice →
+  * task fan-out against the broadcast matrix (ModelParallel.run) →
+  * `CvResults.aggregate` (groupBy + window rank, fully distributed) →
+  * best candidate → driver refit on the full matrix.
+  */
 class DistGridSearchCV(learner: Learner,
                        grid: Map[String, Seq[Double]],
                        cv: Int = 5,
@@ -94,7 +97,8 @@ class DistGridSearchCV(learner: Learner,
 
   /** `preds=True` (reference `search.py:551-560`): keep out-of-fold
     * predict_proba of the BEST candidate — each row predicted by the fold
-    * model that never trained on it.
+    * model that never trained on it. Broadcast regime only: an over-budget
+    * `fit` with preds fails loudly instead of returning none.
     */
   protected var preds: Boolean = false
   def withPreds(flag: Boolean = true): this.type = { preds = flag; this }
@@ -122,132 +126,38 @@ class DistGridSearchCV(learner: Learner,
   }
 
   /** Broadcast-overflow route: each (candidate, fold) is a distributed
-    * Spark ML logistic fit over the full DataFrame; candidate ids (and so
-    * cv_results/param columns) stay aligned with the broadcast path. The
-    * engine's `c` passes through unchanged — the executor translates it
-    * to Spark ML's regParam per fit (regParam = 1/(c*nTrain), matching
-    * the engine objective's lambda = 1/(c*n)). Scoring, `iid` weighting
-    * and `extraScorings` run through the same engine metric surface as
-    * the broadcast route. `preds` is a broadcast-regime feature (OOF
-    * arrays are driver-sized) and stays empty here.
+    * `DataParallelFit` over the full DataFrame (`DpSearch`); candidate
+    * ids (and so cv_results/param columns) stay aligned with the
+    * broadcast path. The engine's `c` passes through unchanged — the fit
+    * translates it to Spark ML's regParam per fit (regParam = 1/(c*nTrain),
+    * matching the engine objective's lambda = 1/(c*n)); tree params are
+    * native to both regimes, and GBT early-stops on the fit_params eval
+    * slice exactly like broadcast. Scoring, `iid` weighting and
+    * `extraScorings` run through the same engine metric surface as the
+    * broadcast route, and the refit best model is the broadcast route's
+    * model type. `preds` is a broadcast-regime feature (OOF arrays are
+    * driver-sized) and fails loudly here.
     */
   private def fitDataParallel(spark: SparkSession, df: DataFrame,
                               featuresCol: String, labelCol: String): SearchResult = {
-    learner match {
-      case graft.exec.LogisticRegressionGD | graft.exec.LogisticRegressionLBFGS => ()
-      case c: graft.exec.CART.Classifier =>
-        return fitDataParallelTree(spark, df, featuresCol, labelCol,
-          nClasses = math.max(0, c.nClassesHint), classification = true)
-      case graft.exec.CART.Regressor =>
-        return fitDataParallelTree(spark, df, featuresCol, labelCol,
-          nClasses = 0, classification = false)
-      case graft.exec.GBT.Classifier =>
-        return fitDataParallelTree(spark, df, featuresCol, labelCol,
-          nClasses = 0, classification = true)
-      case graft.exec.GBT.Regressor =>
-        return fitDataParallelTree(spark, df, featuresCol, labelCol,
-          nClasses = 0, classification = false)
-      case other => throw new IllegalArgumentException(
-        s"data-parallel auto-route supports the logistic, CART, and GBT " +
-          s"learners, not $other; for bagged tree ensembles over " +
-          "broadcast-overflow data use DataParallelForest")
-    }
+    require(!preds, "withPreds() is broadcast-only (out-of-fold arrays are " +
+      s"driver-sized) and the estimated matrix exceeds the $broadcastBudgetBytes-" +
+      "byte budget; use OutOfFold.oofProbaDF for DataFrame-sized OOF " +
+      "probabilities, or raise withBroadcastBudget")
+    DataParallelFit.requireSupported(learner)
     val cands = candidates()
     require(cands.nonEmpty, "empty parameter grid")
-    val translated = cands.map { m =>
-      Map(
-        "c" -> m.getOrElse("c", 1.0),
-        "max_iter" -> m.getOrElse("max_iter", 100.0))
+    val r = DpCvFrame.using(df, featuresCol, labelCol, cv, seed) { cvf =>
+      DpSearch.run(cvf,
+        Seq(StructField("candidate_id", IntegerType, nullable = false)),
+        cands.zipWithIndex.map { case (p, ci) => DpSearch.Candidate(Seq(ci), learner, p) },
+        scoring, extraScorings, iid, jobParallelism, fitSide,
+        fitSeed = (_, _) => seed, refitSeed = seed)
     }
-    val dp = new DataParallelGridSearch(Map.empty, cv, scoring, seed)
-      .fitCandidates(spark, df, featuresCol, labelCol, translated,
-        iid = iid, extraScorings = extraScorings,
-        jobParallelism = jobParallelism)
-    val cvResults = dp.cvResults
-      .join(broadcast(paramsFrame(spark, cands)), "candidate_id")
-      .orderBy("candidate_id")
-    SearchResult(cvResults, cands(dp.bestCandidateId),
-      dp.bestScore, dp.bestCandidateId,
-      SparkMLBridge.toLogRegModel(dp.bestModel))
-  }
-
-  /** Broadcast-overflow route for TREE candidates: each (candidate, fold)
-    * is a distributed histogram-CART fit (`DataParallelCART`) over the
-    * full DataFrame, scored by `DistributedScore` (confusion-matrix /
-    * residual sufficient statistics — never rows — reach the driver).
-    * Params pass through unchanged (max_depth / min_samples_split /
-    * max_features are native to both regimes); the refit best model is the
-    * SAME `CART.TreeModel` type the broadcast route returns. `preds` is a
-    * broadcast-regime feature (OOF arrays are driver-sized) — empty here.
-    */
-  private def fitDataParallelTree(spark: SparkSession, df: DataFrame,
-                                  featuresCol: String, labelCol: String,
-                                  nClasses: Int,
-                                  classification: Boolean): SearchResult = {
-    val cands = candidates()
-    require(cands.nonEmpty, "empty parameter grid")
-    val cvf = DpCvFrame(df.select(
-      col(featuresCol).cast("array<double>").as("_x"),
-      col(labelCol).cast("double").as("_y")), cv, seed)
-    val k =
-      if (!classification) 0
-      else if (nClasses > 0) nClasses
-      else cvf.prepared.agg(max(col("_y"))).head().getDouble(0).toInt + 1
-
-    def fitOne(train: DataFrame, params: Map[String, Double]): Model =
-      learner match {
-        // GBT honors FitSideData here too: the eval slice is driver-
-        // resident, so the DP regime early-stops exactly like broadcast.
-        // History stays off in the search fan-out: concurrent (candidate,
-        // fold) fits appending to ONE driver buffer would interleave (and
-        // race) — same visibility the broadcast regime's executor-side
-        // fits give it. max(2, k): single-class folds fit a constant-ish
-        // binary like the broadcast path's y.max clamp, not a crash.
-        case graft.exec.GBT.Classifier =>
-          DataParallelGBT.fit(train, "_x", "_y", params, seed,
-            math.max(2, k), fitSide.copy(history = null))
-        case graft.exec.GBT.Regressor =>
-          DataParallelGBT.fit(train, "_x", "_y", params, seed, 0,
-            fitSide.copy(history = null))
-        case _ if classification =>
-          DataParallelCART.fitClassifier(train, "_x", "_y", params, seed, k)
-        case _ =>
-          DataParallelCART.fitRegressor(train, "_x", "_y", params, seed)
-      }
-
-    // same multi-metric contract as the logistic DP route and the
-    // broadcast fan-out: one fit, every metric, rank on the primary
-    val allMetrics = scoring +: extraScorings
-    val tasks = for {
-      (params, ci) <- cands.zipWithIndex
-      fold <- 0 until cv
-    } yield (params, ci, fold)
-    val scoreRows = graft.ops.Par.concurrently(tasks, jobParallelism) {
-      case (params, ci, fold) =>
-        val model = fitOne(cvf.train(fold), params)
-        val ms = DistributedScore.scoreMany(allMetrics, model, cvf.test(fold),
-          "_x", "_y")
-        (ci, fold, ms(scoring), cvf.nTest(fold), ms)
-    }
-    import spark.implicits._
-    val agg = (if (extraScorings.isEmpty) {
-      val scores = scoreRows.map { case (ci, f, s, n, _) => (ci, f, s, n) }
-        .toDF("candidate_id", "fold_id", "score", "n_test")
-      CvResults.aggregate(scores, Seq("candidate_id"), iid = iid)
-    } else {
-      val scores = scoreRows
-        .toDF("candidate_id", "fold_id", "score", "n_test", "scores")
-      CvResults.aggregateMulti(scores, Seq("candidate_id"), allMetrics,
-        iid = iid)
-    }).cache()
-    val cvResults = agg.join(broadcast(paramsFrame(spark, cands)), "candidate_id")
-      .orderBy("candidate_id")
-    val bestRow = CvResults.best(agg, Seq("candidate_id")).head()
-    val bestId = bestRow.getAs[Int]("candidate_id")
-    val bestModel = fitOne(cvf.prepared, cands(bestId))
-    cvf.unpersist()
-    SearchResult(cvResults, cands(bestId),
-      bestRow.getAs[Double]("mean_test_score"), bestId, bestModel)
+    SearchResult(
+      r.agg.join(broadcast(paramsFrame(spark, cands)), "candidate_id")
+        .orderBy("candidate_id"),
+      cands(r.best), r.bestScore, r.best, r.bestModel)
   }
 
   /** Group-aware CV (`fit(X, y, groups)` flowing into `check_cv`,
@@ -384,81 +294,46 @@ class DistMultiModelSearch(models: Seq[(String, Learner, Map[String, Seq[Double]
   /** Auto-routed fit: the multi-armed race collects + broadcasts while
     * the matrix fits the budget; past it, every (model, candidate, fold)
     * becomes a distributed `DataParallelFit` scored by
-    * `DistributedScore` — same engine metric surface, same cv_results
-    * keying, same refit contract, so the caller never sees which regime
-    * ran.
+    * `DistributedScore` (`DpSearch`, the grid search's loop) — same engine
+    * metric surface, same cv_results keying, same refit contract, so the
+    * caller never sees which regime ran.
     */
   def fit(spark: SparkSession, df: DataFrame,
           featuresCol: String, labelCol: String): MultiResult = {
     if (ModelParallel.estimateMatrixBytes(df, featuresCol) <= broadcastBudgetBytes)
       fitBroadcast(spark, df, featuresCol, labelCol)
-    else fitDataParallel(spark, df, featuresCol, labelCol)
+    else fitDataParallel(df, featuresCol, labelCol)
   }
 
-  private def fitDataParallel(spark: SparkSession, df: DataFrame,
+  private def fitDataParallel(df: DataFrame,
                               featuresCol: String, labelCol: String): MultiResult = {
     val drawn = drawCandidates()
     drawn.foreach { case (name, learner, _) =>
-      learner match {
-        case graft.exec.LogisticRegressionGD |
-             graft.exec.LogisticRegressionLBFGS |
-             _: graft.exec.CART.Classifier | graft.exec.CART.Regressor |
-             graft.exec.GBT.Classifier | graft.exec.GBT.Regressor => ()
-        case other => throw new IllegalArgumentException(
-          s"model '$name': the data-parallel auto-route supports the " +
-            s"logistic, CART, and GBT learners, not $other; shrink the " +
-            "data or raise withBroadcastBudget")
-      }
+      DataParallelFit.requireSupported(learner, entrant = name)
     }
-    // DpCvFrame hashes folds, not labels; the broadcast route stratifies
-    // instead — fold SCHEMES differ between regimes, scores agree in
-    // expectation (same contract as the grid search auto-route)
-    val cvf = DpCvFrame(df.select(
-      col(featuresCol).cast("array<double>").as("_x"),
-      col(labelCol).cast("double").as("_y")), cv, seed)
-    // Hint-less CART entrants would otherwise pay a max(label) inference
-    // job inside EVERY (candidate, fold) fit — resolve the class count
-    // once (lazily: only if some tree entrant needs it) and pin the hint.
-    lazy val kResolved =
-      cvf.prepared.agg(max(col("_y"))).head().getDouble(0).toInt + 1
-    val perModel = drawn.map {
-      case (name, c: graft.exec.CART.Classifier, cands) if c.nClassesHint <= 0 =>
-        (name, new graft.exec.CART.Classifier(kResolved): Learner, cands)
-      case other => other
-    }
-
     // Per-fit seeds get the same globally-unique running offset as the
     // broadcast route's task ids — without it, candidate pi of model A
     // and candidate pi of model B would draw identical subsampling /
     // random-split streams (correlated scores across entrants).
-    val seedOffsets = perModel.scanLeft(0)(_ + _._3.size * cv).init
-    val tasks = for {
-      ((name, learner, cands), off) <- perModel.zip(seedOffsets)
-      (params, pi) <- cands.zipWithIndex
-      fold <- 0 until cv
-    } yield (name, learner, params, pi, fold, off)
-    val scoreRows = graft.ops.Par.concurrently(tasks, jobParallelism) {
-      case (name, learner, params, pi, fold, off) =>
-        val model = DataParallelFit.fit(learner, cvf.train(fold), "_x", "_y",
-          params, seed + off + pi * cv + fold, nRows = cvf.nTrain(fold))
-        (name, pi, fold,
-          DistributedScore(scoring, model, cvf.test(fold), "_x", "_y"),
-          cvf.nTest(fold))
+    val seedOffsets = drawn.scanLeft(0)(_ + _._3.size * cv).init
+    val cands = for {
+      ((name, learner, params), off) <- drawn.zip(seedOffsets)
+      (p, pi) <- params.zipWithIndex
+    } yield (DpSearch.Candidate(Seq(name, pi), learner, p), seed + off + pi * cv)
+    // DpCvFrame hashes folds, not labels; the broadcast route stratifies
+    // instead — fold SCHEMES differ between regimes, scores agree in
+    // expectation (same contract as the grid search auto-route)
+    val r = DpCvFrame.using(df, featuresCol, labelCol, cv, seed) { cvf =>
+      DpSearch.run(cvf,
+        Seq(StructField("model_name", StringType, nullable = false),
+          StructField("candidate_id", IntegerType, nullable = false)),
+        cands.map(_._1), scoring, Nil, iid = false, jobParallelism,
+        graft.exec.FitSideData.empty,
+        fitSeed = (ci, fold) => cands(ci)._2 + fold, refitSeed = seed)
     }
-    import spark.implicits._
-    val scores = scoreRows
-      .toDF("model_name", "candidate_id", "fold_id", "score", "n_test")
-    val agg = CvResults.aggregate(scores, Seq("model_name", "candidate_id")).cache()
-    val bestRow = CvResults.best(agg, Seq("model_name", "candidate_id")).head()
-    val bestPi = bestRow.getAs[Int]("candidate_id")
-    val bestName = bestRow.getAs[String]("model_name")
-    val (_, bestLearner, bestCands) = perModel.find(_._1 == bestName).get
-    val bestParams = bestCands(bestPi)
-    val bestModel = DataParallelFit.fit(bestLearner, cvf.prepared, "_x", "_y",
-      bestParams, seed, nRows = cvf.nTotal)
-    cvf.unpersist()
-    MultiResult(agg.orderBy("model_name", "candidate_id"), bestName, bestParams,
-      bestRow.getAs[Double]("mean_test_score"), bestModel)
+    val best = cands(r.best)._1
+    MultiResult(r.agg.orderBy("model_name", "candidate_id"),
+      best.key.head.toString, best.params, r.bestScore, r.bestModel)
   }
 
   private def fitBroadcast(spark: SparkSession, df: DataFrame,

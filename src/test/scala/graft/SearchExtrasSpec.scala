@@ -95,35 +95,6 @@ class SearchExtrasSpec extends AnyFunSuite {
     assert(counts.length == 5 && counts.forall(c => c > 130 && c < 270))
   }
 
-  test("data-parallel search shares the relational skeleton and recovers blobs") {
-    import spark.implicits._
-    val m = blobs(n = 120)
-    val df = m.x.zip(m.y).toSeq.map { case (x, y) => (x.toSeq, y) }
-      .toDF("features", "label")
-    val r = new DataParallelGridSearch(
-      Map("reg_param" -> Seq(0.0, 0.1), "max_iter" -> Seq(30.0)), cv = 3)
-      .fit(spark, df, "features", "label")
-    assert(r.cvResults.columns.toSet.contains("rank_test_score"))
-    assert(r.cvResults.count() == 2)
-    assert(r.bestScore > 0.9, s"separable blobs, got ${r.bestScore}")
-  }
-
-  test("data-parallel forest fallback recovers blobs with proba columns") {
-    import spark.implicits._
-    val m = blobs(n = 120)
-    val df = m.x.zip(m.y).toSeq.map { case (x, y) => (x.toSeq, y) }
-      .toDF("features", "label")
-    val fr = new DataParallelForest(nEstimators = 10, maxDepth = 4)
-    val model = fr.fit(spark, df, "features", "label")
-    val out = fr.transform(model, df, "features")
-    assert(out.columns.contains("preds") && out.columns.contains("probs"))
-    val acc = out.filter(col("preds") === col("label").cast("int")).count()
-      .toDouble / 120
-    assert(acc > 0.9, s"separable blobs, got $acc")
-    assert(out.select("probs").head().getSeq[Double](0).size == 2,
-      "binary blobs -> 2-class probability vector")
-  }
-
   test("auto-route: one public fit, broadcast under budget, data-parallel over") {
     import spark.implicits._
     val m = blobs(n = 120)
@@ -174,6 +145,41 @@ class SearchExtrasSpec extends AnyFunSuite {
       assert(model.classes.toSeq == Seq(0.0, 1.0, 2.0))
       assert(Metrics.accuracy(model, m3._1, m3._2) > 0.9)
     }
+  }
+
+  test("over-budget search releases its fold frame when a fit throws") {
+    import spark.implicits._
+    val m = blobs(n = 60)
+    val df = m.x.zip(m.y).toSeq.map { case (x, y) => (x.toSeq, y) }
+      .toDF("features", "label")
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.size
+    // every (candidate, fold) GBT fit rejects the learning rate — after
+    // the fold frame is cached
+    intercept[IllegalArgumentException] {
+      new DistGridSearchCV(graft.exec.GBT.Classifier,
+        Map("learning_rate" -> Seq(-1.0)), cv = 3)
+        .withBroadcastBudget(1L).fit(spark, df, "features", "label")
+    }
+    assert(sc.getPersistentRDDs.size == before,
+      s"cached RDDs ${sc.getPersistentRDDs.values.mkString(", ")}")
+  }
+
+  test("withPreds() over budget fails loudly instead of dropping the OOF") {
+    import spark.implicits._
+    val m = blobs(n = 60)
+    val df = m.x.zip(m.y).toSeq.map { case (x, y) => (x.toSeq, y) }
+      .toDF("features", "label")
+    val before = spark.sparkContext.getPersistentRDDs.size
+    val e = intercept[IllegalArgumentException] {
+      new DistGridSearchCV(LogisticRegressionGD,
+        Map("c" -> Seq(1.0), "max_iter" -> Seq(10.0)), cv = 3)
+        .withPreds().withBroadcastBudget(1L)
+        .fit(spark, df, "features", "label")
+    }
+    assert(e.getMessage.contains("withPreds"), e.getMessage)
+    // failed before the fold frame was built
+    assert(spark.sparkContext.getPersistentRDDs.size == before)
   }
 
   test("preds: OOF proba of the best candidate covers every row exactly once") {

@@ -151,4 +151,29 @@ class ToolsSpec extends AnyFunSuite {
     }
     assert(offenders.isEmpty, offenders.mkString("\n"))
   }
+
+  test("DataParallelFit is the one learner dispatch and DpCvFrame the one fold frame") {
+    // an over-budget route that fits a learner or hashes fold ids on its
+    // own drifts from the others (regParam translation, class counts,
+    // fold ids); DataParallelGBT's boosting refits regressor trees itself
+    import scala.jdk.CollectionConverters._
+    val search = java.nio.file.Paths.get("src/main/scala/graft/search")
+    val exempt = Set(search.resolve("DataParallel.scala"),
+      search.resolve("DataParallelGBT.scala"))
+    val dispatch = Seq(
+      """DataParallelCART\.fit(?:Classifier|Regressor)\b""",
+      """DataParallelGBT\.fit\b""",
+      """new\s+[\w.]*LogisticRegression\s*\(""",
+      """Folds\.byHash\(\s*monotonically_increasing_id""").map(_.r)
+    val offenders = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
+      .iterator().asScala
+      .filter(p => p.toString.endsWith(".scala") && !exempt(p))
+      .flatMap { p =>
+        val src = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
+        dispatch.flatMap(_.findAllMatchIn(src)).map { m =>
+          s"$p:${src.take(m.start).count(_ == '\n') + 1}: ${m.matched}"
+        }
+      }.toSeq
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
 }
