@@ -8,8 +8,8 @@ import org.apache.spark.sql.expressions.Window
   * estimators (`search.py:461-541` `_store`, `search.py:157-168`
   * `_get_results`).
   *
-  * Input: one row per (candidate, fold) with `score`, `n_test`,
-  * `fit_time`, `score_time` columns. Output: one row per candidate with
+  * Input: one row per (candidate, fold) with `score` and `n_test`
+  * columns. Output: one row per candidate with
   * mean/std/rank, matching sklearn semantics exactly:
   *   - std is POPULATION std (numpy default ddof=0);
   *   - `iid=true` weights fold means by fold size (`search.py:509-519`);

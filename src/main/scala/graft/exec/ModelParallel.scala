@@ -1,9 +1,9 @@
 package graft.exec
 
-import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import scala.reflect.ClassTag
 import scala.util.Random
 
 /** Model-parallel executor: the engine's core inversion (SURVEY.md §1.1) —
@@ -20,7 +20,6 @@ import scala.util.Random
   */
 object ModelParallel {
 
-  /** Broadcast-able training matrix with per-row fold ids. */
   /** Driver-side training matrix + fold assignment. With
     * `precomputedKernel` (the reference's `utils.py:171-209` square-matrix
     * `_safe_split` corner) `x` is an n x n kernel/gram matrix and fold
@@ -28,11 +27,16 @@ object ModelParallel {
     * scoring sees K[test, train] — so kernel-feature estimators (kernel
     * logistic, kernel SVM surrogates) CV correctly: a row-only slice
     * would leak test columns into the fit and misalign test features
-    * against the fitted coefficients.
+    * against the fitted coefficients. Empty or ragged matrices fail here,
+    * not as an `empty.max` deep inside some surface's fit.
     */
   final case class TrainMatrix(x: Array[Array[Double]], y: Array[Double],
                                folds: Array[Int],
                                precomputedKernel: Boolean = false) {
+    require(x.nonEmpty, "empty training set")
+    require(y.length == x.length && folds.length == x.length,
+      s"ragged training matrix: ${x.length} rows, ${y.length} labels, " +
+        s"${folds.length} fold ids")
     if (precomputedKernel)
       require(x.forall(_.length == x.length),
         s"precomputed kernel must be square (n x n), got rows of widths " +
@@ -133,99 +137,21 @@ object ModelParallel {
     folds
   }
 
-  final case class FitTask(taskId: Int, candidateId: Int, fold: Int,
-                           params: Map[String, Double])
-
-  final case class TaskResult(candidate_id: Int, fold_id: Int, score: Double,
-                              n_test: Long, fit_time_ms: Double, score_time_ms: Double)
-
-  final case class TaskResultMulti(candidate_id: Int, fold_id: Int,
-                                   scores: Map[String, Double], n_test: Long,
-                                   fit_time_ms: Double, score_time_ms: Double)
-
-  /** Fan the task lattice out one-task-per-partition (the reference's
-    * 'auto' heuristic, `base.py:53-64` — fit tasks are heavy and few, so
-    * scheduling granularity IS the task) and fit+score each against the
-    * broadcast matrix. Returns the per-(candidate, fold) score frame that
-    * CvResults aggregates.
-    *
-    * `errorScore`: Some(v) fills failed fits with score=v (reference
-    * `error_score`, `search.py:232-259`); None rethrows.
+  /** The one broadcast fan-out of every broadcast-regime fit surface (the
+    * reference's `skdist/distribute/base.py`): `data` is broadcast once,
+    * each item becomes its own task — one per partition, the reference's
+    * 'auto' heuristic (`base.py:53-64`: fit tasks are heavy and few, so
+    * the scheduling unit IS the task) — and `body` runs against the
+    * executor's copy. Results are collected eagerly, so nothing lazy
+    * outlives the call and the broadcast is destroyed on every path,
+    * a throwing task included. Task seeds stay with the callers: each
+    * surface's seed formula is part of the models it returns.
     */
-  def run(spark: SparkSession, tasks: Seq[FitTask], bc: Broadcast[TrainMatrix],
-          learner: Learner, scoring: String, seed: Long,
-          errorScore: Option[Double] = None,
-          side: FitSideData = FitSideData.empty): DataFrame = {
-    import spark.implicits._
-    val scorerName = scoring
-    val sideData = side // rides each task closure (eval slices are small)
-    val results = spark.sparkContext
-      .parallelize(tasks, math.max(1, tasks.size))
-      .map { t =>
-        val m = bc.value
-        val scorer = Metrics.scorer(scorerName)
-        val (trainX, trainY) = m.trainOf(t.fold)
-        val (testX, testY) = m.testOf(t.fold)
-        val t0 = System.nanoTime()
-        // error_score contains FIT failures only (sklearn semantics):
-        // a scorer exception is a bug to surface, not a score to fake
-        val fitted =
-          try Right(learner.fit(trainX, trainY, t.params, seed + t.taskId, sideData))
-          catch { case e: Exception => Left(e) }
-        fitted match {
-          case Right(model) =>
-            val t1 = System.nanoTime()
-            val score = scorer(model, testX, testY)
-            val t2 = System.nanoTime()
-            TaskResult(t.candidateId, t.fold, score, testX.length.toLong,
-              (t1 - t0) / 1e6, (t2 - t1) / 1e6)
-          case Left(e) => errorScore match {
-            case Some(v) => TaskResult(t.candidateId, t.fold, v, 0L, 0.0, 0.0)
-            case None    => throw e
-          }
-        }
-      }
-    results.toDS().toDF()
-  }
-
-  /** Multi-metric variant (`_multimetric_score` contract): each task fits
-    * ONCE and scores under every metric; `scores` is a map column the
-    * aggregation explodes into mean_test_<metric> columns.
-    */
-  def runMulti(spark: SparkSession, tasks: Seq[FitTask], bc: Broadcast[TrainMatrix],
-               learner: Learner, scorings: Seq[String], seed: Long,
-               errorScore: Option[Double] = None,
-               side: FitSideData = FitSideData.empty): DataFrame = {
-    import spark.implicits._
-    val names = scorings
-    val sideData = side
-    val results = spark.sparkContext
-      .parallelize(tasks, math.max(1, tasks.size))
-      .map { t =>
-        val m = bc.value
-        val scorer = Metrics.multi(names)
-        val (trainX, trainY) = m.trainOf(t.fold)
-        val (testX, testY) = m.testOf(t.fold)
-        val t0 = System.nanoTime()
-        // fit failures only, as in run(): scorer errors re-raise
-        val fitted =
-          try Right(learner.fit(trainX, trainY, t.params, seed + t.taskId, sideData))
-          catch { case e: Exception => Left(e) }
-        fitted match {
-          case Right(model) =>
-            val t1 = System.nanoTime()
-            val s = scorer(model, testX, testY)
-            val t2 = System.nanoTime()
-            TaskResultMulti(t.candidateId, t.fold, s, testX.length.toLong,
-              (t1 - t0) / 1e6, (t2 - t1) / 1e6)
-          case Left(e) => errorScore match {
-            case Some(v) =>
-              TaskResultMulti(t.candidateId, t.fold,
-                names.map(_ -> v).toMap, 0L, 0.0, 0.0)
-            case None => throw e
-          }
-        }
-      }
-    results.toDS().toDF()
+  private[graft] def fanOut[D: ClassTag, T: ClassTag, R: ClassTag](
+      spark: SparkSession, data: D, items: Seq[T])(body: (D, T) => R): Array[R] = {
+    val bc = spark.sparkContext.broadcast(data)
+    try spark.sparkContext.parallelize(items, math.max(1, items.size))
+      .map(t => body(bc.value, t)).collect()
+    finally bc.destroy()
   }
 }

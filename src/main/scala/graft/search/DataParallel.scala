@@ -1,11 +1,9 @@
 package graft.search
 
 import org.apache.spark.ml.classification.LogisticRegression
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
-import graft.agg.CvResults
 import graft.exec.{CART, FitSideData, GBT, Learner, Model}
 import graft.plan.Folds
 
@@ -53,67 +51,6 @@ private[search] object DpCvFrame {
       col(featuresCol).cast("array<double>").as("_x"),
       col(labelCol).cast("double").as("_y")), cv, seed)
     try f(cvf) finally cvf.unpersist()
-  }
-}
-
-/** The over-budget CV loop of the grid search and the multi-model race:
-  * each (candidate, fold) is a [[DataParallelFit]] on the fold frame's
-  * `_x`/`_y`, submitted `jobParallelism` at a time (`Par.concurrently`,
-  * order-preserving, so the keying equals the sequential loop's) and
-  * scored by [[DistributedScore.scoreMany]] — one fit, every metric;
-  * then `CvResults.aggregate`/`aggregateMulti`, the best candidate and
-  * its refit on all rows. Callers keep their own cv_results key columns,
-  * per-fit seeds and param-column join.
-  */
-private[search] object DpSearch {
-  /** `key`: the candidate's cv_results key values, in `keyFields` order. */
-  final case class Candidate(key: Seq[Any], learner: Learner,
-                             params: Map[String, Double])
-
-  /** `agg`: cached, one row per candidate; `best` indexes the candidates. */
-  final case class Outcome(agg: DataFrame, best: Int, bestScore: Double,
-                           bestModel: Model)
-
-  def run(cvf: DpCvFrame, keyFields: Seq[StructField],
-          cands: Seq[Candidate], scoring: String, extraScorings: Seq[String],
-          iid: Boolean, jobParallelism: Int, side: FitSideData,
-          fitSeed: (Int, Int) => Long, refitSeed: Long): Outcome = {
-    // every fit over the frame shares ONE class count (a train fold that
-    // misses the top class still fits the frame's width), resolved only
-    // if some candidate needs it
-    lazy val k = cvf.prepared.agg(max(col("_y"))).head().getDouble(0).toInt + 1
-    def fit(c: Candidate, data: DataFrame, seed: Long, nRows: Long): Model =
-      DataParallelFit.fit(c.learner, data, "_x", "_y", c.params, seed, nRows,
-        if (DataParallelFit.needsClassCount(c.learner)) Some(k) else None,
-        // no eval history: concurrent fits appending to ONE driver buffer
-        // would interleave (and race) — the visibility the broadcast
-        // regime's executor-side fits give it
-        side.copy(history = null))
-
-    val allMetrics = scoring +: extraScorings
-    val tasks = for (ci <- cands.indices; fold <- 0 until cvf.cv) yield (ci, fold)
-    val scoreRows = graft.ops.Par.concurrently(tasks, jobParallelism) {
-      case (ci, fold) =>
-        val model = fit(cands(ci), cvf.train(fold), fitSeed(ci, fold),
-          cvf.nTrain(fold))
-        val ms = DistributedScore.scoreMany(allMetrics, model, cvf.test(fold),
-          "_x", "_y")
-        Row.fromSeq(cands(ci).key ++ Seq(fold, ms(scoring), cvf.nTest(fold), ms))
-    }
-    val schema = StructType(keyFields ++ Seq(
-      StructField("fold_id", IntegerType, nullable = false),
-      StructField("score", DoubleType, nullable = false),
-      StructField("n_test", LongType, nullable = false),
-      StructField("scores", MapType(StringType, DoubleType, valueContainsNull = false))))
-    import scala.jdk.CollectionConverters._
-    val scores = cvf.prepared.sparkSession.createDataFrame(scoreRows.asJava, schema)
-    val keyCols = keyFields.map(_.name)
-    val agg = (if (extraScorings.isEmpty) CvResults.aggregate(scores, keyCols, iid = iid)
-      else CvResults.aggregateMulti(scores, keyCols, allMetrics, iid = iid)).cache()
-    val bestRow = CvResults.best(agg, keyCols).head()
-    val best = cands.indexWhere(_.key == keyCols.map(bestRow.getAs[Any]))
-    Outcome(agg, best, bestRow.getAs[Double]("mean_test_score"),
-      fit(cands(best), cvf.prepared, refitSeed, cvf.nTotal))
   }
 }
 
@@ -253,7 +190,7 @@ object DistributedScore {
 /** ONE data-parallel fit of a routable engine learner over a DataFrame —
   * the only learner dispatch of the broadcast-overflow regime, behind
   * every over-budget route: the grid search and multi-model race
-  * (`DpSearch`), OvR, OvO and multilabel OvR, the eliminator and the
+  * (`SearchLoop`), OvR, OvO and multilabel OvR, the eliminator and the
   * DataFrame OOF. Logistic via Spark ML (losslessly bridged), CART via
   * DataParallelCART, GBT via DataParallelGBT. Returns the same engine
   * `Model` types the broadcast regime produces; unsupported learners
@@ -277,24 +214,24 @@ object DataParallelFit {
           "raise withBroadcastBudget")
     }
 
-  /** Whether `fit` derives `learner`'s class count from the data unless
-    * given one — callers fitting many times over one frame resolve it once.
+  /** Whether `fit` needs a class count — callers fitting many times over
+    * one frame pass it once instead of one label scan per fit.
     */
-  private[search] def needsClassCount(learner: Learner): Boolean =
+  private[search] def isClassifier(learner: Learner): Boolean =
     learner match {
-      case c: CART.Classifier => c.nClassesHint <= 0
-      case GBT.Classifier     => true
-      case _                  => false
+      case _: CART.Classifier | GBT.Classifier => true
+      case _                                   => false
     }
 
   /** `nRows`: the training row count when the caller already knows it
     * (fold-size bookkeeping) — skips the count job the logistic
-    * regularization translation otherwise pays per fit. `nClasses`: a
-    * class count resolved once over the caller's whole frame, for the
-    * learners `needsClassCount` names (else the fit scans its own
-    * labels). `side`: fit_params side data — GBT early-stops on its eval
-    * slice; the Spark ML logistic solver has no eval hook and CART does
-    * not iterate.
+    * regularization translation otherwise pays per fit. `nClasses`: the
+    * class count (max label + 1) of the caller's whole frame, scanned once
+    * for the learners `isClassifier` names; None scans `data`'s labels
+    * here. A CART class hint still widens it — k = max(hint, count), the
+    * broadcast learner's contract (`CART.Classifier.fit`). `side`:
+    * fit_params side data — GBT early-stops on its eval slice; the Spark
+    * ML logistic solver has no eval hook and CART does not iterate.
     */
   def fit(learner: Learner, data: DataFrame,
           featuresCol: String, labelCol: String,
@@ -332,15 +269,15 @@ object DataParallelFit {
         SparkMLBridge.toLogRegModel(est.fit(p))
       case c: CART.Classifier =>
         DataParallelCART.fitClassifier(data, featuresCol, labelCol, params, seed,
-          nClasses = if (c.nClassesHint > 0) c.nClassesHint else nClasses.getOrElse(0))
+          nClasses = math.max(c.nClassesHint,
+            nClasses.getOrElse(DataParallelCART.scanClasses(data, labelCol))))
       case CART.Regressor =>
         DataParallelCART.fitRegressor(data, featuresCol, labelCol, params, seed)
       case GBT.Classifier =>
         // class inventory from the data unless resolved by the caller,
         // like the broadcast fit's y.max + 1; max(2, k): a single-class
         // slice fits a constant-ish binary like the broadcast y.max clamp
-        val k = nClasses.getOrElse(data.agg(max(col(labelCol).cast("double")))
-          .head().getDouble(0).toInt + 1)
+        val k = nClasses.getOrElse(DataParallelCART.scanClasses(data, labelCol))
         DataParallelGBT.fit(data, featuresCol, labelCol, params, seed,
           math.max(2, k), side)
       case GBT.Regressor => // requireSupported above leaves no other learner

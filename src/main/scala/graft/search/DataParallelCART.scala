@@ -84,12 +84,15 @@ object DataParallelCART {
     var frontierIdx: Int = -1
   }
 
+  /** `nClasses`: the resolved class count — no label scan here; callers
+    * resolve it once per frame (`DataParallelFit.fit`).
+    */
   def fitClassifier(df: DataFrame, featuresCol: String, labelCol: String,
                     params: Map[String, Double], seed: Long,
-                    nClasses: Int = 0, bins: Int = 32,
+                    nClasses: Int, bins: Int = 32,
                     weightCol: Option[String] = None): CART.TreeModel = {
-    val k = resolveClasses(df, labelCol, nClasses)
-    growForest(df, featuresCol, labelCol, params, seed, k, bins, weightCol,
+    require(nClasses > 0, s"no labels in $labelCol and no positive nClasses hint")
+    growForest(df, featuresCol, labelCol, params, seed, nClasses, bins, weightCol,
       nTrees = 1, bootstrap = false).head
   }
 
@@ -118,26 +121,24 @@ object DataParallelCART {
                 bootstrap: Boolean = true, bins: Int = 32,
                 weightCol: Option[String] = None): ForestModel = {
     require(nTrees >= 1, s"nTrees must be >= 1, got $nTrees")
-    val k = if (classification) resolveClasses(df, labelCol, 0) else 0
+    val k = if (classification) scanClasses(df, labelCol) else 0
+    require(!classification || k > 0, s"no labels in $labelCol")
     ForestModel(
       growForest(df, featuresCol, labelCol, params, seed, k, bins, weightCol,
         nTrees, bootstrap),
       k)
   }
 
-  /** Class count = max(hint, observed max label + 1) — the broadcast
-    * learner's contract exactly (`CART.Classifier.fit`: k =
-    * max(nClassesHint, y.max + 1)). Trusting a positive hint outright
-    * made the auto-route's two regimes disagree: a 2-class hint over
-    * 5-class data FIT under the broadcast budget and THREW past it.
-    * The scan is one narrow agg over the label column, paid once per fit.
+  /** Observed class count: max label + 1, 0 with no labels — one narrow
+    * agg over the label column. A class hint widens it, never narrows it
+    * (`DataParallelFit.fit`, the broadcast learner's max(hint, y.max + 1)):
+    * trusting a positive hint outright made the auto-route's two regimes
+    * disagree — a 2-class hint over 5-class data FIT under the broadcast
+    * budget and THREW past it.
     */
-  private def resolveClasses(df: DataFrame, labelCol: String, hint: Int): Int = {
+  private[search] def scanClasses(df: DataFrame, labelCol: String): Int = {
     val r = df.agg(max(col(labelCol).cast("double"))).head()
-    val scanned = if (r.isNullAt(0)) 0 else r.getDouble(0).toInt + 1
-    val k = math.max(hint, scanned)
-    require(k > 0, s"no labels in $labelCol and no positive nClasses hint")
-    k
+    if (r.isNullAt(0)) 0 else r.getDouble(0).toInt + 1
   }
 
   /** Per-feature split candidates. Low-cardinality features (distinct

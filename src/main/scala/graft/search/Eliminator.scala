@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.agg.CvResults
 import graft.exec.{CART, Learner, LogRegModel, Metrics, Model, ModelParallel}
-import graft.exec.ModelParallel.{FitTask, TrainMatrix}
+import graft.exec.ModelParallel.TrainMatrix
 import graft.plan.RemovalLadder
 
 /** Distributed feature elimination (reference `eliminate.py`):
@@ -121,7 +121,7 @@ class DistFeatureEliminator(learner: Learner,
       import spark.implicits._
       val scores = scoreRows.toDF("candidate_id", "fold_id", "score", "n_test")
       // 4. aggregate, best rung, refit on all rows with the winning mask
-      val agg = CvResults.aggregate(scores, Seq("candidate_id")).cache()
+      val agg = CvResults.aggregate(scores, Seq("candidate_id"))
       val bestRow = CvResults.best(agg, Seq("candidate_id")).head()
       val keep = rungKeeps(bestRow.getAs[Int]("candidate_id"))
       val refit = fitOne(cvf.prepared, keep, seed)
@@ -141,7 +141,6 @@ class DistFeatureEliminator(learner: Learner,
     val rungs = RemovalLadder.rungs(worstFirst.toSeq, step, minFeaturesToSelect)
 
     // 3. rungs × folds fan-out; per-task column mask.
-    val bc = spark.sparkContext.broadcast(matrix)
     val lrn = learner
     val scorerName = scoring
     val baseSeed = seed
@@ -151,31 +150,25 @@ class DistFeatureEliminator(learner: Learner,
       (keep, ri) <- rungKeeps.zipWithIndex
       fold <- 0 until cv
     } yield (ri, fold, keep)
-    import spark.implicits._
-    val scores = spark.sparkContext
-      .parallelize(tasks, math.max(1, tasks.size))
-      .map { case (ri, fold, keep) =>
-        val m = bc.value
-        val scorer = Metrics.scorer(scorerName)
+    val scoreRows = ModelParallel.fanOut(spark, matrix, tasks) {
+      case (m, (ri, fold, keep)) =>
         val (trainX, trainY) = m.trainOf(fold)
         val (testX, testY) = m.testOf(fold)
         val model = lrn.fit(trainX.map(r => keep.map(r)), trainY, Map.empty,
           baseSeed + ri * 100 + fold)
-        val s = scorer(MaskedModel(model, keep), testX, testY)
-        ModelParallel.TaskResult(ri, fold, s, testX.length.toLong, 0.0, 0.0)
-      }
-      .toDS().toDF()
+        val s = Metrics.scorer(scorerName)(MaskedModel(model, keep), testX, testY)
+        (ri, fold, s, testX.length.toLong)
+    }
+    import spark.implicits._
+    val scores = scoreRows.toSeq.toDF("candidate_id", "fold_id", "score", "n_test")
 
     // 4. aggregate, pick best rung (ties -> fewest dropped = lowest id,
     //    matching the reference's argmax-first semantics).
-    // cached: best() + the returned scores frame both consume it; without
-    // the cache each action re-runs the rungs × folds fit fan-out.
-    val agg = CvResults.aggregate(scores, Seq("candidate_id")).cache()
+    val agg = CvResults.aggregate(scores, Seq("candidate_id"))
     val bestRow = CvResults.best(agg, Seq("candidate_id")).head()
     val bestRung = bestRow.getAs[Int]("candidate_id")
     val keep = rungKeeps(bestRung)
     val refit = learner.fit(matrix.x.map(r => keep.map(r)), matrix.y, Map.empty, seed)
-    bc.unpersist() // returned scores DataFrame is lazy
     EliminatorResult(agg.orderBy("candidate_id"), keep,
       bestRow.getAs[Double]("mean_test_score"), MaskedModel(refit, keep))
   }

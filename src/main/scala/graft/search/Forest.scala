@@ -118,8 +118,6 @@ class DistForest(nEstimators: Int = 100,
                         sampleWeight: Option[Array[Double]] = None): Array[CART.TreeModel] = {
     sampleWeight.foreach(sw => require(sw.length == matrix.nRows,
       s"sample_weight length ${sw.length} != rows ${matrix.nRows}"))
-    val bcW = sampleWeight.map(spark.sparkContext.broadcast(_))
-    val bc = spark.sparkContext.broadcast(matrix)
     val p = params ++ (if (extraTrees) Map("random_splits" -> 1.0) else Map.empty) ++
       // sklearn default max_features for forests: sqrt(d) for
       // classification; we express it as a fraction.
@@ -127,36 +125,29 @@ class DistForest(nEstimators: Int = 100,
         Map("max_features" -> -1.0) else Map.empty)
     val doBootstrap = bootstrap && !extraTrees
     val baseSeed = seed
-    val trees = spark.sparkContext
-      .parallelize(fromIdx until (fromIdx + count), math.max(1, count))
-      .map { treeIdx =>
-        val m = bc.value
-        val n = m.nRows
-        val d = if (n > 0) m.x(0).length else 0
-        val treeParams =
-          if (p.get("max_features").contains(-1.0))
-            p + ("max_features" -> math.sqrt(d.toDouble) / d)
-          else p
-        val treeSeed = baseSeed + treeIdx
-        val sw = bcW.map(_.value).orNull
-        val w: Array[Double] =
-          if (!doBootstrap) sw // may be null: unweighted, all rows
-          else {
-            // Multinomial counts = bincount of n draws with replacement;
-            // caller weights multiply in (curr_sample_weight *= counts).
-            val rng = new Random(treeSeed)
-            val counts = new Array[Double](n)
-            var i = 0
-            while (i < n) { counts(rng.nextInt(n)) += 1.0; i += 1 }
-            if (sw != null) { i = 0; while (i < n) { counts(i) *= sw(i); i += 1 } }
-            counts
-          }
-        CART.grow(m.x, m.y, w, treeParams, treeSeed, nClasses)
-      }
-      .collect()
-    bc.destroy()
-    bcW.foreach(_.destroy())
-    trees
+    ModelParallel.fanOut(spark, (matrix, sampleWeight.orNull),
+        fromIdx until (fromIdx + count)) { case ((m, sw), treeIdx) =>
+      val n = m.nRows
+      val d = m.x(0).length
+      val treeParams =
+        if (p.get("max_features").contains(-1.0))
+          p + ("max_features" -> math.sqrt(d.toDouble) / d)
+        else p
+      val treeSeed = baseSeed + treeIdx
+      val w: Array[Double] =
+        if (!doBootstrap) sw // may be null: unweighted, all rows
+        else {
+          // Multinomial counts = bincount of n draws with replacement;
+          // caller weights multiply in (curr_sample_weight *= counts).
+          val rng = new Random(treeSeed)
+          val counts = new Array[Double](n)
+          var i = 0
+          while (i < n) { counts(rng.nextInt(n)) += 1.0; i += 1 }
+          if (sw != null) { i = 0; while (i < n) { counts(i) *= sw(i); i += 1 } }
+          counts
+        }
+      CART.grow(m.x, m.y, w, treeParams, treeSeed, nClasses)
+    }
   }
 }
 
@@ -278,23 +269,14 @@ object OutOfFold {
                params: Map[String, Double] = Map.empty,
                side: graft.exec.FitSideData =
                  graft.exec.FitSideData.empty): Array[Array[Double]] = {
-    val bc = spark.sparkContext.broadcast(matrix)
-    val fitParams = params
-    val sideData = side
-    val rows = spark.sparkContext
-      .parallelize(0 until cv, cv)
-      .flatMap { fold =>
-        val m = bc.value
-        val (trainX, trainY) = m.trainOf(fold)
-        val model = mkLearner.fit(trainX, trainY, fitParams, seed + fold, sideData)
-        m.folds.zipWithIndex.collect {
-          case (f, i) if f == fold => (i, model.predictProba(m.x(i)))
-        }
-      }
-      .collect()
-    bc.destroy()
     val out = new Array[Array[Double]](matrix.nRows)
-    rows.foreach { case (i, p) => out(i) = p }
+    ModelParallel.fanOut(spark, matrix, 0 until cv) { (m, fold) =>
+      val (trainX, trainY) = m.trainOf(fold)
+      val model = mkLearner.fit(trainX, trainY, params, seed + fold, side)
+      m.folds.zipWithIndex.collect {
+        case (f, i) if f == fold => (i, model.predictProba(m.x(i)))
+      }
+    }.foreach(_.foreach { case (i, p) => out(i) = p })
     out
   }
 

@@ -29,6 +29,29 @@ object Multiclass {
       case _ => raw
     }
 
+  /** Rows of one binary problem (reference `_negatives_mask`,
+    * `multiclass.py:76-106`): every positive, plus the negatives an
+    * optional cap keeps — `v` x the negatives ("ratio") or x the
+    * positives ("multiplier"), drawn by a seeded shuffle, in row order.
+    */
+  private[search] def negativesMask(n: Int, isPos: Int => Boolean,
+                                    maxNeg: Option[Double], method: String,
+                                    seed: Long): Array[Int] = {
+    val posIdx = (0 until n).filter(isPos)
+    val negIdxAll = (0 until n).filter(!isPos(_))
+    val negIdx = maxNeg match {
+      case Some(v) =>
+        val cap = method match {
+          case "multiplier" => math.min(negIdxAll.size, (v * posIdx.size).toInt)
+          case _            => math.min(negIdxAll.size, (v * negIdxAll.size).toInt)
+        }
+        if (cap >= negIdxAll.size) negIdxAll
+        else new scala.util.Random(seed).shuffle(negIdxAll.toVector).take(cap).sorted
+      case None => negIdxAll
+    }
+    (posIdx ++ negIdx).toArray
+  }
+
   /** Per-class positive probability from a fitted binary model. */
   private[search] def positiveProba(m: Model, x: Array[Double]): Double = {
     val p = m.predictProba(x)
@@ -129,55 +152,30 @@ class DistOneVsRest(learner: Learner,
   }
 
   def fitMatrix(spark: SparkSession, matrix: TrainMatrix): OvRModel = {
-    require(matrix.y.nonEmpty, "empty training set")
     val classes = matrix.y.distinct.sorted
-    val bc = spark.sparkContext.broadcast(matrix)
-    try {
     val lrn = learner
     val maxNeg = maxNegatives
     val method = negMethod
     val baseSeed = seed
     val side = fitSide
-    val fitted = spark.sparkContext
-      .parallelize(classes.toSeq, math.max(1, classes.length))
-      .map { c =>
-        val m = bc.value
-        val rng = new scala.util.Random(baseSeed + c.toLong)
-        // Binary problem: positives = class c; optional negative cap
-        // (reference `_negatives_mask`, multiclass.py:76-106).
-        val posIdx = m.y.indices.filter(m.y(_) == c)
-        val negIdxAll = m.y.indices.filter(m.y(_) != c)
-        val negIdx = maxNeg match {
-          case Some(v) =>
-            val cap = method match {
-              case "multiplier" => math.min(negIdxAll.size, (v * posIdx.size).toInt)
-              case _            => math.min(negIdxAll.size, (v * negIdxAll.size).toInt)
-            }
-            if (cap >= negIdxAll.size) negIdxAll
-            else rng.shuffle(negIdxAll.toVector).take(cap).sorted
-          case None => negIdxAll
-        }
-        val idx = (posIdx ++ negIdx).toArray
-        val x = idx.map(m.x)
-        val yBin = idx.map(i => if (m.y(i) == c) 1.0 else 0.0)
-        val model: Model =
-          if (yBin.distinct.length < 2) ConstantModel(yBin.headOption.getOrElse(0.0), 2)
-          else {
-            // the eval slice's labels live in the ORIGINAL class space —
-            // remap into this class's binary problem before monitoring
-            val sideC =
-              if (!side.hasEarlyStopping) side
-              else side.copy(evalY = side.evalY.map(v =>
-                if (v == c) 1.0 else 0.0))
-            lrn.fit(x, yBin, Map.empty, baseSeed + c.toLong, sideC)
-          }
-        (c, model)
+    val models = ModelParallel.fanOut(spark, matrix, classes.toSeq) { (m, c) =>
+      // Binary problem: positives = class c; optional negative cap.
+      val idx = Multiclass.negativesMask(m.nRows, m.y(_) == c, maxNeg, method,
+        baseSeed + c.toLong)
+      val x = idx.map(m.x)
+      val yBin = idx.map(i => if (m.y(i) == c) 1.0 else 0.0)
+      if (yBin.distinct.length < 2) ConstantModel(yBin.headOption.getOrElse(0.0), 2)
+      else {
+        // the eval slice's labels live in the ORIGINAL class space —
+        // remap into this class's binary problem before monitoring
+        val sideC =
+          if (!side.hasEarlyStopping) side
+          else side.copy(evalY = side.evalY.map(v =>
+            if (v == c) 1.0 else 0.0))
+        lrn.fit(x, yBin, Map.empty, baseSeed + c.toLong, sideC)
       }
-      .collect()
-    val byClass = fitted.sortBy(_._1)
-    OvRModel(byClass.map(_._1), byClass.map(_._2), norm)
-    } finally bc.destroy() // also on a failed class fit — don't leak
-    // the broadcast matrix in a long-lived session
+    }
+    OvRModel(classes, models, norm)
   }
 }
 
@@ -328,44 +326,23 @@ class DistMultilabelOvR(learner: Learner,
                                  y: Array[Set[String]],
                                  classes: Array[String]): MultilabelOvRModel = {
     require(x.length == y.length, "x and y row counts differ")
-    val bcX = spark.sparkContext.broadcast(x)
-    val bcY = spark.sparkContext.broadcast(y)
+    require(x.nonEmpty, "empty training set")
     val lrn = learner
     val maxNeg = maxNegatives
     val method = negMethod
     val baseSeed = seed
-    val fitted = try spark.sparkContext
-      .parallelize(classes.toSeq, math.max(1, classes.length))
-      .map { c =>
-        val xs = bcX.value
-        val sets = bcY.value
-        val rng = new scala.util.Random(baseSeed + c.hashCode)
-        val posIdx = sets.indices.filter(sets(_).contains(c))
-        val negIdxAll = sets.indices.filter(!sets(_).contains(c))
-        val negIdx = maxNeg match {
-          case Some(v) =>
-            val cap = method match {
-              case "multiplier" => math.min(negIdxAll.size, (v * posIdx.size).toInt)
-              case _            => math.min(negIdxAll.size, (v * negIdxAll.size).toInt)
-            }
-            if (cap >= negIdxAll.size) negIdxAll
-            else rng.shuffle(negIdxAll.toVector).take(cap).sorted
-          case None => negIdxAll
-        }
-        val idx = (posIdx ++ negIdx).toArray
+    // models come back aligned to the PINNED class axis (caller order for
+    // fitBinarized, sorted for fitSets)
+    val models = ModelParallel.fanOut(spark, (x, y), classes.toSeq) {
+      case ((xs, sets), c) =>
+        val idx = Multiclass.negativesMask(sets.length, sets(_).contains(c),
+          maxNeg, method, baseSeed + c.hashCode)
         val xb = idx.map(xs)
         val yBin = idx.map(i => if (sets(i).contains(c)) 1.0 else 0.0)
-        val model: Model =
-          if (yBin.distinct.length < 2) ConstantModel(yBin.headOption.getOrElse(0.0), 2)
-          else lrn.fit(xb, yBin, Map.empty, baseSeed + c.hashCode)
-        (c, model)
-      }
-      .collect()
-    finally { bcX.unpersist(); bcY.unpersist() }
-    // align models to the PINNED class axis (caller order for
-    // fitBinarized, sorted for fitSets), not a re-sort of the fit output
-    val byName = fitted.toMap
-    MultilabelOvRModel(classes, classes.map(byName), norm)
+        if (yBin.distinct.length < 2) ConstantModel(yBin.headOption.getOrElse(0.0), 2)
+        else lrn.fit(xb, yBin, Map.empty, baseSeed + c.hashCode)
+    }
+    MultilabelOvRModel(classes, models, norm)
   }
 }
 
@@ -469,48 +446,32 @@ class DistOneVsOne(learner: Learner, seed: Long = 42)
   }
 
   def fitMatrix(spark: SparkSession, matrix: TrainMatrix): OvOModel = {
-    // same loud guard as DistOneVsRest: an empty fit would return a
-    // zero-class model whose predict dies with `empty.minBy` inside a
-    // serving UDF, far from the actual cause
-    require(matrix.y.nonEmpty, "empty training set")
     val classes = matrix.y.distinct.sorted
     val pairs = for {
       i <- classes.indices
       j <- (i + 1) until classes.length
     } yield (classes(i), classes(j))
-    val bc = spark.sparkContext.broadcast(matrix)
     val lrn = learner
     val baseSeed = seed
     val side = fitSide
-    val fitted =
-      try spark.sparkContext
-        .parallelize(pairs, math.max(1, pairs.length))
-        .map { case (a, b) =>
-          val m = bc.value
-          // Restrict to the two classes, remap to {0, 1}
-          // (`_fit_ovo_binary`, multiclass.py:155-172).
-          val idx = m.y.indices.filter(i => m.y(i) == a || m.y(i) == b).toArray
-          val x = idx.map(m.x)
-          val yBin = idx.map(i => if (m.y(i) == a) 0.0 else 1.0)
-          // eval slice restricted + remapped into the pair's {0, 1} space
-          val sideP =
-            if (!side.hasEarlyStopping) side
-            else {
-              val ei = side.evalY.indices
-                .filter(i => side.evalY(i) == a || side.evalY(i) == b)
-              side.copy(evalX = ei.map(side.evalX).toArray,
-                evalY = ei.map(i => if (side.evalY(i) == a) 0.0 else 1.0).toArray)
-            }
-          val model: Model =
-            if (yBin.distinct.length < 2) ConstantModel(yBin.headOption.getOrElse(0.0), 2)
-            else lrn.fit(x, yBin, Map.empty, baseSeed, sideP)
-          ((a, b), model)
+    val models = ModelParallel.fanOut(spark, matrix, pairs) { case (m, (a, b)) =>
+      // Restrict to the two classes, remap to {0, 1}
+      // (`_fit_ovo_binary`, multiclass.py:155-172).
+      val idx = m.y.indices.filter(i => m.y(i) == a || m.y(i) == b).toArray
+      val x = idx.map(m.x)
+      val yBin = idx.map(i => if (m.y(i) == a) 0.0 else 1.0)
+      // eval slice restricted + remapped into the pair's {0, 1} space
+      val sideP =
+        if (!side.hasEarlyStopping) side
+        else {
+          val ei = side.evalY.indices
+            .filter(i => side.evalY(i) == a || side.evalY(i) == b)
+          side.copy(evalX = ei.map(side.evalX).toArray,
+            evalY = ei.map(i => if (side.evalY(i) == a) 0.0 else 1.0).toArray)
         }
-        .collect()
-      finally bc.destroy() // also on a failed pair fit — a long-lived
-      // session running many fits would otherwise leak one broadcast
-      // matrix per failure until ContextCleaner happens to GC it
-    val ordered = fitted.sortBy(_._1)
-    OvOModel(classes, ordered.map(_._1), ordered.map(_._2))
+      if (yBin.distinct.length < 2) ConstantModel(yBin.headOption.getOrElse(0.0), 2)
+      else lrn.fit(x, yBin, Map.empty, baseSeed, sideP)
+    }
+    OvOModel(classes, pairs.toArray, models)
   }
 }

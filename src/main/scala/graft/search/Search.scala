@@ -1,12 +1,12 @@
 package graft.search
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{IntegerType, StringType, StructField}
+import org.apache.spark.sql.types._
 
 import graft.agg.CvResults
-import graft.exec.{Learner, Model, ModelParallel}
-import graft.exec.ModelParallel.{FitTask, TrainMatrix}
+import graft.exec.{FitSideData, Learner, Metrics, Model, ModelParallel}
+import graft.exec.ModelParallel.TrainMatrix
 import graft.plan.{ParamGrid, ParamSampler}
 
 /** The broadcast-vs-data-parallel regime threshold shared by every
@@ -72,9 +72,10 @@ final case class SearchResult(cvResults: DataFrame,
   * DistGridSearchCV / DistRandomizedSearchCV / DistMultiModelSearch).
   *
   * Pipeline (SURVEY.md §3.1): driver enumerates the candidate lattice →
-  * task fan-out against the broadcast matrix (ModelParallel.run) →
-  * `CvResults.aggregate` (groupBy + window rank, fully distributed) →
-  * best candidate → driver refit on the full matrix.
+  * one (candidate, fold) fit-and-score per task (`SearchLoop`: against
+  * the broadcast matrix through `ModelParallel.fanOut`, or data-parallel
+  * past the budget) → `CvResults.aggregate` (groupBy + window rank) →
+  * best candidate → refit on all rows.
   */
 class DistGridSearchCV(learner: Learner,
                        grid: Map[String, Seq[Double]],
@@ -126,7 +127,7 @@ class DistGridSearchCV(learner: Learner,
   }
 
   /** Broadcast-overflow route: each (candidate, fold) is a distributed
-    * `DataParallelFit` over the full DataFrame (`DpSearch`); candidate
+    * `DataParallelFit` over the full DataFrame (`SearchLoop`); candidate
     * ids (and so cv_results/param columns) stay aligned with the
     * broadcast path. The engine's `c` passes through unchanged — the fit
     * translates it to Spark ML's regParam per fit (regParam = 1/(c*nTrain),
@@ -148,16 +149,11 @@ class DistGridSearchCV(learner: Learner,
     val cands = candidates()
     require(cands.nonEmpty, "empty parameter grid")
     val r = DpCvFrame.using(df, featuresCol, labelCol, cv, seed) { cvf =>
-      DpSearch.run(cvf,
-        Seq(StructField("candidate_id", IntegerType, nullable = false)),
-        cands.zipWithIndex.map { case (p, ci) => DpSearch.Candidate(Seq(ci), learner, p) },
-        scoring, extraScorings, iid, jobParallelism, fitSide,
+      SearchLoop.dataParallel(cvf, keyFields, keyed(cands), scoring,
+        extraScorings, iid, jobParallelism, fitSide,
         fitSeed = (_, _) => seed, refitSeed = seed)
     }
-    SearchResult(
-      r.agg.join(broadcast(paramsFrame(spark, cands)), "candidate_id")
-        .orderBy("candidate_id"),
-      cands(r.best), r.bestScore, r.best, r.bestModel)
+    result(spark, cands, r, oof = None)
   }
 
   /** Group-aware CV (`fit(X, y, groups)` flowing into `check_cv`,
@@ -181,65 +177,39 @@ class DistGridSearchCV(learner: Learner,
   def fitMatrix(spark: SparkSession, matrix: TrainMatrix): SearchResult = {
     val cands = candidates()
     require(cands.nonEmpty, "empty parameter grid")
-    val bc = spark.sparkContext.broadcast(matrix)
-    val tasks = for {
-      (params, ci) <- cands.zipWithIndex
-      fold <- 0 until cv
-    } yield FitTask(ci * cv + fold, ci, fold, params)
-
-    // cached: `best()` below and the returned cvResults both consume this
-    // frame — without the cache every later action re-runs the whole fit
-    // fan-out. One row per candidate, so the cache is tiny.
-    val agg = {
-      val a =
-        if (extraScorings.isEmpty)
-          CvResults.aggregate(
-            ModelParallel.run(spark, tasks, bc, learner, scoring, seed,
-              errorScore, fitSide),
-            Seq("candidate_id"), iid = iid)
-        else
-          CvResults.aggregateMulti(
-            ModelParallel.runMulti(spark, tasks, bc, learner,
-              scoring +: extraScorings, seed, errorScore, fitSide),
-            Seq("candidate_id"), scoring +: extraScorings, iid = iid)
-      a.cache()
-    }
-
-    // Attach the param columns (small driver-side frame, broadcast join).
-    val cvResults = agg.join(broadcast(paramsFrame(spark, cands)), "candidate_id")
-      .orderBy("candidate_id")
-
-    val bestRow = CvResults.best(agg, Seq("candidate_id")).head()
-    val bestId = bestRow.getAs[Int]("candidate_id")
-    val bestScore = bestRow.getAs[Double]("mean_test_score")
-    val bestParams = cands(bestId)
-    // Refit on the FULL matrix (reference `search.py:543-550`), with the
-    // same fit_params side data as the CV fits.
-    val bestModel = learner.fit(matrix.x, matrix.y, bestParams, seed, fitSide)
+    val r = SearchLoop.broadcast(spark, matrix, keyFields, keyed(cands), cv,
+      scoring, extraScorings, iid, errorScore, fitSide,
+      fitSeed = (ci, fold) => seed + ci * cv + fold, refitSeed = seed)
     // preds_: out-of-fold proba of the best candidate — row i predicted by
     // the fold model that never saw row i (`search.py:551-560`).
     val oof =
       if (preds) Some(OutOfFold.oofProba(spark, matrix, learner, cv, seed,
-        bestParams, fitSide))
+        cands(r.best), fitSide))
       else None
-    // unpersist, not destroy: the returned cvResults DataFrame is lazy and
-    // may re-evaluate against the broadcast after we return.
-    bc.unpersist()
-    SearchResult(cvResults, bestParams, bestScore, bestId, bestModel, oof)
+    result(spark, cands, r, oof)
   }
 
-  private def paramsFrame(spark: SparkSession,
-                          cands: Seq[Map[String, Double]]): DataFrame = {
+  private val keyFields = Seq(StructField("candidate_id", IntegerType, nullable = false))
+
+  private def keyed(cands: Seq[Map[String, Double]]): Seq[SearchLoop.Candidate] =
+    cands.zipWithIndex.map { case (p, ci) => SearchLoop.Candidate(Seq(ci), learner, p) }
+
+  /** cv_results with the param columns attached (a small driver-side
+    * frame, broadcast join), ordered by candidate.
+    */
+  private def result(spark: SparkSession, cands: Seq[Map[String, Double]],
+                     r: SearchLoop.Outcome,
+                     oof: Option[Array[Array[Double]]]): SearchResult = {
     val paramNames = cands.head.keys.toSeq.sorted
     val paramRows = cands.zipWithIndex.map { case (m, i) =>
-      org.apache.spark.sql.Row.fromSeq(i +: paramNames.map(m))
+      Row.fromSeq(i +: paramNames.map(m))
     }
-    val schema = org.apache.spark.sql.types.StructType(
-      org.apache.spark.sql.types.StructField("candidate_id",
-        org.apache.spark.sql.types.IntegerType, nullable = false) +:
-        paramNames.map(n => org.apache.spark.sql.types.StructField(
-          s"param_$n", org.apache.spark.sql.types.DoubleType, nullable = false)))
-    spark.createDataFrame(spark.sparkContext.parallelize(paramRows, 1), schema)
+    val schema = StructType(keyFields ++ paramNames.map(n =>
+      StructField(s"param_$n", DoubleType, nullable = false)))
+    import scala.jdk.CollectionConverters._
+    val params = spark.createDataFrame(paramRows.asJava, schema)
+    SearchResult(r.agg.join(broadcast(params), "candidate_id").orderBy("candidate_id"),
+      cands(r.best), r.bestScore, r.best, r.bestModel, oof)
   }
 }
 
@@ -280,91 +250,174 @@ class DistMultiModelSearch(models: Seq[(String, Learner, Map[String, Seq[Double]
                                bestScore: Double,
                                bestModel: Model)
 
-  private def drawCandidates(): Seq[(String, Learner, Seq[Map[String, Double]])] =
-    // Per-model candidate draws; rows are keyed by (model_name,
-    // per-model candidate index) — names, not arithmetic id packing, so
-    // candidate counts can never collide across models.
-    models.zipWithIndex.map { case ((name, learner, grid), mi) =>
-      val cands = ParamSampler.sample(
-        grid.map { case (k, v) => k -> v.map(_.asInstanceOf[Any]) }, n, seed + mi)
-        .map(_.map { case (k, v) => k -> v.asInstanceOf[Double] })
-      (name, learner, cands)
-    }
+  private val keyFields = Seq(
+    StructField("model_name", StringType, nullable = false),
+    StructField("candidate_id", IntegerType, nullable = false))
 
   /** Auto-routed fit: the multi-armed race collects + broadcasts while
     * the matrix fits the budget; past it, every (model, candidate, fold)
     * becomes a distributed `DataParallelFit` scored by
-    * `DistributedScore` (`DpSearch`, the grid search's loop) — same engine
-    * metric surface, same cv_results keying, same refit contract, so the
-    * caller never sees which regime ran.
+    * `DistributedScore` — both through the grid search's `SearchLoop`,
+    * with the same engine metric surface, cv_results keying and refit
+    * contract, so the caller never sees which regime ran.
     */
   def fit(spark: SparkSession, df: DataFrame,
           featuresCol: String, labelCol: String): MultiResult = {
-    if (ModelParallel.estimateMatrixBytes(df, featuresCol) <= broadcastBudgetBytes)
-      fitBroadcast(spark, df, featuresCol, labelCol)
-    else fitDataParallel(df, featuresCol, labelCol)
-  }
-
-  private def fitDataParallel(df: DataFrame,
-                              featuresCol: String, labelCol: String): MultiResult = {
-    val drawn = drawCandidates()
-    drawn.foreach { case (name, learner, _) =>
-      DataParallelFit.requireSupported(learner, entrant = name)
+    // Per-model candidate draws; rows are keyed by (model_name,
+    // per-model candidate index) — names, not arithmetic id packing, so
+    // candidate counts can never collide across models. Per-fit seeds get
+    // a globally-unique running offset — without it, candidate pi of
+    // model A and candidate pi of model B would draw identical
+    // subsampling / random-split streams (correlated scores across
+    // entrants).
+    val drawn = models.zipWithIndex.map { case ((name, learner, grid), mi) =>
+      (name, learner, ParamSampler.sample(
+        grid.map { case (k, v) => k -> v.map(_.asInstanceOf[Any]) }, n, seed + mi)
+        .map(_.map { case (k, v) => k -> v.asInstanceOf[Double] }))
     }
-    // Per-fit seeds get the same globally-unique running offset as the
-    // broadcast route's task ids — without it, candidate pi of model A
-    // and candidate pi of model B would draw identical subsampling /
-    // random-split streams (correlated scores across entrants).
     val seedOffsets = drawn.scanLeft(0)(_ + _._3.size * cv).init
     val cands = for {
       ((name, learner, params), off) <- drawn.zip(seedOffsets)
       (p, pi) <- params.zipWithIndex
-    } yield (DpSearch.Candidate(Seq(name, pi), learner, p), seed + off + pi * cv)
-    // DpCvFrame hashes folds, not labels; the broadcast route stratifies
-    // instead — fold SCHEMES differ between regimes, scores agree in
-    // expectation (same contract as the grid search auto-route)
-    val r = DpCvFrame.using(df, featuresCol, labelCol, cv, seed) { cvf =>
-      DpSearch.run(cvf,
-        Seq(StructField("model_name", StringType, nullable = false),
-          StructField("candidate_id", IntegerType, nullable = false)),
-        cands.map(_._1), scoring, Nil, iid = false, jobParallelism,
-        graft.exec.FitSideData.empty,
-        fitSeed = (ci, fold) => cands(ci)._2 + fold, refitSeed = seed)
-    }
+    } yield (SearchLoop.Candidate(Seq(name, pi), learner, p), seed + off + pi * cv)
+    val fitSeed = (ci: Int, fold: Int) => cands(ci)._2 + fold
+    val r =
+      if (ModelParallel.estimateMatrixBytes(df, featuresCol) <= broadcastBudgetBytes)
+        SearchLoop.broadcast(spark,
+          ModelParallel.collectMatrix(df, featuresCol, labelCol, cv, seed),
+          keyFields, cands.map(_._1), cv, scoring, Nil, iid = false,
+          errorScore = None, FitSideData.empty, fitSeed, refitSeed = seed)
+      else {
+        drawn.foreach { case (name, learner, _) =>
+          DataParallelFit.requireSupported(learner, entrant = name)
+        }
+        // DpCvFrame hashes folds, not labels; the broadcast route
+        // stratifies instead — fold SCHEMES differ between regimes,
+        // scores agree in expectation (same contract as the grid search)
+        DpCvFrame.using(df, featuresCol, labelCol, cv, seed) { cvf =>
+          SearchLoop.dataParallel(cvf, keyFields, cands.map(_._1), scoring,
+            Nil, iid = false, jobParallelism, FitSideData.empty, fitSeed,
+            refitSeed = seed)
+        }
+      }
     val best = cands(r.best)._1
     MultiResult(r.agg.orderBy("model_name", "candidate_id"),
       best.key.head.toString, best.params, r.bestScore, r.bestModel)
   }
+}
 
-  private def fitBroadcast(spark: SparkSession, df: DataFrame,
-                           featuresCol: String, labelCol: String): MultiResult = {
-    val matrix = ModelParallel.collectMatrix(df, featuresCol, labelCol, cv, seed)
-    val bc = spark.sparkContext.broadcast(matrix)
+/** The one CV loop of the grid search and the multi-model race, in both
+  * regimes: every (candidate, fold) is fitted once and scored under every
+  * metric, the fold scores become a driver-local frame, and
+  * `CvResults.aggregate`/`aggregateMulti` ranks the candidates; the best
+  * one is refitted on all rows. A regime supplies only its fold scorer
+  * and its refit. Callers keep their cv_results key columns, their
+  * per-fit seeds and their param-column join.
+  */
+private[search] object SearchLoop {
+  /** `key`: the candidate's cv_results key values, in `keyFields` order. */
+  final case class Candidate(key: Seq[Any], learner: Learner,
+                             params: Map[String, Double])
 
-    // Task ids (used only for per-task seeds) get a running offset to
-    // stay globally unique.
-    val perModel = drawCandidates()
-    val taskOffsets = perModel.scanLeft(0)(_ + _._3.size * cv).init
-    val frames = perModel.zip(taskOffsets).map {
-      case ((name, learner, cands), off) =>
-        val tasks = for {
-          (params, pi) <- cands.zipWithIndex
-          fold <- 0 until cv
-        } yield FitTask(off + pi * cv + fold, pi, fold, params)
-        ModelParallel.run(spark, tasks, bc, learner, scoring, seed)
-          .withColumn("model_name", lit(name))
+  /** `agg`: one row per candidate over driver-local fold scores — a
+    * re-evaluation re-aggregates a few rows and never refits, so nothing
+    * is cached; `best` indexes the candidates.
+    */
+  final case class Outcome(agg: DataFrame, best: Int, bestScore: Double,
+                           bestModel: Model)
+
+  /** Broadcast regime: one `ModelParallel.fanOut` task per (candidate,
+    * fold) over the matrix. `errorScore`: Some(v) fills a failed FIT with
+    * v under every metric and n_test = 0 (reference `error_score`,
+    * `search.py:232-259`); None rethrows. A scorer exception always
+    * surfaces — it is a bug, not a score to fake (sklearn semantics).
+    */
+  def broadcast(spark: SparkSession, matrix: TrainMatrix,
+                keyFields: Seq[StructField], cands: Seq[Candidate], cv: Int,
+                scoring: String, extraScorings: Seq[String], iid: Boolean,
+                errorScore: Option[Double], side: FitSideData,
+                fitSeed: (Int, Int) => Long, refitSeed: Long): Outcome = {
+    val metrics = scoring +: extraScorings
+    run(spark, keyFields, cands, cv, scoring, extraScorings, iid) { tasks =>
+      val items = tasks.map { case (ci, fold) => (cands(ci), fold, fitSeed(ci, fold)) }
+      ModelParallel.fanOut(spark, matrix, items) { case (m, (c, fold, seed)) =>
+        val (trainX, trainY) = m.trainOf(fold)
+        val (testX, testY) = m.testOf(fold)
+        val fitted =
+          try Right(c.learner.fit(trainX, trainY, c.params, seed, side))
+          catch { case e: Exception => Left(e) }
+        fitted match {
+          case Right(model) =>
+            (Metrics.multi(metrics)(model, testX, testY), testX.length.toLong)
+          case Left(e) => errorScore match {
+            case Some(v) => (metrics.map(_ -> v).toMap, 0L)
+            case None    => throw e
+          }
+        }
+      }.toSeq
+    } { c => // the full matrix (reference `search.py:543-550`), same side data
+      c.learner.fit(matrix.x, matrix.y, c.params, refitSeed, side)
     }
-    val scores = frames.reduce(_ union _)
-    // cached for the same reason as in DistGridSearchCV.fitMatrix
-    val agg = CvResults.aggregate(scores, Seq("model_name", "candidate_id")).cache()
-    val bestRow = CvResults.best(agg, Seq("model_name", "candidate_id")).head()
-    val bestPi = bestRow.getAs[Int]("candidate_id")
-    val bestName = bestRow.getAs[String]("model_name")
-    val (_, bestLearner, bestCands) = perModel.find(_._1 == bestName).get
-    val bestParams = bestCands(bestPi)
-    val bestModel = bestLearner.fit(matrix.x, matrix.y, bestParams, seed)
-    bc.unpersist() // cvResults is lazy; destroy would break re-evaluation
-    MultiResult(agg.orderBy("model_name", "candidate_id"), bestName, bestParams,
-      bestRow.getAs[Double]("mean_test_score"), bestModel)
+  }
+
+  /** Data-parallel regime: each (candidate, fold) is a [[DataParallelFit]]
+    * on the fold frame's `_x`/`_y`, submitted `jobParallelism` at a time
+    * (`Par.concurrently`, order-preserving) and scored by
+    * [[DistributedScore.scoreMany]].
+    */
+  def dataParallel(cvf: DpCvFrame, keyFields: Seq[StructField],
+                   cands: Seq[Candidate], scoring: String,
+                   extraScorings: Seq[String], iid: Boolean,
+                   jobParallelism: Int, side: FitSideData,
+                   fitSeed: (Int, Int) => Long, refitSeed: Long): Outcome = {
+    // every classifier fit over the frame shares ONE class count (a train
+    // fold that misses the top class still fits the frame's width),
+    // scanned once and only if some candidate needs it
+    lazy val k = DataParallelCART.scanClasses(cvf.prepared, "_y")
+    def fit(c: Candidate, data: DataFrame, seed: Long, nRows: Long): Model =
+      DataParallelFit.fit(c.learner, data, "_x", "_y", c.params, seed, nRows,
+        if (DataParallelFit.isClassifier(c.learner)) Some(k) else None,
+        // no eval history: concurrent fits appending to ONE driver buffer
+        // would interleave (and race) — the visibility the broadcast
+        // regime's executor-side fits give it
+        side.copy(history = null))
+    val metrics = scoring +: extraScorings
+    run(cvf.prepared.sparkSession, keyFields, cands, cvf.cv, scoring,
+        extraScorings, iid) { tasks =>
+      graft.ops.Par.concurrently(tasks, jobParallelism) { case (ci, fold) =>
+        val model = fit(cands(ci), cvf.train(fold), fitSeed(ci, fold),
+          cvf.nTrain(fold))
+        (DistributedScore.scoreMany(metrics, model, cvf.test(fold), "_x", "_y"),
+          cvf.nTest(fold))
+      }
+    } { c => fit(c, cvf.prepared, refitSeed, cvf.nTotal) }
+  }
+
+  /** The shared tail: `scoreFolds` maps the (candidate, fold) lattice,
+    * in order, to (metric -> score, n_test); then aggregate, best, refit.
+    */
+  private def run(spark: SparkSession, keyFields: Seq[StructField],
+                  cands: Seq[Candidate], cv: Int, scoring: String,
+                  extraScorings: Seq[String], iid: Boolean)(
+      scoreFolds: Seq[(Int, Int)] => Seq[(Map[String, Double], Long)])(
+      refit: Candidate => Model): Outcome = {
+    val tasks = for (ci <- cands.indices; fold <- 0 until cv) yield (ci, fold)
+    val rows = tasks.zip(scoreFolds(tasks)).map { case ((ci, fold), (ms, nTest)) =>
+      Row.fromSeq(cands(ci).key ++ Seq(fold, ms(scoring), nTest, ms))
+    }
+    val schema = StructType(keyFields ++ Seq(
+      StructField("fold_id", IntegerType, nullable = false),
+      StructField("score", DoubleType, nullable = false),
+      StructField("n_test", LongType, nullable = false),
+      StructField("scores", MapType(StringType, DoubleType, valueContainsNull = false))))
+    import scala.jdk.CollectionConverters._
+    val scores = spark.createDataFrame(rows.asJava, schema)
+    val keyCols = keyFields.map(_.name)
+    val agg =
+      if (extraScorings.isEmpty) CvResults.aggregate(scores, keyCols, iid = iid)
+      else CvResults.aggregateMulti(scores, keyCols, scoring +: extraScorings, iid = iid)
+    val bestRow = CvResults.best(agg, keyCols).head()
+    val best = cands.indexWhere(_.key == keyCols.map(bestRow.getAs[Any]))
+    Outcome(agg, best, bestRow.getAs[Double]("mean_test_score"), refit(cands(best)))
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,6 +10,30 @@ import graft.exec.{Learner, LogisticRegressionGD, Metrics, Model, ModelParallel}
 import graft.exec.ModelParallel.TrainMatrix
 import graft.plan.{Expansions, Folds}
 import graft.search._
+
+/** Fits on the driver (a pre-pass, a refit); throws inside every Spark
+  * task, so a fan-out's fits fail after its broadcast is out.
+  */
+private object ThrowsInTasks extends Learner {
+  def fit(x: Array[Array[Double]], y: Array[Double],
+          params: Map[String, Double], seed: Long): Model =
+    if (org.apache.spark.TaskContext.get() != null)
+      throw new IllegalStateException("fit failed in a task")
+    else LogisticRegressionGD.fit(x, y, Map("max_iter" -> 5.0), seed)
+}
+
+private object UnscorableModel extends Model {
+  def predict(x: Array[Double]): Double =
+    throw new IllegalStateException("scorer boom")
+  def predictProba(x: Array[Double]): Array[Double] =
+    throw new IllegalStateException("scorer boom")
+}
+
+/** Fits, but every score of its model throws. */
+private object FitsButUnscorable extends Learner {
+  def fit(x: Array[Array[Double]], y: Array[Double],
+          params: Map[String, Double], seed: Long): Model = UnscorableModel
+}
 
 class SearchExtrasSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSession.builder()
@@ -259,23 +283,14 @@ class SearchExtrasSpec extends AnyFunSuite {
   }
 
   test("error_score covers fit failures ONLY: scorer errors surface loudly") {
-    object UnscorableModel extends Model {
-      def predict(x: Array[Double]): Double =
-        throw new IllegalStateException("scorer boom")
-      def predictProba(x: Array[Double]): Array[Double] =
-        throw new IllegalStateException("scorer boom")
-    }
-    object FitsButUnscorable extends Learner {
-      def fit(x: Array[Array[Double]], y: Array[Double],
-              params: Map[String, Double], seed: Long): Model = UnscorableModel
-    }
     // sklearn semantics: error_score fills FIT failures; a scoring
     // exception is a bug that must not be laundered into a fake score
-    intercept[Exception] {
+    val e = intercept[org.apache.spark.SparkException] {
       new DistGridSearchCV(FitsButUnscorable,
         Map("c" -> Seq(1.0), "max_iter" -> Seq(10.0)), cv = 3,
         errorScore = Some(0.0)).fitMatrix(spark, blobs())
     }
+    assert(e.getMessage.contains("scorer boom"), e.getMessage)
   }
 
   test("constant learner fails loudly on an empty slice") {
@@ -709,5 +724,106 @@ class SearchExtrasSpec extends AnyFunSuite {
       math.sqrt(w.map(_.map(v => v * v).sum).sum)
     assert(norm(unreg) > 2 * norm(omitted),
       s"unregularized ${norm(unreg)} vs default ${norm(omitted)}")
+  }
+
+  test("successful fits leave no cached frame in the caller's session") {
+    import spark.implicits._
+    val m = blobs(n = 60)
+    val df = m.x.zip(m.y).toSeq.map { case (x, y) => (x.toSeq, y) }
+      .toDF("features", "label")
+    val sc = spark.sparkContext
+    val grid = Map("c" -> Seq(0.1, 1.0), "max_iter" -> Seq(20.0))
+    val fits: Seq[(String, () => DataFrame)] = Seq(
+      "grid" -> (() => new DistGridSearchCV(LogisticRegressionGD, grid, cv = 3)
+        .fitMatrix(spark, m).cvResults),
+      "race" -> (() => new DistMultiModelSearch(
+        Seq(("lr", LogisticRegressionGD, Map("c" -> Seq(0.1, 1.0)))), n = 2, cv = 3)
+        .fit(spark, df, "features", "label").cvResults),
+      "eliminator" -> (() => new DistFeatureEliminator(LogisticRegressionGD, cv = 3)
+        .fitMatrix(spark, m).scores),
+      "over-budget grid" -> (() => new DistGridSearchCV(LogisticRegressionGD, grid, cv = 3)
+        .withBroadcastBudget(1L).fit(spark, df, "features", "label").cvResults))
+    for ((name, fit) <- fits) {
+      val before = sc.getPersistentRDDs.size
+      val cvResults = fit()
+      assert(sc.getPersistentRDDs.size == before,
+        s"$name: cached RDDs ${sc.getPersistentRDDs.values.mkString(", ")}")
+      // re-evaluating the results re-aggregates driver-local fold scores
+      assert(cvResults.count() == cvResults.count())
+    }
+  }
+
+  test("every broadcast fit surface releases its matrix, also when a fit throws") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    // >= 1 MB of features: a broadcast the driver keeps shows up in its
+    // block manager's memory far above the task binaries' few KB
+    val rng = new Random(3)
+    val n = 4000
+    val x = Array.tabulate(n)(i => Array.tabulate(32)(j => (i % 3) * (j % 2) + rng.nextGaussian()))
+    val y = Array.tabulate(n)(i => (i % 3).toDouble)
+    val m = TrainMatrix(x, y, ModelParallel.stratifiedFolds(y, 2, 3))
+    val df = x.zip(y).toSeq.map { case (r, l) => (r.toSeq, l) }.toDF("features", "label")
+    val sets = y.map(l => Set(l.toString))
+    def surfaces(l: Learner): Seq[(String, () => Any)] = Seq(
+      "grid" -> (() => new DistGridSearchCV(l, Map("max_iter" -> Seq(5.0)), cv = 2)
+        .fitMatrix(spark, m)),
+      "race" -> (() => new DistMultiModelSearch(
+        Seq(("lr", l, Map("max_iter" -> Seq(5.0)))), n = 1, cv = 2)
+        .fit(spark, df, "features", "label")),
+      "ovr" -> (() => new DistOneVsRest(l).fitMatrix(spark, m)),
+      "multilabel" -> (() => new DistMultilabelOvR(l).fitSets(spark, x, sets)),
+      "ovo" -> (() => new DistOneVsOne(l).fitMatrix(spark, m)),
+      "oof" -> (() => OutOfFold.oofProba(spark, m, l, 2, 7)),
+      "eliminator" -> (() => new DistFeatureEliminator(l,
+        minFeaturesToSelect = 16, step = 16, cv = 2).fitMatrix(spark, m)))
+    val forest = DistRandomForestClassifier(nEstimators = 2, maxDepth = 2)
+    val runs =
+      surfaces(LogisticRegressionGD).map { case (s, f) => (s, f, false) } ++
+        surfaces(ThrowsInTasks).map { case (s, f) => (s, f, true) } ++ Seq(
+        ("forest/extend", () => forest.extend(spark, forest.fitMatrix(spark, m), m, 2), false),
+        // a 1-class model has no slot for label 1: every tree task throws
+        ("forest/extend", () => forest.extend(spark, ForestModel(Array.empty, 1), m, 2), true))
+    def held: Long = sc.getExecutorMemoryStatus.values.map { case (max, free) => max - free }.sum
+    for ((surface, fit, throws) <- runs) {
+      val before = held
+      if (throws) intercept[org.apache.spark.SparkException](fit()) else fit()
+      // broadcast removal is asynchronous: give the block manager a moment
+      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+      while (held - before > (512L << 10) && System.nanoTime() < deadline) Thread.sleep(50)
+      assert(held - before <= (512L << 10),
+        s"$surface (throwing=$throws) left ${held - before} bytes in the driver's block manager")
+    }
+  }
+
+  test("empty or ragged training matrices fail loudly on every surface") {
+    import spark.implicits._
+    val empty = Seq.empty[(Seq[Double], Double)].toDF("features", "label")
+    val fits: Seq[(String, () => Any)] = Seq(
+      "grid" -> (() => new DistGridSearchCV(LogisticRegressionGD, Map("c" -> Seq(1.0)))
+        .fit(spark, empty, "features", "label")),
+      "race" -> (() => new DistMultiModelSearch(
+        Seq(("lr", LogisticRegressionGD, Map("c" -> Seq(1.0)))))
+        .fit(spark, empty, "features", "label")),
+      "ovr" -> (() => new DistOneVsRest(LogisticRegressionGD)
+        .fit(spark, empty, "features", "label")),
+      "multilabel" -> (() => new DistMultilabelOvR(LogisticRegressionGD)
+        .fit(spark, Seq.empty[(Seq[Double], Seq[String])].toDF("features", "labels"),
+          "features", "labels")),
+      "ovo" -> (() => new DistOneVsOne(LogisticRegressionGD)
+        .fit(spark, empty, "features", "label")),
+      "forest" -> (() => DistRandomForestClassifier(nEstimators = 2)
+        .fit(spark, empty, "features", "label")),
+      "embedding" -> (() => new DistRandomTreesEmbedding(nEstimators = 2)
+        .fit(spark, empty, "features")),
+      "eliminator" -> (() => new DistFeatureEliminator(LogisticRegressionGD)
+        .fit(spark, empty, "features", "label")))
+    for ((surface, fit) <- fits) {
+      val e = intercept[IllegalArgumentException](fit())
+      assert(e.getMessage.contains("empty training set"), s"$surface: ${e.getMessage}")
+    }
+    val ragged = intercept[IllegalArgumentException](
+      TrainMatrix(Array(Array(1.0), Array(2.0)), Array(0.0), Array(0, 1)))
+    assert(ragged.getMessage.contains("ragged"), ragged.getMessage)
   }
 }

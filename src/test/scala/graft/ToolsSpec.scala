@@ -176,4 +176,28 @@ class ToolsSpec extends AnyFunSuite {
       }.toSeq
     assert(offenders.isEmpty, offenders.mkString("\n"))
   }
+
+  test("ModelParallel.fanOut is the one broadcast fit fan-out") {
+    // a surface broadcasting its matrix or parallelizing its fit tasks by
+    // hand picks its own broadcast release — and a driver that keeps the
+    // matrix after the fit; DataParallelCART's route and candidate
+    // broadcasts belong to histogram induction, not to a fit fan-out
+    import scala.jdk.CollectionConverters._
+    val exec = java.nio.file.Paths.get("src/main/scala/graft/exec")
+    val search = java.nio.file.Paths.get("src/main/scala/graft/search")
+    val exempt = Set(exec.resolve("ModelParallel.scala"),
+      search.resolve("DataParallelCART.scala"))
+    val fanOut = """(?:sparkContext|\bsc)\.broadcast\(|\.parallelize\(""".r
+    val offenders = Seq(exec, search).flatMap { dir =>
+      java.nio.file.Files.walk(dir).iterator().asScala
+        .filter(p => p.toString.endsWith(".scala") && !exempt(p))
+        .flatMap { p =>
+          val src = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
+          fanOut.findAllMatchIn(src).map { m =>
+            s"$p:${src.take(m.start).count(_ == '\n') + 1}: ${m.matched}"
+          }
+        }
+    }
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
 }
