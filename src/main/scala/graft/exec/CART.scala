@@ -90,6 +90,75 @@ object CART {
     }
   }
 
+  /** Presorted per-matrix view for the exhaustive split search (the
+    * presorted induction of SLIQ, Mehta et al. EDBT 1996, and SPRINT,
+    * Shafer et al. VLDB 1996): `cols(f)` holds feature f column-major,
+    * `order(f)` the row ids sorted by `(java.lang.Double.compare(value),
+    * row id)` and `rank(f)` its inverse. A node sorts its rows' ranks
+    * with the primitive `java.util.Arrays.sort` instead of sorting
+    * boxed rows by value: node row lists are ascending, so rank order is
+    * exactly the stable value sort. 16 bytes per cell beyond the
+    * row-major matrix; build once per matrix and share it across trees.
+    */
+  final class TreeView private (val nRows: Int,
+                                val cols: Array[Array[Double]],
+                                val order: Array[Array[Int]],
+                                val rank: Array[Array[Int]]) {
+    def nFeatures: Int = cols.length
+  }
+
+  object TreeView {
+    def apply(x: Array[Array[Double]]): TreeView = {
+      val n = x.length
+      require(n > 0, "empty training set")
+      val d = x(0).length
+      val keys = new Array[Long](n)
+      val sorted = new Array[Long](n)
+      val placed = new Array[Int](n) // rows already placed per tie group
+      val cols = new Array[Array[Double]](d)
+      val order = new Array[Array[Int]](d)
+      val rank = new Array[Array[Int]](d)
+      var f = 0
+      while (f < d) {
+        val c = new Array[Double](n)
+        var i = 0
+        while (i < n) {
+          c(i) = x(i)(f)
+          // signed-long image of java.lang.Double.compare's total order
+          // (-0.0 below 0.0, NaN above +Inf)
+          val b = java.lang.Double.doubleToLongBits(c(i))
+          keys(i) = b ^ ((b >> 63) & Long.MaxValue)
+          i += 1
+        }
+        System.arraycopy(keys, 0, sorted, 0, n)
+        java.util.Arrays.sort(sorted)
+        java.util.Arrays.fill(placed, 0)
+        val o = new Array[Int](n)
+        val r = new Array[Int](n)
+        i = 0
+        while (i < n) { // ascending rows fill each tie group in row order
+          val g = firstAtLeast(sorted, keys(i))
+          val pos = g + placed(g)
+          placed(g) += 1
+          r(i) = pos; o(pos) = i
+          i += 1
+        }
+        cols(f) = c; order(f) = o; rank(f) = r
+        f += 1
+      }
+      new TreeView(n, cols, order, rank)
+    }
+
+    private def firstAtLeast(a: Array[Long], key: Long): Int = {
+      var lo = 0; var hi = a.length
+      while (lo < hi) {
+        val mid = (lo + hi) >>> 1
+        if (a(mid) < key) lo = mid + 1 else hi = mid
+      }
+      lo
+    }
+  }
+
   class Classifier(val nClassesHint: Int = 0) extends Learner {
     def fit(X: Array[Array[Double]], y: Array[Double],
             params: Map[String, Double], seed: Long): Model = {
@@ -105,15 +174,23 @@ object CART {
       grow(X, y, null, params, seed, 0)
   }
 
+  /** [[grow]] over a one-off view of `X`; callers growing several trees
+    * on one matrix build the view once and call the view overload.
+    */
+  def grow(X: Array[Array[Double]], y: Array[Double], w: Array[Double],
+           params: Map[String, Double], seed: Long, nClasses: Int): TreeModel =
+    grow(TreeView(X), y, w, params, seed, nClasses)
+
   /** Grow a tree. `w` = optional sample weights (bootstrap multinomial
     * counts, reference `_build_trees` `ensemble.py:88-106`); null → 1.0.
     * `nClasses` == 0 → regression.
     */
-  def grow(X: Array[Array[Double]], y: Array[Double], w: Array[Double],
+  def grow(view: TreeView, y: Array[Double], w: Array[Double],
            params: Map[String, Double], seed: Long, nClasses: Int): TreeModel = {
-    val n = X.length
+    val n = view.nRows
     require(n > 0, "empty training set")
-    val d = X(0).length
+    val d = view.nFeatures
+    val cols = view.cols
     val maxDepth = params.getOrElse("max_depth", 0.0).toInt
     val minSplit = math.max(2, params.getOrElse("min_samples_split", 2.0).toInt)
     val maxFeatures = params.getOrElse("max_features", 0.0)
@@ -122,6 +199,10 @@ object CART {
       if (maxFeatures <= 0 || maxFeatures > 1) d
       else math.max(1, math.round(maxFeatures * d).toInt)
     var leafCount = 0
+    // split-search scratch, reused by every node: a node finishes its
+    // search before it recurses
+    val ranks = new Array[Int](n)
+    val sortedIdx = new Array[Int](n)
 
     def leafValue(idx: Array[Int]): Array[Double] =
       if (nClasses > 0) {
@@ -155,6 +236,19 @@ object CART {
       new Node(-1, 0.0, null, null, leafValue(idx), leafCount - 1)
     }
 
+    /** `sortedIdx(0 until idx.length)` = the node's rows in feature f's
+      * rank order.
+      */
+    def sortByRank(idx: Array[Int], f: Int): Unit = {
+      val m = idx.length
+      val rf = view.rank(f); val of = view.order(f)
+      var j = 0
+      while (j < m) { ranks(j) = rf(idx(j)); j += 1 }
+      java.util.Arrays.sort(ranks, 0, m)
+      j = 0
+      while (j < m) { sortedIdx(j) = of(ranks(j)); j += 1 }
+    }
+
     def build(idx: Array[Int], depth: Int, uid: Long): Node = {
       val totW = if (w == null) idx.length.toDouble else idx.map(w).sum
       val pure = {
@@ -171,33 +265,38 @@ object CART {
           .take(nFeat).sorted.toArray
 
       var bestFeat = -1; var bestThr = 0.0; var bestScore = Double.MaxValue
+      val m = idx.length
       feats.foreach { f =>
+        val xf = cols(f)
         if (randomSplits) {
           // extra-trees: one uniform-random threshold in [min, max)
           var lo = Double.MaxValue; var hi = Double.MinValue
-          idx.foreach { i => val v = X(i)(f); if (v < lo) lo = v; if (v > hi) hi = v }
+          idx.foreach { i => val v = xf(i); if (v < lo) lo = v; if (v > hi) hi = v }
           if (hi > lo) {
             val thr = lo + nodeUniform(seed, uid, f) * (hi - lo)
-            val score = splitScore(idx, f, thr)
+            val score = splitScore(idx, xf, thr)
             if (score < bestScore) { bestScore = score; bestFeat = f; bestThr = thr }
           }
         } else {
           // exhaustive: midpoints between consecutive distinct sorted values
-          val sortedIdx = idx.sortBy(i => X(i)(f))
+          sortByRank(idx, f)
           if (nClasses > 0) {
             val lc = new Array[Double](nClasses); var lw = 0.0
             val rc = new Array[Double](nClasses); var rw = 0.0
-            sortedIdx.foreach { i =>
-              val wi = if (w == null) 1.0 else w(i)
-              rc(y(i).toInt) += wi; rw += wi
-            }
             var i = 0
-            while (i < sortedIdx.length - 1) {
+            while (i < m) {
+              val ii = sortedIdx(i)
+              val wi = if (w == null) 1.0 else w(ii)
+              rc(y(ii).toInt) += wi; rw += wi
+              i += 1
+            }
+            i = 0
+            while (i < m - 1) {
               val ii = sortedIdx(i)
               val wi = if (w == null) 1.0 else w(ii)
               lc(y(ii).toInt) += wi; lw += wi
               rc(y(ii).toInt) -= wi; rw -= wi
-              val v0 = X(ii)(f); val v1 = X(sortedIdx(i + 1))(f)
+              val v0 = xf(ii); val v1 = xf(sortedIdx(i + 1))
               if (v1 > v0) {
                 val score = (lw * giniOf(lc, lw) + rw * giniOf(rc, rw)) / totW
                 if (score < bestScore) {
@@ -209,17 +308,20 @@ object CART {
           } else {
             var ls = 0.0; var ls2 = 0.0; var lw = 0.0
             var rs = 0.0; var rs2 = 0.0; var rw = 0.0
-            sortedIdx.foreach { i =>
-              val wi = if (w == null) 1.0 else w(i)
-              rs += wi * y(i); rs2 += wi * y(i) * y(i); rw += wi
-            }
             var i = 0
-            while (i < sortedIdx.length - 1) {
+            while (i < m) {
+              val ii = sortedIdx(i)
+              val wi = if (w == null) 1.0 else w(ii)
+              rs += wi * y(ii); rs2 += wi * y(ii) * y(ii); rw += wi
+              i += 1
+            }
+            i = 0
+            while (i < m - 1) {
               val ii = sortedIdx(i)
               val wi = if (w == null) 1.0 else w(ii)
               ls += wi * y(ii); ls2 += wi * y(ii) * y(ii); lw += wi
               rs -= wi * y(ii); rs2 -= wi * y(ii) * y(ii); rw -= wi
-              val v0 = X(ii)(f); val v1 = X(sortedIdx(i + 1))(f)
+              val v0 = xf(ii); val v1 = xf(sortedIdx(i + 1))
               if (v1 > v0) {
                 val lVar = if (lw > 0) ls2 - ls * ls / lw else 0.0
                 val rVar = if (rw > 0) rs2 - rs * rs / rw else 0.0
@@ -235,20 +337,21 @@ object CART {
       }
 
       if (bestFeat < 0) return mkLeaf(idx)
-      val (l, r) = idx.partition(i => X(i)(bestFeat) <= bestThr)
+      val xb = cols(bestFeat)
+      val (l, r) = idx.partition(i => xb(i) <= bestThr)
       if (l.isEmpty || r.isEmpty) return mkLeaf(idx)
       val left = build(l, depth + 1, uid * 2)
       val right = build(r, depth + 1, uid * 2 + 1)
       new Node(bestFeat, bestThr, left, right, null, -1)
     }
 
-    def splitScore(idx: Array[Int], f: Int, thr: Double): Double = {
+    def splitScore(idx: Array[Int], xf: Array[Double], thr: Double): Double = {
       if (nClasses > 0) {
         val lc = new Array[Double](nClasses); var lw = 0.0
         val rc = new Array[Double](nClasses); var rw = 0.0
         idx.foreach { i =>
           val wi = if (w == null) 1.0 else w(i)
-          if (X(i)(f) <= thr) { lc(y(i).toInt) += wi; lw += wi }
+          if (xf(i) <= thr) { lc(y(i).toInt) += wi; lw += wi }
           else { rc(y(i).toInt) += wi; rw += wi }
         }
         val tot = lw + rw
@@ -259,7 +362,7 @@ object CART {
         var rs = 0.0; var rs2 = 0.0; var rw = 0.0
         idx.foreach { i =>
           val wi = if (w == null) 1.0 else w(i)
-          if (X(i)(f) <= thr) { ls += wi * y(i); ls2 += wi * y(i) * y(i); lw += wi }
+          if (xf(i) <= thr) { ls += wi * y(i); ls2 += wi * y(i) * y(i); lw += wi }
           else { rs += wi * y(i); rs2 += wi * y(i) * y(i); rw += wi }
         }
         val lVar = if (lw > 0) ls2 - ls * ls / lw else 0.0

@@ -134,7 +134,7 @@ object GBT {
     walk(tree.root)
   }
 
-  private def subsampleWeights(n: Int, frac: Double, seed: Long): Array[Double] =
+  private[graft] def subsampleWeights(n: Int, frac: Double, seed: Long): Array[Double] =
     if (frac >= 1.0) null
     else {
       val rng = new Random(seed)
@@ -257,6 +257,8 @@ object GBT {
       }
     }
 
+    // one presorted view for every stage and class tree of this fit
+    val view = CART.TreeView(X)
     val F = Array.fill(n)(prior.clone())
     val stages = scala.collection.mutable.ArrayBuffer.empty[Array[CART.TreeModel]]
 
@@ -272,11 +274,11 @@ object GBT {
         val r = Array.tabulate(n)(i => y(i) - F(i)(0))
         // squared loss: the regression tree's weighted-mean leaf IS the
         // optimal step, no Newton refit needed
-        stage(0) = CART.grow(X, r, w, treeParams, mixSeed(seed, m, 0), 0)
+        stage(0) = CART.grow(view, r, w, treeParams, mixSeed(seed, m, 0), 0)
       } else if (k == 2) {
         val p = Array.tabulate(n)(i => 1.0 / (1.0 + math.exp(-F(i)(0))))
         val r = Array.tabulate(n)(i => y(i) - p(i))
-        val t = CART.grow(X, r, w, treeParams, mixSeed(seed, m, 0), 0)
+        val t = CART.grow(view, r, w, treeParams, mixSeed(seed, m, 0), 0)
         newtonRefit(t, X, w, r, i => math.max(1e-12, p(i) * (1 - p(i))),
           scale = 1.0)
         stage(0) = t
@@ -298,7 +300,7 @@ object GBT {
         while (c < k) {
           val r = Array.tabulate(n)(i =>
             (if (y(i).toInt == c) 1.0 else 0.0) - p(i)(c))
-          val t = CART.grow(X, r, w, treeParams, mixSeed(seed, m, c), 0)
+          val t = CART.grow(view, r, w, treeParams, mixSeed(seed, m, c), 0)
           newtonRefit(t, X, w, r,
             i => math.max(1e-12, math.abs(r(i)) * (1 - math.abs(r(i)))),
             scale = (k - 1).toDouble / k)

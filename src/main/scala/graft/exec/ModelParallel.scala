@@ -42,6 +42,13 @@ object ModelParallel {
         s"precomputed kernel must be square (n x n), got rows of widths " +
           s"${x.map(_.length).distinct.take(3).mkString(",")} for n=${x.length}")
     def nRows: Int = x.length
+    /** The tree learners' presorted view of `x` ([[CART.TreeView]]).
+      * Transient: broadcasts ship `x` alone and each executor builds the
+      * view from its copy the first time a tree task asks, so every tree
+      * on that executor shares it (in local mode that copy IS this
+      * driver object, and the view lives as long as it does).
+      */
+    @transient lazy val treeView: CART.TreeView = CART.TreeView(x)
     private def slice(rows: Seq[Int], trainIdx: Seq[Int]): Array[Array[Double]] =
       if (!precomputedKernel) rows.map(x).toArray
       else rows.map(i => trainIdx.map(j => x(i)(j)).toArray).toArray

@@ -25,8 +25,9 @@ import graft.ops.Par
   *    low-cardinality features, equi-depth `percentile_approx` quantiles
   *    for continuous ones (`splitCandidates`).
   *  - Breadth-first growth: per level, rows route through the broadcast
-  *    partial trees to a frontier node, and ONE `treeAggregate` builds all
-  *    (tree, node, feature, bin) sufficient statistics — class-weight
+  *    partial trees to a frontier node, and ONE ordered aggregation
+  *    (`orderedAggregate`) builds all (tree, node, feature, bin)
+  *    sufficient statistics — class-weight
   *    vectors for gini, (w, wy, wy2) for variance. Split scoring on the
   *    driver is a prefix scan over bins using the broadcast learner's
   *    exact scoring formula; only statistics ever reach the driver, never
@@ -206,7 +207,7 @@ object DataParallelCART {
 
   /** The level-aggregation kernel exposed as a relational surface: per
     * (feature, bin, class) row counts over caller-FIXED thresholds, via
-    * the exact treeAggregate path tree induction uses — the oracled query
+    * the exact aggregation path tree induction uses — the oracled query
     * (q69) pins this kernel against DuckDB CASE/GROUP BY truth.
     */
   def histogram(df: DataFrame, featuresCol: String, labelCol: String,
@@ -294,7 +295,7 @@ object DataParallelCART {
     val nSlots = hi - lo
     val cs = s + (if (trackRanges) 2 else 0)
     val cntOff = s - 1 // positive-weight row count, both regimes
-    data.treeAggregate(new Array[Double](nSlots * nFeat * stride * cs))(
+    orderedAggregate(data, () => new Array[Double](nSlots * nFeat * stride * cs))(
       seqOp = (acc, row) => {
         val (x, y, w0, rowId) = row
         // loud, once per row: an out-of-range label (e.g. SVM-style -1/+1)
@@ -375,6 +376,40 @@ object DataParallelCART {
         }
         a
       })
+  }
+
+  /** `treeAggregate`'s two-level shape with a FIXED merge order: each
+    * partition folds its rows into one partial, groups of ~sqrt(n)
+    * consecutive partials merge in partition-index order on the
+    * executors, and the driver merges the group results in group order.
+    * `treeAggregate` merges in task-completion order, and floating-point
+    * sums differ bit-wise with their order — two runs of one fit could
+    * grow different trees. Here a fit's statistics are the same bits on
+    * every run.
+    */
+  private[search] def orderedAggregate[T](data: RDD[T], zero: () => Array[Double])(
+      seqOp: (Array[Double], T) => Array[Double],
+      combOp: (Array[Double], Array[Double]) => Array[Double]): Array[Double] = {
+    val partials = data.mapPartitions(rows => Iterator.single(rows.foldLeft(zero())(seqOp)))
+    val n = partials.getNumPartitions
+    val fanIn = math.max(2, math.ceil(math.sqrt(n.toDouble)).toInt)
+    val groups = (n + fanIn - 1) / fanIn
+    val merged =
+      if (n <= fanIn + groups) partials // few partials: the driver merges them
+      else partials
+        .mapPartitionsWithIndex((i, it) => it.map(i -> _))
+        .repartitionAndSortWithinPartitions(new IndexGroups(groups, fanIn))
+        .mapPartitions(it =>
+          if (it.hasNext) Iterator.single(it.map(_._2).reduceLeft(combOp))
+          else Iterator.empty)
+    val parts = merged.collect() // partition order
+    if (parts.isEmpty) zero() else parts.reduceLeft(combOp)
+  }
+
+  /** Partition index → its group of `fanIn` consecutive partitions. */
+  private final class IndexGroups(groups: Int, fanIn: Int) extends org.apache.spark.Partitioner {
+    def numPartitions: Int = groups
+    def getPartition(key: Any): Int = key.asInstanceOf[Int] / fanIn
   }
 
   private def growForest(df: DataFrame, featuresCol: String, labelCol: String,

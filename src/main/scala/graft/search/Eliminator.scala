@@ -93,14 +93,20 @@ class DistFeatureEliminator(learner: Learner,
       def masked(data: DataFrame, keep: Array[Int]): DataFrame =
         data.select(array(keep.map(j => col("_x").getItem(j)): _*).as("_xm"),
           col("_y"))
+      // every classifier fit shares the frame's class count, scanned once
+      // (SearchLoop.dataParallel's discipline)
+      lazy val k = DataParallelCART.scanClasses(cvf.prepared, "_y")
       // one data-parallel fit of `learner` on a masked projection (default
-      // params throughout, matching the broadcast route's Map.empty fits)
-      def fitOne(data: DataFrame, keep: Array[Int], fitSeed: Long): Model =
+      // params throughout, matching the broadcast route's Map.empty fits);
+      // `nRows` from the fold bookkeeping spares the logistic count job
+      def fitOne(data: DataFrame, keep: Array[Int], fitSeed: Long,
+                 nRows: Long): Model =
         DataParallelFit.fit(learner, masked(data, keep), "_xm", "_y",
-          Map.empty, fitSeed)
+          Map.empty, fitSeed, nRows,
+          if (DataParallelFit.isClassifier(learner)) Some(k) else None)
 
       // 1. pre-pass on ALL rows ranks features worst-first
-      val full = fitOne(cvf.prepared, (0 until d).toArray, seed)
+      val full = fitOne(cvf.prepared, (0 until d).toArray, seed, cvf.nTotal)
       val worstFirst = {
         val imp = importances(full, d)
         (0 until d).sortBy(j => (imp(j), j)).toArray
@@ -113,7 +119,8 @@ class DistFeatureEliminator(learner: Learner,
         (keep, ri) <- rungKeeps.zipWithIndex
         fold <- 0 until cv
       } yield {
-        val model = fitOne(cvf.train(fold), keep, seed + ri * 100 + fold)
+        val model = fitOne(cvf.train(fold), keep, seed + ri * 100 + fold,
+          cvf.nTrain(fold))
         val s = DistributedScore(scoring, model, masked(cvf.test(fold), keep),
           "_xm", "_y")
         (ri, fold, s, cvf.nTest(fold))
@@ -124,7 +131,7 @@ class DistFeatureEliminator(learner: Learner,
       val agg = CvResults.aggregate(scores, Seq("candidate_id"))
       val bestRow = CvResults.best(agg, Seq("candidate_id")).head()
       val keep = rungKeeps(bestRow.getAs[Int]("candidate_id"))
-      val refit = fitOne(cvf.prepared, keep, seed)
+      val refit = fitOne(cvf.prepared, keep, seed, cvf.nTotal)
       EliminatorResult(agg.orderBy("candidate_id"), keep,
         bestRow.getAs[Double]("mean_test_score"), MaskedModel(refit, keep))
     }

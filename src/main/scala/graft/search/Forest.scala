@@ -146,7 +146,7 @@ class DistForest(nEstimators: Int = 100,
           if (sw != null) { i = 0; while (i < n) { counts(i) *= sw(i); i += 1 } }
           counts
         }
-      CART.grow(m.x, m.y, w, treeParams, treeSeed, nClasses)
+      CART.grow(m.treeView, m.y, w, treeParams, treeSeed, nClasses)
     }
   }
 }

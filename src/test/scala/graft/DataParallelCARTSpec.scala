@@ -391,33 +391,52 @@ class DataParallelCARTSpec extends AnyFunSuite {
     assert(e.getMessage != null)
   }
 
+  /** SQL executions whose plan scans the `_y` labels for a class count. */
+  private def labelScans[T](body: => T): (Int, T) = {
+    val sc = spark.sparkContext
+    val scans = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit =
+        e match {
+          case s: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+              if s.physicalPlanDescription.contains("max(_y") =>
+            scans.incrementAndGet()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      val r = body
+      graft.obs.StageMetrics.drain(sc)
+      (scans.get, r)
+    } finally sc.removeSparkListener(listener)
+  }
+
   test("over-budget CART grid search scans the labels once per frame") {
     // every fold fit and the refit share the frame's class count: one
     // max(label) job per search, not one per fit (2 candidates x 3 folds
     // + the refit would be 7)
     val (x, y) = planted()
     val df = toDF(x, y)
-    val sc = spark.sparkContext
     for (learner <- Seq(CART.Classifier, new CART.Classifier(3))) {
-      val scans = new java.util.concurrent.atomic.AtomicInteger
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit =
-          e match {
-            case s: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
-                if s.physicalPlanDescription.contains("max(_y") =>
-              scans.incrementAndGet()
-            case _ =>
-          }
-      }
-      sc.addSparkListener(listener)
-      val r = try {
-        val r = new DistGridSearchCV(learner, Map("max_depth" -> Seq(2.0, 3.0)), cv = 3)
+      val (scans, r) = labelScans {
+        new DistGridSearchCV(learner, Map("max_depth" -> Seq(2.0, 3.0)), cv = 3)
           .withBroadcastBudget(1L).fit(spark, df, "x", "y")
-        graft.obs.StageMetrics.drain(sc)
-        r
-      } finally sc.removeSparkListener(listener)
-      assert(scans.get == 1, s"${scans.get} label scans for $learner")
+      }
+      assert(scans == 1, s"$scans label scans for $learner")
       assert(r.bestModel.predictProba(x.head).length == 3)
     }
+  }
+
+  test("over-budget CART eliminator scans the labels once per frame") {
+    // pre-pass + 3 rungs x 3 folds + refit = 11 fits, one class count
+    val (x, y) = planted()
+    val df = toDF(x, y)
+    val (scans, r) = labelScans {
+      new graft.search.DistFeatureEliminator(CART.Classifier, cv = 3)
+        .withBroadcastBudget(1L).fit(spark, df, "x", "y")
+    }
+    assert(scans == 1, s"$scans label scans")
+    assert(r.model.predictProba(x.head).length == 3)
   }
 }

@@ -150,4 +150,28 @@ class DataParallelGBTSpec extends AnyFunSuite {
     assert(Metrics.accuracy(a, x, y) > 0.93,
       s"stochastic DP GBT accuracy ${Metrics.accuracy(a, x, y)}")
   }
+
+  test("over-budget GBT regressor search is bit-identical run to run") {
+    // more partitions than task slots, so partials finish in varying
+    // order: the statistics merge must not follow completion order
+    val rng = new Random(29)
+    val x = Array.fill(600)(Array.fill(4)(rng.nextGaussian()))
+    val y = x.map(r => r(0) * 1.7 - r(1) * r(2) + rng.nextGaussian() * 0.3)
+    import spark.implicits._
+    val df = spark.sparkContext
+      .parallelize(x.zip(y).toSeq.map { case (v, l) => (v.toSeq, l) }, 16)
+      .toDF("features", "label")
+    def fit() = new graft.search.DistGridSearchCV(GBT.Regressor,
+        Map("n_estimators" -> Seq(4.0), "max_depth" -> Seq(2.0, 3.0)), cv = 3,
+        scoring = "r2")
+      .withBroadcastBudget(1L).fit(spark, df, "features", "label")
+    val a = fit()
+    val b = fit()
+    def bits(v: Double) = java.lang.Double.doubleToRawLongBits(v)
+    assert(bits(a.bestScore) == bits(b.bestScore), s"${a.bestScore} vs ${b.bestScore}")
+    x.foreach { r =>
+      assert(bits(a.bestModel.predict(r)) == bits(b.bestModel.predict(r)),
+        s"${a.bestModel.predict(r)} vs ${b.bestModel.predict(r)}")
+    }
+  }
 }

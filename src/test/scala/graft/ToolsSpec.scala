@@ -200,4 +200,19 @@ class ToolsSpec extends AnyFunSuite {
     }
     assert(offenders.isEmpty, offenders.mkString("\n"))
   }
+
+  test("tree split search has one path: no per-node row sort in CART or GBT") {
+    // the exhaustive split search reads rank order off CART.TreeView; a
+    // sortBy over a node's rows beside it is the boxed per-node sort the
+    // view replaced, and a second split path to keep bit-identical
+    val exec = java.nio.file.Paths.get("src/main/scala/graft/exec")
+    val offenders = Seq("CART.scala", "GBT.scala").flatMap { f =>
+      val p = exec.resolve(f)
+      val src = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
+      """sortBy\(""".r.findAllMatchIn(src).map { m =>
+        s"$p:${src.take(m.start).count(_ == '\n') + 1}: ${m.matched}"
+      }
+    }
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
 }
