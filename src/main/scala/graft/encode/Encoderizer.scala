@@ -1,10 +1,12 @@
 package graft.encode
 
-import org.apache.spark.ml.feature.{CountVectorizer, CountVectorizerModel, HashingTF, NGram, RegexTokenizer}
-import org.apache.spark.ml.functions.array_to_vector
-import org.apache.spark.sql.{functions, Column, DataFrame}
+import org.apache.spark.ml.feature.{HashingTF, NGram, RegexTokenizer}
+import org.apache.spark.sql.{functions, Column, DataFrame, Row}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+
+import graft.functions.AssembleVectors
 
 /** Type-inferring feature-union encoder (reference `Encoderizer`,
   * `encoder.py` + `_defaults.py`): probe each column, pick an encoder
@@ -19,18 +21,22 @@ import org.apache.spark.sql.types._
   * strings → hashed text n-grams ('small'/'medium'/'large' grids,
   * `_defaults.py:89-204`).
   *
-  * Scale: inference is one stats pass (count/countDistinct per column);
-  * numeric standardization is expression-only (codegen); categorical and
-  * multihot vocabularies are freq-ordered groupBys; text hashing uses
-  * Spark ML HashingTF (no vocab state at all) — nothing here collects row
-  * data to the driver beyond vocabularies.
+  * Scale: `fit` is at most two Spark queries for any mix of columns — the
+  * inference stats of every column joined to the numeric moments of every
+  * column that can turn out numeric, then one grouped query for every
+  * vocabulary. Numeric standardization is
+  * expression-only (codegen); categorical and multihot vocabularies are
+  * freq-ordered and capped in Spark; text hashing uses Spark ML HashingTF
+  * (no vocab state at all); blocks are assembled by the codegen'd
+  * [[graft.functions.AssembleVectors]], so `transform` runs no Spark job.
+  * Nothing here collects row data to the driver beyond vocabularies.
   */
 object Encoderizer {
 
-  /** Column ref that survives DOTTED names: `col("a.b")` parses as
-    * nested-field access and fails to resolve a literal column named
-    * "a.b"; backticks make it a literal identifier. The expr() paths
-    * already quote — every col() site must match.
+  /** Column ref that survives DOTTED names and backticks: `col("a.b")`
+    * parses as nested-field access and fails to resolve a literal column
+    * named "a.b"; backticks (doubled inside the name) make it a literal
+    * identifier. Every reference to a user column goes through it.
     */
   private def qcol(n: String): Column = col(s"`${n.replace("`", "``")}`")
 
@@ -41,33 +47,134 @@ object Encoderizer {
     def pctUnique: Double = if (nNonNull == 0) 0.0 else nDistinct.toDouble / nNonNull
   }
 
-  def stats(df: DataFrame, cols: Seq[String]): Seq[ColumnStats] = {
-    val aggs = cols.flatMap { c =>
-      // try_cast, not cast: under ANSI mode a malformed string would throw
-      // instead of yielding null.
-      val base = df.schema(c).dataType match {
-        // try_cast only exists for LEGAL casts: date/binary/struct/… to
-        // double is an ANALYSIS error, not a runtime null — probe those
-        // as non-numeric instead of crashing fit on any frame with e.g.
-        // a date column. Timestamp→double IS legal (epoch seconds), so
-        // timestamp columns keep probing numeric as they did before the
-        // legal-cast restriction.
-        case _: NumericType | StringType | BooleanType | TimestampType =>
-          expr(s"try_cast(`$c` as double)")
-        case _ => lit(null).cast("double")
+  // ---- fit-query helpers ----------------------------------------------
+  // `stats`, `fitStage` and `fit` build their queries from these, so the
+  // one- and two-query paths cannot drift apart.
+
+  /** Types with a legal cast to double. try_cast only exists for LEGAL
+    * casts: date/binary/struct/… to double is an ANALYSIS error, not a
+    * runtime null — those probe as non-numeric instead of crashing fit on
+    * any frame with e.g. a date column. Timestamp→double IS legal (epoch
+    * seconds), so timestamp columns probe numeric.
+    */
+  private def doubleCastable(df: DataFrame, c: String): Boolean =
+    df.schema(c).dataType match {
+      case _: NumericType | StringType | BooleanType | TimestampType => true
+      case _ => false
+    }
+
+  // try_cast, not cast: under ANSI mode a malformed string would throw
+  // instead of yielding null.
+  private def asDouble(c: String): Column = qcol(c).try_cast("double")
+
+  /** Per column: non-null count, distinct count, numeric-castable count. */
+  private def statAggs(df: DataFrame, c: String): Seq[Column] = Seq(
+    count(qcol(c)), countDistinct(qcol(c)),
+    count(if (doubleCastable(df, c)) asDouble(c) else lit(null).cast("double")))
+
+  private def readStats(r: Row, at: Int, c: String, n: Long): ColumnStats = {
+    val nn = r.getLong(at)
+    ColumnStats(c, n, nn, r.getLong(at + 1),
+      numericCastable = nn > 0 && r.getLong(at + 2) == nn)
+  }
+
+  /** Per column: exact median, mean, population std and non-null count of
+    * `try_cast(c as double)`. NOTE on percentile: EXACT, by choice — it is
+    * the reference's SimpleImputer(median) semantics and what the q43
+    * oracle pins; its aggregation buffers the column's values, so at a
+    * scale where that matters swap to percentile_approx KNOWINGLY
+    * (imputation tolerates an approximate median — exact is parity, not
+    * necessity).
+    */
+  private def momentAggs(c: String): Seq[Column] = {
+    val v = asDouble(c)
+    Seq(percentile(v, lit(0.5)), avg(v), stddev_pop(v), count(v))
+  }
+
+  /** The numeric stage from [[momentAggs]] at `at`. The reference pipeline
+    * is SimpleImputer(median) THEN StandardScaler: the scaler fits on the
+    * median-IMPUTED column, so with nulls present the moments include the
+    * imputed entries via a closed-form correction (no second pass); the
+    * null-free branch keeps the aggregate values bit-identical.
+    */
+  private def readNumeric(r: Row, at: Int, c: String, n: Long): NumericStage = {
+    def d(i: Int): Double = if (r.isNullAt(i)) 0.0 else r.getDouble(i)
+    val med = d(at)
+    val meanNN = d(at + 1)
+    val stdNN = d(at + 2)
+    val nn = r.getLong(at + 3)
+    val (mean, std) =
+      if (n == 0 || nn == n) (meanNN, stdNN)
+      else {
+        val m = (nn * meanNN + (n - nn) * med) / n
+        val ex2 = (nn * (stdNN * stdNN + meanNN * meanNN) +
+          (n - nn) * med * med) / n
+        (m, math.sqrt(math.max(0.0, ex2 - m * m)))
       }
-      Seq(
-        count(qcol(c)).as(s"_nn_$c"),
-        countDistinct(qcol(c)).as(s"_nd_$c"),
-        count(base).as(s"_num_$c"))
+    NumericStage(c, med, mean, std)
+  }
+
+  /** One row: the row count, then [[statAggs]] per column. */
+  private def statsQuery(df: DataFrame, cols: Seq[String]): DataFrame =
+    df.agg(count(lit(1)), cols.flatMap(statAggs(df, _)): _*)
+
+  /** One row: the row count, then [[momentAggs]] per column. Kept apart
+    * from [[statsQuery]]: Spark plans the distinct counts through an
+    * Expand whose partial aggregation falls back to sorting past 128
+    * keys, which re-orders the sums and moves a mean by a few ulps.
+    */
+  private def momentsQuery(df: DataFrame, cols: Seq[String]): DataFrame =
+    df.agg(count(lit(1)), cols.flatMap(momentAggs): _*)
+
+  private val vocabKinds = Set("categorical", "multihot", "map")
+  private val kinds = vocabKinds ++ Set("drop", "numeric", "text")
+
+  /** Every vocabulary of `specs` (categorical, multihot and map kinds) from
+    * ONE grouped query: each row's values of every vocab column are tagged
+    * with the column's position and exploded in one scan, counted per
+    * (column, value), ranked per column — categorical and multihot by
+    * (count desc, value asc), the StringIndexer order; map keys by key
+    * asc — and cut at `maxVocab` in Spark, so the driver holds at most
+    * `maxVocab` entries per column.
+    */
+  private def vocabularies(df: DataFrame, specs: Seq[ColumnSpec],
+                           maxVocab: Int): Map[String, Seq[String]] =
+    if (specs.isEmpty) Map.empty
+    else {
+      val none = array().cast("array<string>")
+      val tagged = specs.zipWithIndex.map { case (s, i) =>
+        val values = s.kind match {
+          case "categorical" => array(qcol(s.name).cast("string"))
+          case "multihot" => coalesce(qcol(s.name).cast("array<string>"), none)
+          case "map" => coalesce(map_keys(qcol(s.name)).cast("array<string>"), none)
+        }
+        functions.transform(values, v => struct(lit(i).as("i"), v.as("v")))
+      }
+      val isMap = specs.indices.filter(specs(_).kind == "map")
+      // explode KEEPS null members: without the filter a null would
+      // become a vocab entry — a permanently-zero slot VocabVector can
+      // never set, and a JString(null) in the persisted model
+      val counts = df.select(explode(flatten(array(tagged: _*))).as("e"))
+        .select(col("e.i").as("i"), col("e.v").as("v"))
+        .filter(col("v").isNotNull)
+        .groupBy("i", "v").agg(count(lit(1)).as("n"))
+      val freq = if (isMap.isEmpty) col("n")
+        else when(col("i").isin(isMap: _*), lit(0L)).otherwise(col("n"))
+      val rank = row_number().over(
+        Window.partitionBy("i").orderBy(freq.desc, col("v").asc))
+      val rows = counts.select(col("i"), col("v"), rank.as("r"))
+        .filter(col("r") <= maxVocab)
+        .collect()
+      val byCol = rows.groupBy(_.getInt(0)).view
+        .mapValues(_.sortBy(_.getInt(2)).map(_.getString(1)).toSeq).toMap
+      specs.zipWithIndex.map { case (s, i) =>
+        s.name -> byCol.getOrElse(i, Seq.empty)
+      }.toMap
     }
-    val row = df.agg(count(lit(1)).as("_n"), aggs: _*).head()
-    val n = row.getAs[Long]("_n")
-    cols.map { c =>
-      val nn = row.getAs[Long](s"_nn_$c")
-      ColumnStats(c, n, nn, row.getAs[Long](s"_nd_$c"),
-        numericCastable = nn > 0 && row.getAs[Long](s"_num_$c") == nn)
-    }
+
+  def stats(df: DataFrame, cols: Seq[String]): Seq[ColumnStats] = {
+    val r = statsQuery(df, cols).head()
+    cols.zipWithIndex.map { case (c, i) => readStats(r, 1 + 3 * i, c, r.getLong(0)) }
   }
 
   def inferSpec(df: DataFrame, s: ColumnStats, catThreshold: Double): ColumnSpec = {
@@ -107,7 +214,7 @@ object Encoderizer {
     def transform(df: DataFrame, outCol: String): DataFrame = {
       // try_cast, matching fit: under ANSI a malformed value imputes the
       // median (as the fit-side stats promised) instead of throwing.
-      val v = coalesce(expr(s"try_cast(`$name` as double)"), lit(median))
+      val v = coalesce(asDouble(name), lit(median))
       val scaled = if (std == 0.0) v - mean else (v - mean) / std
       df.withColumn(outCol, array(scaled))
     }
@@ -155,8 +262,7 @@ object Encoderizer {
     // numeric stage.
     def transform(df: DataFrame, outCol: String): DataFrame =
       df.withColumn(outCol, graft.functions.VocabVector(
-        expr(s"try_cast(`${name.replace("`", "``")}` as map<string,double>)"),
-        keys))
+        qcol(name).try_cast("map<string,double>"), keys))
   }
 
   /** Hashed text n-grams (reference `HashingVectorizerChunked` + size
@@ -173,6 +279,16 @@ object Encoderizer {
     private def charSizes = charNGramRange.map(r => r._2 - r._1 + 1).getOrElse(0)
     val width: Int = numFeatures * (wordSizes + charSizes)
     def transform(df: DataFrame, outCol: String): DataFrame = {
+      val (hashed, blocks, tmpCols) = hashBlocks(df)
+      hashed.withColumn(outCol, AssembleVectors(blocks.map(col), outCol, width))
+        .drop(tmpCols: _*)
+    }
+
+    /** `df` plus one hashed-gram vector column per gram size (word grams,
+      * then char grams), their names in block order, and every temp column
+      * to drop.
+      */
+    private[graft] def hashBlocks(df: DataFrame): (DataFrame, Seq[String], Seq[String]) = {
       // temp-name suffix: bump until no fixed temp name collides with a
       // user column — a frame already holding e.g. "_txt_text" would
       // otherwise have that column silently overwritten and then dropped
@@ -218,10 +334,7 @@ object Encoderizer {
           hcol
         }
       }
-      new org.apache.spark.ml.feature.VectorAssembler()
-        .setInputCols((wordCols ++ charCols).toArray).setOutputCol(outCol)
-        .transform(out)
-        .drop(tmpCols: _*)
+      (out, wordCols ++ charCols, tmpCols)
     }
   }
 
@@ -238,98 +351,41 @@ object Encoderizer {
     case other    => throw new IllegalArgumentException(s"unknown size: $other")
   }
 
-  /** All requested numeric stages from ONE full-scan aggregation — a
-    * frame with 50 numeric columns previously paid 50 separate scans on
-    * top of the stats() pass.
-    *
-    * Backtick-quoted names and try_cast throughout (an overrides-forced
-    * numeric string column must yield null under ANSI, not throw),
-    * matching the stats() probe. NOTE on percentile: EXACT, by choice —
-    * it is the reference's SimpleImputer(median) semantics and what the
-    * q43 oracle pins; its aggregation buffers the column's values, so at
-    * a scale where that matters swap to percentile_approx KNOWINGLY
-    * (imputation tolerates an approximate median — exact is parity, not
-    * necessity).
-    *
-    * The reference pipeline is SimpleImputer(median) THEN
-    * StandardScaler: the scaler fits on the median-IMPUTED column, so
-    * with nulls present the moments include the imputed entries via a
-    * closed-form correction (no second pass); the null-free branch keeps
-    * the aggregate values bit-identical.
-    */
-  private def fitNumericStages(df: DataFrame,
-                               names: Seq[String]): Map[String, NumericStage] =
-    if (names.isEmpty) Map.empty
-    else {
-      val aggs = names.flatMap { c =>
-        val q = c.replace("`", "``")
-        val numC = expr(s"try_cast(`$q` as double)")
-        Seq(
-          expr(s"percentile(try_cast(`$q` as double), 0.5)").as(s"_med_$c"),
-          avg(numC).as(s"_mean_$c"),
-          stddev_pop(numC).as(s"_std_$c"),
-          count(numC).as(s"_nnn_$c"))
-      } :+ count(lit(1)).as("_n")
-      val r = df.agg(aggs.head, aggs.tail: _*).head()
-      val n = r.getAs[Long]("_n")
-      names.map { c =>
-        def d(field: String): Double = {
-          val i = r.fieldIndex(field)
-          if (r.isNullAt(i)) 0.0 else r.getDouble(i)
-        }
-        val med = d(s"_med_$c")
-        val nn = r.getAs[Long](s"_nnn_$c")
-        val meanNN = d(s"_mean_$c")
-        val stdNN = d(s"_std_$c")
-        val (mean, std) =
-          if (n == 0 || nn == n) (meanNN, stdNN)
-          else {
-            val m = (nn * meanNN + (n - nn) * med) / n
-            val ex2 = (nn * (stdNN * stdNN + meanNN * meanNN) +
-              (n - nn) * med * med) / n
-            (m, math.sqrt(math.max(0.0, ex2 - m * m)))
-          }
-        c -> NumericStage(c, med, mean, std)
-      }.toMap
-    }
-
   def fitStage(df: DataFrame, spec: ColumnSpec, size: String,
-               maxVocab: Int = 1 << 16): Option[FittedStage] = spec.kind match {
-    case "drop" => None
-    case "numeric" =>
-      Some(fitNumericStages(df, Seq(spec.name))(spec.name))
-    case "categorical" =>
-      val vocab = df.filter(qcol(spec.name).isNotNull)
-        .groupBy(qcol(spec.name).cast("string").as("v"))
-        .agg(count(lit(1)).as("n"))
-        .orderBy(col("n").desc, col("v").asc)
-        .limit(maxVocab)
-        .collect().map(_.getString(0)).toSeq
-      Some(OneHotStage(spec.name, vocab))
-    case "multihot" =>
-      val vocab = df
-        .select(explode(coalesce(qcol(spec.name).cast("array<string>"),
-          array().cast("array<string>"))).as("v"))
-        // explode KEEPS null array members: without the filter a null
-        // becomes a vocab entry — a permanently-zero slot VocabVector
-        // can never set, and a JString(null) in the persisted model
-        .filter(col("v").isNotNull)
-        .groupBy("v").agg(count(lit(1)).as("n"))
-        .orderBy(col("n").desc, col("v").asc)
-        .limit(maxVocab)
-        .collect().map(_.getString(0)).toSeq
-      Some(MultihotStage(spec.name, vocab))
-    case "map" =>
-      val keys = df
-        .select(explode(map_keys(qcol(spec.name))).as("k"))
-        .distinct().orderBy("k")
-        .limit(maxVocab)
-        .collect().map(_.getString(0)).toSeq
-      Some(MapStage(spec.name, keys))
-    case "text" =>
-      val (range, feats, charRange) = textParams(size)
-      Some(TextHashStage(spec.name, range, feats, charRange))
-    case other => throw new IllegalArgumentException(s"unknown kind: $other")
+               maxVocab: Int = 1 << 16): Option[FittedStage] =
+    fitStages(df, Seq(spec), size, maxVocab, Map.empty).headOption
+
+  /** The stages of `specs` (in order, dropped columns left out). `moments`
+    * holds the numeric stages already read off the stats query; the
+    * remaining numeric specs share one aggregate, and every vocabulary
+    * one grouped query.
+    */
+  private def fitStages(df: DataFrame, specs: Seq[ColumnSpec], size: String,
+                        maxVocab: Int,
+                        moments: Map[String, NumericStage]): Seq[FittedStage] = {
+    specs.find(s => !kinds(s.kind))
+      .foreach(s => throw new IllegalArgumentException(s"unknown kind: ${s.kind}"))
+    val numeric = specs.filter(s => s.kind == "numeric" && !moments.contains(s.name))
+      .map(_.name)
+    val fitted = moments ++ (if (numeric.isEmpty) Map.empty else {
+      val r = momentsQuery(df, numeric).head()
+      numeric.zipWithIndex.map { case (c, i) =>
+        c -> readNumeric(r, 1 + 4 * i, c, r.getLong(0))
+      }.toMap
+    })
+    val vocabs = vocabularies(df, specs.filter(s => vocabKinds(s.kind)), maxVocab)
+    specs.flatMap { s =>
+      s.kind match {
+        case "drop" => None
+        case "numeric" => Some(fitted(s.name))
+        case "categorical" => Some(OneHotStage(s.name, vocabs(s.name)))
+        case "multihot" => Some(MultihotStage(s.name, vocabs(s.name)))
+        case "map" => Some(MapStage(s.name, vocabs(s.name)))
+        case "text" =>
+          val (range, feats, charRange) = textParams(size)
+          Some(TextHashStage(s.name, range, feats, charRange))
+      }
+    }
   }
 
   final case class EncoderizerModel(stages: Seq[FittedStage],
@@ -352,29 +408,26 @@ object Encoderizer {
         weights.view.filterKeys(names.contains).toMap)
 
     def transform(df: DataFrame): DataFrame = {
+      // VectorAssembler's own check on the output column
+      require(!df.columns.contains(featuresCol),
+        s"Output column $featuresCol already exists.")
       var out = df
-      val outCols = stages.zipWithIndex.map { case (s, i) =>
+      val blocks = stages.zipWithIndex.map { case (s, i) =>
         val c = s"_enc_$i"
         out = s.transform(out, c)
         // `transformer_weights` (reference `encoder.py:112`, FeatureUnion
         // semantics): scale the stage's whole output block.
         val w = weights.getOrElse(s.name, 1.0)
         out.schema(c).dataType match {
-          case _: ArrayType if w == 1.0 => array_to_vector(col(c)).as(c)
-          case _: ArrayType =>
-            array_to_vector(functions.transform(col(c), e => e * w)).as(c)
-          case _ if w == 1.0 => col(c).as(c)
+          case _ if w == 1.0 => col(c)
+          case _: ArrayType  => functions.transform(col(c), e => e * w)
           // codegen'd, sparsity-preserving [[graft.functions.ScaleVector]]
           // — never densifies the 2^18-wide hashed-text vectors
-          case _             => graft.functions.ScaleVector(col(c), w).as(c)
+          case _             => graft.functions.ScaleVector(col(c), w)
         }
       }
-      val withVecs = out.select((df.columns.map(qcol).toSeq ++ outCols): _*)
-      new org.apache.spark.ml.feature.VectorAssembler()
-        .setInputCols(stages.indices.map(i => s"_enc_$i").toArray)
-        .setOutputCol(featuresCol)
-        .transform(withVecs)
-        .drop(stages.indices.map(i => s"_enc_$i"): _*)
+      out.select((df.columns.map(qcol).toSeq :+
+        AssembleVectors(blocks, featuresCol, width)): _*)
     }
   }
 
@@ -383,15 +436,26 @@ object Encoderizer {
           overrides: Map[String, String] = Map.empty,
           featuresCol: String = "features",
           transformerWeights: Map[String, Double] = Map.empty): EncoderizerModel = {
-    val specs = inferSpecs(df, cols, catThreshold)
-      .map(s => overrides.get(s.name).map(k => s.copy(kind = k)).getOrElse(s))
-    // all numeric stages ride ONE aggregation pass; the vocab kinds each
-    // need their own groupBy anyway
-    val numeric = fitNumericStages(df,
-      specs.filter(_.kind == "numeric").map(_.name))
-    EncoderizerModel(specs.flatMap(s =>
-      if (s.kind == "numeric") numeric.get(s.name)
-      else fitStage(df, s, size)), featuresCol,
+    // query 1: the inference stats of every column, joined to the
+    // moments of every column that can come out numeric (castable, or
+    // forced) — two single-row aggregates, one query
+    val numeric = cols.filter(c => overrides.get(c) match {
+      case Some(kind) => kind == "numeric"
+      case None => doubleCastable(df, c)
+    })
+    val r = (if (numeric.isEmpty) statsQuery(df, cols)
+      else statsQuery(df, cols).crossJoin(momentsQuery(df, numeric))).head()
+    val n = r.getLong(0)
+    val specs = cols.zipWithIndex.map { case (c, i) =>
+      val inferred = inferSpec(df, readStats(r, 1 + 3 * i, c, n), catThreshold)
+      overrides.get(c).map(k => inferred.copy(kind = k)).getOrElse(inferred)
+    }
+    val at = 2 + 3 * cols.size
+    val moments = numeric.zipWithIndex.map { case (c, i) =>
+      c -> readNumeric(r, at + 4 * i, c, n)
+    }.toMap
+    // query 2: every vocabulary
+    EncoderizerModel(fitStages(df, specs, size, 1 << 16, moments), featuresCol,
       transformerWeights)
   }
 }

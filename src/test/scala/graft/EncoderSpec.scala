@@ -372,4 +372,157 @@ class EncoderSpec extends AnyFunSuite {
       outT.select("_txt_text").head().getString(0) == "keep me",
       "user column colliding with a temp name must survive")
   }
+
+  // ---- the assembly and the fit's query count --------------------------
+
+  private def attrSize(df: org.apache.spark.sql.DataFrame, c: String): Int =
+    org.apache.spark.ml.attribute.AttributeGroup.fromStructField(df.schema(c)).size
+
+  /** `mixed` plus the values VectorAssembler treats specially (`-0.0`,
+    * NaN, ±Inf) as a numeric column and as map values (which reach the
+    * assembly as they are), spread over two partitions so that reading a
+    * row is a job.
+    */
+  private def odd = mixed
+    .withColumn("odd", element_at(typedLit(Seq(-0.0, 0.0, Double.NaN,
+      Double.PositiveInfinity, Double.NegativeInfinity)), col("id").cast("int")))
+    .withColumn("oddm", map(lit("k"), col("odd"), lit("z"), -col("odd")))
+    .repartition(2)
+
+  test("transform equals VectorAssembler: value bits, form and ml_attr size") {
+    val all = Seq("color", "amount", "tags", "props", "text", "odd", "oddm")
+    val encoders = Seq(
+      Encoderizer.fit(odd, all, catThreshold = 0.5),
+      Encoderizer.fit(odd, all, catThreshold = 0.5, transformerWeights =
+        Map("color" -> 2.5, "amount" -> -0.5, "props" -> 0.0, "text" -> 0.3,
+          "oddm" -> -2.0)),
+      Encoderizer.fit(odd, Seq("odd", "amount"), catThreshold = 0.01),
+      Encoderizer.fit(odd, Seq("text"), size = "medium", catThreshold = 0.01))
+    encoders.foreach { enc =>
+      val got = enc.transform(odd)
+      val want = VectorAssemblerOracle.transform(enc, odd)
+      assert(got.columns.toSeq == want.columns.toSeq)
+      assert(attrSize(got, "features") == enc.width &&
+        attrSize(want, "features") == enc.width)
+      assert(VectorAssemblerOracle.collect(got, "id", "features") ==
+        VectorAssemblerOracle.collect(want, "id", "features"), enc.stages.toString)
+    }
+    // the text stage's own assembly, at the medium and large gram shapes
+    // (large at 2^12 buckets: VectorAssembler names one attribute per
+    // output index, which at 7 x 2^20 no longer fits a test heap)
+    Seq(Encoderizer.textParams("medium"), Encoderizer.textParams("large")
+        .copy(_2 = 1 << 12)).foreach { case (words, buckets, chars) =>
+      val stage = Encoderizer.TextHashStage("text", words, buckets, chars)
+      val got = stage.transform(odd, "f")
+      val want = VectorAssemblerOracle.text(stage, odd, "f")
+      assert(attrSize(got, "f") == stage.width && attrSize(want, "f") == stage.width)
+      assert(VectorAssemblerOracle.collect(got, "id", "f") ==
+        VectorAssemblerOracle.collect(want, "id", "f"), stage.toString)
+    }
+  }
+
+  test("a null block fails the row with VectorAssembler's error") {
+    import org.apache.spark.ml.linalg.Vectors
+    val df = spark.createDataFrame(Seq(
+        (1L, Vectors.dense(1.0, 0.0), Vectors.sparse(3, Array(1), Array(2.0))),
+        (2L, Vectors.dense(0.5, 0.5), null)))
+      .toDF("id", "a", "b").repartition(1)
+    def rootMessage(f: => Any): String = {
+      val e = intercept[Exception](f)
+      Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .map(_.getMessage).filter(_ != null)
+        .find(_.startsWith("Encountered null while assembling"))
+        .getOrElse(fail(s"no assembly error in ${e.getMessage}"))
+    }
+    val got = rootMessage(df.select(graft.functions.AssembleVectors(
+      Seq(col("a"), col("b")), "f", 5)).collect())
+    val want = rootMessage(new org.apache.spark.ml.feature.VectorAssembler()
+      .setInputCols(Array("a", "b")).setOutputCol("f").transform(df).collect())
+    assert(got == want)
+  }
+
+  test("transform launches no Spark job") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    val all = Seq("color", "amount", "tags", "props", "text")
+    val enc = Encoderizer.fit(odd, all, catThreshold = 0.5,
+      transformerWeights = Map("text" -> 0.5, "amount" -> 2.0))
+    def jobsOf(f: => org.apache.spark.sql.DataFrame): Int = {
+      org.apache.spark.GraftSparkBridge.drainListenerBus(sc)
+      jobs.set(0)
+      f.queryExecution.executedPlan
+      org.apache.spark.GraftSparkBridge.drainListenerBus(sc)
+      jobs.get
+    }
+    sc.addSparkListener(listener)
+    try {
+      assert(jobsOf(enc.transform(odd)) == 0)
+      assert(jobsOf(Encoderizer.TextHashStage("text", (1, 2), 64).transform(odd, "f")) == 0)
+      // the listener sees the job VectorAssembler runs to size its blocks
+      assert(jobsOf(VectorAssemblerOracle.transform(enc, odd)) > 0)
+    } finally sc.removeSparkListener(listener)
+    // with no first row to read, VectorAssembler could not size the
+    // blocks of an empty frame; the stage widths can
+    intercept[NoSuchElementException](VectorAssemblerOracle.transform(enc, odd.limit(0)))
+    assert(enc.transform(odd.limit(0)).count() == 0)
+  }
+
+  test("fit runs at most two queries") {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val sc = spark.sparkContext
+    val queries = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = queries.incrementAndGet()
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = queries.incrementAndGet()
+    }
+    def queriesOf(f: => Any): Int = {
+      org.apache.spark.GraftSparkBridge.drainListenerBus(sc)
+      queries.set(0)
+      f
+      org.apache.spark.GraftSparkBridge.drainListenerBus(sc)
+      queries.get
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val wide = odd.withColumn("amount2", col("amount") * 2)
+        .withColumn("tags2", col("tags")).withColumn("color2", col("color"))
+      val all = Seq("color", "amount", "tags", "props", "text", "oddm",
+        "amount2", "tags2", "color2")
+      val overrides = Map("amount2" -> "categorical", "color2" -> "text")
+      var enc: Encoderizer.EncoderizerModel = null
+      assert(queriesOf { enc = Encoderizer.fit(wide, all, catThreshold = 0.5,
+        overrides = overrides) } <= 2)
+      assert(enc.stages.map(_.getClass.getSimpleName).toSet == Set("OneHotStage",
+        "NumericStage", "MultihotStage", "MapStage", "TextHashStage"))
+      // the per-column public surfaces give the same stages, one query each
+      val specs = Encoderizer.inferSpecs(wide, all, 0.5)
+        .map(s => overrides.get(s.name).map(k => s.copy(kind = k)).getOrElse(s))
+      var each = Seq.empty[Encoderizer.FittedStage]
+      assert(queriesOf { each = specs.flatMap(Encoderizer.fitStage(wide, _, "small")) } ==
+        specs.count(s => s.kind != "text" && s.kind != "drop"))
+      assert(each == enc.stages)
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  test("backticks in column names fit and transform") {
+    val df = Seq((1L, 10.0, "x", Map("k" -> 1.0)), (2L, 20.0, "y", Map("k" -> 2.0)),
+        (3L, 30.0, "x", Map("j" -> 3.0)), (4L, 40.0, "x", Map("k" -> 4.0)))
+      .toDF("id", "a`b", "c`d", "m`k")
+    val cols = Seq("a`b", "c`d", "m`k")
+    assert(Encoderizer.stats(df, cols).map(_.numericCastable) == Seq(true, false, false))
+    val enc = Encoderizer.fit(df, cols, catThreshold = 0.6)
+    assert(enc.stages.map(_.getClass.getSimpleName) ==
+      Seq("NumericStage", "OneHotStage", "MapStage"))
+    assert(enc.stages.head.asInstanceOf[Encoderizer.NumericStage].median == 25.0)
+    val rows = enc.transform(df).orderBy("id").select("features").collect()
+      .map(_.getAs[Vector](0).toArray.toSeq)
+    // a`b standardized, c`d one-hot (x first), m`k keys j,k
+    assert(rows.map(_.drop(1)).toSeq == Seq(Seq(1.0, 0.0, 0.0, 1.0),
+      Seq(0.0, 1.0, 0.0, 2.0), Seq(1.0, 0.0, 3.0, 0.0), Seq(1.0, 0.0, 0.0, 4.0)))
+  }
 }

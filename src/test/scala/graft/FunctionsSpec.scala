@@ -300,7 +300,10 @@ class FunctionsSpec extends AnyFunSuite {
       "nearest_cells(4096 cells, 256 probes)" -> graft.functions.NearestCells(
         col("v"), Seq.tabulate(4096)(c => (c, Seq.fill(dim)(rng.nextGaussian()))),
         256),
-      "scale_vector" -> graft.functions.ScaleVector(col("sv"), 0.25))
+      "scale_vector" -> graft.functions.ScaleVector(col("sv"), 0.25),
+      "assemble_vectors(64 blocks)" -> graft.functions.AssembleVectors(
+        Seq.tabulate(64)(i => if (i % 2 == 0) col("sv") else col("v")), "f",
+        32 * (sparseDim + dim)))
     wide.foreach { case (name, expr) =>
       val proj = df.select(col("id"), expr.as("out"))
       proj.collect() // must actually run under CODEGEN_ONLY

@@ -215,4 +215,22 @@ class ToolsSpec extends AnyFunSuite {
     }
     assert(offenders.isEmpty, offenders.mkString("\n"))
   }
+
+  test("no VectorAssembler under src/main: graft.functions.AssembleVectors assembles") {
+    // VectorAssembler runs a job per transform to read block sizes off the
+    // first row and assembles through a boxed UDF; the codegen'd
+    // expression takes the widths the caller knows
+    import scala.jdk.CollectionConverters._
+    val offenders = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
+      .iterator().asScala.filter(_.toString.endsWith(".scala"))
+      .flatMap { p =>
+        // code only: comments may name what the expression reproduces
+        val lines = java.nio.file.Files.readAllLines(p).asScala.toSeq
+        lines.zipWithIndex.collect {
+          case (l, i) if !Seq("//", "*", "/*").exists(l.trim.startsWith) &&
+              l.split("//").head.contains("VectorAssembler") => s"$p:${i + 1}: ${l.trim}"
+        }
+      }.toSeq
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
 }
