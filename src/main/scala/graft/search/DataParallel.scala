@@ -23,6 +23,13 @@ private[search] final case class DpCvFrame(prepared: DataFrame, cv: Int,
   def nTest(fold: Int): Long = foldSizes.getOrElse(fold, 0L)
   def nTrain(fold: Int): Long = nTotal - nTest(fold)
   def unpersist(): Unit = { prepared.unpersist(); () }
+
+  /** The `_y` class count (`using` frames) for the classifiers, scanned
+    * once per frame: a fold missing the top class still fits its width.
+    */
+  private lazy val nClasses = DataParallelCART.scanClasses(prepared, "_y")
+  def classesFor(learner: Learner): Option[Int] =
+    if (DataParallelFit.isClassifier(learner)) Some(nClasses) else None
 }
 
 private[search] object DpCvFrame {
@@ -189,8 +196,8 @@ object DistributedScore {
 
 /** ONE data-parallel fit of a routable engine learner over a DataFrame —
   * the only learner dispatch of the broadcast-overflow regime, behind
-  * every over-budget route: the grid search and multi-model race
-  * (`SearchLoop`), OvR, OvO and multilabel OvR, the eliminator and the
+  * every over-budget route: the grid search, multi-model race and
+  * eliminator (`SearchLoop`), OvR, OvO and multilabel OvR, and the
   * DataFrame OOF. Logistic via Spark ML (losslessly bridged), CART via
   * DataParallelCART, GBT via DataParallelGBT. Returns the same engine
   * `Model` types the broadcast regime produces; unsupported learners
@@ -204,6 +211,7 @@ object DataParallelFit {
   private[search] def requireSupported(learner: Learner,
                                        entrant: String = ""): Unit =
     learner match {
+      case MaskedLearner(inner, _) => requireSupported(inner, entrant)
       case graft.exec.LogisticRegressionGD | graft.exec.LogisticRegressionLBFGS |
            _: CART.Classifier | CART.Regressor | GBT.Classifier | GBT.Regressor => ()
       case other => throw new IllegalArgumentException(
@@ -219,6 +227,7 @@ object DataParallelFit {
     */
   private[search] def isClassifier(learner: Learner): Boolean =
     learner match {
+      case MaskedLearner(inner, _)             => isClassifier(inner)
       case _: CART.Classifier | GBT.Classifier => true
       case _                                   => false
     }
@@ -241,6 +250,11 @@ object DataParallelFit {
     import org.apache.spark.ml.functions.array_to_vector
     requireSupported(learner)
     learner match {
+      case MaskedLearner(inner, keep) => // side data not forwarded, as broadcast
+        val x = col(featuresCol).cast("array<double>")
+        val kept = data.withColumn(featuresCol, array(keep.map(x.getItem(_)): _*))
+        MaskedModel(fit(inner, kept, featuresCol, labelCol, params, seed, nRows,
+          nClasses), keep)
       case graft.exec.LogisticRegressionGD | graft.exec.LogisticRegressionLBFGS =>
         val p = data.select(
           array_to_vector(col(featuresCol).cast("array<double>")).as("_features"),

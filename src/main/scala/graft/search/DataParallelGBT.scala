@@ -71,15 +71,19 @@ object DataParallelGBT {
     require(n > 0, "empty training set")
     val nScores = if (k <= 2) 1 else k
 
-    // prior: same formulas as GBT.boost, from aggregates
+    // prior: same formulas as GBT.boost, from aggregates; the label sum
+    // merges in partition order like every other statistic of the fit
+    def sumY: Double = DataParallelCART.orderedAggregate(
+      base.select("_y").rdd.map(_.getDouble(0)), () => new Array[Double](1))(
+      (a, y) => { a(0) += y; a }, (a, b) => { a(0) += b(0); a })(0)
     val prior = new Array[Double](nScores)
     if (k == 0) {
-      prior(0) = base.agg(sum("_y")).head().getDouble(0) / n
+      prior(0) = sumY / n
     } else if (k == 2) {
-      val p = math.min(1 - 1e-12, math.max(1e-12,
-        base.agg(sum("_y")).head().getDouble(0) / n))
+      val p = math.min(1 - 1e-12, math.max(1e-12, sumY / n))
       prior(0) = math.log(p / (1 - p))
     } else {
+      // integer counts: no merge order can change them
       val counts = base.groupBy("_y").count().collect()
         .map(r => r.getDouble(0).toInt -> r.getLong(1)).toMap
       var c = 0
@@ -147,7 +151,7 @@ object DataParallelGBT {
           graft.functions.Softmax(soFarRaw))
         // the K class trees of one stage are independent given the
         // stage-start scores — concurrent job submission (JobParallel)
-        val fitted = graft.ops.Par.concurrently(0 until k, math.min(k, 8)) { c =>
+        val fitted = graft.ops.Par.concurrently(0 until k, JobParallel.DefaultWidth) { c =>
           val pc = element_at(col("_ps"), c + 1)
           val fr = withW(withP
             .withColumn("_r",
@@ -196,8 +200,9 @@ object DataParallelGBT {
     }
 
   /** Per-leaf Newton step via aggregation: leaf routing happens
-    * executor-side against the broadcast tree; only <= nLeaves
-    * (num, den) sums reach the driver. Mutates leaf values in place —
+    * executor-side against the broadcast tree; only the nLeaves
+    * (num, den) sums reach the driver, merged in partition order
+    * (`DataParallelCART.orderedAggregate`). Mutates leaf values in place —
     * the data-parallel twin of `GBT.newtonRefit` (same `num/den` step,
     * same 1e-150 guard, leaves no sampled row reached keep 0).
     */
@@ -214,22 +219,20 @@ object DataParallelGBT {
       case Some(w) => frame.filter(col(w) > 0)
       case None => frame
     }
-    val rows = contributing
-      .groupBy(leafCol.as("_leaf"))
-      .agg(sum(col("_r")).as("_num"), sum(col("_den")).as("_den"))
-      .collect()
-    val ns = new Array[Double](tree.nLeaves)
-    val ds = new Array[Double](tree.nLeaves)
-    rows.foreach { r =>
-      val l = r.getInt(0)
-      ns(l) = r.getDouble(1); ds(l) = r.getDouble(2)
-    }
+    // (num, den) of leaf l at slots 2l, 2l + 1
+    val sums = DataParallelCART.orderedAggregate(
+      contributing.select(leafCol, col("_r"), col("_den")).rdd,
+      () => new Array[Double](2 * tree.nLeaves))(
+      (a, r) => {
+        val l = 2 * r.getInt(0)
+        a(l) += r.getDouble(1); a(l + 1) += r.getDouble(2); a
+      },
+      (a, b) => { var i = 0; while (i < a.length) { a(i) += b(i); i += 1 }; a })
     def walk(nd: CART.Node): Unit =
-      if (nd.isLeaf)
-        nd.value(0) =
-          if (ds(nd.leafId) > 1e-150) scale * ns(nd.leafId) / ds(nd.leafId)
-          else 0.0
-      else { walk(nd.left); walk(nd.right) }
+      if (nd.isLeaf) {
+        val (num, den) = (sums(2 * nd.leafId), sums(2 * nd.leafId + 1))
+        nd.value(0) = if (den > 1e-150) scale * num / den else 0.0
+      } else { walk(nd.left); walk(nd.right) }
     walk(tree.root)
   }
 }

@@ -3,8 +3,7 @@ package graft.search
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.agg.CvResults
-import graft.exec.{CART, Learner, LogRegModel, Metrics, Model, ModelParallel}
+import graft.exec.{CART, FitSideData, Learner, LogRegModel, Model, ModelParallel}
 import graft.exec.ModelParallel.TrainMatrix
 import graft.plan.RemovalLadder
 
@@ -13,8 +12,9 @@ import graft.plan.RemovalLadder
   *    pre-pass, `eliminate.py:141-157`);
   * 2. nested removal ladder drops 0, step, 2*step, ... worst features
   *    keeping >= minFeaturesToSelect (`eliminate.py:159-163`);
-  * 3. rungs × folds fan out as tasks; per-task column mask projection;
-  * 4. mean score per rung → argmax → refit on the best columns.
+  * 3. each rung is a `SearchLoop` candidate — a [[MaskedLearner]] over
+  *    the rung's kept columns — so rungs × folds, the mean score per
+  *    rung, the argmax and the refit are the grid search's own CV loop.
   *
   * The fitted result delegates prediction through the column mask
   * (`eliminate.py:241-284` = VectorSlicer-then-model).
@@ -23,6 +23,17 @@ final case class MaskedModel(model: Model, keep: Array[Int]) extends Model {
   private def slice(x: Array[Double]): Array[Double] = keep.map(x)
   def predict(x: Array[Double]): Double = model.predict(slice(x))
   def predictProba(x: Array[Double]): Array[Double] = model.predictProba(slice(x))
+}
+
+/** `inner` fitted on the `keep` columns, as a [[MaskedModel]] over
+  * full-width rows; over budget, `DataParallelFit` projects the feature
+  * array column the same way. Side data is not forwarded: its eval rows
+  * are full-width, and the eliminator fits with none.
+  */
+final case class MaskedLearner(inner: Learner, keep: Array[Int]) extends Learner {
+  def fit(X: Array[Array[Double]], y: Array[Double],
+          params: Map[String, Double], seed: Long): Model =
+    MaskedModel(inner.fit(X.map(r => keep.map(r)), y, params, seed), keep)
 }
 
 final case class EliminatorResult(scores: DataFrame,
@@ -63,8 +74,8 @@ class DistFeatureEliminator(learner: Learner,
 
   /** Auto-routed fit (the same regime switch as DistGridSearchCV /
     * DistForest): rungs x folds against the broadcast matrix while it
-    * fits the budget; a distributed per-rung fit + DistributedScore loop
-    * when it doesn't — subsets are masked IN the DataFrame (column
+    * fits the budget; data-parallel fits scored by DistributedScore when
+    * it doesn't — subsets are masked IN the DataFrame (column
     * projection, never a collect), so elimination works over
     * broadcast-overflow data too.
     */
@@ -73,110 +84,55 @@ class DistFeatureEliminator(learner: Learner,
     if (ModelParallel.estimateMatrixBytes(df, featuresCol) <= broadcastBudgetBytes) {
       val matrix = ModelParallel.collectMatrix(df, featuresCol, labelCol, cv, seed)
       fitMatrix(spark, matrix)
-    } else fitDataParallel(spark, df, featuresCol, labelCol)
+    } else fitDataParallel(df, featuresCol, labelCol)
   }
 
-  /** Broadcast-overflow route. Same skeleton as `fitMatrix` — pre-pass
-    * importance ranking, removal ladder, rungs x folds, CvResults — but
-    * every fit is a `DataParallelFit` over the `DpCvFrame` folds and every
-    * score flows through DistributedScore's sufficient-statistics path.
-    * The feature mask is a column projection on the array column; rows
-    * never reach the driver.
+  /** Broadcast-overflow route: a `DataParallelFit` pre-pass over the
+    * whole `DpCvFrame`, then `SearchLoop.dataParallel`.
     */
-  private def fitDataParallel(spark: SparkSession, df: DataFrame,
-                              featuresCol: String,
+  private def fitDataParallel(df: DataFrame, featuresCol: String,
                               labelCol: String): EliminatorResult = {
     DataParallelFit.requireSupported(learner)
     DpCvFrame.using(df, featuresCol, labelCol, cv, seed) { cvf =>
       require(cvf.nTotal > 0, "empty training set")
       val d = cvf.prepared.select(size(col("_x"))).head().getInt(0)
-      def masked(data: DataFrame, keep: Array[Int]): DataFrame =
-        data.select(array(keep.map(j => col("_x").getItem(j)): _*).as("_xm"),
-          col("_y"))
-      // every classifier fit shares the frame's class count, scanned once
-      // (SearchLoop.dataParallel's discipline)
-      lazy val k = DataParallelCART.scanClasses(cvf.prepared, "_y")
-      // one data-parallel fit of `learner` on a masked projection (default
-      // params throughout, matching the broadcast route's Map.empty fits);
-      // `nRows` from the fold bookkeeping spares the logistic count job
-      def fitOne(data: DataFrame, keep: Array[Int], fitSeed: Long,
-                 nRows: Long): Model =
-        DataParallelFit.fit(learner, masked(data, keep), "_xm", "_y",
-          Map.empty, fitSeed, nRows,
-          if (DataParallelFit.isClassifier(learner)) Some(k) else None)
-
-      // 1. pre-pass on ALL rows ranks features worst-first
-      val full = fitOne(cvf.prepared, (0 until d).toArray, seed, cvf.nTotal)
-      val worstFirst = {
-        val imp = importances(full, d)
-        (0 until d).sortBy(j => (imp(j), j)).toArray
-      }
-      // 2. ladder, 3. rungs x folds — sequential loop of distributed fits
-      val rungKeeps: Seq[Array[Int]] = RemovalLadder
-        .rungs(worstFirst.toSeq, step, minFeaturesToSelect)
-        .map(drop => (0 until d).filterNot(drop.toSet).toArray)
-      val scoreRows = for {
-        (keep, ri) <- rungKeeps.zipWithIndex
-        fold <- 0 until cv
-      } yield {
-        val model = fitOne(cvf.train(fold), keep, seed + ri * 100 + fold,
-          cvf.nTrain(fold))
-        val s = DistributedScore(scoring, model, masked(cvf.test(fold), keep),
-          "_xm", "_y")
-        (ri, fold, s, cvf.nTest(fold))
-      }
-      import spark.implicits._
-      val scores = scoreRows.toDF("candidate_id", "fold_id", "score", "n_test")
-      // 4. aggregate, best rung, refit on all rows with the winning mask
-      val agg = CvResults.aggregate(scores, Seq("candidate_id"))
-      val bestRow = CvResults.best(agg, Seq("candidate_id")).head()
-      val keep = rungKeeps(bestRow.getAs[Int]("candidate_id"))
-      val refit = fitOne(cvf.prepared, keep, seed, cvf.nTotal)
-      EliminatorResult(agg.orderBy("candidate_id"), keep,
-        bestRow.getAs[Double]("mean_test_score"), MaskedModel(refit, keep))
+      val keeps = rungKeeps(DataParallelFit.fit(learner, cvf.prepared, "_x", "_y",
+        Map.empty, seed, cvf.nTotal, cvf.classesFor(learner)), d)
+      result(keeps, SearchLoop.dataParallel(cvf, SearchLoop.candidateKey,
+        candidates(keeps), scoring, Nil, iid = false, JobParallel.DefaultWidth,
+        FitSideData.empty, fitSeed, refitSeed = seed))
     }
   }
 
   def fitMatrix(spark: SparkSession, matrix: TrainMatrix): EliminatorResult = {
-    val d = matrix.x(0).length
-    // 1. pre-pass: rank features worst-first.
-    val full = learner.fit(matrix.x, matrix.y, Map.empty, seed)
-    val imp = importances(full, d)
-    val worstFirst = (0 until d).sortBy(j => (imp(j), j)).toArray
-
-    // 2. ladder of drop-lists.
-    val rungs = RemovalLadder.rungs(worstFirst.toSeq, step, minFeaturesToSelect)
-
-    // 3. rungs × folds fan-out; per-task column mask.
-    val lrn = learner
-    val scorerName = scoring
-    val baseSeed = seed
-    val rungKeeps: Seq[Array[Int]] =
-      rungs.map(drop => (0 until d).filterNot(drop.toSet).toArray)
-    val tasks = for {
-      (keep, ri) <- rungKeeps.zipWithIndex
-      fold <- 0 until cv
-    } yield (ri, fold, keep)
-    val scoreRows = ModelParallel.fanOut(spark, matrix, tasks) {
-      case (m, (ri, fold, keep)) =>
-        val (trainX, trainY) = m.trainOf(fold)
-        val (testX, testY) = m.testOf(fold)
-        val model = lrn.fit(trainX.map(r => keep.map(r)), trainY, Map.empty,
-          baseSeed + ri * 100 + fold)
-        val s = Metrics.scorer(scorerName)(MaskedModel(model, keep), testX, testY)
-        (ri, fold, s, testX.length.toLong)
-    }
-    import spark.implicits._
-    val scores = scoreRows.toSeq.toDF("candidate_id", "fold_id", "score", "n_test")
-
-    // 4. aggregate, pick best rung (ties -> fewest dropped = lowest id,
-    //    matching the reference's argmax-first semantics).
-    val agg = CvResults.aggregate(scores, Seq("candidate_id"))
-    val bestRow = CvResults.best(agg, Seq("candidate_id")).head()
-    val bestRung = bestRow.getAs[Int]("candidate_id")
-    val keep = rungKeeps(bestRung)
-    val refit = learner.fit(matrix.x.map(r => keep.map(r)), matrix.y, Map.empty, seed)
-    EliminatorResult(agg.orderBy("candidate_id"), keep,
-      bestRow.getAs[Double]("mean_test_score"), MaskedModel(refit, keep))
+    val keeps = rungKeeps(learner.fit(matrix.x, matrix.y, Map.empty, seed),
+      matrix.x(0).length)
+    result(keeps, SearchLoop.broadcast(spark, matrix, SearchLoop.candidateKey,
+      candidates(keeps), cv, scoring, Nil, iid = false, errorScore = None,
+      FitSideData.empty, fitSeed, refitSeed = seed))
   }
+
+  /** The kept columns of every rung: the pre-pass importances rank the
+    * features worst-first (ties by index) and the ladder drops prefixes.
+    */
+  private def rungKeeps(full: Model, d: Int): Seq[Array[Int]] = {
+    val imp = importances(full, d)
+    val worstFirst = (0 until d).sortBy(j => (imp(j), j))
+    RemovalLadder.rungs(worstFirst, step, minFeaturesToSelect)
+      .map(drop => (0 until d).filterNot(drop.toSet).toArray)
+  }
+
+  private def candidates(keeps: Seq[Array[Int]]): Seq[SearchLoop.Candidate] =
+    keeps.zipWithIndex.map { case (keep, ri) =>
+      SearchLoop.Candidate(Seq(ri), MaskedLearner(learner, keep), Map.empty)
+    }
+
+  private def fitSeed(ri: Int, fold: Int): Long = seed + ri * 100 + fold
+
+  /** Ties go to the fewest dropped features (lowest rung id), the
+    * reference's argmax-first semantics.
+    */
+  private def result(keeps: Seq[Array[Int]], r: SearchLoop.Outcome): EliminatorResult =
+    EliminatorResult(r.agg.orderBy("candidate_id"), keeps(r.best), r.bestScore,
+      r.bestModel.asInstanceOf[MaskedModel])
 }

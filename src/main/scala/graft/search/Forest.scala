@@ -287,19 +287,22 @@ object OutOfFold {
     * complement (`DataParallelFit`), and its fold's rows get
     * probabilities via the broadcast-model UDF. The union covers every
     * input row exactly once, so the result stacks directly as a
-    * meta-learner feature.
+    * meta-learner feature. It comes back cached and materialized, and
+    * the fold frame is released: `result.unpersist()` frees everything
+    * the call cached.
     */
   def oofProbaDF(df: org.apache.spark.sql.DataFrame,
                  featuresCol: String, labelCol: String,
                  learner: graft.exec.Learner, cv: Int, seed: Long,
                  params: Map[String, Double] = Map.empty,
                  outCol: String = "oof_proba",
-                 jobParallelism: Int = 8): org.apache.spark.sql.DataFrame = {
+                 jobParallelism: Int = JobParallel.DefaultWidth)
+      : org.apache.spark.sql.DataFrame = {
     require(cv >= 2, s"cv must be >= 2, got $cv")
     DataParallelFit.requireSupported(learner)
     val spark = df.sparkSession
-    // the fold frame's cache stays alive behind the returned lazy frame:
-    // it freezes the fold ids across the per-fold fit and predict scans
+    // the fold frame's cache freezes the fold ids across the per-fold
+    // fit and predict scans, until the union is materialized
     val cvf = DpCvFrame(df, cv, seed)
     try {
       // the per-fold fits are independent distributed jobs — submit them
@@ -311,7 +314,9 @@ object OutOfFold {
         graft.predict.Predict.withProbabilities(spark, cvf.test(fold), model,
           featuresCol, outCol)
       }
-      parts.reduce(_ unionByName _).drop("_fold")
-    } catch { case e: Throwable => cvf.unpersist(); throw e }
+      val out = parts.reduce(_ unionByName _).drop("_fold").cache()
+      try { out.count(); out }
+      catch { case e: Throwable => out.unpersist(); throw e }
+    } finally cvf.unpersist()
   }
 }

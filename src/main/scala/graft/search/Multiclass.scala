@@ -119,8 +119,10 @@ class DistOneVsRest(learner: Learner,
     val labeled = df.select(col(featuresCol), col(labelCol).cast("double").as("_y"))
       .cache()
     try {
-      val classes = labeled.select("_y").distinct()
-        .collect().map(_.getDouble(0)).sorted
+      // class inventory and row count in one pass
+      val counts = labeled.groupBy("_y").count().collect()
+        .map(r => r.getDouble(0) -> r.getLong(1)).toMap
+      val classes = counts.keys.toArray.sorted
       // per-class fits are independent distributed jobs — submit them
       // concurrently (see `JobParallel`); order-preserving, so the
       // class->model alignment is identical to the sequential loop
@@ -144,8 +146,11 @@ class DistOneVsRest(learner: Learner,
         if (degenerate) ConstantModel(1.0, 2) // single-class: constant positive
         // Map.empty: DataParallelFit supplies the engine default c=1
         // (regParam = 1/n), matching the broadcast route's lrn.fit defaults.
+        // Labels {0, 1}: two classes, no label scan; uncapped, every row.
         else DataParallelFit.fit(learner, bin, featuresCol, "_y",
-          Map.empty, seed + c.toLong)
+          Map.empty, seed + c.toLong,
+          nRows = if (maxNegatives.isEmpty) counts.values.sum else -1L,
+          nClasses = Some(2))
       }.toArray
       OvRModel(classes, models, norm)
     } finally labeled.unpersist(blocking = false)
@@ -291,7 +296,8 @@ class DistMultilabelOvR(learner: Learner,
         // (regParam = 1/n), matching the broadcast route's lrn.fit
         // defaults — same convention as the OvR/OvO routes.
         else DataParallelFit.fit(learner, capped, "_x", "_y",
-          Map.empty, seed + c.hashCode)
+          Map.empty, seed + c.hashCode,
+          nRows = if (maxNegatives.isEmpty) n else -1L, nClasses = Some(2))
       }.toArray
       MultilabelOvRModel(classes, models, norm)
     } finally labeled.unpersist(blocking = false)
@@ -426,8 +432,9 @@ class DistOneVsOne(learner: Learner, seed: Long = 42)
     val labeled = df.select(col(featuresCol).as("_x"),
       col(labelCol).cast("double").as("_y")).cache()
     try {
-      val classes = labeled.select("_y").distinct()
-        .collect().map(_.getDouble(0)).sorted
+      val counts = labeled.groupBy("_y").count().collect()
+        .map(r => r.getDouble(0) -> r.getLong(1)).toMap
+      val classes = counts.keys.toArray.sorted
       val pairs = for {
         i <- classes.indices
         j <- (i + 1) until classes.length
@@ -439,7 +446,8 @@ class DistOneVsOne(learner: Learner, seed: Long = 42)
             .withColumn("_y", when(col("_y") === lit(a), 0.0).otherwise(1.0))
           // Map.empty: DataParallelFit supplies the engine default c=1
           // (regParam = 1/n), matching the broadcast route's lrn.fit defaults.
-          DataParallelFit.fit(learner, bin, "_x", "_y", Map.empty, seed)
+          DataParallelFit.fit(learner, bin, "_x", "_y", Map.empty, seed,
+            nRows = counts(a) + counts(b), nClasses = Some(2))
         }
       OvOModel(classes, pairs.toArray, models.toArray)
     } finally labeled.unpersist(blocking = false)

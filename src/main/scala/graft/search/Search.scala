@@ -36,12 +36,15 @@ trait BroadcastBudgeted {
   * search, multiclass, and forest surfaces.
   */
 trait JobParallel {
-  protected var jobParallelism: Int = 8
+  protected var jobParallelism: Int = JobParallel.DefaultWidth
   def withJobParallelism(n: Int): this.type = {
     require(n >= 1, s"job parallelism must be >= 1, got $n")
     jobParallelism = n; this
   }
 }
+
+/** `DefaultWidth`: the width of every data-parallel axis, setter or not. */
+object JobParallel { val DefaultWidth: Int = 8 }
 
 /** fit_params side-data configuration shared by the broadcast-regime fit
   * surfaces (search, OvR, OvO): the eval slice + patience flow into
@@ -149,8 +152,8 @@ class DistGridSearchCV(learner: Learner,
     val cands = candidates()
     require(cands.nonEmpty, "empty parameter grid")
     val r = DpCvFrame.using(df, featuresCol, labelCol, cv, seed) { cvf =>
-      SearchLoop.dataParallel(cvf, keyFields, keyed(cands), scoring,
-        extraScorings, iid, jobParallelism, fitSide,
+      SearchLoop.dataParallel(cvf, SearchLoop.candidateKey, keyed(cands),
+        scoring, extraScorings, iid, jobParallelism, fitSide,
         fitSeed = (_, _) => seed, refitSeed = seed)
     }
     result(spark, cands, r, oof = None)
@@ -177,8 +180,8 @@ class DistGridSearchCV(learner: Learner,
   def fitMatrix(spark: SparkSession, matrix: TrainMatrix): SearchResult = {
     val cands = candidates()
     require(cands.nonEmpty, "empty parameter grid")
-    val r = SearchLoop.broadcast(spark, matrix, keyFields, keyed(cands), cv,
-      scoring, extraScorings, iid, errorScore, fitSide,
+    val r = SearchLoop.broadcast(spark, matrix, SearchLoop.candidateKey,
+      keyed(cands), cv, scoring, extraScorings, iid, errorScore, fitSide,
       fitSeed = (ci, fold) => seed + ci * cv + fold, refitSeed = seed)
     // preds_: out-of-fold proba of the best candidate — row i predicted by
     // the fold model that never saw row i (`search.py:551-560`).
@@ -188,8 +191,6 @@ class DistGridSearchCV(learner: Learner,
       else None
     result(spark, cands, r, oof)
   }
-
-  private val keyFields = Seq(StructField("candidate_id", IntegerType, nullable = false))
 
   private def keyed(cands: Seq[Map[String, Double]]): Seq[SearchLoop.Candidate] =
     cands.zipWithIndex.map { case (p, ci) => SearchLoop.Candidate(Seq(ci), learner, p) }
@@ -204,7 +205,7 @@ class DistGridSearchCV(learner: Learner,
     val paramRows = cands.zipWithIndex.map { case (m, i) =>
       Row.fromSeq(i +: paramNames.map(m))
     }
-    val schema = StructType(keyFields ++ paramNames.map(n =>
+    val schema = StructType(SearchLoop.candidateKey ++ paramNames.map(n =>
       StructField(s"param_$n", DoubleType, nullable = false)))
     import scala.jdk.CollectionConverters._
     val params = spark.createDataFrame(paramRows.asJava, schema)
@@ -306,15 +307,18 @@ class DistMultiModelSearch(models: Seq[(String, Learner, Map[String, Seq[Double]
   }
 }
 
-/** The one CV loop of the grid search and the multi-model race, in both
-  * regimes: every (candidate, fold) is fitted once and scored under every
-  * metric, the fold scores become a driver-local frame, and
-  * `CvResults.aggregate`/`aggregateMulti` ranks the candidates; the best
-  * one is refitted on all rows. A regime supplies only its fold scorer
-  * and its refit. Callers keep their cv_results key columns, their
-  * per-fit seeds and their param-column join.
+/** The one CV loop of the grid search, the multi-model race and the
+  * feature eliminator, in both regimes: every (candidate, fold) is
+  * fitted once and scored under every metric, the fold scores become a
+  * driver-local frame, and `CvResults.aggregate`/`aggregateMulti` ranks
+  * the candidates; the best one is refitted on all rows. A regime
+  * supplies only its fold scorer and its refit. Callers keep their
+  * cv_results key columns, their per-fit seeds and their param columns.
   */
 private[search] object SearchLoop {
+  /** The cv_results key of the grid search and the eliminator. */
+  val candidateKey = Seq(StructField("candidate_id", IntegerType, nullable = false))
+
   /** `key`: the candidate's cv_results key values, in `keyFields` order. */
   final case class Candidate(key: Seq[Any], learner: Learner,
                              params: Map[String, Double])
@@ -370,13 +374,9 @@ private[search] object SearchLoop {
                    extraScorings: Seq[String], iid: Boolean,
                    jobParallelism: Int, side: FitSideData,
                    fitSeed: (Int, Int) => Long, refitSeed: Long): Outcome = {
-    // every classifier fit over the frame shares ONE class count (a train
-    // fold that misses the top class still fits the frame's width),
-    // scanned once and only if some candidate needs it
-    lazy val k = DataParallelCART.scanClasses(cvf.prepared, "_y")
     def fit(c: Candidate, data: DataFrame, seed: Long, nRows: Long): Model =
       DataParallelFit.fit(c.learner, data, "_x", "_y", c.params, seed, nRows,
-        if (DataParallelFit.isClassifier(c.learner)) Some(k) else None,
+        cvf.classesFor(c.learner),
         // no eval history: concurrent fits appending to ONE driver buffer
         // would interleave (and race) — the visibility the broadcast
         // regime's executor-side fits give it

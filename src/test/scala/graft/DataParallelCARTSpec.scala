@@ -439,4 +439,21 @@ class DataParallelCARTSpec extends AnyFunSuite {
     assert(scans == 1, s"$scans label scans")
     assert(r.model.predictProba(x.head).length == 3)
   }
+
+  test("over-budget CART OvR and OvO fit their binary problems without a label scan") {
+    // every non-degenerate binary problem has labels {0, 1}: no max(label)
+    // job per class or per pair
+    val (x, y) = planted()
+    val df = toDF(x, y)
+    val fits: Seq[(String, () => graft.exec.Model)] = Seq(
+      "ovr" -> (() => new graft.search.DistOneVsRest(CART.Classifier)
+        .withBroadcastBudget(1L).fit(spark, df, "x", "y")),
+      "ovo" -> (() => new graft.search.DistOneVsOne(CART.Classifier)
+        .withBroadcastBudget(1L).fit(spark, df, "x", "y")))
+    for ((name, fit) <- fits) {
+      val (scans, m) = labelScans(fit())
+      assert(scans == 0, s"$name: $scans label scans")
+      assert(m.predictProba(x.head).length == 3, name)
+    }
+  }
 }

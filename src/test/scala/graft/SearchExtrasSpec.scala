@@ -429,6 +429,21 @@ class SearchExtrasSpec extends AnyFunSuite {
     assert(oofTree.count() == 120)
   }
 
+  test("DataFrame OOF leaves nothing cached once the result is released") {
+    import spark.implicits._
+    val m = blobs(n = 60)
+    val df = m.x.zip(m.y).toSeq.map { case (x, y) => (x.toSeq, y) }
+      .toDF("features", "label")
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.size
+    val oof = graft.search.OutOfFold.oofProbaDF(df, "features", "label",
+      graft.exec.LogisticRegressionLBFGS, cv = 3, seed = 5)
+    assert(oof.count() == 60)
+    oof.unpersist()
+    assert(sc.getPersistentRDDs.size == before,
+      s"cached RDDs ${sc.getPersistentRDDs.values.mkString(", ")}")
+  }
+
   test("aggregateMulti iid weights every metric by fold size") {
     import spark.implicits._
     // two folds, unequal sizes: weighted mean differs from plain mean for

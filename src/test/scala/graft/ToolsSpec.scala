@@ -216,6 +216,45 @@ class ToolsSpec extends AnyFunSuite {
     assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 
+  /** Code lines of `p` (comment lines and trailing comments dropped) that
+    * match one of `patterns`, as `path:line: text`.
+    */
+  private def codeMatches(p: java.nio.file.Path,
+                          patterns: Seq[scala.util.matching.Regex]): Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    java.nio.file.Files.readAllLines(p).asScala.toSeq.zipWithIndex.collect {
+      case (l, i) if !Seq("//", "*", "/*").exists(l.trim.startsWith) &&
+          patterns.exists(_.findFirstIn(l.split("//").head).isDefined) =>
+        s"$p:${i + 1}: ${l.trim}"
+    }
+  }
+
+  test("one CV loop: only Search.scala aggregates, ranks or scores CV folds in graft.search") {
+    // the grid search, the multi-model race and the eliminator all run
+    // SearchLoop; a surface scoring folds or ranking candidates itself is
+    // a second copy of that loop
+    import scala.jdk.CollectionConverters._
+    val search = java.nio.file.Paths.get("src/main/scala/graft/search")
+    val calls = Seq(
+      """CvResults\.(?:aggregate|aggregateMulti|best)\b""",
+      """Metrics\.(?:scorer|multi)\b""",
+      """DistributedScore\s*[.(]""").map(_.r)
+    val offenders = java.nio.file.Files.walk(search).iterator().asScala
+      .filter(p => p.toString.endsWith(".scala") && p != search.resolve("Search.scala"))
+      .flatMap(codeMatches(_, calls)).toSeq
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+
+  test("DataParallelGBT sums through orderedAggregate, never a SQL sum") {
+    // a SQL sum merges its partials in shuffle-fetch order, so two runs of
+    // one fit on a cluster could differ in the last bits; the histogram
+    // pass, the prior and the Newton steps all merge in partition order
+    val offenders = codeMatches(
+      java.nio.file.Paths.get("src/main/scala/graft/search/DataParallelGBT.scala"),
+      Seq("""(?<![\w.])sum\(""".r))
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+
   test("no VectorAssembler under src/main: graft.functions.AssembleVectors assembles") {
     // VectorAssembler runs a job per transform to read block sizes off the
     // first row and assembles through a boxed UDF; the codegen'd
@@ -223,14 +262,8 @@ class ToolsSpec extends AnyFunSuite {
     import scala.jdk.CollectionConverters._
     val offenders = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
       .iterator().asScala.filter(_.toString.endsWith(".scala"))
-      .flatMap { p =>
-        // code only: comments may name what the expression reproduces
-        val lines = java.nio.file.Files.readAllLines(p).asScala.toSeq
-        lines.zipWithIndex.collect {
-          case (l, i) if !Seq("//", "*", "/*").exists(l.trim.startsWith) &&
-              l.split("//").head.contains("VectorAssembler") => s"$p:${i + 1}: ${l.trim}"
-        }
-      }.toSeq
+      // code only: comments may name what the expression reproduces
+      .flatMap(codeMatches(_, Seq("VectorAssembler".r))).toSeq
     assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 }
