@@ -1,6 +1,6 @@
 package graft.exec
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import scala.reflect.ClassTag
@@ -72,9 +72,19 @@ object ModelParallel {
     val rows = df.select(col(featuresCol).cast("array<double>"),
       col(labelCol).cast("double")).collect()
     val x = rows.map(_.getSeq[Double](0).toArray)
-    val y = rows.map(_.getDouble(1))
+    val y = labels(rows, labelCol)
     TrainMatrix(x, y, if (stratified) stratifiedFolds(y, cv, seed) else shuffledFolds(y.length, cv, seed))
   }
+
+  /** The collected rows' labels (field 1); a null label fails loudly,
+    * naming the column, before any fit.
+    */
+  private def labels(rows: Array[Row], labelCol: String): Array[Double] =
+    rows.map { r =>
+      if (r.isNullAt(1)) throw new IllegalArgumentException(
+        s"label column '$labelCol' has null labels; drop or fill them before fitting")
+      r.getDouble(1)
+    }
 
   /** Estimated driver/broadcast footprint of collecting the matrix:
     * rows x (d doubles + row overhead). One cheap agg — the guard the
@@ -98,7 +108,7 @@ object ModelParallel {
     val rows = df.select(col(featuresCol).cast("array<double>"),
       col(labelCol).cast("double"), col(groupCol).cast("string")).collect()
     val x = rows.map(_.getSeq[Double](0).toArray)
-    val y = rows.map(_.getDouble(1))
+    val y = labels(rows, labelCol)
     val groups = rows.map(_.getString(2))
     TrainMatrix(x, y, groupKFolds(groups, cv))
   }

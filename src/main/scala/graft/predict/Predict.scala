@@ -53,23 +53,6 @@ object Predict {
     (c: Column) => f(c.cast("array<double>"))
   }
 
-  /** UDF-free linear-model scoring: ONE codegen'd LinearScoreMatrix
-    * expression scoring every class in a single fused loop, argmax for
-    * the prediction (first max wins, matching LogRegModel.predict).
-    * Preferred over the UDF paths when the model is linear — the whole
-    * projection stays in whole-stage codegen. Deliberately NOT one
-    * LinearScore column per class: past a few dozen classes the inlined
-    * per-class dot loops outgrow the JVM's huge-method JIT threshold and
-    * the stage silently runs interpreted (the SrpBandKeys cliff).
-    */
-  def withLinearPredictions(df: DataFrame, model: graft.exec.LogRegModel,
-                            featuresCol: String,
-                            outCol: String = "preds"): DataFrame = {
-    val scores = graft.functions.LinearScoreMatrix(
-      col(featuresCol).cast("array<double>"), model.weights)
-    df.withColumn(outCol, graft.agg.Voting.argmax(scores))
-  }
-
   /** Generic prediction surface: the fused codegen'd kernel when the
     * model family has one ([[FusedScore]] — linear, SVC, CART, forest,
     * GBT, constant, masked), else the broadcast-UDF fallback. Same

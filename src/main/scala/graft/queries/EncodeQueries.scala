@@ -248,12 +248,12 @@ object EncodeQueries {
     }),
 
     // Fixed-weight linear model through the UDF-free Predict projection
-    // (codegen'd LinearScore per class + argmax).
+    // (FusedScore's codegen'd LinearScoreMatrix + argmax).
     "q46_linear_predict" -> ((s, d) => {
       val w0 = Array.tabulate(65)(j => if (j < 32) 1.0 else 0.0)
       val w1 = Array.tabulate(65)(j => if (j >= 32 && j < 64) 1.0 else 0.0)
       val model = LogRegModel(Array(w0, w1), 2)
-      Predict.withLinearPredictions(Tables.embeddings(s, d), model,
+      Predict.withPredictions(s, Tables.embeddings(s, d), model,
         "embedding", "pred")
         .select("vec_id", "pred")
         .orderBy("vec_id")

@@ -15,8 +15,8 @@ import graft.plan.Folds
   * cache holds, which is all CV needs. One definition so a fix to the
   * fold ids lands everywhere.
   */
-private[search] final case class DpCvFrame(prepared: DataFrame, cv: Int,
-                                           nTotal: Long,
+private[search] final case class DpCvFrame(prepared: DataFrame, labelCol: String,
+                                           cv: Int, nTotal: Long,
                                            foldSizes: Map[Int, Long]) {
   def train(fold: Int): DataFrame = prepared.filter(col("_fold") =!= fold)
   def test(fold: Int): DataFrame = prepared.filter(col("_fold") === fold)
@@ -24,27 +24,27 @@ private[search] final case class DpCvFrame(prepared: DataFrame, cv: Int,
   def nTrain(fold: Int): Long = nTotal - nTest(fold)
   def unpersist(): Unit = { prepared.unpersist(); () }
 
-  /** The `_y` class count (`using` frames) for the classifiers, scanned
-    * once per frame: a fold missing the top class still fits its width.
+  /** The `labelCol` class count for the classifiers, scanned once per
+    * frame: a fold missing the top class still fits its width.
     */
-  private lazy val nClasses = DataParallelCART.scanClasses(prepared, "_y")
+  private lazy val nClasses = DataParallelCART.scanClasses(prepared, labelCol)
   def classesFor(learner: Learner): Option[Int] =
     if (DataParallelFit.isClassifier(learner)) Some(nClasses) else None
 }
 
 private[search] object DpCvFrame {
-  /** `selected` must already project the fit columns; the fold column is
-    * added here so every route hashes identically. The fold-size pass
-    * materializes the cache.
+  /** `selected` must already project the fit columns, its labels in
+    * `labelCol`; the fold column is added here so every route hashes
+    * identically. The fold-size pass materializes the cache.
     */
-  def apply(selected: DataFrame, cv: Int, seed: Long): DpCvFrame = {
+  def apply(selected: DataFrame, labelCol: String, cv: Int, seed: Long): DpCvFrame = {
     val prepared = selected
       .withColumn("_fold", Folds.byHash(monotonically_increasing_id(), cv, seed))
       .cache() // scanned once per (candidate, fold) fit — keep it hot
     try {
       val foldSizes = prepared.groupBy("_fold").count()
         .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-      DpCvFrame(prepared, cv, foldSizes.values.sum, foldSizes)
+      DpCvFrame(prepared, labelCol, cv, foldSizes.values.sum, foldSizes)
     } catch { case e: Throwable => prepared.unpersist(); throw e }
   }
 
@@ -56,7 +56,7 @@ private[search] object DpCvFrame {
                cv: Int, seed: Long)(f: DpCvFrame => T): T = {
     val cvf = apply(df.select(
       col(featuresCol).cast("array<double>").as("_x"),
-      col(labelCol).cast("double").as("_y")), cv, seed)
+      col(labelCol).cast("double").as("_y")), "_y", cv, seed)
     try f(cvf) finally cvf.unpersist()
   }
 }
@@ -197,8 +197,8 @@ object DistributedScore {
 /** ONE data-parallel fit of a routable engine learner over a DataFrame —
   * the only learner dispatch of the broadcast-overflow regime, behind
   * every over-budget route: the grid search, multi-model race and
-  * eliminator (`SearchLoop`), OvR, OvO and multilabel OvR, and the
-  * DataFrame OOF. Logistic via Spark ML (losslessly bridged), CART via
+  * eliminator (`SearchLoop`), OvR, OvO and multilabel OvR
+  * (`Decomposition`), and the DataFrame OOF. Logistic via Spark ML (losslessly bridged), CART via
   * DataParallelCART, GBT via DataParallelGBT. Returns the same engine
   * `Model` types the broadcast regime produces; unsupported learners
   * fail loudly (`requireSupported`).

@@ -99,8 +99,8 @@ class DistFeatureEliminator(learner: Learner,
       val keeps = rungKeeps(DataParallelFit.fit(learner, cvf.prepared, "_x", "_y",
         Map.empty, seed, cvf.nTotal, cvf.classesFor(learner)), d)
       result(keeps, SearchLoop.dataParallel(cvf, SearchLoop.candidateKey,
-        candidates(keeps), scoring, Nil, iid = false, JobParallel.DefaultWidth,
-        FitSideData.empty, fitSeed, refitSeed = seed))
+        candidates(keeps), scoring, Nil, iid = false, FitSideData.empty,
+        fitSeed, refitSeed = seed))
     }
   }
 

@@ -295,22 +295,23 @@ object OutOfFold {
                  featuresCol: String, labelCol: String,
                  learner: graft.exec.Learner, cv: Int, seed: Long,
                  params: Map[String, Double] = Map.empty,
-                 outCol: String = "oof_proba",
-                 jobParallelism: Int = JobParallel.DefaultWidth)
+                 outCol: String = "oof_proba")
       : org.apache.spark.sql.DataFrame = {
     require(cv >= 2, s"cv must be >= 2, got $cv")
     DataParallelFit.requireSupported(learner)
     val spark = df.sparkSession
     // the fold frame's cache freezes the fold ids across the per-fold
     // fit and predict scans, until the union is materialized
-    val cvf = DpCvFrame(df, cv, seed)
+    val cvf = DpCvFrame(df, labelCol, cv, seed)
     try {
       // the per-fold fits are independent distributed jobs — submit them
       // concurrently (see `JobParallel`); the lazy predict frames cost
-      // nothing here, the fits inside DataParallelFit are the jobs
-      val parts = graft.ops.Par.concurrently(0 until cv, jobParallelism) { fold =>
+      // nothing here, the fits inside DataParallelFit are the jobs. One
+      // class count for every fold: the frame's, scanned once
+      val parts = graft.ops.Par.concurrently(0 until cv, JobParallel.DefaultWidth) { fold =>
         val model = DataParallelFit.fit(learner, cvf.train(fold), featuresCol,
-          labelCol, params, seed + fold, nRows = cvf.nTrain(fold))
+          labelCol, params, seed + fold, nRows = cvf.nTrain(fold),
+          nClasses = cvf.classesFor(learner))
         graft.predict.Predict.withProbabilities(spark, cvf.test(fold), model,
           featuresCol, outCol)
       }

@@ -1,16 +1,18 @@
 package graft.search
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
 
-import graft.exec.{ConstantModel, Learner, Model, ModelParallel}
+import graft.exec.{ConstantModel, FitSideData, Learner, Model, ModelParallel}
 import graft.exec.ModelParallel.TrainMatrix
 
 /** One-vs-rest / one-vs-one meta-estimators (reference `multiclass.py`).
   *
-  * The task axis is the class (or class pair); the matrix is broadcast
-  * once. Class fan-out is keyed, not positional — models come back as
-  * (classLabel, model) pairs and are reassembled by sorting the key
-  * (replacing `multiclass.py:332-334`'s argsort reorder).
+  * The task axis is the class (or class pair); every surface fits its
+  * binary problems through the one [[Decomposition]] loop. Models come
+  * back aligned to the task axis — sorted classes, the caller's pinned
+  * classes, or sorted class pairs — replacing `multiclass.py:332-334`'s
+  * argsort reorder.
   */
 object Multiclass {
   /** predict_proba row normalization (`multiclass.py:337-362`). */
@@ -30,15 +32,15 @@ object Multiclass {
     }
 
   /** Rows of one binary problem (reference `_negatives_mask`,
-    * `multiclass.py:76-106`): every positive, plus the negatives an
-    * optional cap keeps — `v` x the negatives ("ratio") or x the
+    * `multiclass.py:76-106`): every positive of `rows`, plus the negatives
+    * an optional cap keeps — `v` x the negatives ("ratio") or x the
     * positives ("multiplier"), drawn by a seeded shuffle, in row order.
     */
-  private[search] def negativesMask(n: Int, isPos: Int => Boolean,
+  private[search] def negativesMask(rows: IndexedSeq[Int], isPos: Int => Boolean,
                                     maxNeg: Option[Double], method: String,
                                     seed: Long): Array[Int] = {
-    val posIdx = (0 until n).filter(isPos)
-    val negIdxAll = (0 until n).filter(!isPos(_))
+    val posIdx = rows.filter(isPos)
+    val negIdxAll = rows.filterNot(isPos)
     val negIdx = maxNeg match {
       case Some(v) =>
         val cap = method match {
@@ -56,6 +58,165 @@ object Multiclass {
   private[search] def positiveProba(m: Model, x: Array[Double]): Double = {
     val p = m.predictProba(x)
     if (p.length > 1) p(1) else p(0)
+  }
+
+  /** OvO's task axis in both regimes: every class pair (a, b), a < b. */
+  private[search] def pairs(classes: Seq[Double]): IndexedSeq[(Double, Double)] =
+    for {
+      i <- classes.indices
+      j <- (i + 1) until classes.length
+    } yield (classes(i), classes(j))
+}
+
+/** The one decomposition loop of OvR, multilabel OvR and OvO — the
+  * reference's binarize-then-fan-out `DistOneVsRestClassifier.fit`
+  * (`multiclass.py:267-331`), as [[SearchLoop]] is the search's. A
+  * surface keeps its task axis, each task's label rule and seed, and its
+  * [[Decomposition.Rows]]; the loop owns the rest of both regimes.
+  */
+private[search] object Decomposition {
+  /** How a binary problem takes its member rows: `NegativesMask` (OvR,
+    * multilabel OvR; reference `_negatives_mask`) puts the positives
+    * first, then the negatives an optional cap keeps; `InOrder` (OvO's
+    * `_fit_ovo_binary`, `multiclass.py:155-172`) keeps row order, uncapped.
+    */
+  sealed trait Rows
+  final case class NegativesMask(maxNegatives: Option[Double], method: String)
+      extends Rows {
+    // checked at construction: a typo'd method fails before any fit
+    require(method == "ratio" || method == "multiplier",
+      s"unknown negMethod '$method' (expected 'ratio' or 'multiplier')")
+  }
+  case object InOrder extends Rows
+
+  /** A binary problem of the broadcast regime: rows whose label is a
+    * `member` take part, the `positive` ones as class 1.0, the rest 0.0;
+    * `seed` seeds its cap and its fit.
+    */
+  final case class Problem[L](member: L => Boolean, positive: L => Boolean,
+                              seed: Long)
+
+  /** The same over the data-parallel `_y` column (`member` None: every
+    * row); `nPos`/`nNeg` count its rows before the cap, off the inventory.
+    */
+  final case class DpProblem(member: Option[Column], positive: Column,
+                             nPos: Long, nNeg: Long, seed: Long)
+
+  /** `n` rows and, per class, the rows it labels. */
+  final case class Inventory[C](n: Long, counts: Map[C, Long])(
+      implicit ord: Ordering[C]) {
+    val classes: IndexedSeq[C] = counts.keys.toIndexedSeq.sorted
+  }
+
+  /** A data-parallel label column: its cast, and its class inventory off
+    * the cached frame.
+    */
+  final case class Shape[C](cast: String,
+                            inventory: (DataFrame, String) => Inventory[C])
+
+  /** Single labels, one grouped pass; a null label fails loudly, naming
+    * the column, before any fit.
+    */
+  val SingleLabel: Shape[Double] = Shape("double", (labeled, labelCol) => {
+    val counts = labeled.groupBy("_y").count().collect()
+    if (counts.exists(_.isNullAt(0))) throw new IllegalArgumentException(
+      s"label column '$labelCol' has null labels; drop or fill them before fitting")
+    val byClass = counts.map(r => r.getDouble(0) -> r.getLong(1)).toMap
+    Inventory(byClass.values.sum, byClass)
+  })
+
+  /** Label sets; a null set has no labels. `array_distinct` first: a
+    * label repeated in one set would count its row twice, and a class
+    * could falsely label every row.
+    */
+  val LabelSets: Shape[String] = Shape("array<string>", (labeled, _) =>
+    Inventory(labeled.count(), labeled.select(explode(array_distinct(col("_y"))).as("_c"))
+      .filter(col("_c").isNotNull).groupBy("_c").count()
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap))
+
+  /** Broadcast regime over single labels: one `ModelParallel.fanOut` task
+    * per problem; the eval slice of `side` goes through each problem's
+    * rule into its {0, 1} space.
+    */
+  def broadcast(spark: SparkSession, m: TrainMatrix, learner: Learner,
+                rows: Rows, side: FitSideData)(
+      problems: Inventory[Double] => Seq[Problem[Double]])
+      : (Inventory[Double], Array[Model]) = {
+    val inv = Inventory(m.nRows.toLong,
+      m.y.groupBy(identity).map { case (c, r) => c -> r.length.toLong })
+    (inv, fanOut(spark, m.x, m.y, problems(inv), learner, rows) { p =>
+      if (!side.hasEarlyStopping) side
+      else {
+        val ei = side.evalY.indices.filter(i => p.member(side.evalY(i)))
+        side.copy(evalX = ei.map(side.evalX).toArray,
+          evalY = ei.map(i => if (p.positive(side.evalY(i))) 1.0 else 0.0).toArray)
+      }
+    })
+  }
+
+  /** Broadcast regime over label sets: no side data (a label set has no
+    * double label to remap, see `FitSideConfigured`).
+    */
+  def broadcastSets(spark: SparkSession, x: Array[Array[Double]],
+                    y: Array[Set[String]], problems: Seq[Problem[Set[String]]],
+                    learner: Learner, rows: Rows): Array[Model] =
+    fanOut(spark, x, y, problems, learner, rows)(_ => FitSideData.empty)
+
+  private def fanOut[L](spark: SparkSession, x: Array[Array[Double]], y: Array[L],
+                        problems: Seq[Problem[L]], learner: Learner, rows: Rows)(
+      sideOf: Problem[L] => FitSideData): Array[Model] =
+    ModelParallel.fanOut(spark, (x, y), problems) { case ((xs, ys), p) =>
+      val members = ys.indices.filter(i => p.member(ys(i)))
+      val idx = rows match {
+        case NegativesMask(maxNeg, method) =>
+          Multiclass.negativesMask(members, i => p.positive(ys(i)), maxNeg,
+            method, p.seed)
+        case InOrder => members.toArray
+      }
+      val yBin = idx.map(i => if (p.positive(ys(i))) 1.0 else 0.0)
+      if (yBin.distinct.length < 2) ConstantModel(yBin.headOption.getOrElse(0.0), 2)
+      else learner.fit(idx.map(xs), yBin, Map.empty, p.seed, sideOf(p))
+    }
+
+  /** Data-parallel regime: one distributed `DataParallelFit` per problem
+    * over the cached label frame, submitted `JobParallel.DefaultWidth` at
+    * a time (order-preserving). A cap draws its negatives by
+    * `Expansions.negativesMask` on the binarized frame at positive 1.0.
+    */
+  def dataParallel[C](df: DataFrame, featuresCol: String, labelCol: String,
+                      shape: Shape[C], learner: Learner, rows: Rows)(
+      problems: Inventory[C] => Seq[DpProblem]): (Inventory[C], Seq[Model]) = {
+    DataParallelFit.requireSupported(learner)
+    // cached: every problem's jobs (the cap's counts, the degenerate
+    // check, the fit's own passes) would otherwise re-run the upstream
+    // lineage, and under upstream nondeterminism the degenerate check
+    // and the fit could see different seeded negative samples
+    val labeled = df.select(col(featuresCol).cast("array<double>").as("_x"),
+      col(labelCol).cast(shape.cast).as("_y")).cache()
+    try {
+      val inv = shape.inventory(labeled, labelCol)
+      val models = graft.ops.Par.concurrently(problems(inv), JobParallel.DefaultWidth) { p =>
+        val bin = p.member.fold(labeled)(m => labeled.filter(m))
+          .withColumn("_y", when(p.positive, 1.0).otherwise(0.0))
+        val capped = rows match {
+          case NegativesMask(Some(v), method) =>
+            Some(graft.plan.Expansions.negativesMask(bin, "_y", 1.0, v, method, p.seed))
+          case _ => None
+        }
+        // degenerate: no negatives (one class, or a label set on every
+        // row), or a cap that sampled none; classes are observed labels,
+        // so positives always exist
+        if (p.nNeg == 0 || capped.exists(_.agg(min("_y")).head().getDouble(0) == 1.0))
+          ConstantModel(1.0, 2)
+        // Map.empty: DataParallelFit supplies the engine default c=1
+        // (regParam = 1/n), as the broadcast fits. Labels {0, 1}: no label
+        // scan; uncapped, the inventory's row count.
+        else DataParallelFit.fit(learner, capped.getOrElse(bin), "_x", "_y",
+          Map.empty, p.seed, nRows = if (capped.isEmpty) p.nPos + p.nNeg else -1L,
+          nClasses = Some(2))
+      }
+      (inv, models)
+    } finally labeled.unpersist(blocking = false)
   }
 }
 
@@ -81,15 +242,9 @@ class DistOneVsRest(learner: Learner,
                     maxNegatives: Option[Double] = None,
                     negMethod: String = "ratio",
                     seed: Long = 42)
-    extends Serializable with BroadcastBudgeted with FitSideConfigured
-    with JobParallel {
+    extends Serializable with BroadcastBudgeted with FitSideConfigured {
 
-  // validated at construction: the broadcast route's method match had a
-  // catch-all that silently treated a typo'd method as "ratio" while
-  // the data-parallel route's negativesMask throws for the same value —
-  // same constructor args, route-dependent semantics
-  require(negMethod == "ratio" || negMethod == "multiplier",
-    s"unknown negMethod '$negMethod' (expected 'ratio' or 'multiplier')")
+  private val rows = Decomposition.NegativesMask(maxNegatives, negMethod)
 
   def fit(spark: SparkSession, df: DataFrame,
           featuresCol: String, labelCol: String): OvRModel = {
@@ -97,90 +252,32 @@ class DistOneVsRest(learner: Learner,
       val matrix = ModelParallel.collectMatrix(df, featuresCol, labelCol, 1, seed,
         stratified = false)
       fitMatrix(spark, matrix)
-    } else fitDataParallel(spark, df, featuresCol, labelCol)
+    } else fitDataParallel(df, featuresCol, labelCol)
   }
 
-  /** Broadcast-overflow route: one DISTRIBUTED `DataParallelFit` per
-    * class (each fit already uses the whole cluster; classes are
-    * submitted `jobParallelism` at a time). Negatives are capped by the
-    * same `_negatives_mask` plan as the broadcast path, so the returned
-    * OvRModel is indistinguishable from the broadcast route's.
+  /** Broadcast-overflow route: one distributed `DataParallelFit` per
+    * class. The two regimes agree in distribution, not bit for bit: here
+    * a negative cap keeps a Bernoulli `sample` of the negatives at a
+    * fraction, where the broadcast regime takes exactly `cap` rows by a
+    * seeded shuffle, and the logistic learner fits through Spark ML.
     */
-  private def fitDataParallel(spark: SparkSession, df: DataFrame,
-                              featuresCol: String, labelCol: String): OvRModel = {
-    DataParallelFit.requireSupported(learner)
-    import org.apache.spark.sql.functions.{col, lit, when, min, max}
-    // cached, like the sibling OvO/multilabel routes: every per-class
-    // job (inventory, negativesMask counts, degenerate agg, the fit's
-    // own passes) would otherwise re-execute the full upstream lineage —
-    // and the seeded negative SAMPLE would be recomputed independently
-    // by the degenerate check and the fit, which under upstream
-    // nondeterminism could hand them different samples
-    val labeled = df.select(col(featuresCol), col(labelCol).cast("double").as("_y"))
-      .cache()
-    try {
-      // class inventory and row count in one pass
-      val counts = labeled.groupBy("_y").count().collect()
-        .map(r => r.getDouble(0) -> r.getLong(1)).toMap
-      val classes = counts.keys.toArray.sorted
-      // per-class fits are independent distributed jobs — submit them
-      // concurrently (see `JobParallel`); order-preserving, so the
-      // class->model alignment is identical to the sequential loop
-      val models: Array[Model] =
-        graft.ops.Par.concurrently(classes.toSeq, jobParallelism) { c =>
-        val capped = maxNegatives match {
-          case Some(v) => graft.plan.Expansions
-            .negativesMask(labeled, "_y", c, v, negMethod, seed + c.toLong)
-          case None => labeled
-        }
-        val bin = capped.withColumn("_y",
-          when(col("_y") === lit(c), 1.0).otherwise(0.0))
-        // With >= 2 observed classes, both binary labels are guaranteed
-        // present UNLESS the negative cap sampled zero negatives — so the
-        // degenerate-binary check only runs under a cap (and as a min/max
-        // agg, not a full distinct-shuffle per class over the data).
-        val degenerate = classes.length < 2 || (maxNegatives.isDefined && {
-          val r = bin.agg(min("_y"), max("_y")).head()
-          r.getDouble(0) == r.getDouble(1)
-        })
-        if (degenerate) ConstantModel(1.0, 2) // single-class: constant positive
-        // Map.empty: DataParallelFit supplies the engine default c=1
-        // (regParam = 1/n), matching the broadcast route's lrn.fit defaults.
-        // Labels {0, 1}: two classes, no label scan; uncapped, every row.
-        else DataParallelFit.fit(learner, bin, featuresCol, "_y",
-          Map.empty, seed + c.toLong,
-          nRows = if (maxNegatives.isEmpty) counts.values.sum else -1L,
-          nClasses = Some(2))
-      }.toArray
-      OvRModel(classes, models, norm)
-    } finally labeled.unpersist(blocking = false)
+  private def fitDataParallel(df: DataFrame, featuresCol: String,
+                              labelCol: String): OvRModel = {
+    val (inv, models) = Decomposition.dataParallel(df, featuresCol, labelCol,
+        Decomposition.SingleLabel, learner, rows) { inv =>
+      inv.classes.map(c => Decomposition.DpProblem(None, col("_y") === c,
+        inv.counts(c), inv.n - inv.counts(c), seed + c.toLong))
+    }
+    OvRModel(inv.classes.toArray, models.toArray, norm)
   }
 
   def fitMatrix(spark: SparkSession, matrix: TrainMatrix): OvRModel = {
-    val classes = matrix.y.distinct.sorted
-    val lrn = learner
-    val maxNeg = maxNegatives
-    val method = negMethod
-    val baseSeed = seed
-    val side = fitSide
-    val models = ModelParallel.fanOut(spark, matrix, classes.toSeq) { (m, c) =>
-      // Binary problem: positives = class c; optional negative cap.
-      val idx = Multiclass.negativesMask(m.nRows, m.y(_) == c, maxNeg, method,
-        baseSeed + c.toLong)
-      val x = idx.map(m.x)
-      val yBin = idx.map(i => if (m.y(i) == c) 1.0 else 0.0)
-      if (yBin.distinct.length < 2) ConstantModel(yBin.headOption.getOrElse(0.0), 2)
-      else {
-        // the eval slice's labels live in the ORIGINAL class space —
-        // remap into this class's binary problem before monitoring
-        val sideC =
-          if (!side.hasEarlyStopping) side
-          else side.copy(evalY = side.evalY.map(v =>
-            if (v == c) 1.0 else 0.0))
-        lrn.fit(x, yBin, Map.empty, baseSeed + c.toLong, sideC)
-      }
+    val (inv, models) = Decomposition.broadcast(spark, matrix, learner, rows,
+        fitSide) { inv =>
+      inv.classes.map(c =>
+        Decomposition.Problem[Double](_ => true, _ == c, seed + c.toLong))
     }
-    OvRModel(classes, models, norm)
+    OvRModel(inv.classes.toArray, models, norm)
   }
 }
 
@@ -215,9 +312,8 @@ final case class MultilabelOvRModel(classes: Array[String],
   * `MultiLabelBinarizer` path of `fit`, `multiclass.py:267-274`): `y` is
   * an `array<string>` label-set column; classes are the sorted distinct
   * labels (MultiLabelBinarizer.classes_); each class becomes one binary
-  * problem (row positive iff its set contains the class) fanned out
-  * task-parallel against the broadcast matrix, with the same optional
-  * negative cap as the single-label path (`_negatives_mask`).
+  * problem (row positive iff its set contains the class), with the same
+  * optional negative cap as the single-label path (`_negatives_mask`).
   *
   * The reference's `mlb_override` ctor flag (y already binarized,
   * `multiclass.py:228-230, 269`) is `fitBinarized`.
@@ -227,10 +323,9 @@ class DistMultilabelOvR(learner: Learner,
                         maxNegatives: Option[Double] = None,
                         negMethod: String = "ratio",
                         seed: Long = 42)
-    extends Serializable with BroadcastBudgeted with JobParallel {
+    extends Serializable with BroadcastBudgeted {
 
-  require(negMethod == "ratio" || negMethod == "multiplier", // see DistOneVsRest
-    s"unknown negMethod '$negMethod' (expected 'ratio' or 'multiplier')")
+  private val rows = Decomposition.NegativesMask(maxNegatives, negMethod)
 
   /** Auto-routed fit: task-parallel per-class fits against broadcast
     * (x, label-sets) under the budget; one data-parallel binary fit per
@@ -239,68 +334,26 @@ class DistMultilabelOvR(learner: Learner,
     */
   def fit(spark: SparkSession, df: DataFrame,
           featuresCol: String, labelCol: String): MultilabelOvRModel = {
-    import org.apache.spark.sql.functions.col
     if (ModelParallel.estimateMatrixBytes(df, featuresCol) > broadcastBudgetBytes)
-      return fitDataParallel(spark, df, featuresCol, labelCol)
-    val rows = df.select(col(featuresCol).cast("array<double>"),
+      return fitDataParallel(df, featuresCol, labelCol)
+    val collected = df.select(col(featuresCol).cast("array<double>"),
       col(labelCol).cast("array<string>")).collect()
-    val x = rows.map(_.getSeq[Double](0).toArray)
-    val y = rows.map(r =>
+    val x = collected.map(_.getSeq[Double](0).toArray)
+    val y = collected.map(r =>
       if (r.isNullAt(1)) Set.empty[String]
       else r.getSeq[String](1).filter(_ != null).toSet)
     fitSets(spark, x, y)
   }
 
-  private def fitDataParallel(spark: SparkSession, df: DataFrame,
-                              featuresCol: String,
+  private def fitDataParallel(df: DataFrame, featuresCol: String,
                               labelCol: String): MultilabelOvRModel = {
-    import org.apache.spark.sql.functions._
-    DataParallelFit.requireSupported(learner)
-    val labeled = df.select(
-      col(featuresCol).cast("array<double>").as("_x"),
-      col(labelCol).cast("array<string>").as("_ls")).cache()
-    try {
-      val n = labeled.count()
-      // class inventory + positive ROW counts per class in ONE exploded
-      // pass (the class list is small — it's the label vocabulary, not
-      // the data). array_distinct first: a duplicate label INSIDE one
-      // row's set would otherwise count twice and a class could reach
-      // posCounts == n with true negatives still present — falsely
-      // degenerate, replacing a real fit with ConstantModel(1.0).
-      val posCounts = labeled
-        .select(explode(array_distinct(col("_ls"))).as("_c"))
-        .filter(col("_c").isNotNull)
-        .groupBy("_c").count()
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      val classes = posCounts.keys.toArray.sorted // MultiLabelBinarizer order
-      // independent per-class fits -> concurrent job submission (JobParallel)
-      val models: Array[Model] =
-        graft.ops.Par.concurrently(classes.toSeq, jobParallelism) { c =>
-        val bin = labeled.withColumn("_y",
-          when(array_contains(col("_ls"), c), 1.0).otherwise(0.0))
-        val capped = maxNegatives match {
-          case Some(v) => graft.plan.Expansions
-            .negativesMask(bin, "_y", 1.0, v, negMethod, seed + c.hashCode)
-          case None => bin
-        }
-        // degenerate binary: the class labels EVERY row (multilabel sets
-        // don't partition rows, so all-positive is legal), or the negative
-        // cap sampled zero negatives — same constant-model containment as
-        // the broadcast path
-        val degenerate = posCounts(c) == n || (maxNegatives.isDefined && {
-          val r = capped.agg(min("_y"), max("_y")).head()
-          r.getDouble(0) == r.getDouble(1)
-        })
-        if (degenerate) ConstantModel(1.0, 2)
-        // Map.empty: DataParallelFit supplies the engine default c=1
-        // (regParam = 1/n), matching the broadcast route's lrn.fit
-        // defaults — same convention as the OvR/OvO routes.
-        else DataParallelFit.fit(learner, capped, "_x", "_y",
-          Map.empty, seed + c.hashCode,
-          nRows = if (maxNegatives.isEmpty) n else -1L, nClasses = Some(2))
-      }.toArray
-      MultilabelOvRModel(classes, models, norm)
-    } finally labeled.unpersist(blocking = false)
+    val (inv, models) = Decomposition.dataParallel(df, featuresCol, labelCol,
+        Decomposition.LabelSets, learner, rows) { inv =>
+      inv.classes.map(c => Decomposition.DpProblem(None,
+        array_contains(col("_y"), c), inv.counts(c), inv.n - inv.counts(c),
+        seed + c.hashCode))
+    }
+    MultilabelOvRModel(inv.classes.toArray, models.toArray, norm)
   }
 
   /** `mlb_override`: y already one-hot, one column per entry of `classes`
@@ -333,21 +386,11 @@ class DistMultilabelOvR(learner: Learner,
                                  classes: Array[String]): MultilabelOvRModel = {
     require(x.length == y.length, "x and y row counts differ")
     require(x.nonEmpty, "empty training set")
-    val lrn = learner
-    val maxNeg = maxNegatives
-    val method = negMethod
-    val baseSeed = seed
     // models come back aligned to the PINNED class axis (caller order for
     // fitBinarized, sorted for fitSets)
-    val models = ModelParallel.fanOut(spark, (x, y), classes.toSeq) {
-      case ((xs, sets), c) =>
-        val idx = Multiclass.negativesMask(sets.length, sets(_).contains(c),
-          maxNeg, method, baseSeed + c.hashCode)
-        val xb = idx.map(xs)
-        val yBin = idx.map(i => if (sets(i).contains(c)) 1.0 else 0.0)
-        if (yBin.distinct.length < 2) ConstantModel(yBin.headOption.getOrElse(0.0), 2)
-        else lrn.fit(xb, yBin, Map.empty, baseSeed + c.hashCode)
-    }
+    val models = Decomposition.broadcastSets(spark, x, y,
+      classes.toSeq.map(c => Decomposition.Problem[Set[String]](_ => true,
+        _.contains(c), seed + c.hashCode)), learner, rows)
     MultilabelOvRModel(classes, models, norm)
   }
 }
@@ -398,8 +441,7 @@ final case class OvOModel(classes: Array[Double],
 }
 
 class DistOneVsOne(learner: Learner, seed: Long = 42)
-    extends Serializable with BroadcastBudgeted with FitSideConfigured
-    with JobParallel {
+    extends Serializable with BroadcastBudgeted with FitSideConfigured {
 
   def fit(spark: SparkSession, df: DataFrame,
           featuresCol: String, labelCol: String): OvOModel = {
@@ -407,79 +449,35 @@ class DistOneVsOne(learner: Learner, seed: Long = 42)
       val matrix = ModelParallel.collectMatrix(df, featuresCol, labelCol, 1, seed,
         stratified = false)
       fitMatrix(spark, matrix)
-    } else fitDataParallel(spark, df, featuresCol, labelCol)
+    } else fitDataParallel(df, featuresCol, labelCol)
   }
 
-  /** Broadcast-overflow route: one DISTRIBUTED binary fit per class pair.
-    * Each pair restricts the DataFrame to its two classes — a filter, so
-    * rows never reach the driver — and remaps to {0, 1}: the same
-    * `_fit_ovo_binary` plan as the broadcast path (`multiclass.py:155-172`)
-    * with `DataParallelFit` as the executor. The pair axis submits up to
-    * `jobParallelism` concurrent Spark jobs (`Par.concurrently`) —
-    * at 100 classes the 4,950 pair fits would otherwise run strictly one
-    * after another, forfeiting the pair-axis parallelism the broadcast
-    * regime (and the reference, `multiclass.py:440-459`) has; pair fits
-    * are independent, so concurrent submission changes nothing about the
-    * models, only the wall clock. Both classes of a pair are present by
-    * construction (they come from the observed-label inventory), so the
-    * degenerate-binary containment of the broadcast path has nothing to
-    * contain here.
+  /** Broadcast-overflow route: one distributed binary fit per class pair
+    * over the pair's rows — a filter, so rows never reach the driver —
+    * remapped to {0, 1}, the broadcast path's `_fit_ovo_binary` plan
+    * (`multiclass.py:155-172`). Both classes of a pair are observed
+    * labels, so no pair is degenerate.
     */
-  private def fitDataParallel(spark: SparkSession, df: DataFrame,
-                              featuresCol: String, labelCol: String): OvOModel = {
-    import org.apache.spark.sql.functions.{col, lit, when}
-    DataParallelFit.requireSupported(learner)
-    val labeled = df.select(col(featuresCol).as("_x"),
-      col(labelCol).cast("double").as("_y")).cache()
-    try {
-      val counts = labeled.groupBy("_y").count().collect()
-        .map(r => r.getDouble(0) -> r.getLong(1)).toMap
-      val classes = counts.keys.toArray.sorted
-      val pairs = for {
-        i <- classes.indices
-        j <- (i + 1) until classes.length
-      } yield (classes(i), classes(j))
-      val models: Seq[Model] =
-        graft.ops.Par.concurrently(pairs, jobParallelism) { case (a, b) =>
-          val bin = labeled
-            .filter(col("_y") === lit(a) || col("_y") === lit(b))
-            .withColumn("_y", when(col("_y") === lit(a), 0.0).otherwise(1.0))
-          // Map.empty: DataParallelFit supplies the engine default c=1
-          // (regParam = 1/n), matching the broadcast route's lrn.fit defaults.
-          DataParallelFit.fit(learner, bin, "_x", "_y", Map.empty, seed,
-            nRows = counts(a) + counts(b), nClasses = Some(2))
-        }
-      OvOModel(classes, pairs.toArray, models.toArray)
-    } finally labeled.unpersist(blocking = false)
+  private def fitDataParallel(df: DataFrame, featuresCol: String,
+                              labelCol: String): OvOModel = {
+    val (inv, models) = Decomposition.dataParallel(df, featuresCol, labelCol,
+        Decomposition.SingleLabel, learner, Decomposition.InOrder) { inv =>
+      Multiclass.pairs(inv.classes).map { case (a, b) =>
+        Decomposition.DpProblem(Some(col("_y") === a || col("_y") === b),
+          col("_y") === b, inv.counts(b), inv.counts(a), seed)
+      }
+    }
+    OvOModel(inv.classes.toArray, Multiclass.pairs(inv.classes).toArray,
+      models.toArray)
   }
 
   def fitMatrix(spark: SparkSession, matrix: TrainMatrix): OvOModel = {
-    val classes = matrix.y.distinct.sorted
-    val pairs = for {
-      i <- classes.indices
-      j <- (i + 1) until classes.length
-    } yield (classes(i), classes(j))
-    val lrn = learner
-    val baseSeed = seed
-    val side = fitSide
-    val models = ModelParallel.fanOut(spark, matrix, pairs) { case (m, (a, b)) =>
-      // Restrict to the two classes, remap to {0, 1}
-      // (`_fit_ovo_binary`, multiclass.py:155-172).
-      val idx = m.y.indices.filter(i => m.y(i) == a || m.y(i) == b).toArray
-      val x = idx.map(m.x)
-      val yBin = idx.map(i => if (m.y(i) == a) 0.0 else 1.0)
-      // eval slice restricted + remapped into the pair's {0, 1} space
-      val sideP =
-        if (!side.hasEarlyStopping) side
-        else {
-          val ei = side.evalY.indices
-            .filter(i => side.evalY(i) == a || side.evalY(i) == b)
-          side.copy(evalX = ei.map(side.evalX).toArray,
-            evalY = ei.map(i => if (side.evalY(i) == a) 0.0 else 1.0).toArray)
-        }
-      if (yBin.distinct.length < 2) ConstantModel(yBin.headOption.getOrElse(0.0), 2)
-      else lrn.fit(x, yBin, Map.empty, baseSeed, sideP)
+    val (inv, models) = Decomposition.broadcast(spark, matrix, learner,
+        Decomposition.InOrder, fitSide) { inv =>
+      Multiclass.pairs(inv.classes).map { case (a, b) =>
+        Decomposition.Problem[Double](v => v == a || v == b, _ == b, seed)
+      }
     }
-    OvOModel(classes, pairs.toArray, models)
+    OvOModel(inv.classes.toArray, Multiclass.pairs(inv.classes).toArray, models)
   }
 }

@@ -24,26 +24,16 @@ trait BroadcastBudgeted {
   }
 }
 
-/** Concurrent Spark-job submission width for the data-parallel regime's
-  * INDEPENDENT-fit axes (candidates x folds, classes, class pairs, OOF
-  * folds). Each fit is already distributed; submitting them from
-  * `jobParallelism` driver threads (`Par.concurrently`) overlaps the
+/** Concurrent Spark-job submission width of every data-parallel regime's
+  * INDEPENDENT-fit axis (candidates x folds, classes, class pairs, OOF
+  * folds, GBT classes). Each fit is already distributed; submitting them
+  * from `DefaultWidth` driver threads (`Par.concurrently`) overlaps the
   * per-job driver-side phases and lets the scheduler interleave stages,
   * instead of serializing N distributed jobs with an idle cluster
   * between them. Fits are seed-isolated and independent, so concurrency
   * changes wall clock only, never models (spec-pinned on the OvO
-  * surface). One definition so the width policy can't drift between the
-  * search, multiclass, and forest surfaces.
+  * surface). One constant, no setter: every axis runs the same width.
   */
-trait JobParallel {
-  protected var jobParallelism: Int = JobParallel.DefaultWidth
-  def withJobParallelism(n: Int): this.type = {
-    require(n >= 1, s"job parallelism must be >= 1, got $n")
-    jobParallelism = n; this
-  }
-}
-
-/** `DefaultWidth`: the width of every data-parallel axis, setter or not. */
 object JobParallel { val DefaultWidth: Int = 8 }
 
 /** fit_params side-data configuration shared by the broadcast-regime fit
@@ -87,8 +77,7 @@ class DistGridSearchCV(learner: Learner,
                        iid: Boolean = false,
                        seed: Long = 42,
                        errorScore: Option[Double] = None)
-    extends Serializable with BroadcastBudgeted with FitSideConfigured
-    with JobParallel {
+    extends Serializable with BroadcastBudgeted with FitSideConfigured {
 
   /** Secondary metrics (reference scorer-dict): each task still fits once;
     * cv_results grows mean_test_<m>/std_test_<m> columns per metric while
@@ -153,7 +142,7 @@ class DistGridSearchCV(learner: Learner,
     require(cands.nonEmpty, "empty parameter grid")
     val r = DpCvFrame.using(df, featuresCol, labelCol, cv, seed) { cvf =>
       SearchLoop.dataParallel(cvf, SearchLoop.candidateKey, keyed(cands),
-        scoring, extraScorings, iid, jobParallelism, fitSide,
+        scoring, extraScorings, iid, fitSide,
         fitSeed = (_, _) => seed, refitSeed = seed)
     }
     result(spark, cands, r, oof = None)
@@ -240,7 +229,7 @@ class DistMultiModelSearch(models: Seq[(String, Learner, Map[String, Seq[Double]
                            cv: Int = 5,
                            scoring: String = "accuracy",
                            seed: Long = 42)
-    extends Serializable with BroadcastBudgeted with JobParallel {
+    extends Serializable with BroadcastBudgeted {
   require(models.map(_._1).distinct.size == models.size,
     s"model names must be unique (they key the cv_results rows): " +
       models.map(_._1).mkString(", "))
@@ -297,7 +286,7 @@ class DistMultiModelSearch(models: Seq[(String, Learner, Map[String, Seq[Double]
         // scores agree in expectation (same contract as the grid search)
         DpCvFrame.using(df, featuresCol, labelCol, cv, seed) { cvf =>
           SearchLoop.dataParallel(cvf, keyFields, cands.map(_._1), scoring,
-            Nil, iid = false, jobParallelism, FitSideData.empty, fitSeed,
+            Nil, iid = false, FitSideData.empty, fitSeed,
             refitSeed = seed)
         }
       }
@@ -365,14 +354,14 @@ private[search] object SearchLoop {
   }
 
   /** Data-parallel regime: each (candidate, fold) is a [[DataParallelFit]]
-    * on the fold frame's `_x`/`_y`, submitted `jobParallelism` at a time
+    * on the fold frame's `_x`/`_y`, submitted `JobParallel.DefaultWidth`
+    * at a time
     * (`Par.concurrently`, order-preserving) and scored by
     * [[DistributedScore.scoreMany]].
     */
   def dataParallel(cvf: DpCvFrame, keyFields: Seq[StructField],
                    cands: Seq[Candidate], scoring: String,
-                   extraScorings: Seq[String], iid: Boolean,
-                   jobParallelism: Int, side: FitSideData,
+                   extraScorings: Seq[String], iid: Boolean, side: FitSideData,
                    fitSeed: (Int, Int) => Long, refitSeed: Long): Outcome = {
     def fit(c: Candidate, data: DataFrame, seed: Long, nRows: Long): Model =
       DataParallelFit.fit(c.learner, data, "_x", "_y", c.params, seed, nRows,
@@ -384,7 +373,7 @@ private[search] object SearchLoop {
     val metrics = scoring +: extraScorings
     run(cvf.prepared.sparkSession, keyFields, cands, cvf.cv, scoring,
         extraScorings, iid) { tasks =>
-      graft.ops.Par.concurrently(tasks, jobParallelism) { case (ci, fold) =>
+      graft.ops.Par.concurrently(tasks, JobParallel.DefaultWidth) { case (ci, fold) =>
         val model = fit(cands(ci), cvf.train(fold), fitSeed(ci, fold),
           cvf.nTrain(fold))
         (DistributedScore.scoreMany(metrics, model, cvf.test(fold), "_x", "_y"),

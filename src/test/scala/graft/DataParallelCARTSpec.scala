@@ -391,15 +391,15 @@ class DataParallelCARTSpec extends AnyFunSuite {
     assert(e.getMessage != null)
   }
 
-  /** SQL executions whose plan scans the `_y` labels for a class count. */
-  private def labelScans[T](body: => T): (Int, T) = {
+  /** SQL executions whose plan scans the `label` column for a class count. */
+  private def labelScans[T](body: => T, label: String = "_y"): (Int, T) = {
     val sc = spark.sparkContext
     val scans = new java.util.concurrent.atomic.AtomicInteger
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit =
         e match {
           case s: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
-              if s.physicalPlanDescription.contains("max(_y") =>
+              if s.physicalPlanDescription.contains(s"max($label") =>
             scans.incrementAndGet()
           case _ =>
         }
@@ -438,6 +438,19 @@ class DataParallelCARTSpec extends AnyFunSuite {
     }
     assert(scans == 1, s"$scans label scans")
     assert(r.model.predictProba(x.head).length == 3)
+  }
+
+  test("CART oofProbaDF scans the labels once per frame") {
+    // cv = 3 fold fits share the fold frame's class count, read off the
+    // caller's label column
+    val (x, y) = planted()
+    val df = toDF(x, y)
+    val (scans, oof) = labelScans(graft.search.OutOfFold.oofProbaDF(df, "x", "y",
+      CART.Classifier, cv = 3, seed = 5), label = "y")
+    try {
+      assert(scans == 1, s"$scans label scans")
+      assert(oof.count() == x.length)
+    } finally oof.unpersist()
   }
 
   test("over-budget CART OvR and OvO fit their binary problems without a label scan") {

@@ -314,14 +314,14 @@ class FunctionsSpec extends AnyFunSuite {
     }
   }
 
-  test("withLinearPredictions agrees with the model's own predict") {
+  test("withPredictions agrees with a linear model's own predict") {
     import spark.implicits._
     val rng = new scala.util.Random(5)
     val x = Seq.fill(200)(Seq.fill(6)(rng.nextGaussian()))
     val df = x.zipWithIndex.map { case (v, i) => (i.toLong, v) }.toDF("id", "f")
     val w = Array.fill(3)(Array.fill(7)(rng.nextGaussian())) // 6 + bias
     val model = graft.exec.LogRegModel(w, 3)
-    val got = graft.predict.Predict.withLinearPredictions(df, model, "f")
+    val got = graft.predict.Predict.withPredictions(spark, df, model, "f")
       .select("id", "preds").as[(Long, Int)].collect().toMap
     x.zipWithIndex.foreach { case (v, i) =>
       assert(got(i.toLong) == model.predict(v.toArray).toInt, s"row $i")

@@ -632,16 +632,15 @@ class SearchExtrasSpec extends AnyFunSuite {
       assert(dp.predict(x(i)) == bc.predict(x(i)), s"row $i regime disagreement")
     }
     assert(Metrics.accuracy(dp, x, y) > 0.95)
-    // the pair axis submits concurrent jobs by default (8) — a
-    // sequential run (parallelism 1) must produce IDENTICAL models:
-    // pair fits are independent, concurrency may change only wall clock
-    val seqFit = new DistOneVsOne(graft.exec.LogisticRegressionLBFGS)
-      .withBroadcastBudget(1L).withJobParallelism(1)
-      .fit(spark, df, "features", "label")
-    assert(seqFit.pairs.toSeq == dp.pairs.toSeq)
+    // the pair axis submits its fits concurrently — a second run must
+    // produce IDENTICAL models: pair fits are independent, so the order
+    // the scheduler runs them in may change only wall clock
+    val again = new DistOneVsOne(graft.exec.LogisticRegressionLBFGS)
+      .withBroadcastBudget(1L).fit(spark, df, "features", "label")
+    assert(again.pairs.toSeq == dp.pairs.toSeq)
     x.indices.foreach { i =>
-      assert(seqFit.predictProba(x(i)).sameElements(dp.predictProba(x(i))),
-        s"row $i sequential/concurrent disagreement")
+      assert(again.predictProba(x(i)).sameElements(dp.predictProba(x(i))),
+        s"row $i run-to-run disagreement")
     }
     // tree base learner routes through DataParallelCART per pair
     val dpTree = new DistOneVsOne(new graft.exec.CART.Classifier(2))
@@ -840,5 +839,27 @@ class SearchExtrasSpec extends AnyFunSuite {
     val ragged = intercept[IllegalArgumentException](
       TrainMatrix(Array(Array(1.0), Array(2.0)), Array(0.0), Array(0, 1)))
     assert(ragged.getMessage.contains("ragged"), ragged.getMessage)
+  }
+
+  test("a null label fails OvR and OvO loudly in both regimes, naming the column") {
+    import spark.implicits._
+    val m = blobs(n = 60)
+    val df = m.x.zip(m.y).toSeq.zipWithIndex.map { case ((x, y), i) =>
+      (x.toSeq, if (i == 7) None else Some(y))
+    }.toDF("features", "target")
+    val sc = spark.sparkContext
+    val fits: Seq[(String, Long => Any)] = Seq(
+      "ovr" -> (b => new DistOneVsRest(LogisticRegressionGD).withBroadcastBudget(b)
+        .fit(spark, df, "features", "target")),
+      "ovo" -> (b => new DistOneVsOne(LogisticRegressionGD).withBroadcastBudget(b)
+        .fit(spark, df, "features", "target")))
+    for ((surface, fit) <- fits; budget <- Seq(1L << 30, 1L)) {
+      val before = sc.getPersistentRDDs.size
+      val e = intercept[IllegalArgumentException](fit(budget))
+      assert(e.getMessage.contains("'target'") && e.getMessage.contains("null"),
+        s"$surface at budget $budget: ${e.getMessage}")
+      assert(sc.getPersistentRDDs.size == before,
+        s"$surface at budget $budget left its label frame cached")
+    }
   }
 }

@@ -245,6 +245,24 @@ class ToolsSpec extends AnyFunSuite {
     assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 
+  test("one decomposition loop: Multiclass.scala fans out, submits, fits and caches only in it") {
+    // OvR, multilabel OvR and OvO each keep a task axis, a label rule and
+    // a seed; a route that fans out, caches or fits on its own is a second
+    // copy of the loop, with its own containment and cap
+    import scala.jdk.CollectionConverters._
+    val p = java.nio.file.Paths.get("src/main/scala/graft/search/Multiclass.scala")
+    val lines = java.nio.file.Files.readAllLines(p).asScala.toSeq
+    val start = lines.indexWhere(_.startsWith("private[search] object Decomposition"))
+    val end = if (start < 0) -1 else lines.indexWhere(_ == "}", start)
+    val calls = Seq("""ModelParallel\.fanOut\b""", """Par\.concurrently\b""",
+      """DataParallelFit\.fit\b""", """ConstantModel\(""", """\.cache\(\)""").map(_.r)
+    val offenders = codeMatches(p, calls).filter { m =>
+      val line = m.stripPrefix(s"$p:").takeWhile(_ != ':').toInt - 1
+      line < start || line > end
+    }
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+
   test("DataParallelGBT sums through orderedAggregate, never a SQL sum") {
     // a SQL sum merges its partials in shuffle-fetch order, so two runs of
     // one fit on a cluster could differ in the last bits; the histogram
