@@ -50,110 +50,16 @@ object Dedup {
     *
     * `maxShingleDf` drops shingles appearing in more docs than the cap
     * (skew + noise control at scale; pass Int.MaxValue to disable).
-    *
-    * `prefixFilter` (OPT-IN, r15): PPJoin-family prefix filtering
-    * (Chaudhuri et al. SSJoin 2006; Xiao et al. WWW 2008 — public
-    * literature). Each doc indexes only the FIRST
-    * `|s| − ⌈t·|s|⌉ + 1` of its ascending-sorted shingle hashes;
-    * candidate pairs come from the (smaller) prefix inverted index,
-    * and the exact Jaccard is recomputed per candidate over the full
-    * sorted hash arrays ([[graft.functions.SortedIntersectCount]]
-    * — the q38 rerank kernel). EXACT for Jaccard ≥ t: for a qualifying
-    * pair, |A∩B| ≥ t·|A∪B| ≥ ⌈t·|A|⌉, so at most ⌈t·|A|⌉−1 of A's
-    * elements outside its prefix can be intersection members — at
-    * least one intersection element sits in A's prefix, and the
-    * globally SMALLEST intersection element therefore sits in BOTH
-    * prefixes (it is ≤ any prefix-resident intersection element of
-    * each side, and prefixes are each side's smallest elements).
-    * Spec-pinned equal to the full-index route in both cap regimes.
-    *
-    * Default OFF after measurement (r15, PrefixFilterABProbe,
-    * interleaved same-JVM A/B): on this corpus family the full-index
-    * route wins at EVERY probed threshold — sf1 min-of-k prefix/full =
-    * 10.1/5.5 s at t=0.2, 4.1/2.0 at t=0.5, 2.7/2.0 at t=0.8, and the
-    * sf10 t=0.2 prefix arm did not finish in 55 min where the full
-    * route's isolated time is ~19 s. Root cause: the r13 census showed
-    * candidate volume at t=0.2 is INHERENT (≈ qualifying pairs), so
-    * the prefix cut can't remove meaningful candidates, while the
-    * rerank re-scores each candidate by joining BOTH full hash arrays
-    * onto it (KB/pair of shuffle — the exact payload shape the q38
-    * hashed-rerank fix removed) where the full route's intersection
-    * falls out of the index join's pair-count for free. Prefix
-    * filtering pays off only when candidates ≫ qualifying pairs (high
-    * thresholds over low-overlap corpora) — callers with that shape
-    * opt in; the oracle gate (q36) and the default stay on the
-    * full-index route.
     */
   def ngramJaccardPairs(df: DataFrame, textCol: String, idCol: String,
                         n: Int, minJaccard: Double,
-                        maxShingleDf: Int = 1000,
-                        prefixFilter: Boolean = false): DataFrame = {
+                        maxShingleDf: Int = 1000): DataFrame = {
     require(minJaccard > 0 && minJaccard <= 1,
       s"minJaccard must be in (0, 1], got $minJaccard")
     val base = Par.fanOut(df.select(col(idCol).as("doc"), col(textCol).as("text")))
     val arr = array_filter_nonempty(
       TextFunctions.distinctWordNGrams(col("text"), n))
-    if (prefixFilter) {
-      // per-doc SORTED distinct shingle hashes (ShingleHashes sorts
-      // ascending — the shared global order the prefix bound needs).
-      // No cap: one per-row codegen pass, no shuffle. With a cap: the
-      // hot-shingle list must see global document frequencies, so the
-      // arrays are rebuilt from the capped inverted index (one doc-keyed
-      // shuffle); sizes and intersections are then post-cap, matching
-      // the historical capped semantics.
-      val sets =
-        if (maxShingleDf == Int.MaxValue)
-          base.select(col("doc"),
-              graft.functions.ShingleHashes(arr).as("_h"))
-            .filter(size(col("_h")) > 0)
-        else {
-          val exploded = base
-            .select(col("doc"), explode_outer(arr).as("s"))
-            .filter(col("s").isNotNull) // dodge InferFiltersFromGenerate
-            .select(col("doc"), xxhash64(col("s")).as("s"))
-          val hot = exploded.groupBy("s").agg(count(lit(1)).as("_df"))
-            .filter(col("_df") > maxShingleDf).select("s")
-          exploded.join(broadcast(hot), Seq("s"), "left_anti")
-            .groupBy("doc")
-            .agg(sort_array(collect_set(col("s"))).as("_h"))
-        }
-      // consumed three times (prefix index + two rerank joins) with
-      // divergent plans — pin, as minhashPairs does with its shingles
-      val sh = Par.pinLatest("jaccard.sets", sets)
-      // exact per-side prefix: p = |s| − ⌈t·|s|⌉ + 1. The 1e-9 guard
-      // keeps a binary-inexact t·|s| that lands just above an integer
-      // from shortening the prefix below the exact bound (errs longer,
-      // never lossy). slice is 1-based and clamps at the array end.
-      val pLen = (size(col("_h")) -
-        ceil(lit(minJaccard) * size(col("_h")) - lit(1e-9)) + 1).cast("int")
-      val idx = sh.select(col("doc"), size(col("_h")).as("n_sh"),
-        explode(slice(col("_h"), lit(1), pLen)).as("s"))
-      // candidate pairs from the prefix index. The EXPLICIT shared
-      // repartition (minhashPairs' pattern) does two jobs: both join
-      // sides become one canonical exchange (computed once,
-      // ReusedExchange — AQE's per-occurrence cache stages otherwise
-      // defeat reuse of planner-inserted ENSURE_REQUIREMENTS exchanges
-      // over a pinned input), and the pair-exploding shuffle keeps its
-      // parallelism instead of being byte-coalesced to one task.
-      val p = Par.width(df, Par.PinRowsPerTask)
-      val idxP = idx.repartition(p, col("s"))
-      val cand = idxP.as("a").hint("shuffle_hash")
-        .join(idxP.as("b"),
-          col("a.s") === col("b.s") && col("a.doc") < col("b.doc"))
-        .groupBy(col("a.doc").as("id_a"), col("b.doc").as("id_b"),
-          col("a.n_sh").as("n_a"), col("b.n_sh").as("n_b"))
-        .agg(lit(1))
-        .select("id_a", "id_b", "n_a", "n_b")
-      cand.repartition(p, col("id_a"))
-        .join(sh.select(col("doc").as("id_a"), col("_h").as("_ha")), "id_a")
-        .join(sh.select(col("doc").as("id_b"), col("_h").as("_hb")), "id_b")
-        .withColumn("_inter",
-          graft.functions.SortedIntersectCount(col("_ha"), col("_hb")))
-        .withColumn("jaccard",
-          round(col("_inter") / (col("n_a") + col("n_b") - col("_inter")), 6))
-        .filter(col("jaccard") >= minJaccard)
-        .select("id_a", "id_b", "jaccard")
-    } else if (maxShingleDf == Int.MaxValue) {
+    if (maxShingleDf == Int.MaxValue) {
       // Carry each doc's shingle-set size THROUGH the explode so no
       // separate sizes aggregation (and no join-back) is needed: |A| and
       // |B| ride along with every inverted-index row and fall out of the

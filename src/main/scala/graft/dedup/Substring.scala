@@ -359,33 +359,16 @@ object SubstringDedup {
 
   /** Add a crawl batch to an existing span index. `batchId` names the
     * batch — reuse the SAME id when retrying a failed append
-    * (overwrite-idempotent); a new id for each new batch.
-    *
-    * `compactEveryBatches` (opt-in, 0 = off): once the index holds more
-    * than that many live batches after this append,
-    * [[compactSpanIndex]] runs automatically inside this call under the
-    * derived fresh id `auto_compact_<batchId>` — probe scan cost stays
-    * bounded by index BYTES at crawl cadence without an operator
-    * remembering the maintenance call. Like the manual call it is
-    * exclusive with concurrent probes, which an append already should
-    * be. Note that a successful append-plus-compaction CONSUMES
-    * `batchId` (the compacted batch replaces it) — retrying it after
-    * success fails loudly, as any reused consumed id does. Returns true
-    * iff a compaction ran.
+    * (overwrite-idempotent); a new id for each new batch. Each batch
+    * adds to every probe's scan; [[compactSpanIndex]] merges them.
     */
   def appendToSpanIndex(df: DataFrame, textCol: String, idCol: String,
-                        dir: String, batchId: String,
-                        compactEveryBatches: Int = 0): Boolean = {
+                        dir: String, batchId: String): Unit = {
     val spark = df.sparkSession
     val (minLen, k, cap) = indexParams(spark, dir)
     IndexStore.append(spark, dir, SpanIndex, batchId) {
       writeBatch(df, textCol, idCol, dir, batchId, minLen, k, cap)
     }
-    if (compactEveryBatches > 0 &&
-        IndexStore.live(spark, dir).size > compactEveryBatches) {
-      compactSpanIndex(spark, dir, s"auto_compact_$batchId")
-      true
-    } else false
   }
 
   private def writeBatch(df: DataFrame, textCol: String, idCol: String,

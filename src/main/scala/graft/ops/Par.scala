@@ -57,8 +57,9 @@ object Par {
     * session at 100× data OOM'd an 8 GB heap on exactly this). With the
     * registry a session holds at most one live intermediate per operator
     * family; an OLDER lazy result re-collected later just recomputes —
-    * correct, slower — the same trade `Similarity.lastIvfResult`
-    * documents. Entries of stopped sessions are swept lazily.
+    * correct, slower (`Similarity.ivfTopK` keeps its one live result
+    * here on the same terms). Entries of stopped sessions are swept
+    * lazily.
     */
   def pinLatest(key: String, df: DataFrame): DataFrame = register(key, df.persist())
 

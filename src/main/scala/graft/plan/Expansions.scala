@@ -66,20 +66,34 @@ object Expansions {
   /** Negative-downsampling plan for one OvR binary problem (reference
     * `_negatives_mask`, `multiclass.py:76-106`): keep all positives, sample
     * negatives to `maxNegatives` interpreted as a fraction ("ratio") or a
-    * multiple of the positive count ("multiplier").
+    * multiple of the positive count ("multiplier"). The multiplier counts
+    * both sides first, two jobs.
     */
   def negativesMask(df: DataFrame, labelCol: String, positive: Any,
-                    maxNegatives: Double, method: String, seed: Long): DataFrame = {
-    val pos = df.filter(col(labelCol) === lit(positive))
-    val neg = df.filter(col(labelCol) =!= lit(positive))
-    val frac = method match {
+                    maxNegatives: Double, method: String, seed: Long): DataFrame =
+    sampleNegatives(df, labelCol, positive, negativesFraction(maxNegatives,
+      method, df.filter(col(labelCol) === lit(positive)).count(),
+      df.filter(col(labelCol) =!= lit(positive)).count()), seed)
+
+  /** The share of negatives `negativesMask` keeps; the counts are read
+    * only by the multiplier, so a caller that already holds them passes
+    * them and runs no job. */
+  private[graft] def negativesFraction(maxNegatives: Double, method: String,
+                                       nPos: => Long, nNeg: => Long): Double =
+    method match {
       case "ratio"      => maxNegatives
       case "multiplier" =>
-        val nPos = pos.count().toDouble
-        val nNeg = neg.count().toDouble
-        if (nNeg == 0) 1.0 else math.min(1.0, maxNegatives * nPos / nNeg)
+        val (p, n) = (nPos.toDouble, nNeg.toDouble)
+        if (n == 0) 1.0 else math.min(1.0, maxNegatives * p / n)
       case m => throw new IllegalArgumentException(s"unknown method: $m")
     }
-    if (frac >= 1.0) df else pos.union(neg.sample(withReplacement = false, frac, seed))
-  }
+
+  /** Every positive plus a seeded `frac` sample of the negatives. */
+  private[graft] def sampleNegatives(df: DataFrame, labelCol: String,
+                                     positive: Any, frac: Double,
+                                     seed: Long): DataFrame =
+    if (frac >= 1.0) df
+    else df.filter(col(labelCol) === lit(positive)).union(
+      df.filter(col(labelCol) =!= lit(positive))
+        .sample(withReplacement = false, frac, seed))
 }

@@ -181,14 +181,15 @@ private[search] object Decomposition {
   /** Data-parallel regime: one distributed `DataParallelFit` per problem
     * over the cached label frame, submitted `JobParallel.DefaultWidth` at
     * a time (order-preserving). A cap draws its negatives by
-    * `Expansions.negativesMask` on the binarized frame at positive 1.0.
+    * `Expansions.sampleNegatives` on the binarized frame at positive 1.0,
+    * at the fraction the inventory's counts give.
     */
   def dataParallel[C](df: DataFrame, featuresCol: String, labelCol: String,
                       shape: Shape[C], learner: Learner, rows: Rows)(
       problems: Inventory[C] => Seq[DpProblem]): (Inventory[C], Seq[Model]) = {
     DataParallelFit.requireSupported(learner)
-    // cached: every problem's jobs (the cap's counts, the degenerate
-    // check, the fit's own passes) would otherwise re-run the upstream
+    // cached: every problem's jobs (the degenerate check, the fit's own
+    // passes) would otherwise re-run the upstream
     // lineage, and under upstream nondeterminism the degenerate check
     // and the fit could see different seeded negative samples
     val labeled = df.select(col(featuresCol).cast("array<double>").as("_x"),
@@ -200,7 +201,10 @@ private[search] object Decomposition {
           .withColumn("_y", when(p.positive, 1.0).otherwise(0.0))
         val capped = rows match {
           case NegativesMask(Some(v), method) =>
-            Some(graft.plan.Expansions.negativesMask(bin, "_y", 1.0, v, method, p.seed))
+            // the inventory's counts: no count job per problem
+            Some(graft.plan.Expansions.sampleNegatives(bin, "_y", 1.0,
+              graft.plan.Expansions.negativesFraction(v, method, p.nPos, p.nNeg),
+              p.seed))
           case _ => None
         }
         // degenerate: no negatives (one class, or a label set on every

@@ -4,7 +4,6 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import scala.jdk.CollectionConverters._
 import scala.util.Random
 
 import graft.store.IndexStore
@@ -85,178 +84,112 @@ object Similarity {
     * `nClusters` cells; each query probes its `nProbe` nearest cells and
     * exact cosine reranks only those candidates. The classic inverted-file
     * trade: recall ≈ fraction of true neighbors inside probed cells,
-    * cost ≈ nProbe/nClusters of brute force. At 100 TB the cell id is the
-    * partition key — candidate generation is an equi-join on it, and the
-    * corpus can be written bucketed by cell so probes touch only matching
-    * files. `nClusters` defaults to 0 = auto (~sqrt(n), the standard IVF
-    * sizing — see the comment in the body).
+    * cost ≈ nProbe/nClusters of brute force. `nClusters = 0` (default)
+    * auto-sizes cells ([[autoCells]]); `nProbe = 0` probes to the
+    * [[autoNProbe]] candidate budget, and `recallTarget` picks the
+    * smallest nProbe whose fit-time measured top-1 recall meets it.
     *
-    * A query vector containing NaN (or an all-non-finite vector) has no
-    * ranked probe cells — every cell distance is NaN — and FAILS LOUDLY,
-    * the same contract as batch on-disk serving (`probeIvfIndexBatch`):
-    * silent absence from a top-k result hides data corruption. The
-    * guard costs no extra pass here — the probe explode keeps empty
-    * probe lists visible (explode_outer) and a codegen'd raise_error
-    * fires on the first such row, so the failure surfaces when the
-    * lazy result executes rather than at call time (the one remaining
-    * asymmetry with the batch path, which guards eagerly because it
-    * already pays a cell-enumeration pass). Null query vectors are
-    * dropped, as before.
+    * The in-memory twin of `writeIvfIndex` + `probeIvfIndexBatch`: the
+    * same build ([[buildIvf]]) and the same probe ([[probeIvf]]), with
+    * the assigned corpus kept cached instead of written, so the two
+    * return the same rows for the same corpus and parameters. Their
+    * contract is therefore this one too: null and empty corpus vectors
+    * are dropped before cells are sized, an empty corpus fails, and a
+    * query of the wrong dimension or with a NaN coordinate fails before
+    * any result exists. Null and empty query vectors are dropped.
+    *
+    * The result (<= queries × k rows) is materialized while the corpus
+    * cache is alive, then the corpus cache is released; the result stays
+    * pinned as this session's one live `ivfTopK` result (`Par.pinLatest`:
+    * the next call evicts it).
     */
   def ivfTopK(corpus: DataFrame, queries: DataFrame, vecCol: String,
               idCol: String, k: Int, nClusters: Int = 0, nProbe: Int = 0,
               seed: Long = 42, maxIter: Int = 20,
               recallTarget: Double = 0.0): DataFrame = {
-    require(nProbe <= 0 || recallTarget <= 0,
-      "pass either an explicit nProbe or a recallTarget, not both")
-    require(recallTarget <= 1,
-      s"recall target must be in (0, 1], got $recallTarget")
-    // Spherical-KMeans approximation: the quantizer clusters L2-NORMALIZED
-    // vectors, so its Euclidean cell geometry is monotone in cosine —
-    // assignment and probing then agree with the cosine rerank metric.
-    // (Clustering raw vectors and probing by cosine mixes two metrics and
-    // costs ~20-30 recall points on near-uniform corpora.)
-    // Cache ONLY the raw array; `_na` is derived LAZILY (outside the
-    // cache) so downstream passes read ONE cached array column and
+    val probe = ProbeCount(nProbe, recallTarget)
+    val b = buildIvf(corpus, vecCol, idCol, nClusters, seed, maxIter)
+    try {
+      val res = graft.ops.Par.pinLatest("similarity.ivfTopK",
+        probeIvf(queries, vecCol, idCol, k, b.quant, probe, b.rows,
+          measureRecallRanks(b.assigned, b.quant, 256), "in-memory corpus")(
+          _ => b.assigned))
+      res.count()
+      res
+    } finally b.release()
+  }
+
+  /** An IVF build: the fitted quantizer, the assigned `(id, vec, _cell)`
+    * frame over the persisted corpus vectors, and their row count. */
+  private final case class IvfBuild(quant: CoarseQuantizer,
+                                    assigned: DataFrame, rows: Long,
+                                    persisted: DataFrame) {
+    def release(): Unit = { persisted.unpersist(blocking = false); () }
+  }
+
+  /** The one IVF build, behind `writeIvfIndex` (which writes `assigned`)
+    * and `ivfTopK` (which keeps it cached). The caller releases it.
+    *
+    * Spherical-KMeans approximation: the quantizer clusters L2-NORMALIZED
+    * vectors, so its Euclidean cell geometry is monotone in cosine —
+    * assignment and probing then agree with the cosine rerank metric.
+    * (Clustering raw vectors and probing by cosine mixes two metrics and
+    * costs ~20-30 recall points on near-uniform corpora.)
+    */
+  private def buildIvf(corpus: DataFrame, vecCol: String, idCol: String,
+                       nClusters: Int, seed: Long,
+                       maxIter: Int): IvfBuild = {
+    // vectors keep their ORIGINAL element type (array<float> corpora
+    // would double in size as array<double>; the rerank's cosine casts
+    // at read time) — only the quantizer input is cast.
+    // spreadNarrow BEFORE the persist: the cached partitioning is what
+    // every downstream pass (count, fit sample, n×cells assignment)
+    // inherits — a one-split local file layout would serialize them all.
+    // Persist ONLY the raw vector; `_na` is derived LAZILY outside the
+    // cache, so downstream passes read ONE cached array column and
     // recompute the 2·dim-flop normalize inside their codegen stage.
-    // Caching the normalized copy alongside (`.withColumn before
-    // .cache()`) made every assignment/rerank row deserialize TWO
-    // array columns from the columnar cache — measured +32% on q62
-    // at sf10 (9.9 → 13.1 s) when r15 first did exactly that.
-    val rawVec = corpus.select(col(idCol).as("neighbor_id"),
-      col(vecCol).cast("array<double>").as("_cv"))
-      .cache()
-    val toVec = rawVec.withColumn("_na", normalized(col("_cv")))
-    // nClusters = 0 (default) auto-sizes cells (autoCells): ~sqrt(n)
-    // small — candidate volume per query is nProbe/nClusters × n, so
-    // FIXED cells make probe cost grow linearly per query, quadratic in
-    // total when the query panel grows with the corpus (measured: 16
-    // fixed cells at 200k vectors × 4k queries = 141 s), and sqrt is
-    // the RECALL-optimal sizing at a given probe fraction
-    // (AnnScaleRecallProbe: fixed 16 cells drop below the calibrated
-    // floor at 40× corpus; sqrt(n) cells at half probed hold 0.93) —
-    // switching to BUDGET-DRIVEN cells past ~1.86M rows so auto-probe
-    // candidates stay constant (see autoCells).
-    // one agg over the cache: row count (sizes the cells + the fit
-    // sample) and dimension (the two-level split point) — reads the
-    // cached raw column, not the derived _na
-    val statRow = rawVec.agg(count(lit(1)), max(size(col("_cv")))).head()
-    val nCorpus = statRow.getLong(0)
-    val dimCorpus = if (statRow.isNullAt(1)) 0 else statRow.getInt(1)
-    // UNCAPPED since r15: past FlatCellCap the quantizer goes two-level
-    // (see fitCoarseQuantizer) instead of letting cell size grow
-    // linearly in n; past ~1.86M rows the sizing switches from sqrt(n)
-    // to budget-driven so auto-probe candidates stay constant
-    // (see autoCells)
-    val kCells = if (nClusters > 0) nClusters else autoCells(nCorpus)
-    // nProbe = 0 (default) probes to a CONSTANT per-query candidate
-    // budget (autoNProbe: ~AutoProbeBudget corpus rows per query,
-    // floor 3, exhaustive for corpora at or under the budget). The
-    // earlier constant-FRACTION rule (cells/16) held natural recall but
-    // made per-query candidates linear in n — a query panel growing
-    // with the corpus then pays a QUADRATIC rerank (Decade3Probe:
-    // q62 e(10→100) = 1.87, 748 s at 2M×40k). Recall on CLUSTERED
-    // corpora concentrates in the nearest cells (FAISS ships nprobe=1
-    // for the same reason); planted/verbatim-duplicate recall is 1.0
-    // at ANY setting (the twin's cell is always the query's nearest).
-    // Callers needing a recall LEVEL pass explicit nProbe here or
-    // recallTarget (fit-time measured curve, resolved below once cells
-    // exist — same machinery as the on-disk sidecar curve).
+    // Caching the normalized copy alongside made every assignment/rerank
+    // row deserialize TWO array columns — measured +32% on q62 at sf10
+    // (9.9 → 13.1 s) when r15 first did exactly that.
+    val persisted = spreadNarrow(
+      corpus.select(col(idCol).as("id"), col(vecCol).as("vec"))
+        .filter(col("vec").isNotNull && size(col("vec")) > 0))
+      .persist()
+    val toVec = persisted
+      .withColumn("_na", normalized(col("vec").cast("array<double>")))
+    // one agg: row count (sizes the cells + the fit sample) and
+    // dimension (the two-level split needs it before the fit)
+    val statRow = toVec.agg(count(lit(1)), max(size(col("vec")))).head()
+    val nRows = statRow.getLong(0)
+    // loud empty check — KMeans.fit on zero rows dies with an opaque
+    // MLlib stack; an index over nothing is a caller bug, not a no-op
+    if (nRows == 0) persisted.unpersist(blocking = false)
+    require(nRows > 0,
+      s"cannot build an IVF index over an empty corpus ($vecCol all null/empty?)")
+    // nClusters = 0 auto-sizes: sqrt(n) small, budget-driven past ~1.86M
+    // rows, two-level past the flat cap (see autoCells)
+    val kCells = if (nClusters > 0) nClusters else autoCells(nRows)
     // maxIter trades quantizer quality for fit time; recall comes from
     // nProbe overlap, so even a coarse quantizer keeps recall high.
     // kmeans|| init is KEPT deliberately: swapping it for random init
     // (semanticDedup's choice, where recall is structural) was tried and
     // the AnnRecallSpec natural floors failed — IVF recall 0.90 -> 0.80
-    // @nProbe=8, cell recall 0.50 -> 0.15 @nProbe=1. The init passes buy
-    // real serving recall here.
-    val quant = fitCoarseQuantizer(toVec, "_na", "neighbor_id", nCorpus,
-      kCells, dimCorpus, seed, maxIter)
+    // @nProbe=8, cell recall 0.50 -> 0.15 @nProbe=1.
+    val quant = fitCoarseQuantizer(toVec, "_na", "id", nRows, kCells,
+      statRow.getInt(1), seed, maxIter)
     // corpus assignment via the fused argmin expression(s), NOT
     // model.transform: the MLlib path runs a per-row predict UDF over
     // VectorUDT (deser + no codegen) and its fastSquaredDistance numerics
-    // differ in ULPs from the SQL probe ranking below — the fused
-    // expression keeps the full-corpus pass in whole-stage codegen AND
-    // makes assignment bit-identical to the query-side probe metric
-    // (same Σ(x−y)² loop, same tie-break), so a near-tied vector can
-    // never be assigned to a cell the probe ranking disagrees with.
+    // differ in ULPs from the probe ranking — the fused expression keeps
+    // the full-corpus pass in whole-stage codegen AND uses the SAME
+    // numerics as the query-side probe and appendToIvfIndex (same
+    // Σ(x−y)² loop, same tie-break), so a vector is never assigned to a
+    // cell the probe ranking disagrees with, and an appended twin of a
+    // built row lands in its original's cell.
     val assigned = toVec.withColumn("_cell", quant.assign(col("_na")))
-      .select("neighbor_id", "_cv", "_cell")
-
-    // recallTarget > 0: measure the SAME rank statistic the on-disk
-    // build stores in its sidecar (measureRecallRanks — one fused
-    // corpus pass over the just-assigned frame) and pick the smallest
-    // nProbe whose measured top-1 recall meets the target. Parity with
-    // writeIvfIndex + nProbeForRecall is structural: identical
-    // quantizer-fit inputs and identical curve math (spec-pinned).
-    val probeCells =
-      if (nProbe > 0) nProbe
-      else if (recallTarget > 0) {
-        val ranks = measureRecallRanks(
-          assigned.select(col("neighbor_id").as("id"),
-            col("_cv").as("vec"), col("_cell")), quant, 256)
-        lastMemoryRecallRanks.set(ranks)
-        if (ranks.isEmpty) autoNProbe(quant.numCells, nCorpus) // 1-row corner
-        else nProbeFromRanks(ranks, quant.numCells, recallTarget)
-      } else autoNProbe(quant.numCells, nCorpus)
-
-    // probe list per query: nProbe nearest centroids by the SAME metric
-    // (and the SAME fused Σ(x−y)² numerics) that assigned cells. ONE
-    // NearestCells expression per query row, then explode — a per-row
-    // map riding the query scan. The previous crossJoin(centroids) →
-    // _cdist → row_number window carried queries × cells rows through a
-    // hash exchange: fine for a probe panel of a few vectors, a 4×10⁹-row
-    // shuffle for a 1M-query batch at 4096 auto-sized cells. Ties break
-    // to the lowest cell id inside the expression — same determinism the
-    // window's orderBy(_cdist, _cell) provided.
-    val probes = queries
-      .select(col(idCol).as("query_id"), col(vecCol).cast("array<double>").as("_qv"))
-      .filter(col("_qv").isNotNull)
-      // explode_OUTER + raise_error: a NaN/non-finite query has an EMPTY
-      // probe list (the probe expressions truncate NaN distances) and
-      // would be silently absent from the top-k result — fail loudly
-      // instead, mirroring probeIvfIndexBatch, without a dedicated guard
-      .withColumn("_cell", explode_outer(
-        quant.probeCells(normalized(col("_qv")), probeCells)))
-      .withColumn("_cell", when(col("_cell").isNotNull, col("_cell"))
-        .otherwise(raise_error(concat(
-          lit("ivfTopK: query vector has no ranked probe cells (NaN or " +
-            "non-finite coordinates) — query_id="),
-          col("query_id").cast("string")))))
-      .select("query_id", "_qv", "_cell")
-
-    val wk = Window.partitionBy("query_id")
-      .orderBy(col("cos").desc, col("neighbor_id").asc)
-    val res = probes.join(assigned, "_cell")
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("cos", round(cosine(col("_cv"), col("_qv")), 6))
-      .withColumn("rank", row_number().over(wk).cast("int"))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "cos", "rank")
-      // Materialize the (small, <= queries x k rows) result WHILE the
-      // corpus cache is still alive, then release the corpus copy: the
-      // caller keeps a bounded cached frame instead of pinning full
-      // corpus vectors in executor storage for the session's lifetime,
-      // and nothing recomputes.
-      .cache()
-    res.count()
-    rawVec.unpersist(blocking = false)
-    // Bound the RESULT caches too: a serving loop calling ivfTopK per
-    // request would otherwise accumulate one pinned (small) frame per
-    // call forever. Keep exactly one live result per session — evicting
-    // the previous call's cache only costs it a recompute if someone
-    // still holds and re-reads it (concurrent same-session calls may
-    // therefore evict each other; the probe ordering is fully
-    // tie-broken, so a recompute returns the same rows). Entries of
-    // stopped sessions are swept lazily, as in Tables.load.
-    lastIvfResult.keys.asScala
-      .filter(_.sparkContext.isStopped).foreach(lastIvfResult.remove)
-    val prev = lastIvfResult.put(corpus.sparkSession, res)
-    if (prev != null) prev.unpersist(blocking = false)
-    res
+      .select(col("id"), col("vec"), col("_cell"))
+    IvfBuild(quant, assigned, nRows, persisted)
   }
-
-  private val lastIvfResult =
-    new java.util.concurrent.ConcurrentHashMap[org.apache.spark.sql.SparkSession, DataFrame]()
 
   /** Per-query CANDIDATE BUDGET for auto probe mode: auto-probe reads
     * ~this many corpus rows per query regardless of corpus size. 4096
@@ -274,11 +207,10 @@ object Similarity {
     */
   val RecallCurveAuto: Int = -1
 
-  /** The ONE probe-count rule for auto mode — shared by `ivfTopK` and
-    * `probeIvfIndex`/`probeIvfIndexBatch` so the in-memory and on-disk
-    * serving paths cannot diverge: probe enough cells to examine
-    * ~[[AutoProbeBudget]] candidates per query (floor 3, capped at all
-    * cells), i.e. `ceil(budget / (rows/cells))`.
+  /** The ONE probe-count rule for auto mode — [[ProbeCount]]'s default,
+    * behind every IVF probe, in memory and on disk: probe enough cells
+    * to examine ~[[AutoProbeBudget]] candidates per query (floor 3,
+    * capped at all cells), i.e. `ceil(budget / (rows/cells))`.
     *
     * History, because this rule replaced two measured-worse ones. A
     * FIXED COUNT (nProbe=3) silently shrinks the probed fraction as
@@ -305,9 +237,8 @@ object Similarity {
     math.min(cells, math.max(3, byBudget))
   }
 
-  /** The ONE auto cell-count rule (`nClusters = 0`) — shared by
-    * `ivfTopK` and `writeIvfIndex` so the in-memory and on-disk builds
-    * cannot diverge. Two regimes:
+  /** The ONE auto cell-count rule (`nClusters = 0`) of [[buildIvf]],
+    * behind `ivfTopK` and `writeIvfIndex`. Two regimes:
     *
     *   - `sqrt(n)` below ~1.86M rows — the recall-optimal sizing at a
     *     given probe fraction (AnnScaleRecallProbe), and the historical
@@ -342,9 +273,9 @@ object Similarity {
   private[graft] val IvfIndex = IndexStore.Kind(
     "ivf", "writeIvfIndex", Seq("cells"), sidecars = Seq("centroids"))
 
-  /** Materialize the IVF scale path ivfTopK's doc promises: the corpus
-    * written HIVE-PARTITIONED BY QUANTIZER CELL (`_cell=N/…` inside each
-    * batch of the `cells` part) with the centroids as a tiny JSON
+  /** Materialize the IVF index on disk: [[buildIvf]]'s assigned corpus
+    * written HIVE-PARTITIONED BY QUANTIZER CELL (`_cell=N/…` inside
+    * each batch of the `cells` part) with the centroids as a tiny JSON
     * sidecar. A probe then reads ONLY its nProbe cells' directories —
     * partition pruning turns cell selection into skipped IO, which is
     * what makes IVF serving work against a 100 TB corpus (cost ~
@@ -358,44 +289,9 @@ object Similarity {
       IndexStore.create(corpus.sparkSession, dir, IvfIndex) {
     val spark = corpus.sparkSession
     val base = IndexStore.dataPath(dir, "cells", "base")
-    // vectors keep their ORIGINAL element type on disk (array<float>
-    // corpora would double in size as array<double>; the probe's cosine
-    // casts at read time) — only the quantizer input is cast
-    // spreadNarrow BEFORE the persist: the cached partitioning is what
-    // every downstream pass (count, fit sample, n×cells assignment)
-    // inherits — a one-split local file layout would serialize them all
-    // Cache ONLY the raw vector; `_na` is derived LAZILY outside the
-    // cache (one cached array column per row in the assignment/write
-    // pass, normalize recomputed in codegen — the q62 lesson, see
-    // ivfTopK's cache comment).
-    val rawVec = spreadNarrow(
-      corpus.select(col(idCol).as("id"), col(vecCol).as("vec"))
-        .filter(col("vec").isNotNull && size(col("vec")) > 0))
-      .persist()
-    val toVec = rawVec
-      .withColumn("_na", normalized(col("vec").cast("array<double>")))
-    // one agg: row count + dimension (the two-level split needs dim
-    // before the fit; size(vec) reads the cached raw column)
-    val statRow = toVec.agg(count(lit(1)), max(size(col("vec")))).head()
-    val nRows = statRow.getLong(0)
-    // loud empty check — KMeans.fit on zero rows dies with an opaque
-    // MLlib stack; an index over nothing is a caller bug, not a no-op
-    require(nRows > 0,
-      s"cannot build an IVF index over an empty corpus ($vecCol all null/empty?)")
-    val dim = statRow.getInt(1)
-    // nClusters = 0 auto-sizes via the SAME rule as ivfTopK (autoCells:
-    // sqrt(n) small, budget-driven past ~1.86M rows, two-level past the
-    // flat cap) — the on-disk and in-memory builds cannot diverge
-    val kCells = if (nClusters > 0) nClusters else autoCells(nRows)
-    val quant = fitCoarseQuantizer(toVec, "_na", "id", nRows, kCells, dim,
-      seed, maxIter)
-    // fused-argmin assignment (not model.transform): full-corpus pass
-    // stays codegen'd, and build-time assignment uses the SAME numerics
-    // as appendToIvfIndex's — an appended twin of a built row can never
-    // land in a different cell than its original
-    val assigned = toVec.withColumn("_cell", quant.assign(col("_na")))
-      .select(col("id"), col("vec"), col("_cell"))
-    assigned
+    val b = buildIvf(corpus, vecCol, idCol, nClusters, seed, maxIter)
+    val (quant, nRows) = (b.quant, b.rows)
+    b.assigned
       // repartition ON the partition column first: without it every input
       // partition writes its own file into every cell dir (tasks x cells
       // small files — 2048 ~40 KB files measured at 200k x 64 cells);
@@ -440,7 +336,7 @@ object Similarity {
       else measureRecallRanks(
         spark.read.parquet(base).select("id", "vec", "_cell"),
         quant, curveSamples)
-    rawVec.unpersist(blocking = false)
+    b.release()
     // sidecar: flat indexes keep the (_cell, centroid) schema; two-level
     // writes its two sub-codebooks with a `level` marker (1 = first
     // dim-half, 2 = second) — loadQuantizer routes on the marker's
@@ -587,8 +483,7 @@ object Similarity {
     */
   final case class IvfAppendStats(appended: Long, total: Long, cells: Int,
                                   maxCell: Long, meanCell: Double,
-                                  rebuildRecommended: Boolean,
-                                  compacted: Option[IvfCompactStats] = None)
+                                  rebuildRecommended: Boolean)
 
   /** Files-before/after of [[compactIvfIndex]]; rows is the (unchanged)
     * vector count, re-verified before the commit. */
@@ -655,19 +550,13 @@ object Similarity {
     * accumulate; past `rebuildRecommendRatio` the returned stats flag a
     * re-quantize LOUDLY (stderr) — recall per probe-fraction degrades
     * gracefully until then, never silently off a cliff, because the
-    * assignment metric and the probe metric remain the same.
-    *
-    * `compactFilesPerCell` (opt-in, 0 = off): each batch holds at most
-    * one file per cell, so once the index holds more than that many live
-    * batches after the append, [[compactIvfIndex]] runs automatically
-    * inside this call — probe cost stays bounded by index BYTES without
-    * an operator remembering the maintenance call. Returned in
-    * `stats.compacted`.
+    * assignment metric and the probe metric remain the same. Each append
+    * adds a batch with a file per touched cell; [[compactIvfIndex]]
+    * rewrites them to one file per cell.
     */
   def appendToIvfIndex(newVecs: DataFrame, vecCol: String, idCol: String,
                        dir: String,
-                       rebuildRecommendRatio: Double = 2.0,
-                       compactFilesPerCell: Int = 0): IvfAppendStats = {
+                       rebuildRecommendRatio: Double = 2.0): IvfAppendStats = {
     val spark = newVecs.sparkSession
     // a corrupt or missing meta fails here, naming the dir — never a
     // silently skipped growth check
@@ -732,16 +621,8 @@ object Similarity {
         f"$builtRows rows), max cell $maxCell vs mean $mean%.1f — appended " +
         s"vectors are riding a quantizer sized for a smaller corpus; run " +
         s"writeIvfIndex to re-quantize")
-    // opt-in auto-compaction, inside the append call's exclusivity window
-    // (appends are already exclusive with probes by the compaction
-    // contract, so the hook adds no new operational requirement)
-    val compacted: Option[IvfCompactStats] =
-      if (compactFilesPerCell > 0 &&
-          IndexStore.live(spark, dir).size > compactFilesPerCell)
-        Some(compactIvfIndex(spark, dir))
-      else None
     IvfAppendStats(appended, total, quant.numCells, maxCell, mean,
-      outgrown || skewed, compacted)
+      outgrown || skewed)
   }
 
   /** Cell assignment as a pure per-row map (exposed for the plan-shape
@@ -1011,7 +892,7 @@ object Similarity {
     */
   def recallCurve(spark: org.apache.spark.sql.SparkSession,
                   dir: String): Option[Array[Double]] = {
-    val ranks = IndexStore.meta(spark, dir, IvfIndex).ints("recallRanks")
+    val ranks = curveRanks(spark, dir)
     if (ranks.isEmpty) None
     else {
       val cells = loadQuantizer(spark, dir).numCells
@@ -1019,6 +900,11 @@ object Similarity {
       Some(Array.tabulate(cells)(p => ranks.count(_ <= p + 1) / n))
     }
   }
+
+  /** The recall-curve ranks stored in the index meta (empty: no curve). */
+  private def curveRanks(spark: org.apache.spark.sql.SparkSession,
+                         dir: String): Array[Int] =
+    IndexStore.meta(spark, dir, IvfIndex).ints("recallRanks")
 
   /** Smallest nProbe whose MEASURED build-time recall meets `target`
     * (top-1, corpus-distribution queries — see [[recallCurve]]). The
@@ -1031,46 +917,43 @@ object Similarity {
     */
   def nProbeForRecall(spark: org.apache.spark.sql.SparkSession,
                       dir: String, target: Double): Int = {
-    require(target > 0 && target <= 1,
-      s"recall target must be in (0, 1], got $target")
-    val ranks = IndexStore.meta(spark, dir, IvfIndex).ints("recallRanks")
-    val cells = loadQuantizer(spark, dir).numCells
-    if (ranks.isEmpty) {
-      System.err.println(s"[graft.ivf] $dir carries no recall curve " +
-        "(built with recallCurveSamples = 0 or below the auto size) — " +
-        "falling back to the autoNProbe candidate budget; rebuild with " +
-        "writeIvfIndex to calibrate")
-      autoNProbe(cells, indexRows(spark, dir))
-    } else nProbeFromRanks(ranks, cells, target)
+    require(target > 0, s"recall target must be in (0, 1], got $target")
+    ProbeCount(0, target).resolve(loadQuantizer(spark, dir).numCells,
+      indexRows(spark, dir), curveRanks(spark, dir), s"index at $dir")
   }
 
-  /** Smallest nProbe whose measured rank CDF meets `target` — the shared
-    * curve→operating-point math behind [[nProbeForRecall]] (on-disk
-    * sidecar curves) and `ivfTopK(recallTarget = …)` (fit-time curves).
+  /** How an IVF probe picks its cell count — the one rule behind every
+    * probe: an explicit `nProbe`, else (`recallTarget` > 0) the smallest
+    * count whose measured top-1 recall meets the target, else the
+    * [[autoNProbe]] candidate budget. Constructing it checks the
+    * arguments, so a caller can fail before any build work.
     */
-  private[graft] def nProbeFromRanks(ranks: Array[Int], cells: Int,
-                                     target: Double): Int = {
-    // Empty ranks (a 1-row corpus yields no measurable queries; a probe
-    // may read lastMemoryRecallRanks before any recallTarget call) is
-    // guarded HERE, not at call sites: with zero measurements no smaller
-    // probe can be certified to meet the target, so probe every cell —
-    // recall 1.0 by construction, and the empty-curve corner only arises
-    // on corpora small enough that full probing is free.
-    if (ranks.isEmpty) cells
-    else {
-      val need = math.ceil(target * ranks.length - 1e-9).toInt
-      val sorted = ranks.sorted
-      math.min(cells, sorted(math.max(0, need - 1)))
-    }
-  }
+  private final case class ProbeCount(nProbe: Int, recallTarget: Double) {
+    require(nProbe <= 0 || recallTarget <= 0,
+      "pass either an explicit nProbe or a recallTarget, not both")
+    require(recallTarget <= 1,
+      s"recall target must be in (0, 1], got $recallTarget")
 
-  /** Diagnostic: the fit-time recall ranks measured by the most recent
-    * `ivfTopK(recallTarget = …)` call in this JVM — lets specs/probes
-    * compare the in-memory curve against the on-disk sidecar curve over
-    * the same corpus (they share `measureRecallRanks`).
-    */
-  private[graft] val lastMemoryRecallRanks =
-    new java.util.concurrent.atomic.AtomicReference[Array[Int]](Array.empty)
+    /** `rows` sizes the budget; `ranks` is the measured curve's rank
+      * list (read only for a target) — the smallest count whose rank CDF
+      * meets the target; an empty list falls back LOUDLY to the budget. */
+    def resolve(cells: Int, rows: => Long, ranks: => Array[Int],
+                where: String): Int =
+      if (nProbe > 0) nProbe
+      else if (recallTarget > 0) {
+        val r = ranks.sorted
+        if (r.nonEmpty) {
+          val need = math.ceil(recallTarget * r.length - 1e-9).toInt
+          math.min(cells, r(math.max(0, need - 1)))
+        } else {
+          System.err.println(s"[graft.ivf] $where carries no recall curve " +
+            "(built with recallCurveSamples = 0, below the auto size, or " +
+            "over one row) — falling back to the autoNProbe candidate " +
+            "budget; rebuild with writeIvfIndex to calibrate")
+          autoNProbe(cells, rows)
+        }
+      } else autoNProbe(cells, rows)
+  }
 
   /** Quantizer sidecar, cached with the index meta (one JSON read per
     * index version — see [[graft.store.IndexStore]]). Shared by every
@@ -1132,8 +1015,7 @@ object Similarity {
   def probeIvfIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
                     query: Seq[Double], k: Int, nProbe: Int = 0,
                     recallTarget: Double = 0.0): DataFrame = {
-    require(nProbe <= 0 || recallTarget <= 0,
-      "pass either an explicit nProbe or a recallTarget, not both")
+    val probe = ProbeCount(nProbe, recallTarget)
     val quant = loadQuantizer(spark, dir)
     // a dimension mismatch would otherwise TRUNCATE silently (zip and
     // the cosine kernel both stop at the shorter length) and return
@@ -1141,17 +1023,18 @@ object Similarity {
     require(query.length == quant.dim,
       s"query dimension ${query.length} != index dimension " +
         s"${quant.dim} (index at $dir)")
+    // a NaN coordinate makes every cell distance and every cosine NaN:
+    // the probe would return k rows scored NaN — fail as the batch does
+    require(!query.exists(_.isNaN),
+      s"query vector contains NaN (index at $dir)")
     // probe by the SAME metric that assigned cells: Euclidean on the
     // L2-normalized query against the (already normalized-space) centroids
     val qn = {
       val n2 = math.sqrt(query.map(x => x * x).sum)
       if (n2 == 0) query else query.map(_ / n2)
     }
-    val probeCells =
-      if (nProbe > 0) nProbe
-      else if (recallTarget > 0) nProbeForRecall(spark, dir, recallTarget)
-      else autoNProbe(quant.numCells, indexRows(spark, dir))
-    val cells = quant.topCells(qn, math.max(1, probeCells))
+    val cells = quant.topCells(qn, math.max(1, probe.resolve(quant.numCells,
+      indexRows(spark, dir), curveRanks(spark, dir), s"index at $dir")))
     IndexStore.read(spark, dir, IvfIndex, "cells")
       .filter(col("_cell").isin(cells.map(Int.box): _*))
       .select(col("id").as("neighbor_id"),
@@ -1162,36 +1045,53 @@ object Similarity {
 
   /** Batch serving over an on-disk IVF index: a whole DataFrame of query
     * vectors probes the index in ONE distributed plan — the on-disk twin
-    * of [[ivfTopK]], with the same output contract
-    * `(query_id, neighbor_id, cos, rank)` and the same
-    * equal-id exclusion. Per query row, ONE fused [[
-    * graft.functions.NearestCells]] expression emits the nProbe nearest
-    * cell ids riding the query scan (no crossJoin, no window — see the
-    * ivfTopK probe-stage comment), then candidates come from an
-    * equi-join against the cell-partitioned corpus files, reading ONLY
-    * the union of the batch's probed cells: the probed-cell set is
-    * enumerated with one narrow pass over the batch (distinct over at
-    * most the cell count — this is the small side by contract) and
-    * pushed as a STATIC partition filter, the batch analogue of
-    * `probeIvfIndex`'s PartitionFilters. Deliberately not left to
-    * dynamic partition pruning — DPP is a broadcast-reuse heuristic that
-    * silently reads every cell when its estimates say the prune isn't
-    * worth it. A batch large enough to probe every cell reads every
-    * cell — then the filter is dropped and the full scan is the correct
-    * plan, not a missed prune. The final per-query top-k is a row_number
-    * window over candidates only (queries × probed-fraction of the
-    * corpus), the irreducible rerank shuffle.
+    * of [[ivfTopK]] through the same probe ([[probeIvf]]), with the same
+    * output contract `(query_id, neighbor_id, cos, rank)`. Candidates
+    * come from an equi-join against the cell-partitioned corpus files,
+    * reading ONLY the union of the batch's probed cells, pushed as a
+    * STATIC partition filter — the batch analogue of `probeIvfIndex`'s
+    * PartitionFilters. Deliberately not left to dynamic partition
+    * pruning — DPP is a broadcast-reuse heuristic that silently reads
+    * every cell when its estimates say the prune isn't worth it. A batch
+    * large enough to probe every cell reads every cell — then the filter
+    * is dropped and the full scan is the correct plan, not a missed
+    * prune.
     *
     * `nProbe = 0` (default) = auto, the shared [[autoNProbe]]
-    * candidate-budget rule (meta-sized, like `probeIvfIndex`).
+    * candidate-budget rule (meta-sized, like `probeIvfIndex`);
+    * `recallTarget` reads the index's stored recall curve.
     */
   def probeIvfIndexBatch(queries: DataFrame, vecCol: String, idCol: String,
                          dir: String, k: Int, nProbe: Int = 0,
                          recallTarget: Double = 0.0): DataFrame = {
-    require(nProbe <= 0 || recallTarget <= 0,
-      "pass either an explicit nProbe or a recallTarget, not both")
+    val probe = ProbeCount(nProbe, recallTarget)
     val spark = queries.sparkSession
     val quant = loadQuantizer(spark, dir)
+    probeIvf(queries, vecCol, idCol, k, quant, probe, indexRows(spark, dir),
+        curveRanks(spark, dir), s"index at $dir") { probed =>
+      val cells = IndexStore.read(spark, dir, IvfIndex, "cells")
+      if (probed.length < quant.numCells)
+        cells.filter(col("_cell").isin(probed.map(Int.box).toSeq: _*))
+      else cells
+    }
+  }
+
+  /** The one IVF probe, behind `ivfTopK` and `probeIvfIndexBatch`.
+    * Per query row, ONE fused [[graft.functions.NearestCells]] expression
+    * emits the nProbe nearest cell ids riding the query scan — a per-row
+    * map. (A crossJoin(centroids) → row_number window carried
+    * queries × cells rows through a hash exchange: a 4×10⁹-row shuffle
+    * for a 1M-query batch at 4096 cells.) Ties break to the lowest cell
+    * id. `candidates` gets the batch's probed cells and returns the
+    * `(id, vec, _cell)` rows to rerank; the per-query top-k is a
+    * row_number window over the candidates only (queries × probed
+    * fraction of the corpus), the irreducible rerank shuffle. A
+    * candidate whose id equals the query's is excluded.
+    */
+  private def probeIvf(queries: DataFrame, vecCol: String, idCol: String,
+                       k: Int, quant: CoarseQuantizer, probe: ProbeCount,
+                       rows: => Long, ranks: => Array[Int], where: String)(
+                       candidates: Array[Int] => DataFrame): DataFrame = {
     val dim = quant.dim
     // pinned across the guard aggregation below and the candidate join
     // in the returned plan: the query source executes TWICE, and a
@@ -1206,15 +1106,12 @@ object Similarity {
       queries.select(col(idCol).as("query_id"),
           col(vecCol).cast("array<double>").as("_qv"))
         .filter(col("_qv").isNotNull && size(col("_qv")) > 0))
-    val probeCells =
-      if (nProbe > 0) nProbe
-      else if (recallTarget > 0) nProbeForRecall(spark, dir, recallTarget)
-      else autoNProbe(quant.numCells, indexRows(spark, dir))
+    val nProbe = probe.resolve(quant.numCells, rows, ranks, where)
     // explode_OUTER: a row whose probe list is empty (every distance NaN)
     // must stay visible to the guard pass below, not vanish pre-guard;
     // its null _cell then drops naturally in the inner candidate join
     val probes = q.withColumn("_cell",
-      explode_outer(quant.probeCells(normalized(col("_qv")), probeCells)))
+      explode_outer(quant.probeCells(normalized(col("_qv")), nProbe)))
     // ONE guard+enumeration pass over the batch (the query source may be
     // expensive — don't execute it once per check): the same agg carries
     // the loud min+max dimension guard of the single-query path (short
@@ -1231,22 +1128,17 @@ object Similarity {
     if (!guardRow.isNullAt(0)) {
       require(guardRow.getInt(0) == dim && guardRow.getInt(1) == dim,
         s"query dimensions [${guardRow.getInt(0)}, ${guardRow.getInt(1)}]" +
-          s" != index dimension $dim (index at $dir)")
+          s" != index dimension $dim ($where)")
       require(guardRow.getInt(2) == 0,
         s"query vectors contain NaN — their probe lists are empty and " +
-          s"the rows would be silently absent from the result (index at $dir)")
+          s"the rows would be silently absent from the result ($where)")
     }
     val probedCells =
       if (guardRow.isNullAt(3)) Array.empty[Int]
       else guardRow.getSeq[Int](3).toArray
-    val cellScan0 = IndexStore.read(spark, dir, IvfIndex, "cells")
-    val cellScan =
-      if (probedCells.length < quant.numCells)
-        cellScan0.filter(col("_cell").isin(probedCells.map(Int.box).toSeq: _*))
-      else cellScan0
     val wk = Window.partitionBy("query_id")
       .orderBy(col("cos").desc, col("neighbor_id").asc)
-    probes.join(cellScan, "_cell")
+    probes.join(candidates(probedCells), "_cell")
       .filter(col("id") =!= col("query_id"))
       .select(col("query_id"), col("id").as("neighbor_id"),
         round(cosine(col("vec"), col("_qv")), 6).as("cos"))

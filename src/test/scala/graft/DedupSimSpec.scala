@@ -241,19 +241,9 @@ class DedupSimSpec extends AnyFunSuite {
     // (ReusedExchange under AQE) — a pinned input defeats that (AQE
     // creates a TableCacheQueryStage PER OCCURRENCE, so exchanges above
     // different occurrences never canonicalize equal; probed r15 —
-    // minhashPairs has the same shape), which is fine on the prefix
-    // route: the duplicated work above the cache is an explode+slice of
-    // already-cached arrays, not the shingle computation.
-    val jacPref = Dedup.ngramJaccardPairs(corpus, "text", "doc_id",
-      n = 3, minJaccard = 0.2, maxShingleDf = Int.MaxValue)
-    jacPref.collect()
-    val prefPlan = jacPref.queryExecution.executedPlan.toString
-    assert(prefPlan.contains("ShuffledHashJoin"), s"want SHJ in:\n$prefPlan")
-    assert(!prefPlan.contains("CartesianProduct") &&
-      !prefPlan.contains("BroadcastNestedLoopJoin"), "no quadratic join")
+    // minhashPairs has the same shape).
     val jac = Dedup.ngramJaccardPairs(corpus, "text", "doc_id",
-      n = 3, minJaccard = 0.2, maxShingleDf = Int.MaxValue,
-      prefixFilter = false)
+      n = 3, minJaccard = 0.2, maxShingleDf = Int.MaxValue)
     jac.collect()
     val plan = jac.queryExecution.executedPlan.toString
     assert(plan.contains("ShuffledHashJoin"), s"want SHJ in:\n$plan")
@@ -488,44 +478,6 @@ class DedupSimSpec extends AnyFunSuite {
     assert(exact.contains((0L, 100L)) && exact.contains((1L, 101L)))
   }
 
-  test("prefix filtering is EXACT: prefix route == full-index route, " +
-       "both cap regimes, several thresholds") {
-    // the PPJoin bound is threshold-dependent — pin equality where the
-    // prefix is short (high t) and where it is nearly the whole set
-    // (low t), on the synthetic near-dup corpus AND the real testdata
-    def key(r: org.apache.spark.sql.Row) = (r.getLong(0), r.getLong(1),
-      math.round(r.getDouble(2) * 1e6))
-    for (t <- Seq(0.2, 0.5, 0.9)) {
-      val full = Dedup.ngramJaccardPairs(corpus, "text", "doc_id",
-        n = 3, minJaccard = t, maxShingleDf = Int.MaxValue,
-        prefixFilter = false).collect().map(key).toSet
-      val pref = Dedup.ngramJaccardPairs(corpus, "text", "doc_id",
-        n = 3, minJaccard = t, maxShingleDf = Int.MaxValue)
-        .collect().map(key).toSet
-      assert(pref == full, s"prefix route diverged at t=$t (no cap): " +
-        s"missing=${(full -- pref).take(5)} extra=${(pref -- full).take(5)}")
-    }
-    // capped regime: the prefix is computed over the POST-CAP universe
-    val fullCap = Dedup.ngramJaccardPairs(corpus, "text", "doc_id",
-      n = 3, minJaccard = 0.3, maxShingleDf = 3, prefixFilter = false)
-      .collect().map(key).toSet
-    val prefCap = Dedup.ngramJaccardPairs(corpus, "text", "doc_id",
-      n = 3, minJaccard = 0.3, maxShingleDf = 3)
-      .collect().map(key).toSet
-    assert(prefCap == fullCap, "prefix route diverged under the df cap")
-    // real testdata at the q36 operating point
-    val docs = Tables.documents(spark, "/root/testdata/sf0.001")
-    val fullQ36 = Dedup.ngramJaccardPairs(docs, "text", "doc_id",
-      n = 3, minJaccard = 0.2, maxShingleDf = Int.MaxValue,
-      prefixFilter = false).collect().map(key).toSet
-    val prefQ36 = Dedup.ngramJaccardPairs(docs, "text", "doc_id",
-      n = 3, minJaccard = 0.2, maxShingleDf = Int.MaxValue)
-      .collect().map(key).toSet
-    assert(prefQ36 == fullQ36 && prefQ36.nonEmpty,
-      s"prefix route diverged on sf0.001 documents (${prefQ36.size} vs " +
-        s"${fullQ36.size} pairs)")
-  }
-
   test("minhash index: on-disk near-dup probe == exact cross truth, " +
        "both budget routes; planted re-crawls drop, fresh docs survive") {
     val dir = java.nio.file.Files.createTempDirectory("mh_idx").toString
@@ -546,8 +498,7 @@ class DedupSimSpec extends AnyFunSuite {
     // exact truth: full-index jaccard over the union, cross pairs only
     // (snapshot ids < 100 <= batch ids, so id_a is always the snapshot)
     val truth = Dedup.ngramJaccardPairs(snap.unionByName(batch), "text",
-        "doc_id", n = 3, minJaccard = 0.5, maxShingleDf = Int.MaxValue,
-        prefixFilter = false)
+        "doc_id", n = 3, minJaccard = 0.5, maxShingleDf = Int.MaxValue)
       .filter(col("id_a") < 100 && col("id_b") >= 100)
       .select(col("id_b"), col("id_a"), col("jaccard"))
       .collect().map(key).toSet
@@ -897,6 +848,11 @@ class DedupSimSpec extends AnyFunSuite {
         Similarity.probeIvfIndexBatch(nanQ, "embedding", "vec_id", dir, k = 1)
       }
       assert(ex.getMessage.contains("NaN"), ex.getMessage)
+      // and so does the single-query probe (every cosine would be NaN)
+      val exOne = intercept[IllegalArgumentException] {
+        Similarity.probeIvfIndex(spark, dir, Seq(Double.NaN) ++ Seq.fill(7)(0.0), k = 1)
+      }
+      assert(exOne.getMessage.contains("NaN"), exOne.getMessage)
     } finally {
       import scala.reflect.io.Directory
       new Directory(new java.io.File(dir)).deleteRecursively()
@@ -1062,11 +1018,11 @@ class DedupSimSpec extends AnyFunSuite {
     }
   }
 
-  test("IVF auto-compaction hook bounds files per cell across appends") {
-    // N small appends WITH the hook: once files/cell pass the threshold
-    // the append itself compacts — one contiguous file per cell again,
-    // probe-visible content unchanged, quantizer untouched, and the
-    // crash discipline is the store's own (pinned in IndexStoreSpec)
+  test("IVF compaction after appends: one file per cell, every row probe-visible") {
+    // N small appends grow the files per cell; one compactIvfIndex call
+    // rewrites them to one contiguous file per cell, probe-visible
+    // content unchanged, quantizer untouched, and the crash discipline
+    // is the store's own (pinned in IndexStoreSpec)
     val rng = new Random(45)
     def cluster(c: Int, ids: Range) = ids.map { i =>
       (i.toLong, Seq.tabulate(16)(d => (if (d == c * 4) 6.0 else 0.0) +
@@ -1078,37 +1034,28 @@ class DedupSimSpec extends AnyFunSuite {
       Similarity.writeIvfIndex(base.toDF("vec_id", "embedding"),
         "embedding", "vec_id", dir, nClusters = 4, seed = 11)
       def files() = cells(dir).inputFiles.length
-      var compactions = 0
       var appended = Seq.empty[(Long, Seq[Double])]
       for (b <- 0 until 5) {
         val batch = (0 until 4).flatMap(c =>
           cluster(c, (1000 + b * 100 + c * 10) until (1000 + b * 100 + c * 10 + 5)))
         appended ++= batch
-        val st = Similarity.appendToIvfIndex(batch.toDF("vec_id", "embedding"),
-          "embedding", "vec_id", dir, compactFilesPerCell = 2)
-        if (st.compacted.isDefined) compactions += 1
-        // the hook's invariant: never more than threshold+1 files per
-        // cell survive an append (the +1 is the append that tripped it)
-        assert(files() <= 3 * 4, s"files unbounded after append $b: ${files()}")
+        Similarity.appendToIvfIndex(batch.toDF("vec_id", "embedding"),
+          "embedding", "vec_id", dir)
       }
-      assert(compactions >= 1, "threshold 2 over 5 appends must compact")
-      // a tighter threshold on the final append forces the compaction
-      // deterministically: the post-hook tree is one file per cell
-      val last = (0 until 4).flatMap(c => cluster(c, (9000 + c) until (9001 + c)))
-      appended ++= last
-      val lastStats = Similarity.appendToIvfIndex(
-        last.toDF("vec_id", "embedding"), "embedding", "vec_id", dir,
-        compactFilesPerCell = 1)
-      assert(lastStats.compacted.isDefined, s"threshold 1 must compact: $lastStats")
-      assert(files() <= 4, s"post-hook tree must be ~one file per cell: ${files()}")
-      // every appended row is probe-visible after the auto-compactions
+      val before = files()
+      assert(before > 4, s"appends must add files per cell: $before")
+      val st = Similarity.compactIvfIndex(spark, dir)
+      assert(st.filesBefore == before && st.filesAfter == files(), st.toString)
+      assert(files() <= 4, s"compacted tree must be ~one file per cell: ${files()}")
+      // every appended row is probe-visible after the compaction
       val total = cells(dir).count()
       assert(total == base.size + appended.size,
-        s"rows lost across auto-compaction: $total")
+        s"rows lost across compaction: $total")
+      assert(st.rows == total, st.toString)
       val q = base.head._2
       val got = Similarity.probeIvfIndex(spark, dir, q, k = 3)
         .collect().map(_.getLong(0))
-      assert(got.nonEmpty, "probe after auto-compaction")
+      assert(got.nonEmpty, "probe after compaction")
     } finally {
       import scala.reflect.io.Directory
       new Directory(new java.io.File(dir)).deleteRecursively()
@@ -1178,48 +1125,118 @@ class DedupSimSpec extends AnyFunSuite {
     }
   }
 
-  test("ivfTopK recallTarget: fit-time curve matches the on-disk sidecar " +
-       "curve and resolves the same operating point") {
+  /** `(query_id, neighbor_id, cos, rank)` rows in query/rank order. */
+  private def topKRows(df: org.apache.spark.sql.DataFrame) =
+    df.orderBy("query_id", "rank").collect().toSeq.map(r =>
+      (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
+
+  test("ivfTopK equals writeIvfIndex + probeIvfIndexBatch row for row: " +
+       "auto, explicit and recallTarget nProbe, flat and two-level") {
     val rng = new Random(47)
-    def cluster(c: Int, ids: Range) = ids.map { i =>
-      (i.toLong, Seq.tabulate(16)(d => (if (d == c * 4) 6.0 else 0.0) +
-        rng.nextGaussian() * 0.1))
-    }
-    // corpus <= both paths' sample caps (64 disk / 256 memory), so the
-    // curve samples are THE WHOLE CORPUS on both sides — identical fit
-    // inputs + identical curve math means identical curves, not just
-    // close ones
-    val base = (0 until 4).flatMap(c => cluster(c, (c * 100) until (c * 100 + 15)))
-    val df = base.toDF("vec_id", "embedding")
-    val dir = java.nio.file.Files.createTempDirectory("ivf_parity").toString
-    try {
-      Similarity.writeIvfIndex(df, "embedding", "vec_id", dir,
-        nClusters = 4, seed = 11, recallCurveSamples = 64)
-      val diskCurve = Similarity.recallCurve(spark, dir)
-        .getOrElse(fail("no disk curve"))
-      val queries = df.filter(col("vec_id") % 25 === 3)
-        .withColumn("vec_id", col("vec_id") + 5000)
-      val byTarget = Similarity.ivfTopK(df, queries, "embedding", "vec_id",
-        k = 3, nClusters = 4, seed = 11, recallTarget = 0.9).collect()
-      assert(byTarget.nonEmpty)
-      val memRanks = Similarity.lastMemoryRecallRanks.get()
-      assert(memRanks.nonEmpty, "fit-time ranks recorded")
-      val memCurve = Array.tabulate(4)(p =>
-        memRanks.count(_ <= p + 1).toDouble / memRanks.length)
-      assert(memCurve.corresponds(diskCurve)((a, b) => math.abs(a - b) < 1e-9),
-        s"mem=${memCurve.toSeq} disk=${diskCurve.toSeq}")
-      // both entry points speak recall and agree on the operating point
-      assert(Similarity.nProbeFromRanks(memRanks, 4, 0.9) ==
-        Similarity.nProbeForRecall(spark, dir, 0.9))
-      // target + explicit nProbe together is a caller error, as on-disk
-      intercept[IllegalArgumentException] {
-        Similarity.ivfTopK(df, queries, "embedding", "vec_id", k = 3,
-          nClusters = 4, nProbe = 2, recallTarget = 0.9)
+    val centers = Array.fill(8)(Array.fill(16)(rng.nextGaussian()))
+    val df = (0L until 400L).map { i =>
+      (i, centers((i % 8).toInt).toSeq.map(_ + rng.nextGaussian() * 0.3))
+    }.toDF("vec_id", "embedding")
+    // corpus ids (the equal-id exclusion) and noisy copies under new ids
+    val picked = df.filter(col("vec_id") % 25 === 3)
+    val queries = picked.unionByName(picked
+      .withColumn("vec_id", col("vec_id") + 5000)
+      .withColumn("embedding", transform(col("embedding"), x => x + 0.05)))
+    // 400 rows auto-size 20 flat cells; 4100 cells go two-level
+    for ((nClusters, maxIter) <- Seq((0, 20), (4100, 3))) {
+      val dir = java.nio.file.Files.createTempDirectory("ivf_parity").toString
+      try {
+        Similarity.writeIvfIndex(df, "embedding", "vec_id", dir,
+          nClusters = nClusters, seed = 11, maxIter = maxIter,
+          recallCurveSamples = 256)
+        for ((nProbe, target) <- Seq((0, 0.0), (2, 0.0), (0, 0.9))) {
+          val disk = topKRows(Similarity.probeIvfIndexBatch(queries,
+            "embedding", "vec_id", dir, k = 3, nProbe = nProbe,
+            recallTarget = target))
+          val mem = topKRows(Similarity.ivfTopK(df, queries, "embedding",
+            "vec_id", k = 3, nClusters = nClusters, nProbe = nProbe,
+            seed = 11, maxIter = maxIter, recallTarget = target))
+          assert(mem.nonEmpty && mem == disk,
+            s"nClusters=$nClusters nProbe=$nProbe target=$target: " +
+              s"${mem.diff(disk).take(3)} vs ${disk.diff(mem).take(3)}")
+        }
+      } finally {
+        import scala.reflect.io.Directory
+        new Directory(new java.io.File(dir)).deleteRecursively()
       }
+    }
+    // target + explicit nProbe together is a caller error, as on-disk
+    intercept[IllegalArgumentException] {
+      Similarity.ivfTopK(df, queries, "embedding", "vec_id", k = 3,
+        nProbe = 2, recallTarget = 0.9)
+    }
+  }
+
+  test("ivfTopK rejects a wrong-dimension or NaN query before any result") {
+    val rng = new Random(48)
+    val df = (0L until 60L).map(i => (i, Seq.fill(8)(rng.nextGaussian())))
+      .toDF("vec_id", "embedding")
+    // one coordinate short: the cosine kernel would score a prefix
+    val short = Seq((9000L, Seq.fill(7)(0.5))).toDF("vec_id", "embedding")
+    val e = intercept[IllegalArgumentException] {
+      Similarity.ivfTopK(df, short, "embedding", "vec_id", k = 3)
+    }
+    assert(e.getMessage.contains("[7, 7]") &&
+      e.getMessage.contains("dimension 8"), e.getMessage)
+    val nan = Seq((9001L, Seq(Double.NaN) ++ Seq.fill(7)(0.5)))
+      .toDF("vec_id", "embedding")
+    val n = intercept[IllegalArgumentException] {
+      Similarity.ivfTopK(df, nan, "embedding", "vec_id", k = 3)
+    }
+    assert(n.getMessage.contains("NaN"), n.getMessage)
+  }
+
+  test("a repeated identical ivfTopK call keeps its result cached") {
+    val rng = new Random(49)
+    val df = (0L until 60L).map(i => (i, Seq.fill(8)(rng.nextGaussian())))
+      .toDF("vec_id", "embedding")
+    val queries = df.filter(col("vec_id") < 5)
+    def call() = Similarity.ivfTopK(df, queries, "embedding", "vec_id",
+      k = 3, seed = 5)
+    val first = topKRows(call())
+    val again = call()
+    // storageLevel reads the session's cache manager (lookupCachedData)
+    assert(again.storageLevel != org.apache.spark.storage.StorageLevel.NONE,
+      "the second call's result was evicted by its own registration")
+    assert(topKRows(again) == first)
+  }
+
+  test("ivfTopK sizes cells from non-null, non-empty vectors, as " +
+       "writeIvfIndex; an empty corpus fails with its message") {
+    val rng = new Random(50)
+    val vecs = (0L until 300L).map(i => (i, Option(Seq.fill(8)(rng.nextGaussian()))))
+    // 400 null or empty vectors: counted, they would size 27 cells, not 18
+    val junk = (300L until 700L).map(i =>
+      (i, if (i % 2 == 0) None else Some(Seq.empty[Double])))
+    val df = (vecs ++ junk).toDF("vec_id", "embedding")
+    val queries = df.filter(col("vec_id") < 20)
+      .withColumn("vec_id", col("vec_id") + 5000)
+    val dir = java.nio.file.Files.createTempDirectory("ivf_nulls").toString
+    try {
+      Similarity.writeIvfIndex(df, "embedding", "vec_id", dir, seed = 3)
+      assert(Similarity.loadQuantizer(spark, dir).numCells ==
+        Similarity.autoCells(300L))
+      // one probed cell: the candidates are exactly the query's cell, so
+      // equal rows need equal cells
+      val disk = topKRows(Similarity.probeIvfIndexBatch(queries, "embedding",
+        "vec_id", dir, k = 3, nProbe = 1))
+      val mem = topKRows(Similarity.ivfTopK(df, queries, "embedding",
+        "vec_id", k = 3, nProbe = 1, seed = 3))
+      assert(mem.nonEmpty && mem == disk)
     } finally {
       import scala.reflect.io.Directory
       new Directory(new java.io.File(dir)).deleteRecursively()
     }
+    val e = intercept[IllegalArgumentException] {
+      Similarity.ivfTopK(df.filter(col("vec_id") >= 300), queries,
+        "embedding", "vec_id", k = 3)
+    }
+    assert(e.getMessage.contains("empty corpus"), e.getMessage)
   }
 
   test("quantizer training sample: full under cap, capped + stable above") {

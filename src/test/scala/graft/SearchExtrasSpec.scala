@@ -107,6 +107,38 @@ class SearchExtrasSpec extends AnyFunSuite {
       Expansions.negativesMask(df, "label", 1, 1.0, "bogus", seed = 5))
   }
 
+  test("over-budget multiplier-capped OvR runs no cap count job") {
+    // the class inventory already counts every binary problem's positives
+    // and negatives; the standalone negativesMask would count both sides
+    // again, two jobs per class
+    import spark.implicits._
+    val rng = new Random(12)
+    val df = (0 until 150).map { i =>
+      (Seq((i % 3) * 4.0 + rng.nextGaussian(), rng.nextGaussian()), (i % 3).toDouble)
+    }.toDF("features", "label")
+    val sc = spark.sparkContext
+    val capCounts = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit =
+        e match {
+          case s: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+              if s.details.contains("Expansions") =>
+            capCounts.incrementAndGet()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      // multiplier 1.0 over 3 balanced classes keeps half the negatives
+      val m = new DistOneVsRest(LogisticRegressionGD, maxNegatives = Some(1.0),
+        negMethod = "multiplier").withBroadcastBudget(1L)
+        .fit(spark, df, "features", "label")
+      graft.obs.StageMetrics.drain(sc)
+      assert(capCounts.get == 0, s"${capCounts.get} cap count jobs")
+      assert(m.predictProba(Array(0.0, 0.0)).length == 3)
+    } finally sc.removeSparkListener(listener)
+  }
+
   test("hash folds are deterministic, seed-sensitive, and balanced") {
     import spark.implicits._
     val df = (0L until 1000L).toDF("id")

@@ -415,7 +415,7 @@ class SubstringDedupSpec extends AnyFunSuite {
     assert(exCol.getMessage.contains("collides"))
   }
 
-  test("span-index auto-compaction hook bounds live batches across appends") {
+  test("span-index compaction after appends leaves one live batch, spans reachable") {
     val rng = new Random(59)
     def rand(n: Int) = Seq.fill(n)(('a' + rng.nextInt(3)).toChar).mkString
     val corpus = (0L until 6L).map(i => i -> rand(140))
@@ -424,28 +424,24 @@ class SubstringDedupSpec extends AnyFunSuite {
       "text", "doc_id", dir, minLen = 24, k = 8)
     def batchNames() = IndexStore.onDisk(spark, dir, SubstringDedup.SpanIndex)
     // one batch carries a copy of corpus doc 2 so probe-equality has
-    // batch-resident truth to find after the compactions
+    // batch-resident truth to find after the compaction
     val probe = Seq(200L -> (rand(15) + corpus(2)._2.substring(5, 85)))
       .toDF("doc_id", "text")
-    var compactions = 0
     for (b <- 0 until 6) {
       val batch = Seq((100L + b) ->
         (rand(20) + (if (b == 1) corpus(2)._2.substring(5, 85) else rand(90))))
-      val didCompact = SubstringDedup.appendToSpanIndex(
-        batch.toDF("doc_id", "text"), "text", "doc_id", dir,
-        batchId = s"b$b", compactEveryBatches = 3)
-      if (didCompact) compactions += 1
-      // invariant: the hook never lets more than threshold+1 live
-      // batches accumulate (the +1 is the append that trips it)
-      assert(batchNames().size <= 4,
-        s"live batches unbounded after b$b: ${batchNames()}")
+      SubstringDedup.appendToSpanIndex(
+        batch.toDF("doc_id", "text"), "text", "doc_id", dir, batchId = s"b$b")
     }
-    assert(compactions >= 1, "threshold 3 over 6 appends must compact")
+    assert(batchNames().size == 7, s"base + 6 appends: ${batchNames()}")
+    SubstringDedup.compactSpanIndex(spark, dir, "compacted")
+    assert(IndexStore.live(spark, dir) == Seq("compacted") &&
+      batchNames() == Set("compacted"), s"one batch after compaction: ${batchNames()}")
     // probe still finds base- and batch-resident spans (content intact)
     val spans = SubstringDedup.spansAgainstIndex(probe, "text", "doc_id", dir)
       .as[(Long, Long, Int, Int, Int)].collect()
-    assert(spans.exists(_._1 == 2L), "base doc reachable after auto-compaction")
-    assert(spans.exists(_._1 == 101L), "appended doc reachable after auto-compaction")
+    assert(spans.exists(_._1 == 2L), "base doc reachable after compaction")
+    assert(spans.exists(_._1 == 101L), "appended doc reachable after compaction")
   }
 
   test("fresh-id compaction after a crashed predecessor cannot resurrect sources") {

@@ -263,6 +263,26 @@ class ToolsSpec extends AnyFunSuite {
     assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 
+  test("one IVF path: Similarity.scala fits quantizers and probes cells only in buildIvf and probeIvf") {
+    // ivfTopK, writeIvfIndex and probeIvfIndexBatch share one build and
+    // one probe; a surface fitting or probing on its own is a second copy
+    // of the path, free to drift in its filters, sizing and guards
+    import scala.jdk.CollectionConverters._
+    val p = java.nio.file.Paths.get("src/main/scala/graft/sim/Similarity.scala")
+    val lines = java.nio.file.Files.readAllLines(p).asScala.toSeq
+    def body(name: String): Range = {
+      val start = lines.indexWhere(_.startsWith(s"  private def $name("))
+      if (start < 0) 0 until 0 else start to lines.indexWhere(_ == "  }", start)
+    }
+    val allowed = Seq(body("buildIvf"), body("probeIvf"))
+    val calls = Seq("""(?<!def )fitCoarseQuantizer\(""", """\.probeCells\(""").map(_.r)
+    val offenders = codeMatches(p, calls).filter { m =>
+      val line = m.stripPrefix(s"$p:").takeWhile(_ != ':').toInt - 1
+      !allowed.exists(_.contains(line))
+    }
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+
   test("DataParallelGBT sums through orderedAggregate, never a SQL sum") {
     // a SQL sum merges its partials in shuffle-fetch order, so two runs of
     // one fit on a cluster could differ in the last bits; the histogram
