@@ -21,7 +21,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
   * Rows shorter than `stride - 1` score only the present prefix
   * (LinearScore's rule); null elements are skipped; a null row is null.
   */
-case class LinearScoreMatrix(child: Expression, weights: Array[Double],
+case class LinearScoreMatrix(child: Expression, weights: Doubles,
                              nClasses: Int)
   extends UnaryExpression {
 
@@ -57,7 +57,7 @@ case class LinearScoreMatrix(child: Expression, weights: Array[Double],
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val wRef = ctx.addReferenceObj("weights", weights, "double[]")
+    val wRef = ctx.addReferenceObj("weights", weights.values, "double[]")
     nullSafeCodeGen(ctx, ev, x => {
       val n = ctx.freshName("n")
       val out = ctx.freshName("out")
@@ -93,6 +93,6 @@ object LinearScoreMatrix {
     require(weights.nonEmpty && weights.map(_.length).distinct.length == 1,
       "weight rows must be non-empty and equal length")
     GraftSqlBridge.column(LinearScoreMatrix(GraftSqlBridge.expression(c),
-      weights.flatten, weights.length))
+      new Doubles(weights.flatten), weights.length))
   }
 }

@@ -30,11 +30,11 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
   * prefix (missing coords read as 0.0), as in [[NearestCentroid]];
   * callers guard exact dimensions themselves. A null row is null.
   */
-case class NearestCells(child: Expression, centroids: Array[Double],
-                        cellIds: Array[Int], dim: Int, nProbe: Int)
+case class NearestCells(child: Expression, centroids: Doubles,
+                        cellIds: Ints, dim: Int, nProbe: Int)
   extends UnaryExpression {
 
-  require(dim > 0 && cellIds.nonEmpty &&
+  require(dim > 0 && cellIds.length > 0 &&
     centroids.length == cellIds.length * dim,
     s"centroid matrix ${centroids.length} != ${cellIds.length} cells × $dim")
   require(nProbe > 0, s"nProbe must be positive, got $nProbe")
@@ -89,8 +89,8 @@ case class NearestCells(child: Expression, centroids: Array[Double],
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cRef = ctx.addReferenceObj("centroids", centroids, "double[]")
-    val idRef = ctx.addReferenceObj("cellIds", cellIds, "int[]")
+    val cRef = ctx.addReferenceObj("centroids", centroids.values, "double[]")
+    val idRef = ctx.addReferenceObj("cellIds", cellIds.values, "int[]")
     nullSafeCodeGen(ctx, ev, x => {
       val n = ctx.freshName("n")
       val bestD = ctx.freshName("bestD")
@@ -154,7 +154,7 @@ object NearestCells {
       "centroid rows must be equal length")
     val sorted = centroids.sortBy(_._1)
     GraftSqlBridge.column(NearestCells(GraftSqlBridge.expression(c),
-      sorted.iterator.flatMap(_._2).toArray, sorted.map(_._1).toArray, dim,
-      nProbe))
+      new Doubles(sorted.iterator.flatMap(_._2).toArray),
+      new Ints(sorted.map(_._1).toArray), dim, nProbe))
   }
 }

@@ -32,11 +32,11 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
   * row), null row is null.
   */
 case class NearestCellsTwoLevel(child: Expression,
-                                cents1: Array[Double], cents2: Array[Double],
+                                cents1: Doubles, cents2: Doubles,
                                 dim1: Int, dim2: Int, nProbe: Int)
   extends UnaryExpression with CodegenFallback {
 
-  require(dim1 > 0 && dim2 > 0 && cents1.nonEmpty && cents2.nonEmpty &&
+  require(dim1 > 0 && dim2 > 0 && cents1.length > 0 && cents2.length > 0 &&
     cents1.length % dim1 == 0 && cents2.length % dim2 == 0,
     s"codebooks ${cents1.length}/${cents2.length} not multiples of " +
       s"$dim1/$dim2")
@@ -57,8 +57,8 @@ case class NearestCellsTwoLevel(child: Expression,
   override def nullSafeEval(v: Any): Any = {
     val x = v.asInstanceOf[ArrayData]
     val nEl = x.numElements()
-    val d1 = NearestCellsTwoLevel.halfDists(x, nEl, 0, dim1, cents1, k1)
-    val d2 = NearestCellsTwoLevel.halfDists(x, nEl, dim1, dim2, cents2, k2)
+    val d1 = NearestCellsTwoLevel.halfDists(x, nEl, 0, dim1, cents1.values, k1)
+    val d2 = NearestCellsTwoLevel.halfDists(x, nEl, dim1, dim2, cents2.values, k2)
     val bestD = Array.fill(p)(Double.MaxValue)
     val bestC = new Array[Int](p)
     var c1 = 0
@@ -152,6 +152,6 @@ object NearestCellsTwoLevel {
     val d1 = cents1.head.length
     val d2 = cents2.head.length
     GraftSqlBridge.column(NearestCellsTwoLevel(GraftSqlBridge.expression(c),
-      cents1.flatten, cents2.flatten, d1, d2, nProbe))
+      new Doubles(cents1.flatten), new Doubles(cents2.flatten), d1, d2, nProbe))
   }
 }

@@ -33,11 +33,11 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
   * silently producing null (the nulls-first-window misassignment bug
   * this fusion also removes).
   */
-case class NearestCentroid(child: Expression, centroids: Array[Double],
-                           cellIds: Array[Int], dim: Int)
+case class NearestCentroid(child: Expression, centroids: Doubles,
+                           cellIds: Ints, dim: Int)
   extends UnaryExpression {
 
-  require(dim > 0 && cellIds.nonEmpty &&
+  require(dim > 0 && cellIds.length > 0 &&
     centroids.length == cellIds.length * dim,
     s"centroid matrix ${centroids.length} != ${cellIds.length} cells × $dim")
 
@@ -79,8 +79,8 @@ case class NearestCentroid(child: Expression, centroids: Array[Double],
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cRef = ctx.addReferenceObj("centroids", centroids, "double[]")
-    val idRef = ctx.addReferenceObj("cellIds", cellIds, "int[]")
+    val cRef = ctx.addReferenceObj("centroids", centroids.values, "double[]")
+    val idRef = ctx.addReferenceObj("cellIds", cellIds.values, "int[]")
     nullSafeCodeGen(ctx, ev, x => {
       val n = ctx.freshName("n")
       val best = ctx.freshName("best")
@@ -129,6 +129,7 @@ object NearestCentroid {
       "centroid rows must be equal length")
     val sorted = centroids.sortBy(_._1)
     GraftSqlBridge.column(NearestCentroid(GraftSqlBridge.expression(c),
-      sorted.iterator.flatMap(_._2).toArray, sorted.map(_._1).toArray, dim))
+      new Doubles(sorted.iterator.flatMap(_._2).toArray),
+      new Ints(sorted.map(_._1).toArray), dim))
   }
 }

@@ -48,12 +48,12 @@ import graft.exec.{CART, GBT}
   * bit-for-bit. A null row is null.
   */
 case class TreeEnsembleScore(child: Expression,
-                             feature: Array[Int], threshold: Array[Double],
-                             left: Array[Int], right: Array[Int],
-                             leafValue: Array[Double],
-                             treeStart: Array[Int], treeOut: Array[Int],
-                             treeWeight: Array[Double],
-                             bias: Array[Double], stride: Int, outDiv: Double)
+                             feature: Ints, threshold: Doubles,
+                             left: Ints, right: Ints,
+                             leafValue: Doubles,
+                             treeStart: Ints, treeOut: Ints,
+                             treeWeight: Doubles,
+                             bias: Doubles, stride: Int, outDiv: Double)
   extends UnaryExpression {
 
   private val nTrees = treeStart.length
@@ -77,7 +77,7 @@ case class TreeEnsembleScore(child: Expression,
     val x = v.asInstanceOf[ArrayData]
     val n = x.numElements()
     val out = new Array[Double](nOut)
-    System.arraycopy(bias, 0, out, 0, nOut)
+    System.arraycopy(bias.values, 0, out, 0, nOut)
     var t = 0
     while (t < nTrees) {
       var i = treeStart(t)
@@ -101,15 +101,15 @@ case class TreeEnsembleScore(child: Expression,
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val fRef = ctx.addReferenceObj("feature", feature, "int[]")
-    val thrRef = ctx.addReferenceObj("threshold", threshold, "double[]")
-    val lRef = ctx.addReferenceObj("left", left, "int[]")
-    val rRef = ctx.addReferenceObj("right", right, "int[]")
-    val vRef = ctx.addReferenceObj("leafValue", leafValue, "double[]")
-    val tsRef = ctx.addReferenceObj("treeStart", treeStart, "int[]")
-    val toRef = ctx.addReferenceObj("treeOut", treeOut, "int[]")
-    val twRef = ctx.addReferenceObj("treeWeight", treeWeight, "double[]")
-    val bRef = ctx.addReferenceObj("bias", bias, "double[]")
+    val fRef = ctx.addReferenceObj("feature", feature.values, "int[]")
+    val thrRef = ctx.addReferenceObj("threshold", threshold.values, "double[]")
+    val lRef = ctx.addReferenceObj("left", left.values, "int[]")
+    val rRef = ctx.addReferenceObj("right", right.values, "int[]")
+    val vRef = ctx.addReferenceObj("leafValue", leafValue.values, "double[]")
+    val tsRef = ctx.addReferenceObj("treeStart", treeStart.values, "int[]")
+    val toRef = ctx.addReferenceObj("treeOut", treeOut.values, "int[]")
+    val twRef = ctx.addReferenceObj("treeWeight", treeWeight.values, "double[]")
+    val bRef = ctx.addReferenceObj("bias", bias.values, "double[]")
     nullSafeCodeGen(ctx, ev, x => {
       val n = ctx.freshName("n")
       val out = ctx.freshName("out")
@@ -195,9 +195,11 @@ object TreeEnsembleScore {
                     treeWeight: Array[Double], bias: Array[Double],
                     stride: Int, outDiv: Double): Column =
     GraftSqlBridge.column(TreeEnsembleScore(GraftSqlBridge.expression(c),
-      flat.feature.toArray, flat.threshold.toArray, flat.left.toArray,
-      flat.right.toArray, flat.value.toArray, flat.treeStart.toArray,
-      treeOut, treeWeight, bias, stride, outDiv))
+      new Ints(flat.feature.toArray), new Doubles(flat.threshold.toArray),
+      new Ints(flat.left.toArray), new Ints(flat.right.toArray),
+      new Doubles(flat.value.toArray), new Ints(flat.treeStart.toArray),
+      new Ints(treeOut), new Doubles(treeWeight), new Doubles(bias), stride,
+      outDiv))
 
   /** Leaf value vector of one tree: `TreeModel.predictProba` for a
     * classifier (length k), `Array(prediction)` for a regressor.

@@ -2,7 +2,11 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.execution.ExplainMode
+import org.apache.spark.sql.execution.{ExplainMode, SortExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.Exchange
+import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
 
 /** The FINAL (post-AQE) formatted physical plan of registered queries,
   * plus the red-flag line the plan-audit loop greps for:
@@ -16,13 +20,42 @@ import org.apache.spark.sql.execution.ExplainMode
   * the whole-stage generated code (`<query>.codegen.txt`) — to check,
   * say, whether subexpression elimination shares a tokenize across
   * output columns.
+  *
+  * The plan text is this tool's output, so its session unsets the plan
+  * string bound `Sessions` sets; the red-flag counts come from the plan
+  * tree ([[operators]]), which no bound truncates.
   */
 object PlanDump {
+  /** Every operator of an executed plan: the final plan inside AQE, the
+    * plan inside each query stage, subqueries, and the plans of cached
+    * relations, nested one inside the next.
+    */
+  def operators(plan: SparkPlan): Iterator[SparkPlan] = {
+    val inner = plan match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case s: QueryStageExec => Seq(s.plan)
+      case m: InMemoryTableScanExec => Seq(m.relation.cachedPlan)
+      case p => p.children ++ p.subqueries
+    }
+    Iterator.single(plan) ++ inner.iterator.flatMap(operators)
+  }
+
+  /** The red-flag operator counts of an executed plan. */
+  def redFlags(plan: SparkPlan): Map[String, Int] = {
+    val ops = operators(plan).toSeq
+    def n(pf: PartialFunction[SparkPlan, Unit]) = ops.count(pf.isDefinedAt)
+    Map("cartesian" -> n { case _: CartesianProductExec => },
+      "bnlj" -> n { case _: BroadcastNestedLoopJoinExec => },
+      "exchanges" -> n { case _: Exchange => },
+      "sorts" -> n { case _: SortExec => })
+  }
+
   def main(args: Array[String]): Unit = {
     val a = ProbeArgs(args)
     require(a.positional.size >= 2, "usage: PlanDump <sfDir> [opt=v...] <query...>")
     val sfDir = a.positional.head
     val spark = a.session()
+    spark.conf.unset("spark.sql.maxPlanStringLength")
     def emit(file: String, text: String): Unit = a.opts.get("out") match {
       case Some(dir) =>
         Files.createDirectories(Paths.get(dir))
@@ -41,15 +74,12 @@ object PlanDump {
       if (a.int("codegen", 0) == 1)
         emit(s"$name.codegen.txt", org.apache.spark.sql.execution.debug
           .codegenString(df.queryExecution.executedPlan))
-      // post-execution AQE output appends the pre-execution tree under an
-      // "Initial Plan" header — count markers in the FINAL plan only
-      val plan = full.split("== Initial Plan ==")(0)
-      def n(marker: String) = plan.linesIterator.count(_.contains(marker))
-      println(s"[plan] $name: cartesian=${n("CartesianProduct")} " +
-        s"bnlj=${n("BroadcastNestedLoop")} exchanges=${n("Exchange")} " +
+      val flags = redFlags(df.queryExecution.executedPlan)
+      println(s"[plan] $name: cartesian=${flags("cartesian")} " +
+        s"bnlj=${flags("bnlj")} exchanges=${flags("exchanges")} " +
         s"codegen_stages=${
           org.apache.spark.sql.GraftSqlBridge.codegenStageCount(df)} " +
-        s"sorts=${n("Sort ")}")
+        s"sorts=${flags("sorts")}")
     }
     spark.stop()
   }

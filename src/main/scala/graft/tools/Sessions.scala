@@ -4,9 +4,33 @@ import org.apache.spark.sql.SparkSession
 
 /** One place to build correctly-configured sessions for the mains:
   * graft extensions (nanos-pushdown rule), AQE, UTC, right-sized shuffle
-  * partitions (cores, never the 200 default).
+  * partitions (cores, never the 200 default), and two driver-side costs
+  * cut at session start:
+  *
+  *  - `spark.sql.maxPlanStringLength` = [[MaxPlanString]]. Every Spark
+  *    action builds plan text on the driver's critical path (AQE's
+  *    `onUpdatePlan`, the SQL execution start event, a cached relation's
+  *    name), and over pinned stages nested one inside the next that text
+  *    grows about 2x per stage (6.1 MB formatted at the curation's `packed`
+  *    stage). Unbounded, `explainString` was on 328 of 774 main-thread JFR
+  *    samples of a `curate_ingest` run (4-core host, `local[3]`); bounded,
+  *    175 of 639.
+  *  - `fs.file.impl` / `fs.AbstractFileSystem.file.impl` =
+  *    [[graft.store.LocalFs]] and its FileContext twin. Without native
+  *    Hadoop the stock local filesystem forks a `chmod` per created file
+  *    or directory and a `readlink` per checkpoint rename: 711 forks per
+  *    `curate_ingest` run, about 5 ms each; with this class, 17 are left
+  *    (JVM start and Spark's `rm -rf` at session stop).
+  *
+  * To see a full plan, use `graft.tools.PlanDump` (its session unsets the
+  * bound) or `spark.conf.unset("spark.sql.maxPlanStringLength")` on your
+  * session. A session built elsewhere gets neither setting;
+  * `SPARK_GRAFT_EXTRA_CONF` overrides each for A/B runs.
   */
 object Sessions {
+  /** Plan text bound, in characters: the measured 8 KiB. */
+  val MaxPlanString = 8192
+
   def build(master: String, shufflePartitions: Int): SparkSession =
     builder(master, shufflePartitions).getOrCreate()
 
@@ -55,6 +79,10 @@ object Sessions {
       // SPARK_GRAFT_EXTRA_CONF).
       .config("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider")
+      .config("spark.sql.maxPlanStringLength", MaxPlanString.toString)
+      .config("spark.hadoop.fs.file.impl", classOf[graft.store.LocalFs].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+        classOf[graft.store.LocalFs.Fc].getName)
       // shuffle compression stays ON even in local mode: the CPU saving
       // measured at bench scale was noise, while a pair-heavy shuffle
       // (LSH candidate joins at probe scale) ran local disk out of space

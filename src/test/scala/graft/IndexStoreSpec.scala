@@ -116,30 +116,36 @@ class IndexStoreSpec extends AnyFunSuite {
   for ((name, subject) <- Seq("span" -> (() => span), "ivf" -> (() => ivf),
                         "minhash" -> (() => minhash));
        stop <- Seq(Stop.AfterData, Stop.AfterReplaces, Stop.AfterCommit,
-                   Stop.MidDeletes)) {
+                   Stop.MidDeletes);
+       localFs <- Seq(false, true)) {
     test(s"$name index: compaction crash $stop reads as one generation; " +
-         "same-id retry and fresh-id compaction converge") {
-      val sub = subject()
-      val dir = tempDir(s"store_$name")
-      try {
-        sub.build(dir)
-        val before = sub.probe(dir)
-        def compact(id: String, at: Stop.Value) =
-          IndexStore.compact(spark, dir, sub.kind, id, at)(sub.rewrite(dir, id))
-        def onDisk() = IndexStore.onDisk(spark, dir, sub.kind)
-        compact("c1", stop)
-        assert(sub.probe(dir) == before, s"crashed at $stop")
-        compact("c1", Stop.Never)
-        assert(onDisk() == Set("c1"), s"retry after $stop")
-        assert(sub.probe(dir) == before, s"retry after $stop")
-        // the same crash again, then the NEXT compaction under a fresh id
-        compact("c2", stop)
-        assert(sub.probe(dir) == before, s"second crash at $stop")
-        compact("c3", Stop.Never)
-        assert(onDisk() == Set("c3"), s"fresh id after $stop")
-        assert(sub.probe(dir) == before, s"fresh id after $stop")
-      } finally rm(dir)
+         "same-id retry and fresh-id compaction converge" +
+         (if (localFs) " (graft.store.LocalFs)" else "")) {
+      if (localFs) LocalFsSpec.withLocalFs(spark)(crashCase(subject(), name, stop))
+      else crashCase(subject(), name, stop)
     }
+  }
+
+  private def crashCase(sub: Subject, name: String, stop: Stop.Value): Unit = {
+    val dir = tempDir(s"store_$name")
+    try {
+      sub.build(dir)
+      val before = sub.probe(dir)
+      def compact(id: String, at: Stop.Value) =
+        IndexStore.compact(spark, dir, sub.kind, id, at)(sub.rewrite(dir, id))
+      def onDisk() = IndexStore.onDisk(spark, dir, sub.kind)
+      compact("c1", stop)
+      assert(sub.probe(dir) == before, s"crashed at $stop")
+      compact("c1", Stop.Never)
+      assert(onDisk() == Set("c1"), s"retry after $stop")
+      assert(sub.probe(dir) == before, s"retry after $stop")
+      // the same crash again, then the NEXT compaction under a fresh id
+      compact("c2", stop)
+      assert(sub.probe(dir) == before, s"second crash at $stop")
+      compact("c3", Stop.Never)
+      assert(onDisk() == Set("c3"), s"fresh id after $stop")
+      assert(sub.probe(dir) == before, s"fresh id after $stop")
+    } finally rm(dir)
   }
 
   test("an uncommitted IVF append is invisible to both probes and to the " +

@@ -103,11 +103,10 @@ class OpsSpec extends AnyFunSuite {
     val points = (0 until 100).map(i => (i.toLong, i * 3.0)).toDF("pid", "v")
     val intervals = (0 until 20).map(i => (i.toLong, i * 20.0, i * 20.0 + 30.0))
       .toDF("iid", "lo", "hi")
-    val plan = RangeJoin.pointInInterval(points, intervals,
+    val joined = RangeJoin.pointInInterval(points, intervals,
       "v", "lo", "hi", bucketWidth = 20.0)
-      .queryExecution.executedPlan.toString
-    assert(!plan.contains("NestedLoop") && !plan.contains("Cartesian"),
-      s"range join must stay an equi-join:\n$plan")
+    assert(!PlanNodes.has(joined, "NestedLoop") && !PlanNodes.has(joined, "Cartesian"),
+      s"range join must stay an equi-join: ${PlanNodes.of(joined).map(_.nodeName)}")
   }
 
   test("range join fails loudly past the interval fan-out bound") {

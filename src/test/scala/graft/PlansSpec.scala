@@ -20,9 +20,9 @@ class PlansSpec extends AnyFunSuite {
   test("time filters on the rebuilt nanos column reach the parquet scan") {
     val filtered = events.filter(
       col("ts") >= lit("2024-01-03 00:00:00").cast("timestamp"))
-    val plan = filtered.queryExecution.executedPlan.toString
-    assert(plan.contains("PushedFilters: [IsNotNull(ts), GreaterThanOrEqual(ts,"),
-      s"expected raw-long pushdown on ts, plan:\n${plan.take(2000)}")
+    val pushed = PlanNodes.fileScans(filtered).map(_.metadata("PushedFilters"))
+    assert(pushed.exists(_.startsWith("[IsNotNull(ts), GreaterThanOrEqual(ts,")),
+      s"expected raw-long pushdown on ts, scans push: $pushed")
   }
 
   test("the rewrite preserves exact filter semantics vs driver-side compare") {
@@ -93,9 +93,8 @@ class PlansSpec extends AnyFunSuite {
       graft.sources.Bucketing.writeBucketed(lineitem, "lineitem_b", "o_orderkey", 8)
       val joined = graft.sources.Bucketing
         .bucketedJoin(spark, "orders_b", "lineitem_b", "o_orderkey")
-      val plan = joined.queryExecution.executedPlan.toString
-      assert(!plan.contains("Exchange"),
-        s"bucketed join must not shuffle, plan:\n${plan.take(1500)}")
+      assert(!PlanNodes.has(joined, "Exchange"),
+        s"bucketed join must not shuffle, plan:\n${PlanNodes.of(joined).map(_.nodeName)}")
       assert(joined.count() == lineitem.count(), "inner join keeps all lineitems")
     } finally {
       spark.sql("DROP TABLE IF EXISTS orders_b")
@@ -110,9 +109,9 @@ class PlansSpec extends AnyFunSuite {
     graft.sources.Sources.writePartitioned(events, s"$base/events_p", Seq("event_type"))
     val pruned = graft.sources.Sources.readPartitioned(spark, s"$base/events_p")
       .filter(org.apache.spark.sql.functions.col("event_type") === "click")
-    val plan = pruned.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters: [isnotnull(event_type"),
-      s"partition pruning must reach the scan:\n${plan.take(1200)}")
+    val partFilters = PlanNodes.fileScans(pruned).map(_.metadata("PartitionFilters"))
+    assert(partFilters.exists(_.startsWith("[isnotnull(event_type")),
+      s"partition pruning must reach the scan: $partFilters")
     assert(pruned.count() ==
       events.filter(org.apache.spark.sql.functions.col("event_type") === "click").count())
 
@@ -130,38 +129,77 @@ class PlansSpec extends AnyFunSuite {
     assert(backOrc.count() == slim.count())
     assert(backOrc.schema.fieldNames.sorted.toSeq ==
       slim.schema.fieldNames.sorted.toSeq)
-    val orcPlan = backOrc
-      .filter(org.apache.spark.sql.functions.col("value") > 100.0)
-      .queryExecution.executedPlan.toString
-    assert(orcPlan.contains("PushedFilters: [IsNotNull(value), GreaterThan(value,"),
-      s"ORC predicate pushdown:\n${orcPlan.take(1200)}")
+    val orcPushed = PlanNodes.fileScans(backOrc
+      .filter(org.apache.spark.sql.functions.col("value") > 100.0))
+      .map(_.metadata("PushedFilters"))
+    assert(orcPushed.exists(_.startsWith("[IsNotNull(value), GreaterThan(value,")),
+      s"ORC predicate pushdown: $orcPushed")
   }
 
   test("dimension joins broadcast; fact scans prune columns") {
     val q4 = SparkEntry.queries("q04_dim_join")(spark, "/root/testdata/sf0.001")
-    val plan = q4.queryExecution.executedPlan.toString
-    assert(plan.contains("BroadcastHashJoin"), "part side must broadcast")
+    assert(PlanNodes.has(q4, "BroadcastHashJoin"), "part side must broadcast")
     val q2 = SparkEntry.queries("q02_filter_project")(spark, "/root/testdata/sf0.001")
-    val scan = q2.queryExecution.executedPlan.toString
-    assert(scan.contains("PushedFilters: [IsNotNull(l_shipdate)"),
+    assert(PlanNodes.fileScans(q2).exists(_.metadata("PushedFilters")
+      .startsWith("[IsNotNull(l_shipdate)")),
       "millis-native lineitem filters push down")
-    assert(!scan.contains("l_tax"), "untouched columns pruned from ReadSchema")
+    assert(PlanNodes.fileScans(q2).forall(!_.requiredSchema.fieldNames.contains("l_tax")) &&
+      !PlanNodes.of(q2).exists(_.output.exists(_.name == "l_tax")),
+      "untouched columns pruned from ReadSchema")
   }
 
   test("q03 keeps the fact unshuffled behind two independent broadcasts") {
     val q3 = SparkEntry.queries("q03_join_revenue")(spark, "/root/testdata/sf0.001")
     q3.collect()
-    val plan = q3.queryExecution.executedPlan.toString
-    // (the AQE toString repeats the plan, so count joins by kind, not
-    // occurrences)
-    assert(plan.contains("BroadcastHashJoin"), s"dims must broadcast:\n$plan")
-    assert(!plan.contains("SortMergeJoin") && !plan.contains("ShuffledHashJoin"),
-      s"no shuffle join on the fact:\n$plan")
+    val names = PlanNodes.of(q3).map(_.nodeName)
+    assert(names.contains("BroadcastHashJoin"), s"dims must broadcast: $names")
+    assert(!names.contains("SortMergeJoin") && !names.contains("ShuffledHashJoin"),
+      s"no shuffle join on the fact: $names")
     // lineitem never shuffles on a join key — the only hash exchange is
     // the tiny post-aggregation one on the group keys
-    assert(!"Exchange hashpartitioning\\((l_orderkey|o_orderkey|o_custkey|c_custkey)"
-      .r.findFirstIn(plan).isDefined,
-      s"join-key shuffle of the fact crept in:\n$plan")
+    val joinKeys = Set("l_orderkey", "o_orderkey", "o_custkey", "c_custkey")
+    val keyShuffles = PlanNodes.of(q3).collect {
+      case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec =>
+        e.outputPartitioning
+    }.collect {
+      case h: org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+          if h.expressions.flatMap(_.references).exists(a => joinKeys(a.name)) => h
+    }
+    assert(keyShuffles.isEmpty, s"join-key shuffle of the fact crept in: $keyShuffles")
+  }
+
+  test("PlanDump's red flags walk nested cached plans past the plan text bound") {
+    val bound = graft.tools.Sessions.MaxPlanString
+    assert(spark.conf.get("spark.sql.maxPlanStringLength") == bound.toString)
+    def wide(df: org.apache.spark.sql.DataFrame) =
+      df.select(col("id") +: (1 to 24).map(i => (col("id") * i).as(s"wide_column_$i")): _*)
+    // the innermost stage holds the only nested-loop join; each level
+    // above sorts on its own column and is cached, one inside the next
+    val levels = 5
+    val stages = scala.collection.mutable.ArrayBuffer(wide(spark.range(0, 40)
+      .crossJoin(spark.range(0, 3).withColumnRenamed("id", "r"))
+      .select((col("id") * 3 + col("r")).as("id"))).cache())
+    for (level <- 1 to levels)
+      stages += wide(stages.last.sort(col(s"wide_column_$level").desc)).cache()
+    try {
+      val top = stages.last.sort(col("wide_column_24"))
+      top.queryExecution.toRdd.count()
+      val plan = top.queryExecution.executedPlan
+      val text = plan.toString
+      spark.conf.unset("spark.sql.maxPlanStringLength")
+      val full = try plan.toString
+        finally spark.conf.set("spark.sql.maxPlanStringLength", bound.toString)
+      assert(full.length > 4 * bound && text.length < bound + 200, (full.length, text.length))
+      val joins = Seq("CartesianProduct", "BroadcastNestedLoopJoin")
+      assert(joins.exists(full.contains) && !joins.exists(text.contains),
+        "the innermost join is past the cut")
+      val flags = graft.tools.PlanDump.redFlags(plan)
+      assert(flags("cartesian") + flags("bnlj") == 1, flags)
+      assert(flags("sorts") == levels + 1, flags)
+      assert(flags("exchanges") >= levels + 1, flags)
+      assert(PlanNodes.of(plan).count(_.nodeName == "Range") == 2,
+        "both ranges of the innermost stage")
+    } finally stages.foreach(_.unpersist(blocking = false))
   }
 
   // ---- Par.fanOut routing contract -------------------------------------
@@ -284,11 +322,6 @@ class PlansSpec extends AnyFunSuite {
 
   // ---- rows-derived width + pins planned on a scoped clone ------------
 
-  /** Every hashpartitioning width in a plan's tree string. */
-  private def hashWidths(plan: String): Seq[Int] =
-    """hashpartitioning\([^)]*?(\d+)\)""".r.findAllMatchIn(plan)
-      .map(_.group(1).toInt).toSeq
-
   /** The cached plans `df` reads. */
   private def cachedPlans(df: org.apache.spark.sql.DataFrame) =
     df.queryExecution.withCachedData.collect {
@@ -345,7 +378,7 @@ class PlansSpec extends AnyFunSuite {
       assert(pinned.sparkSession eq spark, "the pin comes back on the caller")
       assert(pinned.storageLevel !=
         org.apache.spark.storage.StorageLevel.NONE, "scoped frame is pinned")
-      val widths = cachedPlans(pinned).flatMap(p => hashWidths(p.toString))
+      val widths = cachedPlans(pinned).flatMap(PlanNodes.hashWidths)
       assert(widths.nonEmpty && widths.forall(_ == 2),
         s"the cached plan's exchanges must plan at width 2, got $widths")
       assert(pinned.collect().sortBy(_.getLong(0)).toSeq ==
@@ -378,9 +411,8 @@ class PlansSpec extends AnyFunSuite {
     val bWidths = new java.util.concurrent.ConcurrentLinkedQueue[Seq[Int]]()
     val b = new Thread(() => {
       while (!done.get) {
-        val plan = left.join(right.hint("merge"), "id")
-          .queryExecution.executedPlan.toString
-        bWidths.add(hashWidths(plan))
+        bWidths.add(PlanNodes.hashWidths(left.join(right.hint("merge"), "id")
+          .queryExecution.executedPlan))
       }
     })
     b.start()
@@ -389,7 +421,7 @@ class PlansSpec extends AnyFunSuite {
         // a different plan each round, so every call pins afresh
         val pairs = graft.dedup.Dedup.simhashPairs(
           docs.filter(col("doc_id") =!= i), "text", "doc_id")
-        val widths = cachedPlans(pairs).flatMap(p => hashWidths(p.toString))
+        val widths = cachedPlans(pairs).flatMap(PlanNodes.hashWidths)
         pairs.collect()
         widths
       } finally { done.set(true); b.join() }

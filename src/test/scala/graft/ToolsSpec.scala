@@ -107,6 +107,30 @@ class ToolsSpec extends AnyFunSuite {
     assert(mains.size <= 10)
   }
 
+  test("only Sessions sets Hadoop keys or the plan string bound") {
+    // session-start settings live in one place: a `spark.hadoop.` key set
+    // elsewhere reaches only the sessions that code builds, and the plan
+    // text bound is lifted only where plan text is the output (PlanDump)
+    import scala.jdk.CollectionConverters._
+    val allowed = Map(
+      "src/main/scala/graft/tools/Sessions.scala" -> Seq("spark.hadoop.", "maxPlanStringLength"),
+      "src/main/scala/graft/tools/PlanDump.scala" -> Seq("maxPlanStringLength"))
+    val offenders = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
+      .iterator().asScala.filter(_.toString.endsWith(".scala"))
+      .flatMap { p =>
+        val src = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
+        Seq("spark.hadoop.", "maxPlanStringLength")
+          .filter(t => src.contains(t) && !allowed.getOrElse(p.toString, Nil).contains(t))
+          .map(t => s"$p: $t")
+      }.toSeq
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+    val planDump = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get("src/main/scala/graft/tools/PlanDump.scala")), "UTF-8")
+    assert("maxPlanStringLength".r.findAllIn(planDump).length == 1 &&
+      planDump.contains("""spark.conf.unset("spark.sql.maxPlanStringLength")"""),
+      "PlanDump may only unset the bound")
+  }
+
   test("only graft.store implements the index commit protocol") {
     // one commit protocol: markers, the index meta and renames live in
     // graft/store/ alone, so a fourth protocol cannot creep back

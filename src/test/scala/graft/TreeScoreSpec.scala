@@ -166,6 +166,36 @@ class TreeScoreSpec extends AnyFunSuite {
       t.predict(Array(0.1, Double.NaN, Double.NaN, Double.NaN))))
   }
 
+  test("predictions and probabilities of one LogRegModel share one " +
+       "LinearScoreMatrix per row, bit-identical to each alone") {
+    val rng = new scala.util.Random(51)
+    val m = graft.exec.LogRegModel(Array.fill(3)(Array.fill(5)(rng.nextGaussian())), 3)
+    // a range, not a local relation: the optimizer would fold a projection
+    // over local rows before codegen
+    val df = spark.range(0, 64).select(col("id"),
+      array((1 to 4).map(j => sin(col("id") * j)): _*).as("v"))
+    val P = graft.predict.Predict
+    val both = P.withPredictions(spark, P.withProbabilities(spark, df, m, "v"), m, "v")
+    // subexpression elimination generates the shared score once: one
+    // reference to the weight matrix in the stage's code
+    val code = org.apache.spark.sql.execution.debug
+      .codegenString(both.queryExecution.executedPlan)
+    val refs = """references\[(\d+)\] /\* weights \*/""".r.findAllMatchIn(code)
+      .map(_.group(1)).toSet
+    assert(refs.size == 1, code)
+    def bits(xs: Seq[Double]) = xs.map(java.lang.Double.doubleToRawLongBits)
+    val got = both.select("id", "scores", "preds").collect()
+      .map(r => r.getLong(0) -> (bits(r.getSeq[Double](1)), r.get(2))).toMap
+    val alone = P.withProbabilities(spark, df, m, "v").select("id", "scores").collect()
+      .map(r => r.getLong(0) -> bits(r.getSeq[Double](1))).toMap
+    val preds = P.withPredictions(spark, df, m, "v").select("id", "preds").collect()
+      .map(r => r.getLong(0) -> r.get(1)).toMap
+    assert(got.size == 64)
+    got.foreach { case (id, (s, p)) =>
+      assert(s == alone(id) && p == preds(id), s"row $id")
+    }
+  }
+
   test("withPredictions/withProbabilities route GBT through the fused kernel") {
     import spark.implicits._
     val (x, y) = randomData(220, 5, 3, seed = 50)
@@ -177,8 +207,7 @@ class TreeScoreSpec extends AnyFunSuite {
       graft.predict.Predict.withProbabilities(spark, df, m, "v"),
       m, "v", labels = Some(Seq("a", "b", "c")))
     // no UDF anywhere in the plan: the fused route took over
-    assert(!out.queryExecution.executedPlan.toString.contains("UDF"),
-      "expected a UDF-free fused plan")
+    assert(!PlanNodes.hasUdf(out), "expected a UDF-free fused plan")
     val got = out.collect().map(r =>
       r.getLong(0) -> ((r.getString(3), r.getSeq[Double](2)))).toMap
     x.zipWithIndex.foreach { case (v, i) =>
@@ -210,8 +239,7 @@ class TreeScoreSpec extends AnyFunSuite {
       .toSeq.toDF("id", "v")
     val out = graft.predict.Predict.withMultilabelPredictions(
       spark, df, model, "v")
-    assert(!out.queryExecution.executedPlan.toString.contains("UDF"),
-      "expected the fused stacked-row vote plan")
+    assert(!PlanNodes.hasUdf(out), "expected the fused stacked-row vote plan")
     val got = out.collect()
       .map(r => r.getLong(0) -> r.getSeq[String](2)).toMap
     xs.zipWithIndex.foreach { case (v, i) =>
